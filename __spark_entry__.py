@@ -283,7 +283,7 @@ def _q_fare_anomalies_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_grouped_percentiles_sketch(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
     """Per-group p50/p95 over per-group bottom-4096 md5-rank samples
-    (``sketches.grouped_hash_sample_percentiles``) — the grouped
+    (``grouped_percentiles(mode='sketch')``) — the grouped
     sibling of ``fare_anomalies_sketch``: one row_number window
     bounds every group's state at k rows where the exact percentile
     (and GK at parity accuracy) buffers the whole group. Same
@@ -302,14 +302,10 @@ def _q_grouped_percentiles_sketch(spark: SparkSession,
     SQL, which spells the single-window form — is unchanged. Rank key
     widened to the near-unique triple (see
     ``fare_anomalies_sketch``)."""
-    from nyctaxidatapipeline_spark.operators.sketches import (
-        grouped_hash_sample_percentiles,
-    )
-
-    return grouped_hash_sample_percentiles(
+    return grouped_percentiles(
         _lineitem(spark, sf_dir), ["l_returnflag"], "l_extendedprice",
-        ["l_orderkey", "l_linenumber", "l_partkey"], (0.5, 0.95),
-        k=4096)
+        (0.5, 0.95), mode="sketch",
+        rank_cols=["l_orderkey", "l_linenumber", "l_partkey"], k=4096)
 
 
 def _q_price_quantile_summary(spark: SparkSession,
@@ -4686,18 +4682,6 @@ LESSON_QUERIES: dict[str, str] = {
         "is the hash-sample bottom-k threshold pair "
         "(fare_anomalies_sketch's shape applied to both tails)",
 }
-
-
-def bench_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """The per-query set ``bench.py`` times. Currently identical to
-    ``queries()``: the one candidate for a bench-only swap (ann_lsh's
-    md5-portable plane literals) turned out FASTER than the xxhash64
-    variant it replaced — the xxhash64 literals cost a Spark job +
-    collect per call while md5 derives in pure Python — so production
-    and oracle paths converged. The hook stays so any future
-    oracle-portability tax can be confined to CORRECTNESS without
-    touching bench.py."""
-    return queries()
 
 
 def _pca_covariance_ctes(dim: int, decimals: int) -> str:

@@ -55,11 +55,7 @@ def main() -> None:
         _force(load_table(spark, SF_DIR, t))
     load_sec = round(time.perf_counter() - t0, 3)
 
-    # bench_queries() is currently IDENTICAL to queries() (the md5
-    # oracle-portable hash families turned out faster than the xxhash64
-    # variants they'd have swapped in); it exists as the hook where a
-    # future oracle-portability tax could be confined out of the bench.
-    qset = getattr(entrymod, "bench_queries", entrymod.queries)()
+    qset = entrymod.queries()
     # Optional subset run (e.g. the sf1 scale validation):
     # SPARK_GRAFT_QUERIES="pagerank,ann_ivfpq" limits the timed set.
     only = os.environ.get("SPARK_GRAFT_QUERIES")

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nyctaxidatapipeline_spark.functions.features import decode_map
+from nyctaxidatapipeline_spark.operators.quantiles import QUANTILES, quantiles
 
 
 def demand_heatmap(df: DataFrame, zone_col: str, hour_col: str,
@@ -115,59 +116,39 @@ def distance_distribution(df: DataFrame, group_cols: Sequence[str],
 
 def quantile_threshold(df: DataFrame, col: str, q: float = 0.99,
                        mode: str = "approx",
-                       rel_err: float = 0.01,
-                       accuracy: int | None = None,
+                       accuracy: int = 100,
                        rank_cols: Sequence[str] | None = None,
                        sample_k: int = 16384) -> DataFrame:
-    """A7 — single-row DataFrame holding the q-quantile of ``col``.
+    """A7 — single-row DataFrame holding the q-quantile of ``col``
+    (``threshold``), one call to the ``quantiles`` core.
 
     ``mode='approx'`` matches the reference exactly
-    (``yellow_taxi_etl.py:121``: Greenwald-Khanna sketch, rel. error 0.01 —
-    one pass, mergeable, the right choice at 100 TB). ``mode='exact'`` uses
-    linear-interpolated ``percentile`` for DuckDB-oracle parity
-    (SURVEY.md §5 caveat 4). ``accuracy`` overrides the sketch size
-    directly (the ``winsorized_prices_approx`` oracle recipe: a sketch
-    kept uncompressed at fixture scale IS the exact rank statistic, so
-    the twin can pin it with ``quantile_disc`` while sf1+ inputs
-    genuinely compress).
+    (``yellow_taxi_etl.py:121``: Greenwald-Khanna sketch, rel. error
+    1/accuracy = 0.01 at the default — one pass, mergeable, the right
+    choice at 100 TB). ``mode='exact'`` uses linear-interpolated
+    ``percentile`` for DuckDB-oracle parity (SURVEY.md §5 caveat 4).
+    A large ``accuracy`` keeps the sketch uncompressed at fixture scale,
+    where it IS the exact rank statistic (the ``winsorized_prices_approx``
+    oracle recipe: the twin pins it with ``quantile_disc`` while sf1+
+    inputs genuinely compress). ``mode='sketch'`` reads the discrete
+    quantile off the deterministic bottom-``sample_k`` md5 sample over
+    ``rank_cols`` — one linear scan + O(k) merge at ANY size,
+    hash-checkable at its honest accuracy (the production mode whose
+    scaling stays linear where GK at oracle-parity accuracy=1e6 goes
+    super-linear).
 
     Returned as a DataFrame (not a collected float) so callers can broadcast
     it and keep the two-phase anomaly query inside one lazy plan.
     """
-    if mode == "sketch":
-        # Deterministic bottom-k hash sample (sketches module): one
-        # linear scan + O(k) merge at ANY size, hash-checkable at its
-        # honest accuracy — the production mode whose scaling stays
-        # linear where GK at oracle-parity accuracy=1e6 goes
-        # super-linear (PLANS.md; the one registered super-linear row).
-        if not rank_cols:
-            raise ValueError(
-                "mode='sketch' needs rank_cols (integer/string key "
-                "columns to hash — ideally a unique row key; duplicate "
-                "keys are tolerated (ties break on the value, multiset "
-                "deterministic) but turn the sample into a cluster "
-                "sample, loosening the +-sqrt(q(1-q)/k) accuracy bound "
-                "in proportion to the duplication rate)")
-        from nyctaxidatapipeline_spark.operators.sketches import (
-            hash_sample_quantile_threshold,
-        )
-
-        return hash_sample_quantile_threshold(df, col, rank_cols, q,
-                                              sample_k)
-    if mode == "approx":
-        acc = accuracy if accuracy is not None else int(1.0 / rel_err)
-        expr = F.percentile_approx(col, F.lit(q), F.lit(acc))
-    elif mode == "exact":
-        expr = F.percentile(col, F.lit(q))
-    else:
-        raise ValueError(f"mode must be approx|exact|sketch, got {mode!r}")
-    return df.select(expr.alias("threshold"))
+    return (quantiles(df, col, (q,), mode=mode, accuracy=accuracy,
+                      rank_cols=rank_cols, k=sample_k)
+            .select(F.col(QUANTILES)[0].alias("threshold")))
 
 
 def threshold_anomalies(df: DataFrame, col: str,
                         select_cols: Sequence[str], q: float = 0.99,
                         mode: str = "exact",
-                        accuracy: int | None = None,
+                        accuracy: int = 100,
                         rank_cols: Sequence[str] | None = None,
                         sample_k: int = 16384) -> DataFrame:
     """A7+F2+P3 — rows whose ``col`` >= the q-quantile, narrow projection.

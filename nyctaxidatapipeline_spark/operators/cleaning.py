@@ -14,48 +14,13 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nyctaxidatapipeline_spark.operators.quantiles import QUANTILES, quantiles
+
 
 def drop_null_rows(df: DataFrame,
                    subset: Sequence[str] | None = None) -> DataFrame:
     """Rows non-null in every column of ``subset`` (default: all columns)."""
     return df.dropna(how="any", subset=list(subset) if subset else None)
-
-
-def quantile_bounds(df: DataFrame, col: str,
-                    lo: float = 0.01, hi: float = 0.99) -> DataFrame:
-    """1-row frame (_lo, _hi): EXACT interpolated quantiles of ``col``
-    (``F.percentile`` — same continuous definition as DuckDB's
-    ``quantile_cont`` and numpy's linear method). One global aggregate;
-    the single-row result is meant to be broadcast."""
-    # ONE buffer for both bounds: percentile takes an array of
-    # percentages, so both rank statistics come out of a single
-    # whole-column aggregation buffer — two scalar Percentile aggs
-    # each buffered the column separately (r15 measured: the pair was
-    # ~2x the single-buffer build+shuffle+sort on winsorized_prices).
-    both = F.percentile(col, F.array(F.lit(lo), F.lit(hi)))
-    return (df.agg(both.alias("_b"))
-              .select(F.col("_b")[0].alias("_lo"),
-                      F.col("_b")[1].alias("_hi")))
-
-
-def quantile_bounds_approx(df: DataFrame, col: str,
-                           lo: float = 0.01, hi: float = 0.99,
-                           accuracy: int = 100) -> DataFrame:
-    """1-row frame (_lo, _hi) via the mergeable Greenwald-Khanna sketch
-    (``percentile_approx``) — the 100 TB mode ``winsorize``'s docstring
-    recommends: the exact percentile buffers every value in one global
-    ObjectHashAggregate, the sketch is bounded at ~O(accuracy·log n)
-    and merges map-side. Rank error <= 1/accuracy; with accuracy >= n
-    the sketch stays uncompressed and the bounds are the exact rank
-    statistics (DuckDB ``quantile_disc`` — what keeps the registered
-    approx query hash-checkable at correctness scale)."""
-    # Same single-buffer shape as quantile_bounds: one GK sketch
-    # queried at both ranks instead of two independently-built sketches.
-    both = F.percentile_approx(col, F.array(F.lit(lo), F.lit(hi)),
-                               F.lit(accuracy))
-    return (df.agg(both.alias("_b"))
-              .select(F.col("_b")[0].alias("_lo"),
-                      F.col("_b")[1].alias("_hi")))
 
 
 def winsorize(df: DataFrame, col: str, lo: float = 0.01, hi: float = 0.99,
@@ -65,22 +30,25 @@ def winsorize(df: DataFrame, col: str, lo: float = 0.01, hi: float = 0.99,
     robust-scaling guard against fat-tailed outliers before features
     enter a model (NULLs pass through unclipped).
 
-    100 TB shape: ONE percentile aggregate produces a 1-row bounds
-    frame, broadcast back as a scalar cross join (the engine's
-    established runtime-scalar pattern, cf. ``fare_anomalies``'s
-    threshold and ``reshape.histogram``'s bin bounds); the clip itself
-    is a shuffle-free narrow projection. ``mode='exact'`` (interpolated
+    100 TB shape: ONE percentile aggregate (``quantiles`` — both bounds
+    off a single buffer) produces a 1-row bounds frame, broadcast back
+    as a scalar cross join (the engine's established runtime-scalar
+    pattern, cf. ``fare_anomalies``'s threshold and
+    ``reshape.histogram``'s bin bounds); the clip itself is a
+    shuffle-free narrow projection. ``mode='exact'`` (interpolated
     ``F.percentile``) sorts the whole column into one aggregation
     buffer — fine for oracle parity, not the 100 TB mode;
-    ``mode='approx'`` uses the bounded-memory mergeable sketch
-    (``quantile_bounds_approx``).
+    ``mode='approx'`` uses the bounded-memory mergeable
+    Greenwald-Khanna sketch (rank error <= 1/accuracy; exact rank
+    statistics once accuracy >= n).
     """
     if mode not in ("exact", "approx"):
         raise ValueError(f"winsorize mode must be 'exact' or 'approx', "
                          f"got {mode!r}")
     out = out_col or col
-    b = (quantile_bounds(df, col, lo, hi) if mode == "exact"
-         else quantile_bounds_approx(df, col, lo, hi, accuracy))
+    b = (quantiles(df, col, (lo, hi), mode=mode, accuracy=accuracy)
+         .select(F.col(QUANTILES)[0].alias("_lo"),
+                 F.col(QUANTILES)[1].alias("_hi")))
     # least/greatest SKIP nulls (greatest(NULL, lo) = lo), so the NULL
     # passthrough needs an explicit guard.
     clipped = F.when(

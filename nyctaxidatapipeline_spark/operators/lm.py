@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nyctaxidatapipeline_spark.functions.text import shingles, tokens
+from nyctaxidatapipeline_spark.operators.quantiles import QUANTILES, quantiles
 from nyctaxidatapipeline_spark.plans.util import fan_out
 
 
@@ -297,19 +298,19 @@ def perplexity_buckets(df: DataFrame, text_col: str, id_col: str,
     keep/LM-filter/drop web data (lowest perplexity = cleanest).
 
     The bucket rule is threshold assignment from a 1-row broadcast of
-    the two exact tertile boundaries (the ``winsorize`` shape), NOT a
-    global ntile window — an ntile over the corpus is a single-task
-    sort at scale, while this is one percentile aggregate plus a
-    shuffle-free projection. Boundaries round 6 dp so the rule is
-    engine-reproducible; docs exactly on a boundary fall to the lower
-    bucket on both engines.
+    the two exact tertile boundaries (the ``winsorize`` shape: both
+    off ONE ``quantiles`` buffer), NOT a global ntile window — an ntile
+    over the corpus is a single-task sort at scale, while this is one
+    percentile aggregate plus a shuffle-free projection. Boundaries
+    round 6 dp so the rule is engine-reproducible; docs exactly on a
+    boundary fall to the lower bucket on both engines.
 
     Output: (id, n_bigrams, ppl, bucket_idx, bucket).
     """
     scored = lm_score(df, text_col, id_col)
-    bounds = scored.agg(
-        F.round(F.percentile("ppl", F.lit(1.0 / 3)), 6).alias("_q1"),
-        F.round(F.percentile("ppl", F.lit(2.0 / 3)), 6).alias("_q2"))
+    bounds = (quantiles(scored, "ppl", (1.0 / 3, 2.0 / 3))
+              .select(F.round(F.col(QUANTILES)[0], 6).alias("_q1"),
+                      F.round(F.col(QUANTILES)[1], 6).alias("_q2")))
     idx = (F.when(F.col("ppl") <= F.col("_q1"), 0)
             .when(F.col("ppl") <= F.col("_q2"), 1)
             .otherwise(2))

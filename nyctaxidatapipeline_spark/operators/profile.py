@@ -16,6 +16,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nyctaxidatapipeline_spark.operators.reshape import grouped_percentiles
+
 
 def profile_numeric(df: DataFrame, cols: Sequence[str],
                     approx: bool | str = False,
@@ -200,28 +202,28 @@ def mad_outliers(df: DataFrame, group_cols: Sequence[str],
     insensitive to the outliers being hunted (a few extreme rows can
     inflate σ enough to mask themselves; they cannot move the median).
 
-    Two sequential grouped EXACT percentile aggregates (median, then
-    median absolute deviation) — inherently two shuffles, since the MAD
-    depends on the first median; both produce |groups| rows that join
-    back broadcast-sized. At 100 TB swap ``F.percentile`` for
-    ``approx_percentile`` (the ``grouped_percentiles`` twin pattern);
-    the rest of the shape is unchanged. Medians/MAD round 6 dp so the
-    flag predicate is engine-reproducible; groups with MAD = 0 (over
-    half the rows at the median) flag nothing, NULL values are ignored
-    by the percentiles and never flagged.
+    Two sequential grouped EXACT medians (``grouped_percentiles``:
+    median, then median absolute deviation) — inherently two shuffles,
+    since the MAD depends on the first median; both produce |groups|
+    rows that join back broadcast-sized. At 100 TB the medians take
+    ``mode='approx'`` (the ``grouped_percentiles_approx`` pattern); the
+    rest of the shape is unchanged. Medians/MAD round 6 dp so the flag
+    predicate is engine-reproducible; groups with MAD = 0 (over half
+    the rows at the median) flag nothing, NULL values are ignored by
+    the percentiles and never flagged.
 
     Output: input columns + (median, mad, robust_z) for flagged rows.
     """
     gcols = list(group_cols)
-    med = (df.groupBy(*gcols)
-             .agg((F.round(F.percentile(value_col, F.lit(0.5)), 6)
-                    + F.lit(0.0)).alias("median")))
-    dev = (df.join(med, gcols)
+
+    def median(frame: DataFrame, col: str, name: str) -> DataFrame:
+        return (grouped_percentiles(frame, gcols, col, (0.5,))
+                .withColumnRenamed("p50", name))
+
+    dev = (df.join(median(df, value_col, "median"), gcols)
              .withColumn("_adev", F.abs(F.col(value_col)
                                         - F.col("median"))))
-    mad = (dev.groupBy(*gcols)
-              .agg((F.round(F.percentile("_adev", F.lit(0.5)), 6)
-                     + F.lit(0.0)).alias("mad")))
+    mad = median(dev, "_adev", "mad")
     z = F.lit(0.6745) * (F.col(value_col) - F.col("median")) / F.col("mad")
     return (dev.join(mad, gcols)
                .filter(F.col("mad") > 0)

@@ -24,6 +24,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from nyctaxidatapipeline_spark.operators.quantiles import (
+    QUANTILES,
+    named_percentiles,
+    quantiles,
+)
+
 
 def pivot_agg(df: DataFrame, group_col: str, pivot_col: str,
               values: Sequence[str], agg_col: str,
@@ -54,39 +60,35 @@ def cube_agg(df: DataFrame, group_cols: Sequence[str],
 def grouped_percentiles(df: DataFrame, group_cols: Sequence[str], col: str,
                         percentiles: Sequence[float] = (0.5, 0.95),
                         mode: str = "exact",
-                        accuracy: int = 100) -> DataFrame:
-    """Per-group percentiles: ``exact`` (interpolated, oracle-parity with
-    quantile_cont) or ``approx`` (mergeable Greenwald-Khanna sketch —
-    the 100 TB path: exact percentile buffers the whole group in one
+                        accuracy: int = 100,
+                        rank_cols: Sequence[str] | None = None,
+                        k: int = 4096,
+                        salt_buckets: int | None | str = "auto"
+                        ) -> DataFrame:
+    """Per-group percentiles as ``p50``-style columns, rounded 6 dp —
+    all requested ranks off ONE per-group ``quantiles`` aggregate.
+
+    ``exact``: interpolated, oracle-parity with ``quantile_cont``.
+    ``approx``: mergeable Greenwald-Khanna sketch — the 100 TB path
+    (exact percentile buffers the whole group in one
     ObjectHashAggregate; the sketch is bounded at ~O(accuracy·log n)
-    per group and merges map-side). ``accuracy`` trades memory for rank
-    error 1/accuracy; with accuracy >= group size the sketch stays
-    uncompressed and the result is the EXACT rank statistic (DuckDB
-    ``quantile_disc``) — how the registered approx query keeps full
-    hash parity at correctness scale while compressing for real at sf1
-    group sizes."""
-    if mode not in ("exact", "approx"):
-        raise ValueError(f"grouped_percentiles mode must be 'exact' or "
-                         f"'approx', got {mode!r}")
-    # ONE per-group buffer for ALL requested percentiles: both
-    # percentile forms accept an array of percentages, so the group's
-    # values are buffered (exact) / sketched (GK) once and queried at
-    # every rank — N scalar aggs each built their own whole-group
-    # buffer (r15 measured ~2x on the 2-percentile registered queries).
-    parr = F.array(*[F.lit(p) for p in percentiles])
-    agg = (F.percentile(F.col(col), parr) if mode == "exact"
-           else F.percentile_approx(F.col(col), parr, F.lit(accuracy)))
-    # Temp alias must not collide with a caller's group column (ADVICE
-    # r15: a group col literally named like the alias would make the
-    # select below ambiguous); dunder-prefixed to stay out of any
-    # plausible user namespace.
-    ps = "__gp_ps__"
-    return (df.groupBy(*group_cols)
-              .agg(agg.alias(ps))
-              .select(*group_cols,
-                      *[F.round(F.col(ps)[i], 6)
-                         .alias(f"p{int(p * 100)}")
-                        for i, p in enumerate(percentiles)]))
+    per group and merges map-side); rank error 1/accuracy, and with
+    accuracy >= group size the result is the EXACT rank statistic
+    (DuckDB ``quantile_disc``) — how the registered approx query keeps
+    full hash parity at correctness scale while compressing for real at
+    sf1 group sizes. ``sketch``: discrete percentiles over a per-group
+    bottom-``k`` md5-rank sample on ``rank_cols``
+    (``sketches.grouped_hash_sample_bottom_k``; ``salt_buckets`` picks
+    its naive-window or salted-tree shape, bit-identical either way) —
+    every group's state bounded at k rows, accuracy sqrt(q(1-q)/k),
+    reproducible verbatim by the DuckDB twin."""
+    if mode not in ("exact", "approx", "sketch"):
+        raise ValueError(f"grouped_percentiles mode must be 'exact', "
+                         f"'approx' or 'sketch', got {mode!r}")
+    qdf = quantiles(df, col, percentiles, by=group_cols, mode=mode,
+                    accuracy=accuracy, rank_cols=rank_cols, k=k,
+                    salt_buckets=salt_buckets)
+    return named_percentiles(qdf, group_cols, percentiles)
 
 
 def distinct_counts(df: DataFrame, group_cols: Sequence[str], col: str,
@@ -210,11 +212,11 @@ def equidepth_histogram_sketch(df: DataFrame, col: str,
 
       1. edges from the deterministic bottom-k hash sample
          (:func:`~nyctaxidatapipeline_spark.operators.sketches.
-         hash_sample_bottom_k` — one linear scan; merge fan-in
-         auto-bounded): edge_i = the sample's discrete (i/bins)
-         quantile via the shared ``_disc_index`` arithmetic, so each
-         edge carries the sketch's ±sqrt(q(1-q)/k) rank accuracy and
-         is reproducible verbatim in DuckDB;
+         hash_sample_bottom_k` via ``quantiles(mode='sketch')`` — one
+         linear scan; merge fan-in auto-bounded): edge_i = the
+         sample's discrete (i/bins) quantile, so each edge carries the
+         sketch's ±sqrt(q(1-q)/k) rank accuracy and is reproducible
+         verbatim in DuckDB;
       2. the (bins-1)-element edge array broadcast into a projection
          (1-row IdentityBroadcastMode cross join — the repo's
          sanctioned scalar-BNLJ shape): ``bin = 1 + |{e : v > e}|``
@@ -232,18 +234,11 @@ def equidepth_histogram_sketch(df: DataFrame, col: str,
     (v > e strict); duplicate edges (heavy ties in the sample) leave
     the intermediate bins empty rather than splitting a tie-group.
     """
-    from nyctaxidatapipeline_spark.operators.sketches import (
-        hash_sample_bottom_k,
-        sample_quantile,
-    )
-
     if bins < 2:
         raise ValueError(f"bins must be >= 2, got {bins}")
-    s = hash_sample_bottom_k(df, rank_cols, [col], k)
-    arr = s.agg(F.sort_array(F.collect_list(col)).alias("_arr"))
-    edges = arr.select(F.array(
-        *[sample_quantile(F.col("_arr"), i / bins)
-          for i in range(1, bins)]).alias("_edges"))
+    edges = (quantiles(df, col, [i / bins for i in range(1, bins)],
+                       mode="sketch", rank_cols=rank_cols, k=k)
+             .select(F.col(QUANTILES).alias("_edges")))
     binned = (df.select(F.col(col).alias("_v"))
                 .crossJoin(F.broadcast(edges))
                 .select((F.lit(1) + F.size(F.filter(

@@ -522,10 +522,10 @@ def hash_sample_bottom_k(df: DataFrame, rank_cols: Sequence[str],
     the fan-in census pins the tree shape on small fixtures). The
     scan stays a full linear pass (one md5 per row) either way.
 
-    BINDING TIME (r13 review finding 3): the threshold gate below
-    reads the session conf when the frame is BUILT, while Spark's
-    InferWindowGroupLimit consults it again when the frame is
-    EXECUTED. Lowering the conf between build and action is out of
+    BINDING TIME (r13 review finding 3): the threshold gate
+    (:func:`_resolve_salt_buckets`) reads the session conf when the
+    frame is BUILT, while Spark's InferWindowGroupLimit consults it
+    again when the frame is EXECUTED. Lowering the conf between build and action is out of
     contract — it would execute the tree WITHOUT its map-side trims
     (whole input through two exchanges). The repo session pins the
     conf at build (session.py) and nothing in the repo lowers it
@@ -538,89 +538,49 @@ def hash_sample_bottom_k(df: DataFrame, rank_cols: Sequence[str],
     MULTISET is deterministic either way (the sf0.01 lineitem fixture
     has ~20% duplicate (orderkey, linenumber) pairs — rank-only
     ordering was measurably flaky there)."""
-    from pyspark.sql import Window
-
     base = df.select(hash_sample_rank(rank_cols).alias("_rk"),
                      *payload_cols)
+    order = ["_rk", *payload_cols]
+    salt_buckets = _resolve_salt_buckets(df, k, salt_buckets)
+    if salt_buckets is None:
+        return base.orderBy(*order).limit(int(k))
+    lvl0 = bottom_k_rows(base.withColumn("_pid", F.spark_partition_id()),
+                         ["_pid"], order, k).drop("_pid")
+    lvl1 = bottom_k_rows(lvl0.withColumn("_salt", _rank_salt(salt_buckets)),
+                         ["_salt"], order, k).drop("_salt")
+    return lvl1.orderBy(*order).limit(int(k))
+
+
+def _resolve_salt_buckets(df: DataFrame, k: int,
+                          salt_buckets: int | None | str) -> int | None:
+    """The merge shape BOTH bottom-k forms take: ``"auto"`` resolves
+    by estimated fan-in (:func:`_auto_salt_buckets`), and any tree
+    degrades to the naive shape (None) when the session's
+    ``windowGroupLimitThreshold`` sits below k. The tree only pays when
+    Spark rewrites its row_number trims into map-side
+    ``WindowGroupLimit(Partial)`` — gated by that conf (default
+    1000 < k: no rewrite, so the tree's exchanges would ship the WHOLE
+    input, worse than the naive merge's single one). The repo session
+    (session.py) raises it to 2^20; the sample is bit-identical
+    either way."""
     if salt_buckets == "auto":
         salt_buckets = _auto_salt_buckets(df, k)
-    if salt_buckets is not None:
-        # The tree shape is only an improvement when Spark rewrites the
-        # row_number trims into map-side WindowGroupLimit(Partial) —
-        # gated by this session conf (default 1000 < k: no rewrite, and
-        # the level-0 exchange would ship the WHOLE input, worse than
-        # the naive single merge). The repo session (session.py) raises
-        # it to 2^20; in a foreign session below k, degrade to naive —
-        # the output is bit-identical either way.
-        wgl = int(df.sparkSession.conf.get(
-            "spark.sql.optimizer.windowGroupLimitThreshold", "1000"))
-        if wgl < int(k):
-            salt_buckets = None
-    if salt_buckets is None:
-        return base.orderBy("_rk", *payload_cols).limit(int(k))
-    w0 = Window.partitionBy("_pid").orderBy("_rk", *payload_cols)
-    lvl0 = (base.withColumn("_pid", F.spark_partition_id())
-                .withColumn("_rn0", F.row_number().over(w0))
-                .filter(F.col("_rn0") <= int(k))
-                .drop("_pid", "_rn0"))
-    w1 = Window.partitionBy("_salt").orderBy("_rk", *payload_cols)
-    lvl1 = (lvl0.withColumn("_salt", _rank_salt(salt_buckets))
-                .withColumn("_rn1", F.row_number().over(w1))
-                .filter(F.col("_rn1") <= int(k))
-                .drop("_salt", "_rn1"))
-    return lvl1.orderBy("_rk", *payload_cols).limit(int(k))
+    wgl = int(df.sparkSession.conf.get(
+        "spark.sql.optimizer.windowGroupLimitThreshold", "1000"))
+    return None if wgl < int(k) else salt_buckets
 
 
-def _disc_index(q: float | Column, n: Column) -> Column:
-    """1-based discrete-quantile index: ceil(q·n), floored at 1 —
-    the same arithmetic the DuckDB twin spells out (both engines
-    evaluate the identical double product, so the boundary cannot
-    disagree). ``q`` may be a literal or a Column (the multi-quantile
-    summary explodes its qs into a column); this is the ONLY spelling
-    of the boundary arithmetic — threshold, summary, grouped
-    percentiles and the streaming state readers all call it (r13
-    review finding 4: a second inline spelling had crept in)."""
-    qcol = q if isinstance(q, Column) else F.lit(float(q))
-    return F.greatest(F.ceil(qcol * n).cast("int"), F.lit(1))
+def bottom_k_rows(df: DataFrame, part_cols: Sequence[str],
+                  order_cols: Sequence[str], k: int) -> DataFrame:
+    """The <= k smallest rows by ``order_cols`` per ``part_cols``
+    partition: one row_number window, which Spark's
+    InferWindowGroupLimit trims map-side (``WindowGroupLimit(Partial)``
+    below the exchange) whenever k is under the session threshold."""
+    from pyspark.sql import Window
 
-
-def sample_quantile(arr: Column, q: float | Column) -> Column:
-    """Discrete q-quantile off a sorted sample array:
-    ``try_element_at`` at the :func:`_disc_index` — NULL rather than
-    an ANSI INVALID_ARRAY_INDEX error when the sample is EMPTY (empty
-    input, or every value NULL so ``collect_list`` collected
-    nothing), matching DuckDB's NULL on an out-of-bounds list index
-    (r13 review finding 1: plain ``element_at`` crashed the whole
-    job on that input state under Spark 4's default ANSI mode).
-    Identical to ``element_at`` on every non-empty sample."""
-    return F.try_element_at(arr, _disc_index(q, F.size(arr)))
-
-
-def hash_sample_quantile_threshold(df: DataFrame, value_col: str,
-                                   rank_cols: Sequence[str],
-                                   q: float = 0.99,
-                                   k: int = 16384) -> DataFrame:
-    """Single-row (threshold) frame: the discrete q-quantile of the
-    :func:`hash_sample_bottom_k` sample — the production quantile mode
-    whose cost is ONE linear scan + an O(k) merge at any corpus size
-    (the GK sketch at oracle-parity accuracy=1e6 is the suite's one
-    super-linear registered point; this sketch is hash-checkable at
-    its HONEST accuracy). Returned as a DataFrame for the broadcast
-    two-phase anomaly shape (``analytics.quantile_threshold``).
-
-    NULL contract (ADVICE r13): NULL ``value_col`` entries in the
-    sample are DROPPED — ``collect_list`` excludes them from both the
-    array and the effective n, so the quantile is over the sampled
-    NON-NULL values (all-NULL/empty sample → NULL threshold). The
-    DuckDB twins spell the same semantics via ``list(v) FILTER (WHERE
-    v IS NOT NULL)`` + ``COUNT(v)``; ``list(v)`` + ``COUNT(*)`` would
-    index a longer, NULL-bearing array and diverge on nullable
-    columns."""
-    s = hash_sample_bottom_k(df, rank_cols, [value_col], k)
-    arr = F.sort_array(F.collect_list(value_col))
-    return (s.agg(arr.alias("_arr"))
-             .select(sample_quantile(F.col("_arr"), q)
-                      .alias("threshold")))
+    w = Window.partitionBy(*part_cols).orderBy(*order_cols)
+    return (df.withColumn("_rn", F.row_number().over(w))
+              .filter(F.col("_rn") <= int(k)).drop("_rn"))
 
 
 def hash_sample_quantile_summary(df: DataFrame, value_col: str,
@@ -629,30 +589,26 @@ def hash_sample_quantile_summary(df: DataFrame, value_col: str,
                                                         0.99, 0.999),
                                  k: int = 16384) -> DataFrame:
     """Whole-distribution summary — one (q, value) row per requested
-    quantile — off ONE :func:`hash_sample_bottom_k` sample (r13: the
-    salted-tree-merge path's headline consumer). The marginal cost of
-    each extra quantile is an ``element_at`` on the already-collected
-    k-row array: ONE linear scan + one config-bounded merge yields the
-    whole summary, where per-quantile ``percentile_approx`` calls or
-    repeated exact percentiles each re-pay their pass. Deterministic
-    and engine-portable like the threshold form (fixed md5 rank;
-    discrete-index arithmetic spelled identically in the DuckDB twin);
-    rank accuracy ±sqrt(q(1-q)/k) per quantile.
+    quantile, ``value`` rounded 6 dp — off ONE
+    :func:`hash_sample_bottom_k` sample (``quantiles(mode='sketch')``):
+    each extra quantile is one more index into the already-collected
+    k-row array, so ONE linear scan + one config-bounded merge yields
+    the whole summary, where per-quantile ``percentile_approx`` calls
+    or repeated exact percentiles each re-pay their pass. Duplicate
+    ``qs`` are harmless (two identical output rows)."""
+    from nyctaxidatapipeline_spark.operators.quantiles import (
+        QUANTILES,
+        quantiles,
+    )
 
-    ``qs`` must be floats in (0, 1]; duplicates are pointless but
-    harmless (two identical output rows). NULL values in the sample
-    are dropped before indexing — same contract (and same DuckDB twin
-    spelling) as :func:`hash_sample_quantile_threshold`."""
-    if not qs or any(not (0.0 < float(q) <= 1.0) for q in qs):
-        raise ValueError(f"qs must be floats in (0, 1], got {qs!r}")
-    s = hash_sample_bottom_k(df, rank_cols, [value_col], k)
-    agg = s.agg(F.sort_array(F.collect_list(value_col)).alias("_arr"))
-    return (agg.select(F.explode(F.array(*[F.lit(float(q)) for q in qs]))
-                        .alias("q"), "_arr")
-               .select("q",
-                       (F.round(sample_quantile(F.col("_arr"),
-                                                F.col("q")), 6)
-                        + F.lit(0.0)).alias("value"))
+    qdf = quantiles(df, value_col, qs, mode="sketch", rank_cols=rank_cols,
+                    k=k)
+    rows = F.array(*[F.struct(F.lit(float(q)).alias("q"),
+                              F.col(QUANTILES)[i].alias("value"))
+                     for i, q in enumerate(qs)])
+    return (qdf.select(F.inline(rows))
+               .select("q", (F.round("value", 6) + F.lit(0.0))
+                       .alias("value"))
                .orderBy("q"))
 
 
@@ -663,38 +619,31 @@ def grouped_hash_sample_bottom_k(df: DataFrame,
                                  k: int = 4096,
                                  salt_buckets: int | None | str
                                  = "auto") -> DataFrame:
-    """Per-group bottom-k hash sample — (group cols, ``_rk``, ``_v``)
-    with ≤ k rows per group, the grouped sibling of
+    """Per-group bottom-k hash sample — (group cols, ``_v``, ``_rk``)
+    with <= k rows per group, the grouped sibling of
     :func:`hash_sample_bottom_k` and the sample
-    :func:`grouped_hash_sample_percentiles` reads percentiles off.
+    ``grouped_percentiles(mode='sketch')`` reads percentiles off.
     Mergeable per group exactly like the ungrouped sketch (same fixed
     md5 rank), which is what the streaming grouped-quantile state
     maintains.
 
-    SHAPE BY INPUT SIZE (VERDICT r14 task 1 — the grouped sibling of
-    the ungrouped auto-crossover): ``salt_buckets="auto"`` resolves
-    via the same :func:`_tree_pays_off` arithmetic. Below the fan-in
-    bound (estimated tasks × k ≤ :data:`NAIVE_MERGE_FANIN_MAX`) the
-    NAIVE single window per group wins — ONE exchange on the group
-    key, and Spark's InferWindowGroupLimit inserts a map-side
-    ``WindowGroupLimit(Partial)`` trim so each map task ships ≤ k rows
-    per group; each group's reducer then sorts ≤ k × tasks survivor
-    rows, the exact fan-in the bound prices (measured 1.5× cheaper
-    than the salted tree at sf0.1 — the r14 grouped tree premium).
-    Above the bound, ``"auto"`` picks the TWO-PHASE SALTED tree
-    (VERDICT r10 item 1): phase 1 keeps ≤ k rows per (group,
-    salt-from-rank-tail) so no single reducer ever absorbs a whole
-    group's k×tasks survivors; phase 2 re-windows the ≤ k·S survivors
-    per group (config-bounded input). Every row of a group's global
-    bottom-k is in its own bucket's bottom-k (equal ranks share a
-    salt, so tie-groups never split) — output identical to the logical
-    single-window form at ANY salt count (unit-pinned), so the auto
-    switch is a pure physical choice. ``salt_buckets=None`` forces the
-    naive window; an int forces the tree at that salt count. In a
-    foreign session whose ``windowGroupLimitThreshold`` sits below k,
-    BOTH shapes lose their map-side trims, and the naive window's
-    single exchange strictly beats the tree's two — degrade to naive
-    (same guard as the ungrouped form).
+    SHAPE BY INPUT SIZE (VERDICT r14 task 1): ``salt_buckets`` resolves
+    through the same :func:`_resolve_salt_buckets` as the ungrouped
+    form. Below the fan-in bound (estimated tasks × k <=
+    :data:`NAIVE_MERGE_FANIN_MAX`) the NAIVE single window per group
+    wins — ONE exchange on the group key, with a map-side
+    ``WindowGroupLimit(Partial)`` trim so each map task ships <= k rows
+    per group (measured 1.5× cheaper than the salted tree at sf0.1).
+    Above it, the TWO-PHASE SALTED tree (VERDICT r10 item 1): phase 1
+    keeps <= k rows per (group, salt-from-rank-tail) so no single
+    reducer ever absorbs a whole group's k×tasks survivors (~10^6 ×
+    4096 rows for a 3-value key at 100 TB); phase 2 re-windows the
+    <= k·S survivors per group (config-bounded input). Every row of a
+    group's global bottom-k is in its own bucket's bottom-k (equal
+    ranks share a salt, so tie-groups never split) — output identical
+    to the logical single-window form the DuckDB twin spells, at ANY
+    salt count (unit-pinned). ``salt_buckets=None`` forces the naive
+    window; an int forces the tree at that salt count.
 
     EXECUTOR SIZING (VERDICT r12 task 7, measured at sf10 — PLANS.md
     #41): the suite's largest single-operator peak is phase 1's
@@ -708,83 +657,16 @@ def grouped_hash_sample_bottom_k(df: DataFrame,
     WindowGroupLimit cap is k per (group, salt): 262 MB / 522 MB /
     1.04 GB at S=16/32/64, sf10), so pick the SMALLEST S with
     groups × S ≳ shuffle partitions (reducer spread) — the default 32
-    covers P ≤ ~100 at the fixture's 3 groups."""
-    from pyspark.sql import Window
-
+    covers P <= ~100 at the fixture's 3 groups."""
     base = df.select(*group_cols, F.col(value_col).alias("_v"),
                      hash_sample_rank(rank_cols).alias("_rk"))
-    if salt_buckets == "auto":
-        salt_buckets = _auto_salt_buckets(df, k)
-    if salt_buckets is not None:
-        wgl = int(df.sparkSession.conf.get(
-            "spark.sql.optimizer.windowGroupLimitThreshold", "1000"))
-        if wgl < int(k):
-            salt_buckets = None
     # rank ties broken by the value (see hash_sample_bottom_k) — the
     # per-group sampled value multiset is deterministic without a
     # unique row key
-    w2 = Window.partitionBy(*group_cols).orderBy("_rk", "_v")
-    if salt_buckets is None:
-        return (base.withColumn("_rn", F.row_number().over(w2))
-                    .filter(F.col("_rn") <= int(k))
-                    .drop("_rn"))
-    salt = _rank_salt(salt_buckets)
-    w1 = Window.partitionBy(*group_cols, "_salt").orderBy("_rk", "_v")
-    survivors = (base.withColumn("_salt", salt)
-                     .withColumn("_rn1", F.row_number().over(w1))
-                     .filter(F.col("_rn1") <= int(k))
-                     .drop("_salt", "_rn1"))
-    return (survivors.withColumn("_rn", F.row_number().over(w2))
-                     .filter(F.col("_rn") <= int(k))
-                     .drop("_rn"))
-
-
-def grouped_hash_sample_percentiles(df: DataFrame,
-                                    group_cols: Sequence[str],
-                                    value_col: str,
-                                    rank_cols: Sequence[str],
-                                    percentiles: Sequence[float]
-                                    = (0.5, 0.95),
-                                    k: int = 4096,
-                                    salt_buckets: int | None | str
-                                    = "auto") -> DataFrame:
-    """Per-group discrete percentiles over a per-group bottom-k hash
-    sample — the grouped sibling of
-    :func:`hash_sample_quantile_threshold`. Output columns
-    ``p50``-style, rounded 6 dp — the ``grouped_percentiles`` contract
-    at sampling accuracy sqrt(q(1-q)/k).
-
-    Scale shape — AUTO-SELECTED like the ungrouped sketch (VERDICT
-    r14 task 1): below the :data:`NAIVE_MERGE_FANIN_MAX` fan-in bound
-    the sample is ONE window per group (single exchange; the map-side
-    ``WindowGroupLimit(Partial)`` trim bounds each group's reducer at
-    k × tasks survivor rows — the r14-measured 1.5× cheaper shape at
-    fixture scale). Above it, the TWO-PHASE SALTED bottom-k (VERDICT
-    r10 item 1) — at 100 TB task counts a group's k×tasks survivors
-    (~10^6 × 4096 rows for a 3-value grouping key) would swamp its
-    single reducer:
-
-      1. row_number within ``(group, _salt)`` keeps ≤ k rows per
-         (group, salt-bucket) — ``salt_buckets`` tasks per group,
-         each sorting ~1/S of the group;
-      2. re-window the ≤ k·S survivors per group — a bounded input
-         (k·S rows per group regardless of corpus size), so the
-         group-only sort is O(k·S log k·S) per group, never
-         O(group) — then the same O(k) sorted-array percentile.
-
-    The salt derives from the TAIL hex of the same md5 rank
-    (decorrelated from the bottom-k head order; rows with EQUAL rank
-    keys share a salt, so tie-groups stay in one bucket): every row in
-    a group's global bottom-k is by definition in its own bucket's
-    bottom-k, so phase 2 selects exactly the single-window sample —
-    the output (and the DuckDB twin, which spells the logical
-    single-window form) is unchanged (unit-pinned)."""
-    s = grouped_hash_sample_bottom_k(df, group_cols, value_col,
-                                     rank_cols, k, salt_buckets)
-    agg = s.groupBy(*group_cols).agg(
-        F.sort_array(F.collect_list("_v")).alias("_arr"))
-    cols = [*group_cols] + [
-        (F.round(sample_quantile(F.col("_arr"), p), 6)
-          + F.lit(0.0)).alias(f"p{int(p * 100)}")
-        for p in percentiles]
-    return agg.select(*cols)
+    order = ["_rk", "_v"]
+    salt_buckets = _resolve_salt_buckets(df, k, salt_buckets)
+    if salt_buckets is not None:
+        salted = base.withColumn("_salt", _rank_salt(salt_buckets))
+        base = bottom_k_rows(salted, [*group_cols, "_salt"], order,
+                             k).drop("_salt")
+    return bottom_k_rows(base, group_cols, order, k)

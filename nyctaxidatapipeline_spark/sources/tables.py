@@ -34,15 +34,17 @@ def _nanos_timestamp_cols(path: str) -> list[str]:
     (PARQUET_TYPE_ILLEGAL); with ``spark.sql.legacy.parquet.nanosAsLong``
     they surface as raw int64 nanos. We restore them to microsecond
     timestamps — the same truncation DuckDB applies — so downstream
-    datetime functions and the oracle agree.
+    datetime functions and the oracle agree. A directory or a glob is
+    read through its first matching part file (``pq.read_schema``
+    cannot open a glob pattern itself).
     """
     if os.path.isdir(path):
-        parts = glob.glob(os.path.join(path, "*.parquet"))
-        if not parts:
-            return []
-        path = parts[0]
+        path = os.path.join(path, "*.parquet")
+    parts = [path] if os.path.isfile(path) else sorted(glob.glob(path))
+    if not parts:
+        return []
     try:
-        schema = pq.read_schema(path)
+        schema = pq.read_schema(parts[0])
     except Exception:
         return []
     return [f.name for f in schema

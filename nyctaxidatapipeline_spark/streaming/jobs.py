@@ -330,45 +330,25 @@ def run_incremental_rollup(stream: DataFrame, state_dir: str,
     return q
 
 
-def quantile_sketch_merge_fn(state_dir: str, value_col: str,
-                             rank_cols: list[str], k: int = 16384):
-    """``foreachBatch`` for :func:`run_streaming_quantile_sketch` —
-    a LIVE quantile monitor as maintained state (r11, composing the
-    hash-sample bottom-k sketch with the rollup state skeleton): each
-    micro-batch reduces to ITS bottom-k by the fixed md5 row-rank
-    (``sketches.hash_sample_bottom_k`` — O(k) rows, one
-    TakeOrderedAndProject), merges with the standing k-row state, and
-    re-truncates at k. The sketch's pinned mergeability —
-    bottom_k(A ∪ B) == bottom_k(bottom_k(A) ∪ bottom_k(B)) — makes the
-    drained state EXACTLY the sketch of the whole stream (and, the
-    rank being deterministic, byte-equal to the batch operator on the
-    same rows), so a deployment reads a p99 threshold off a k-row
-    parquet at any moment at ±sqrt(q(1-q)/k) rank accuracy. Per-batch
-    cost: one linear scan of the batch + an O(k) merge — never stream
-    history. Same epoch-marker swap + replay no-op as
-    ``rollup_merge_fn``."""
-    import shutil
-
-    from nyctaxidatapipeline_spark.operators.sketches import (
-        hash_sample_bottom_k,
-    )
-
+def _sketch_merge_fn(state_dir: str, sample, trim):
+    """The quantile doors' shared ``foreachBatch`` body: reduce the
+    micro-batch to its bottom-k sample (``sample(batch_df)``), merge
+    with the standing state and re-truncate (``trim(union)``), then
+    write the merged state with the epoch marker inside the tmp dir and
+    commit both with one :func:`_swap_state_dir` — the epoch-marker
+    swap + replay no-op of ``rollup_merge_fn``. The bottom-k's pinned
+    mergeability — bottom_k(A ∪ B) == bottom_k(bottom_k(A) ∪
+    bottom_k(B)) — makes the drained state EXACTLY the sketch of the
+    whole stream; per-batch cost is one linear scan of the batch plus an
+    O(k)-per-group merge, never stream history."""
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
         if epoch_id <= applied_epoch(state_dir):
             return                       # replayed epoch — committed
-        spark = batch_df.sparkSession
-        # salt_buckets=None: a micro-batch is one epoch's rows — the
-        # naive single-merge TakeOrderedAndProject is the cheap shape
-        # here; the batch operator's default tree merge is for
-        # unbounded-task-count corpus scans
-        new = hash_sample_bottom_k(batch_df, rank_cols, [value_col], k,
-                                   salt_buckets=None)
+        merged = sample(batch_df)
         if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-            cur = spark.read.parquet(state_dir).select(new.columns)
-            merged = (cur.unionByName(new)
-                      .orderBy("_rk", value_col).limit(int(k)))
-        else:
-            merged = new
+            cur = (batch_df.sparkSession.read.parquet(state_dir)
+                   .select(merged.columns))
+            merged = trim(cur.unionByName(merged))
         tmp = state_dir + ".tmp"
         merged.coalesce(1).write.mode("overwrite").parquet(tmp)
         with open(os.path.join(tmp, _EPOCH_MARKER), "w") as f:
@@ -376,6 +356,32 @@ def quantile_sketch_merge_fn(state_dir: str, value_col: str,
         _swap_state_dir(tmp, state_dir)
 
     return merge_batch
+
+
+def quantile_sketch_merge_fn(state_dir: str, value_col: str,
+                             rank_cols: list[str], k: int = 16384):
+    """``foreachBatch`` for :func:`run_streaming_quantile_sketch` —
+    a LIVE quantile monitor as maintained state (r11, composing the
+    hash-sample bottom-k sketch with the rollup state skeleton): each
+    micro-batch reduces to ITS bottom-k by the fixed md5 row-rank
+    (``sketches.hash_sample_bottom_k``), merges with the standing
+    k-row state, and re-truncates at k (:func:`_sketch_merge_fn`). The
+    rank being deterministic, the drained state is byte-equal to the
+    batch operator on the same rows, so a deployment reads a p99
+    threshold off a k-row parquet at any moment at ±sqrt(q(1-q)/k)
+    rank accuracy."""
+    from nyctaxidatapipeline_spark.operators.sketches import (
+        hash_sample_bottom_k,
+    )
+
+    # salt_buckets=None: a micro-batch is one epoch's rows — the naive
+    # single-merge TakeOrderedAndProject is the cheap shape here; the
+    # batch operator's tree merge is for unbounded-task-count scans
+    return _sketch_merge_fn(
+        state_dir,
+        lambda b: hash_sample_bottom_k(b, rank_cols, [value_col], k,
+                                       salt_buckets=None),
+        lambda u: u.orderBy("_rk", value_col).limit(int(k)))
 
 
 def run_streaming_quantile_sketch(stream: DataFrame, state_dir: str,
@@ -412,39 +418,17 @@ def grouped_quantile_sketch_merge_fn(state_dir: str,
     shape, so no task ever sorts a whole group even inside one batch),
     merges with the standing state and re-truncates per group. The
     merge window's input is bounded at 2·k rows per group regardless
-    of stream history; state is ≤ k rows per live group. Same
-    epoch-marker swap / replay no-op as the siblings."""
-    import shutil
-
-    from pyspark.sql import Window
-
+    of stream history; state is <= k rows per live group."""
     from nyctaxidatapipeline_spark.operators.sketches import (
+        bottom_k_rows,
         grouped_hash_sample_bottom_k,
     )
 
-    def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if epoch_id <= applied_epoch(state_dir):
-            return                       # replayed epoch — committed
-        spark = batch_df.sparkSession
-        new = grouped_hash_sample_bottom_k(batch_df, group_cols,
-                                           value_col, rank_cols, k,
-                                           salt_buckets)
-        if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-            cur = spark.read.parquet(state_dir).select(new.columns)
-            # bounded merge: ≤ 2k rows per group enter this window
-            w = Window.partitionBy(*group_cols).orderBy("_rk", "_v")
-            merged = (cur.unionByName(new)
-                      .withColumn("_rn", F.row_number().over(w))
-                      .filter(F.col("_rn") <= int(k)).drop("_rn"))
-        else:
-            merged = new
-        tmp = state_dir + ".tmp"
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, _EPOCH_MARKER), "w") as f:
-            f.write(str(epoch_id))
-        _swap_state_dir(tmp, state_dir)
-
-    return merge_batch
+    return _sketch_merge_fn(
+        state_dir,
+        lambda b: grouped_hash_sample_bottom_k(b, group_cols, value_col,
+                                               rank_cols, k, salt_buckets),
+        lambda u: bottom_k_rows(u, group_cols, ["_rk", "_v"], k))
 
 
 def run_streaming_grouped_quantile_sketch(
@@ -471,44 +455,40 @@ def read_grouped_percentiles(spark: SparkSession, state_dir: str,
                              group_cols: list[str],
                              percentiles=(0.5, 0.95)):
     """Per-group discrete percentiles off a
-    :func:`run_streaming_grouped_quantile_sketch` state — the same
-    sorted-array index arithmetic (and ``p50``-style output contract)
-    as the batch ``grouped_hash_sample_percentiles``, over ≤ k rows
+    :func:`run_streaming_grouped_quantile_sketch` state — the core's
+    sorted-sample readout and ``p50``-style output contract, exactly as
+    the batch ``grouped_percentiles(mode='sketch')``, over <= k rows
     per group."""
-    from nyctaxidatapipeline_spark.operators.sketches import (
-        sample_quantile,
+    from nyctaxidatapipeline_spark.operators.quantiles import (
+        named_percentiles,
+        sample_quantiles,
     )
 
     _recover_state_dir(state_dir)
     s = spark.read.parquet(state_dir)
-    agg = s.groupBy(*group_cols).agg(
-        F.sort_array(F.collect_list("_v")).alias("_arr"))
-    cols = [*group_cols] + [
-        (F.round(sample_quantile(F.col("_arr"), p), 6)
-          + F.lit(0.0)).alias(f"p{int(p * 100)}")
-        for p in percentiles]
-    return agg.select(*cols)
+    return named_percentiles(
+        sample_quantiles(s, "_v", percentiles, group_cols), group_cols,
+        percentiles)
 
 
 def read_quantile_threshold(spark: SparkSession, state_dir: str,
                             value_col: str, q: float = 0.99):
     """The discrete q-quantile of a
-    :func:`run_streaming_quantile_sketch` state — the same
-    ceil(q·n)-index arithmetic as the batch
-    ``hash_sample_quantile_threshold``, off a k-row parquet (a
+    :func:`run_streaming_quantile_sketch` state — the core's
+    sorted-sample readout, exactly as the batch
+    ``quantile_threshold(mode='sketch')``, off a k-row parquet (a
     monitoring read, not a stream-history scan). Returns a 1-row
     DataFrame (``threshold``) for the broadcast two-phase anomaly
     shape."""
-    from nyctaxidatapipeline_spark.operators.sketches import (
-        sample_quantile,
+    from nyctaxidatapipeline_spark.operators.quantiles import (
+        QUANTILES,
+        sample_quantiles,
     )
 
     _recover_state_dir(state_dir)
     s = spark.read.parquet(state_dir)
-    arr = F.sort_array(F.collect_list(value_col))
-    return (s.agg(arr.alias("_arr"))
-             .select(sample_quantile(F.col("_arr"), q)
-                      .alias("threshold")))
+    return (sample_quantiles(s, value_col, (q,))
+            .select(F.col(QUANTILES)[0].alias("threshold")))
 
 
 def dedup_admit_fn(corpus_dir: str, text_col: str, id_col: str):

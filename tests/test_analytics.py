@@ -64,7 +64,8 @@ def test_quantile_threshold_modes(spark):
 def test_approx_quantile_gk_bound_at_sf(spark):
     # Reference-parity mode (yellow_taxi_etl.py:121 uses the one-pass
     # Greenwald-Khanna sketch). GK's guarantee is on RANK, not value:
-    # the returned element's rank is within rel_err*n of the q*n target,
+    # the returned element's rank is within rel_err*n (rel_err =
+    # 1/accuracy) of the q*n target,
     # so the approx p99 must land between the exact p98 and the max.
     # This pins the sketch mode to its contract at bench scale — the
     # exact twin alone (fare_anomalies oracle) never exercised it.
@@ -73,7 +74,7 @@ def test_approx_quantile_gk_bound_at_sf(spark):
     li = load_table(spark, "/root/testdata/sf0.1", "lineitem")
     q, rel_err = 0.99, 0.01
     approx = quantile_threshold(li, "l_extendedprice", q, mode="approx",
-                                rel_err=rel_err).collect()[0][0]
+                                accuracy=100).collect()[0][0]
     lo, hi = (li.select(
         F.percentile("l_extendedprice", F.lit(q - rel_err)),
         F.percentile("l_extendedprice", F.lit(min(1.0, q + rel_err))))

@@ -143,19 +143,20 @@ def test_approx_quantile_bounded_error(spark):
 
 
 def test_winsorize_approx_matches_exact_rank_at_high_accuracy(spark):
-    from nyctaxidatapipeline_spark.operators.cleaning import (
-        quantile_bounds_approx,
+    from nyctaxidatapipeline_spark.operators.quantiles import (
+        QUANTILES,
+        quantiles,
     )
     from nyctaxidatapipeline_spark.sources import load_table
 
     li = load_table(spark, "/root/testdata/sf0.001", "lineitem")
-    b = quantile_bounds_approx(li, "l_extendedprice",
-                               0.01, 0.99, accuracy=10_000_000).first()
+    lo, hi = quantiles(li, "l_extendedprice", (0.01, 0.99), mode="approx",
+                       accuracy=10_000_000).first()[QUANTILES]
     # uncompressed sketch -> exact rank statistics: both bounds are
     # actual data values at the right ranks
     vals = sorted(r["l_extendedprice"]
                   for r in li.select("l_extendedprice").collect())
     n = len(vals)
     import math
-    assert b["_lo"] == vals[max(0, math.ceil(0.01 * n) - 1)]
-    assert b["_hi"] == vals[max(0, math.ceil(0.99 * n) - 1)]
+    assert lo == vals[max(0, math.ceil(0.01 * n) - 1)]
+    assert hi == vals[max(0, math.ceil(0.99 * n) - 1)]

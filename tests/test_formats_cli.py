@@ -172,3 +172,24 @@ def test_curation_cli_end_to_end(spark, tmp_path, monkeypatch):
                 ex = decode_example(rec)
                 got[ex["seq_id"][0]] = ex["ids"]
     assert got == want and len(got) == rep["n_sequences"]
+
+
+def test_read_parquet_glob_restores_nanos_timestamps(spark, tmp_path):
+    """A glob path gets the same TIMESTAMP(NANOS) -> timestamp restore
+    as a directory path: the footer probe expands the glob to its first
+    match instead of handing the pattern to pyarrow (which raised, and
+    the columns stayed raw int64 nanos)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from nyctaxidatapipeline_spark.sources import read_parquet
+
+    ts = pa.array([1_700_000_000_123_456_789, None], pa.timestamp("ns"))
+    pq.write_table(pa.table({"id": [1, 2], "ts": ts}),
+                   str(tmp_path / "part-0.parquet"))
+    df = read_parquet(spark, f"{tmp_path}/*.parquet")
+    assert isinstance(df.schema["ts"].dataType, T.TimestampNTZType)
+    want = read_parquet(spark, str(tmp_path))
+    assert sorted(df.collect()) == sorted(want.collect())
+    assert df.filter("ts IS NOT NULL").count() == 1

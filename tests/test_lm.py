@@ -112,6 +112,23 @@ def test_skipgram_counts_window_semantics(spark):
     assert got2 == {("x", "y"): 1, ("y", "z"): 1}
 
 
+def test_perplexity_buckets_reads_one_percentile_buffer(spark):
+    """Both tertile bounds come off ONE percentile aggregate (the
+    quantile core's array buffer): the optimized plan holds a single
+    percentile function — two scalar ones buffered the scored corpus
+    twice."""
+    import re
+
+    from nyctaxidatapipeline_spark.operators.lm import perplexity_buckets
+
+    rows = [Row(doc_id=i,
+                text=" ".join(f"w{j % (i + 2)}" for j in range(20)))
+            for i in range(12)]
+    out = perplexity_buckets(spark.createDataFrame(rows), "text", "doc_id")
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"\bpercentile\(", plan)) == 1, plan
+
+
 def test_perplexity_buckets_tertiles(spark):
     from pyspark.sql import Row
 

@@ -637,3 +637,21 @@ def test_image_resize_validates_params(spark):
         image_resize(df, factor=0)
     with pytest.raises(ValueError):
         image_resize(df, codec="webp")
+
+
+def test_doc_ids_wide_same_rows(spark, tmp_path):
+    """The media fan-out helper must be a pure re-partitioning: same
+    doc_id multiset, parallelism-width output on a narrow scan."""
+    from pyspark.sql import functions as F
+
+    import __spark_entry__ as entry
+
+    src = spark.range(0, 97).select(F.col("id").alias("doc_id"))
+    path = str(tmp_path / "documents.parquet")
+    src.coalesce(1).write.parquet(path)
+    # load_table reads <sf_dir>/documents.parquet (a directory here —
+    # the glob-or-dir scan contract).
+    wide = entry._doc_ids_wide(spark, str(tmp_path))
+    assert sorted(r["doc_id"] for r in wide.collect()) == list(range(97))
+    target = spark.sparkContext.defaultParallelism
+    assert wide.rdd.getNumPartitions() >= min(target, 2)

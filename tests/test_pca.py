@@ -118,3 +118,17 @@ def test_repartition_invariance(emb):
 
 def test_embedding_dim(emb):
     assert embedding_dim(emb) == 64
+
+
+def test_moments_partition_independent(spark):
+    """embedding_moments (fan_out'd) must be BIT-identical at any
+    partition count — the property that makes the fan_out safe."""
+    from nyctaxidatapipeline_spark.operators.pca import embedding_moments
+
+    rows = [(i, [0.1 * i, -0.25 * i, 3.0]) for i in range(50)]
+    df = spark.createDataFrame(rows, "id long, embedding array<double>")
+    one = {(r["i"], r["j"]): r["s"]
+           for r in embedding_moments(df.coalesce(1)).collect()}
+    many = {(r["i"], r["j"]): r["s"]
+            for r in embedding_moments(df.repartition(7)).collect()}
+    assert one == many

@@ -1,9 +1,8 @@
-"""Focused gates for the r15 optimization-round rewrites.
+"""Gates for ``grouped_percentiles``' single-buffer percentile path.
 
-Each test pins the EQUIVALENCE the optimization relies on, not the
-speed: the array-percentile single-buffer rewrite must return exactly
-the per-percentile scalar aggregates it replaced, and the fan_out'd
-passes must be partition-count-independent (same rows at any width).
+Each test pins the EQUIVALENCE the one-aggregate rewrite relies on, not
+the speed: every p-named column must equal the per-percentile scalar
+aggregate it replaced, in the requested column order.
 """
 
 from __future__ import annotations
@@ -11,10 +10,6 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from nyctaxidatapipeline_spark.operators.cleaning import (
-    quantile_bounds,
-    quantile_bounds_approx,
-)
 from nyctaxidatapipeline_spark.operators.reshape import grouped_percentiles
 
 
@@ -25,27 +20,6 @@ def vals(spark):
     rows = [("a", 1.0), ("a", 2.0), ("a", 2.0), ("a", -3.5), ("a", 10.0),
             ("b", 7.25), ("b", None), ("b", 0.0), ("c", 42.0)]
     return spark.createDataFrame(rows, "g string, v double")
-
-
-def test_quantile_bounds_matches_scalar_percentiles(vals):
-    got = quantile_bounds(vals, "v", 0.1, 0.9).collect()[0]
-    want = vals.agg(F.percentile("v", 0.1).alias("_lo"),
-                    F.percentile("v", 0.9).alias("_hi")).collect()[0]
-    assert got["_lo"] == want["_lo"]
-    assert got["_hi"] == want["_hi"]
-
-
-def test_quantile_bounds_approx_matches_scalar_sketches(vals):
-    # accuracy >= n keeps the GK sketch uncompressed, so both forms
-    # return the identical exact rank statistics.
-    got = quantile_bounds_approx(vals, "v", 0.25, 0.75,
-                                 accuracy=1000).collect()[0]
-    want = vals.agg(
-        F.percentile_approx("v", F.lit(0.25), F.lit(1000)).alias("_lo"),
-        F.percentile_approx("v", F.lit(0.75), F.lit(1000)).alias("_hi"),
-    ).collect()[0]
-    assert got["_lo"] == want["_lo"]
-    assert got["_hi"] == want["_hi"]
 
 
 @pytest.mark.parametrize("mode", ["exact", "approx"])
@@ -68,33 +42,3 @@ def test_grouped_percentiles_matches_scalar_form(vals, mode):
 def test_grouped_percentiles_column_order_and_names(vals):
     out = grouped_percentiles(vals, ["g"], "v", (0.5, 0.95))
     assert out.columns == ["g", "p50", "p95"]
-
-
-def test_moments_partition_independent(spark):
-    """embedding_moments (now fan_out'd) must be BIT-identical at any
-    partition count — the property that makes the fan_out safe."""
-    from nyctaxidatapipeline_spark.operators.pca import embedding_moments
-
-    rows = [(i, [0.1 * i, -0.25 * i, 3.0]) for i in range(50)]
-    df = spark.createDataFrame(rows, "id long, embedding array<double>")
-    one = {(r["i"], r["j"]): r["s"]
-           for r in embedding_moments(df.coalesce(1)).collect()}
-    many = {(r["i"], r["j"]): r["s"]
-            for r in embedding_moments(df.repartition(7)).collect()}
-    assert one == many
-
-
-def test_doc_ids_wide_same_rows(spark, tmp_path):
-    """The media fan-out helper must be a pure re-partitioning: same
-    doc_id multiset, parallelism-width output on a narrow scan."""
-    import __spark_entry__ as entry
-
-    src = spark.range(0, 97).select(F.col("id").alias("doc_id"))
-    path = str(tmp_path / "documents.parquet")
-    src.coalesce(1).write.parquet(path)
-    # load_table reads <sf_dir>/documents.parquet (a directory here —
-    # the glob-or-dir scan contract).
-    wide = entry._doc_ids_wide(spark, str(tmp_path))
-    assert sorted(r["doc_id"] for r in wide.collect()) == list(range(97))
-    target = spark.sparkContext.defaultParallelism
-    assert wide.rdd.getNumPartitions() >= min(target, 2)

@@ -292,25 +292,26 @@ def test_hash_sample_quantile_accuracy_and_determinism(spark):
     sampling error of the exact rank statistic, and is IDENTICAL
     across partitionings / row orders (the determinism the oracle
     twin relies on)."""
-    from nyctaxidatapipeline_spark.operators.sketches import (
-        hash_sample_quantile_threshold,
+    from nyctaxidatapipeline_spark.operators.analytics import (
+        quantile_threshold,
     )
 
     n = 5000
     df = spark.createDataFrame(
         [Row(id=i, v=float((i * 7919) % n)) for i in range(n)])
-    got = hash_sample_quantile_threshold(
-        df, "v", ["id"], q=0.9, k=1024).collect()[0]["threshold"]
+    got = quantile_threshold(df, "v", 0.9, mode="sketch", rank_cols=["id"],
+                             sample_k=1024).collect()[0]["threshold"]
     # true p90 of 0..n-1 is ~4500; sampling error ~sqrt(.09/1024)≈0.9%
     # of rank -> ±~3.5 sigma bound of 160 on the value scale
     assert abs(got - 4500.0) < 160
-    again = hash_sample_quantile_threshold(
-        df.repartition(13).orderBy(F.rand(seed=1)),
-        "v", ["id"], q=0.9, k=1024).collect()[0]["threshold"]
+    again = quantile_threshold(
+        df.repartition(13).orderBy(F.rand(seed=1)), "v", 0.9,
+        mode="sketch", rank_cols=["id"],
+        sample_k=1024).collect()[0]["threshold"]
     assert again == got
     # k >= n degenerates to the exact discrete quantile
-    exact = hash_sample_quantile_threshold(
-        df, "v", ["id"], q=0.9, k=n).collect()[0]["threshold"]
+    exact = quantile_threshold(df, "v", 0.9, mode="sketch", rank_cols=["id"],
+                               sample_k=n).collect()[0]["threshold"]
     assert exact == 4499.0  # ceil(0.9*5000)=4500th smallest = 4499.0
 
 
@@ -359,21 +360,22 @@ def test_grouped_hash_sample_percentiles_contract(spark):
     """Grouped sketch percentiles: per-group columns p50/p95, exact
     discrete quantiles when k >= group size, deterministic under
     reshuffling."""
-    from nyctaxidatapipeline_spark.operators.sketches import (
-        grouped_hash_sample_percentiles,
+    from nyctaxidatapipeline_spark.operators.reshape import (
+        grouped_percentiles,
     )
 
     rows = [Row(g="a", id=i, v=float(i)) for i in range(100)] + \
            [Row(g="b", id=1000 + i, v=float(10 * i)) for i in range(50)]
     df = spark.createDataFrame(rows)
-    got = {r.g: (r.p50, r.p95) for r in grouped_hash_sample_percentiles(
-        df, ["g"], "v", ["id"], (0.5, 0.95), k=4096).collect()}
+    got = {r.g: (r.p50, r.p95) for r in grouped_percentiles(
+        df, ["g"], "v", (0.5, 0.95), mode="sketch", rank_cols=["id"],
+        k=4096).collect()}
     # k >= group sizes -> exact: a: ceil(.5*100)=50th -> 49.0,
     # ceil(.95*100)=95th -> 94.0 ; b: 25th -> 240.0, ceil(47.5)=48th -> 470.0
     assert got == {"a": (49.0, 94.0), "b": (240.0, 470.0)}
-    again = {r.g: (r.p50, r.p95) for r in grouped_hash_sample_percentiles(
-        df.repartition(11).orderBy(F.rand(seed=3)),
-        ["g"], "v", ["id"], (0.5, 0.95), k=4096).collect()}
+    again = {r.g: (r.p50, r.p95) for r in grouped_percentiles(
+        df.repartition(11).orderBy(F.rand(seed=3)), ["g"], "v",
+        (0.5, 0.95), mode="sketch", rank_cols=["id"], k=4096).collect()}
     assert again == got
 
 
@@ -384,8 +386,10 @@ def test_grouped_percentiles_salted_two_phase_identity(spark):
     an inline single-window reference."""
     from pyspark.sql import Window
 
+    from nyctaxidatapipeline_spark.operators.reshape import (
+        grouped_percentiles,
+    )
     from nyctaxidatapipeline_spark.operators.sketches import (
-        grouped_hash_sample_percentiles,
         hash_sample_rank,
     )
 
@@ -396,9 +400,9 @@ def test_grouped_percentiles_salted_two_phase_identity(spark):
     df = spark.createDataFrame(rows).repartition(9)
     k = 64
     got = {r.g: (r.p50, r.p95)
-           for r in grouped_hash_sample_percentiles(
-               df, ["g"], "v", ["id"], (0.5, 0.95), k=k,
-               salt_buckets=8).collect()}
+           for r in grouped_percentiles(
+               df, ["g"], "v", (0.5, 0.95), mode="sketch",
+               rank_cols=["id"], k=k, salt_buckets=8).collect()}
     # logical single-window reference (the shape the DuckDB twin spells)
     w = Window.partitionBy("g").orderBy("_rk", "_v")
     ref_s = (df.select("g", F.col("v").alias("_v"),
@@ -426,14 +430,15 @@ def test_grouped_percentiles_plan_has_no_whole_group_window(spark):
     windows)."""
     import re
 
-    from nyctaxidatapipeline_spark.operators.sketches import (
-        grouped_hash_sample_percentiles,
+    from nyctaxidatapipeline_spark.operators.reshape import (
+        grouped_percentiles,
     )
     from nyctaxidatapipeline_spark.plans import explain_str
 
     df = spark.createDataFrame([Row(g="a", id=1, v=1.0)])
-    plan = explain_str(grouped_hash_sample_percentiles(
-        df, ["g"], "v", ["id"], (0.5,), k=4, salt_buckets=8))
+    plan = explain_str(grouped_percentiles(
+        df, ["g"], "v", (0.5,), mode="sketch", rank_cols=["id"], k=4,
+        salt_buckets=8))
     specs = re.findall(r"windowspecdefinition\(([^)]*)\)", plan)
     assert len(specs) == 2, plan
     # formatted explain lists nodes in execution order: the full-scan
@@ -472,8 +477,8 @@ def test_grouped_percentiles_salt_bucket_invariance(spark):
     (including 1, which degenerates to the single-window form) yields
     the identical percentile output — duplicate rank keys included
     (same _rk → same salt, so tie-groups never split)."""
-    from nyctaxidatapipeline_spark.operators.sketches import (
-        grouped_hash_sample_percentiles,
+    from nyctaxidatapipeline_spark.operators.reshape import (
+        grouped_percentiles,
     )
 
     rows = ([Row(g="a", id=i % 37, v=float((i * 31) % 500))
@@ -484,9 +489,9 @@ def test_grouped_percentiles_salt_bucket_invariance(spark):
     results = []
     for s_b in (1, 2, 7, 32):
         got = {r.g: (r.p50, r.p95)
-               for r in grouped_hash_sample_percentiles(
-                   df, ["g"], "v", ["id"], (0.5, 0.95), k=32,
-                   salt_buckets=s_b).collect()}
+               for r in grouped_percentiles(
+                   df, ["g"], "v", (0.5, 0.95), mode="sketch",
+                   rank_cols=["id"], k=32, salt_buckets=s_b).collect()}
         results.append(got)
     assert all(r == results[0] for r in results[1:]), results
 
@@ -688,9 +693,11 @@ def test_grouped_bottom_k_auto_salt_crossover(spark):
     are bit-identical on real data."""
     import re
 
+    from nyctaxidatapipeline_spark.operators.reshape import (
+        grouped_percentiles,
+    )
     from nyctaxidatapipeline_spark.operators.sketches import (
         grouped_hash_sample_bottom_k,
-        grouped_hash_sample_percentiles,
     )
     from nyctaxidatapipeline_spark.plans import explain_str
 
@@ -705,13 +712,12 @@ def test_grouped_bottom_k_auto_salt_crossover(spark):
     assert "_salt" not in auto_plan, auto_plan
     assert len(re.findall(r"\(\d+\) Exchange", auto_plan)) == 1, auto_plan
     # bit-identical percentiles, naive vs forced tree
-    kw = dict(percentiles=(0.5, 0.95), k=256)
-    naive = grouped_hash_sample_percentiles(
-        df, ["l_returnflag"], "l_extendedprice",
-        ["l_orderkey", "l_linenumber"], salt_buckets=None, **kw)
-    tree = grouped_hash_sample_percentiles(
-        df, ["l_returnflag"], "l_extendedprice",
-        ["l_orderkey", "l_linenumber"], salt_buckets=16, **kw)
+    kw = dict(percentiles=(0.5, 0.95), mode="sketch",
+              rank_cols=["l_orderkey", "l_linenumber"], k=256)
+    naive = grouped_percentiles(
+        df, ["l_returnflag"], "l_extendedprice", salt_buckets=None, **kw)
+    tree = grouped_percentiles(
+        df, ["l_returnflag"], "l_extendedprice", salt_buckets=16, **kw)
     assert sorted(map(tuple, naive.collect())) == \
         sorted(map(tuple, tree.collect()))
 
@@ -776,9 +782,11 @@ def test_quantile_summary_contract(spark):
     requested quantile, values equal to the discrete index into the
     sorted sample (cross-checked against the threshold form at the
     same q); bad qs rejected."""
+    from nyctaxidatapipeline_spark.operators.analytics import (
+        quantile_threshold,
+    )
     from nyctaxidatapipeline_spark.operators.sketches import (
         hash_sample_quantile_summary,
-        hash_sample_quantile_threshold,
     )
 
     df = (spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
@@ -787,8 +795,8 @@ def test_quantile_summary_contract(spark):
     got = {r.q: r.value for r in hash_sample_quantile_summary(
         df, "v", ["id"], qs=(0.5, 0.99), k=256).collect()}
     assert set(got) == {0.5, 0.99}
-    thr = hash_sample_quantile_threshold(
-        df, "v", ["id"], q=0.99, k=256).collect()[0].threshold
+    thr = quantile_threshold(df, "v", 0.99, mode="sketch", rank_cols=["id"],
+                             sample_k=256).collect()[0].threshold
     assert got[0.99] == round(thr, 6) + 0.0
     assert got[0.5] <= got[0.99]
 
@@ -804,15 +812,19 @@ def test_quantile_sketch_empty_input_yields_null_not_ansi_error(spark):
     quantile — not Spark 4's ANSI INVALID_ARRAY_INDEX error — in the
     threshold, summary AND grouped forms; DuckDB's out-of-bounds list
     index is NULL, so parity holds on the edge too."""
+    from nyctaxidatapipeline_spark.operators.analytics import (
+        quantile_threshold,
+    )
+    from nyctaxidatapipeline_spark.operators.reshape import (
+        grouped_percentiles,
+    )
     from nyctaxidatapipeline_spark.operators.sketches import (
-        grouped_hash_sample_percentiles,
         hash_sample_quantile_summary,
-        hash_sample_quantile_threshold,
     )
 
     empty = spark.createDataFrame([], schema="id int, v double")
-    thr = hash_sample_quantile_threshold(
-        empty, "v", ["id"], q=0.99, k=16).collect()
+    thr = quantile_threshold(empty, "v", 0.99, mode="sketch",
+                             rank_cols=["id"], sample_k=16).collect()
     assert len(thr) == 1 and thr[0].threshold is None
 
     summ = hash_sample_quantile_summary(
@@ -823,6 +835,71 @@ def test_quantile_sketch_empty_input_yields_null_not_ansi_error(spark):
         [Row(g="a", id=1, v=None), Row(g="a", id=2, v=None),
          Row(g="b", id=3, v=1.0)],
         schema="g string, id int, v double")
-    got = {r.g: r.p50 for r in grouped_hash_sample_percentiles(
-        all_null, ["g"], "v", ["id"], (0.5,), k=4).collect()}
+    got = {r.g: r.p50 for r in grouped_percentiles(
+        all_null, ["g"], "v", (0.5,), mode="sketch", rank_cols=["id"],
+        k=4).collect()}
     assert got == {"a": None, "b": 1.0}
+
+
+@pytest.mark.parametrize("by", [(), ("g",)], ids=["ungrouped", "grouped"])
+@pytest.mark.parametrize("mode", ["exact", "approx", "sketch"])
+def test_quantiles_match_scalar_forms(spark, mode, by):
+    """The quantile core's ONE buffer per group returns exactly what
+    the per-rank forms return: every rank of the array aggregate equals
+    the scalar ``F.percentile`` / ``percentile_approx`` at that rank
+    (exact, approx), and every sketch quantile is the discrete index
+    into that group's sorted sample (sketch) — in the core's
+    ``by + [QUANTILES]`` layout and through ``grouped_percentiles``'s
+    p-named, 6-dp columns."""
+    from nyctaxidatapipeline_spark.operators.quantiles import (
+        QUANTILES,
+        quantiles,
+    )
+    from nyctaxidatapipeline_spark.operators.reshape import (
+        grouped_percentiles,
+    )
+    from nyctaxidatapipeline_spark.operators.sketches import (
+        grouped_hash_sample_bottom_k,
+        hash_sample_bottom_k,
+    )
+
+    # Deliberately awkward: duplicates, negatives, a null, one group
+    # with a single row (percentile of 1 value = that value).
+    rows = [("a", 1, 1.0), ("a", 2, 2.0), ("a", 3, 2.0), ("a", 4, -3.5),
+            ("a", 5, 10.0), ("b", 6, 7.25), ("b", 7, None), ("b", 8, 0.0),
+            ("c", 9, 42.0)]
+    vals = spark.createDataFrame(rows, "g string, id int, v double")
+    qs, by, k = (0.5, 0.95, 0.05), list(by), 4   # k bites group "a"
+    kw = dict(mode=mode, accuracy=1000, rank_cols=["id"], k=k)
+    out = quantiles(vals, "v", qs, by=by, **kw)
+    assert out.columns == [*by, QUANTILES]
+    got = {tuple(r[c] for c in by): r[QUANTILES] for r in out.collect()}
+
+    if mode == "sketch":
+        if by:
+            s, vcol = grouped_hash_sample_bottom_k(vals, by, "v", ["id"],
+                                                   k), "_v"
+        else:
+            s, vcol = hash_sample_bottom_k(vals, ["id"], ["v"], k), "v"
+        samples = {}
+        for r in s.collect():
+            samples.setdefault(tuple(r[c] for c in by), []).append(r[vcol])
+        want = {}
+        for key, vs in samples.items():
+            arr = sorted(v for v in vs if v is not None)
+            want[key] = [arr[max(math.ceil(q * len(arr)), 1) - 1]
+                         for q in qs]
+    else:
+        fn = (F.percentile if mode == "exact"
+              else (lambda c, p: F.percentile_approx(c, p, F.lit(1000))))
+        want = {tuple(r[c] for c in by): [r[f"_{i}"] for i in range(3)]
+                for r in vals.groupBy(*by)
+                             .agg(*[fn(F.col("v"), F.lit(q)).alias(f"_{i}")
+                                    for i, q in enumerate(qs)]).collect()}
+    assert got == want
+
+    named = grouped_percentiles(vals, by, "v", qs, **kw)
+    assert named.columns == [*by, "p50", "p95", "p5"]
+    assert {tuple(r[c] for c in by): [r.p50, r.p95, r.p5]
+            for r in named.collect()} == \
+        {key: [round(x, 6) + 0.0 for x in xs] for key, xs in want.items()}

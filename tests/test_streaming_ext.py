@@ -972,9 +972,11 @@ def test_streaming_quantile_sketch_equals_batch_and_replays(
     a replayed epoch is a no-op."""
     from pyspark.sql import functions as F
 
+    from nyctaxidatapipeline_spark.operators.analytics import (
+        quantile_threshold,
+    )
     from nyctaxidatapipeline_spark.operators.sketches import (
         hash_sample_bottom_k,
-        hash_sample_quantile_threshold,
     )
     from nyctaxidatapipeline_spark.sources import load_table
     from nyctaxidatapipeline_spark.streaming.jobs import (
@@ -1005,10 +1007,10 @@ def test_streaming_quantile_sketch_equals_batch_and_replays(
     # threshold read == batch sketch threshold
     t_stream = read_quantile_threshold(
         spark, state, "l_extendedprice", q=0.99).collect()[0][0]
-    t_batch = hash_sample_quantile_threshold(
-        li, "l_extendedprice",
-        ["l_orderkey", "l_linenumber", "l_partkey"], q=0.99,
-        k=k).collect()[0][0]
+    t_batch = quantile_threshold(
+        li, "l_extendedprice", 0.99, mode="sketch",
+        rank_cols=["l_orderkey", "l_linenumber", "l_partkey"],
+        sample_k=k).collect()[0][0]
     assert t_stream == t_batch
     # replayed epoch: state byte-identical (marker skips the merge)
     fn = quantile_sketch_merge_fn(
@@ -1025,11 +1027,13 @@ def test_streaming_grouped_quantile_sketch_equals_batch(spark,
                                                         tmp_path):
     """Drained per-group sketch state == the batch grouped bottom-k of
     the whole fixture (per-group mergeability), the percentile read
-    matches the batch grouped_hash_sample_percentiles, and a replayed
+    matches the batch grouped_percentiles(mode="sketch"), and a replayed
     epoch no-ops."""
+    from nyctaxidatapipeline_spark.operators.reshape import (
+        grouped_percentiles,
+    )
     from nyctaxidatapipeline_spark.operators.sketches import (
         grouped_hash_sample_bottom_k,
-        grouped_hash_sample_percentiles,
     )
     from nyctaxidatapipeline_spark.sources import load_table
     from nyctaxidatapipeline_spark.streaming.jobs import (
@@ -1062,9 +1066,9 @@ def test_streaming_grouped_quantile_sketch_equals_batch(spark,
                 for r in read_grouped_percentiles(
                     spark, state, ["l_returnflag"]).collect()}
     p_batch = {r.l_returnflag: (r.p50, r.p95)
-               for r in grouped_hash_sample_percentiles(
-                   li, ["l_returnflag"], "l_extendedprice", cols,
-                   (0.5, 0.95), k=k).collect()}
+               for r in grouped_percentiles(
+                   li, ["l_returnflag"], "l_extendedprice", (0.5, 0.95),
+                   mode="sketch", rank_cols=cols, k=k).collect()}
     assert p_stream == p_batch
     # replay no-op
     fn = grouped_quantile_sketch_merge_fn(
