@@ -7,9 +7,16 @@ engineering → cached shared input → seven aggregate tables; ``run_pipeline``
 writes them through the sink abstraction with the reference's write-mode
 semantics (``--append`` flips analytics tables to append, ``fare_anomalies``
 stays overwrite — ``yellow_taxi_etl.py:205-211``).
+
+The reference writes the seven tables one after another; ``run_pipeline``
+writes them concurrently over the one cached featurized input (Shark's
+shape: one in-memory columnar cache, many independent queries). Why the
+cache is filled once regardless is in ``taxi_analytics``.
 """
 
 from __future__ import annotations
+
+import functools
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -25,6 +32,7 @@ from nyctaxidatapipeline_spark.operators import (
     tip_trends,
     trip_performance,
 )
+from nyctaxidatapipeline_spark.plans.util import build_concurrently
 from nyctaxidatapipeline_spark.sources import read_parquet
 
 #: The 19 TLC trip columns (reference ``cleaning.py:10-15``).
@@ -57,11 +65,18 @@ def taxi_analytics(trips: DataFrame,
 
     The featurized input is cached — the reference's one explicit physical
     decision (``yellow_taxi_etl.py:95``): six analytics plus the quantile
-    scan share a single materialization. At 100 TB swap ``.cache()`` for a
-    parquet checkpoint of the featurized columns (MEMORY_AND_DISK of a
-    100 TB working set evicts constantly; a columnar on-disk checkpoint
-    with column pruning is strictly better there).
+    scan share a single materialization. ``run_pipeline`` writes the seven
+    tables concurrently over it: a job reaching a cached partition that
+    another job is filling blocks on that fill rather than recompute it
+    (checked in ``tests/test_pipeline.py``). At 100 TB swap ``.cache()``
+    for a parquet checkpoint of the featurized columns
+    (MEMORY_AND_DISK of a 100 TB working set evicts constantly; a columnar
+    on-disk checkpoint with column pruning is strictly better there).
     """
+    # NOTE: do not drop this cache to speed up the concurrent writes. It
+    # was tried: the pipeline got faster, but eight concurrent 19-column
+    # raw scans raised peak RSS of the 300k-row taxi_etl benchmark to
+    # 1847 and 1974 MB (two runs) against 1438 and 1474 MB with the cache.
     df = with_trip_features(trips).cache()
     return {
         "demand_heatmap": demand_heatmap(df, "PULocationID", "pickup_hour"),
@@ -96,23 +111,40 @@ def taxi_analytics(trips: DataFrame,
 
 
 def run_pipeline(trips: DataFrame, sink: str = "parquet",
-                 append: bool = False, **sink_kwargs) -> dict[str, DataFrame]:
+                 append: bool = False, threshold_mode: str = "approx",
+                 **sink_kwargs) -> dict[str, DataFrame]:
     """Write all seven tables. ``append=True`` mirrors the reference's
     ``--append`` flag; ``fare_anomalies`` is always overwritten
-    (``yellow_taxi_etl.py:207``)."""
-    tables = taxi_analytics(trips)
+    (``yellow_taxi_etl.py:207``). ``threshold_mode`` picks the anomaly
+    threshold's quantile (``taxi_analytics``).
+
+    Parquet and noop writes run concurrently on driver threads; all of
+    them finish before this returns, and the first failure in table order
+    is re-raised. Console writes stay in table order (stdout), JDBC writes
+    one at a time (each table's ``coalesce_to`` connection budget is sized
+    for one database)."""
+    if sink not in sinks.SINKS:
+        raise ValueError(f"unknown sink {sink!r}")
+    tables = taxi_analytics(trips, threshold_mode)
     mode = "append" if append else "overwrite"
-    for name, df in tables.items():
+
+    def write(name: str, df: DataFrame) -> None:
         table_mode = "overwrite" if name == "fare_anomalies" else mode
         if sink == "parquet":
-            path = sink_kwargs["base_path"].rstrip("/") + "/" + name
-            sinks.write_parquet(df, path, mode=table_mode)
+            kwargs = {"path": sink_kwargs["base_path"].rstrip("/") + "/"
+                      + name, "mode": table_mode}
         elif sink == "jdbc":
-            sinks.write_jdbc(df, name, sink_kwargs["cfg"], mode=table_mode)
-        elif sink == "noop":
-            sinks.write_output(df, "noop")
-        elif sink == "console":
-            sinks.write_console(df)
+            kwargs = {"table": name, "cfg": sink_kwargs["cfg"],
+                      "mode": table_mode}
         else:
-            raise ValueError(f"unknown sink {sink!r}")
+            kwargs = {}
+        sinks.write_output(df, sink, **kwargs)
+
+    writes = [functools.partial(write, name, df)
+              for name, df in tables.items()]
+    if sink in ("parquet", "noop"):
+        build_concurrently(trips.sparkSession, *writes)
+    else:
+        for w in writes:
+            w()
     return tables

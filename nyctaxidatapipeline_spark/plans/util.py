@@ -142,7 +142,8 @@ def build_concurrently(session, *builders):
     convergence probes). Built sequentially, each arm's jobs leave the
     cluster idle for the other's; two driver threads overlap them. The
     returned plans are identical to sequential construction — only the
-    wall-clock of building them changes.
+    wall-clock of building them changes. Every thread finishes before
+    this returns; the first failure in argument order is raised.
 
     Uses ``inheritable_thread_target`` (the documented way to inherit
     JVM-thread-local properties such as job descriptions/tags in

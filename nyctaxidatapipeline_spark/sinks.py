@@ -159,9 +159,13 @@ def write_console(df: DataFrame, n: int = 20, truncate: bool = True) -> None:
     df.show(n, truncate=truncate)
 
 
+#: The sinks ``write_output`` dispatches to.
+SINKS = ("parquet", "jdbc", "console", "noop")
+
+
 def write_output(df: DataFrame, sink: str = "parquet", **kwargs) -> None:
-    """Dispatch: ``sink`` in {parquet, jdbc, console, noop}. ``noop`` forces
-    full materialization without I/O (benchmarking)."""
+    """Dispatch: ``sink`` in ``SINKS``. ``noop`` forces full
+    materialization without I/O (benchmarking)."""
     if sink == "parquet":
         write_parquet(df, **kwargs)
     elif sink == "jdbc":

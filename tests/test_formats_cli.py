@@ -49,29 +49,25 @@ def test_convert_to_parquet_partitioned(spark, tmp_path):
     assert any(d.startswith("name=") for d in os.listdir(p_parq))
 
 
-def test_cli_end_to_end(spark, tmp_path, monkeypatch):
-    """Drive the CLI main() with a parquet input through the parquet sink.
+class _NoStop:
+    """Session proxy: the CLIs stop their session on exit, but the tests
+    share the fixture session — make stop a no-op."""
+    def __init__(self, s):
+        self._s = s
+    def __getattr__(self, k):
+        return getattr(self._s, k)
+    def stop(self):
+        pass
 
-    Reuses the session fixture via getOrCreate (the CLI builds the same
-    app session); verifies all seven tables land.
-    """
+
+def _taxi_cli(spark, tmp_path, monkeypatch):
+    """The taxi CLI's ``main`` on the fixture session, and the path of a
+    3-trip parquet input."""
     import datetime as dt
 
     import tools.run_taxi_pipeline as cli
 
-    class _NoStop:
-        """Session proxy: the CLI stops its session on exit, but the test
-        shares the fixture session — make stop a no-op."""
-        def __init__(self, s):
-            self._s = s
-        def __getattr__(self, k):
-            return getattr(self._s, k)
-        def stop(self):
-            pass
-
     monkeypatch.setattr(cli, "get_spark", lambda *_a, **_k: _NoStop(spark))
-    main = cli.main
-
     trips = spark.createDataFrame([Row(
         VendorID=1,
         tpep_pickup_datetime=dt.datetime(2024, 1, 1, 8),
@@ -83,6 +79,16 @@ def test_cli_end_to_end(spark, tmp_path, monkeypatch):
         total_amount=26.5, congestion_surcharge=2.5, Airport_fee=0.0)] * 3)
     in_path = str(tmp_path / "trips")
     trips.write.parquet(in_path)
+    return cli.main, in_path
+
+
+def test_cli_end_to_end(spark, tmp_path, monkeypatch):
+    """Drive the CLI main() with a parquet input through the parquet sink.
+
+    Reuses the session fixture via getOrCreate (the CLI builds the same
+    app session); verifies all seven tables land.
+    """
+    main, in_path = _taxi_cli(spark, tmp_path, monkeypatch)
     out = str(tmp_path / "out")
     rc = main(["--parquet-path", in_path, "--sink", "parquet", "--out", out])
     assert rc == 0
@@ -90,6 +96,26 @@ def test_cli_end_to_end(spark, tmp_path, monkeypatch):
     assert got[0].n_trips == 3
     import os
     assert len(os.listdir(out)) == 7
+
+
+def test_cli_threshold_mode_reaches_analytics(spark, tmp_path, monkeypatch):
+    """``--threshold-mode exact`` is handed through ``run_pipeline`` to
+    ``taxi_analytics`` instead of being dropped for the default."""
+    from nyctaxidatapipeline_spark import pipeline
+
+    main, in_path = _taxi_cli(spark, tmp_path, monkeypatch)
+    seen = []
+    analytics = pipeline.taxi_analytics
+
+    def recording(trips, threshold_mode="approx"):
+        seen.append(threshold_mode)
+        return analytics(trips, threshold_mode)
+
+    monkeypatch.setattr(pipeline, "taxi_analytics", recording)
+    rc = main(["--parquet-path", in_path, "--sink", "noop",
+               "--threshold-mode", "exact"])
+    assert rc == 0
+    assert seen == ["exact"]
 
 
 def test_xml_round_trip(spark, tmp_path):
@@ -122,14 +148,6 @@ def test_curation_cli_end_to_end(spark, tmp_path, monkeypatch):
     import json as _json
 
     import tools.run_curation_pipeline as cli
-
-    class _NoStop:
-        def __init__(self, s):
-            self._s = s
-        def __getattr__(self, k):
-            return getattr(self._s, k)
-        def stop(self):
-            pass
 
     monkeypatch.setattr(cli, "get_spark",
                         lambda *a, **k: _NoStop(spark))

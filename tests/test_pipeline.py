@@ -3,8 +3,12 @@ including the null/edge rows every fixture must carry."""
 
 import datetime as dt
 import random
+import threading
+import time
 
+import pytest
 from pyspark.sql import Row
+from pyspark.sql import functions as F
 
 from nyctaxidatapipeline_spark import pipeline, sinks
 from nyctaxidatapipeline_spark.operators import drop_null_rows
@@ -82,6 +86,86 @@ def test_append_semantics_anomalies_always_overwrite(spark, tmp_path):
     a2 = spark.read.parquet(str(tmp_path / "fare_anomalies")).count()
     assert n2 == 2 * n1          # append doubled the analytics table
     assert a2 == a1              # anomalies stayed overwrite
+
+
+def test_parquet_writes_overlap_and_fill_the_cache_once(spark, tmp_path,
+                                                       monkeypatch):
+    """The seven parquet writes run at once on a cold cache and fill it
+    once: each write waits on a 7-party barrier before writing, which
+    serial writes would break, and jobs reaching the cached partition
+    while another job fills it wait for that fill instead of recomputing
+    it.
+
+    The input is one partition, so the four task slots go to different
+    jobs asking for the same cached block, and a slow counting UDF keeps
+    the fill running while they arrive. Every table reads ``fare_amount``,
+    so each recompute of the cached partition would add the row count to
+    the accumulator again."""
+    barrier = threading.Barrier(7, timeout=20)
+    write = sinks.write_parquet
+
+    def gated(df, path, **kwargs):
+        barrier.wait()
+        write(df, path, **kwargs)
+
+    monkeypatch.setattr(sinks, "write_parquet", gated)
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_row(v):
+        time.sleep(0.02)
+        seen.add(1)
+        return v
+
+    cleaned = drop_null_rows(_taxi_df(spark, n=50).coalesce(1),
+                             subset=pipeline.TRIP_COLUMNS)
+    rows = cleaned.count()
+    probed = cleaned.withColumn(
+        "fare_amount", F.udf(count_row, "double")("fare_amount"))
+    tables = pipeline.run_pipeline(probed, sink="parquet",
+                                   base_path=str(tmp_path))
+    assert seen.value == rows
+    for name in tables:
+        assert (tmp_path / name / "_SUCCESS").exists()
+
+
+def test_failed_write_reraised_after_all_writes_finish(spark, tmp_path,
+                                                       monkeypatch):
+    """One table's write fails: the error reaches the caller, and only
+    after the other six writes have committed."""
+    write = sinks.write_parquet
+
+    def failing(df, path, **kwargs):
+        if path.endswith("/demand_heatmap"):
+            raise RuntimeError("disk full")
+        write(df, path, **kwargs)
+
+    monkeypatch.setattr(sinks, "write_parquet", failing)
+    cleaned = drop_null_rows(_taxi_df(spark, n=50),
+                             subset=pipeline.TRIP_COLUMNS)
+    with pytest.raises(RuntimeError, match="disk full"):
+        pipeline.run_pipeline(cleaned, sink="parquet",
+                              base_path=str(tmp_path))
+    assert sorted(p.name for p in tmp_path.iterdir()) == sorted(
+        ["tip_trends", "trip_performance", "popular_routes",
+         "payment_analysis", "distance_distribution", "fare_anomalies"])
+    for p in tmp_path.iterdir():
+        assert (p / "_SUCCESS").exists()
+
+
+def test_console_sink_writes_in_table_order(spark, monkeypatch):
+    shown = []
+    monkeypatch.setattr(sinks, "write_console", shown.append)
+    tables = pipeline.run_pipeline(_taxi_df(spark, n=20), sink="console")
+    assert [id(df) for df in shown] == [id(df) for df in tables.values()]
+
+
+def test_unknown_sink_rejected_before_analytics(spark, monkeypatch):
+    def no_analytics(*_a, **_k):
+        raise AssertionError("analytics built for an unknown sink")
+
+    monkeypatch.setattr(pipeline, "taxi_analytics", no_analytics)
+    with pytest.raises(ValueError, match="unknown sink 'csv'"):
+        pipeline.run_pipeline(_taxi_df(spark, n=5), sink="csv")
 
 
 def test_console_and_noop_sinks(spark):

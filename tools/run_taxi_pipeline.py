@@ -15,12 +15,13 @@ Write-mode parity: ``--append`` flips the six analytics tables to append;
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from nyctaxidatapipeline_spark import get_spark, pipeline
-from nyctaxidatapipeline_spark.sinks import JdbcConfig
+from nyctaxidatapipeline_spark.sinks import SINKS, JdbcConfig
 from nyctaxidatapipeline_spark.sources import read_parquet
 
 
@@ -30,8 +31,7 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--clean", metavar="RAW_DIR",
                     help="run the cleaning ETL (EP2) instead of analytics")
     ap.add_argument("--out", help="output base path (parquet sinks)")
-    ap.add_argument("--sink", choices=["parquet", "jdbc", "console", "noop"],
-                    default="parquet")
+    ap.add_argument("--sink", choices=SINKS, default="parquet")
     ap.add_argument("--append", action="store_true",
                     help="append analytics tables (anomalies still overwrite)")
     ap.add_argument("--threshold-mode", choices=["approx", "exact"],
@@ -63,7 +63,7 @@ def main(argv: list[str] | None = None) -> int:
             kwargs["cfg"] = JdbcConfig(url=args.jdbc_url, user=args.user,
                                        password=args.password)
         pipeline.run_pipeline(trips, sink=args.sink, append=args.append,
-                              **kwargs)
+                              threshold_mode=args.threshold_mode, **kwargs)
         return 0
     finally:
         spark.stop()
