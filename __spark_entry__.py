@@ -135,7 +135,7 @@ from nyctaxidatapipeline_spark.operators import (
     tip_trends,
     trip_performance,
 )
-from nyctaxidatapipeline_spark.plans import round_doubles
+from nyctaxidatapipeline_spark.plans import local_frame, round_doubles
 from nyctaxidatapipeline_spark.sources import load_table
 
 
@@ -3843,8 +3843,8 @@ def _q_shortest_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.concat(F.lit("p"), "l_partkey").alias("dst"))
              .distinct())
     rev = fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    sources = spark.createDataFrame(
-        [(f"s{i}",) for i in range(1, 6)], "node string")
+    sources = local_frame(spark, [(f"s{i}",) for i in range(1, 6)],
+                          "node string")
     return shortest_paths(fwd.union(rev), sources, iters=4)
 
 

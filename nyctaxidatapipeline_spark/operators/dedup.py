@@ -46,7 +46,7 @@ from nyctaxidatapipeline_spark.operators.indexmeta import (
     check_index_params,
     stamp_index_params,
 )
-from nyctaxidatapipeline_spark.plans.util import fan_out
+from nyctaxidatapipeline_spark.plans.util import fan_out, local_frame
 
 
 def exact_dedup(df: DataFrame, key_cols: list[str],
@@ -413,7 +413,12 @@ def lsh_recall_report(df: DataFrame, text_col: str, id_col: str,
 def _local_union_find(rows, spark, schema) -> DataFrame:
     """Driver-side union-find over a BOUNDED edge list (path compression +
     min-root union, so comp = min id of the component). Only reached via
-    ``connected_components``'s explicit edge-count guard."""
+    ``connected_components``'s explicit edge-count guard.
+
+    The (id, comp) result goes back as a ``local_frame``: a JVM local
+    relation whose exact size the optimizer sees, so a consumer's join
+    against it can plan as a broadcast, and reading it starts no
+    Python worker."""
     parent: dict = {}
 
     def find(x):
@@ -432,7 +437,7 @@ def _local_union_find(rows, spark, schema) -> DataFrame:
             hi, lo = (ru, rv) if rv < ru else (rv, ru)
             parent[hi] = lo  # min id becomes the root
     data = [(x, find(x)) for x in parent]
-    return spark.createDataFrame(data, schema)
+    return local_frame(spark, data, schema)
 
 
 def connected_components(edges: DataFrame, id_a: str = "id_a",
@@ -478,8 +483,12 @@ def connected_components(edges: DataFrame, id_a: str = "id_a",
     same guarded-small-side adaptivity as AQE's broadcast conversion, with
     the bound checked at runtime against the actual count, never assumed
     (1M edges = two longs each ≈ 16 MB; pass ``local_threshold=0`` to
-    force the distributed loop). Both paths produce identical labels
-    (min-id component; equality unit-tested on the same graphs).
+    force the distributed loop). The labels come back as a local
+    relation (``plans.util.local_frame``) of known size, so the
+    consumer's join against the component table (``near_dup_production``
+    and the rest of the dedup family) can plan as a broadcast rather
+    than a shuffle join. Both paths produce identical labels (min-id
+    component; equality unit-tested on the same graphs).
     """
     # Orient every edge high→low (u > v), the invariant both stars keep.
     e = (edges.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from nyctaxidatapipeline_spark.functions.text import tokens
-from nyctaxidatapipeline_spark.plans.util import fan_out
+from nyctaxidatapipeline_spark.plans.util import fan_out, local_frame
 
 
 def tfidf_weights(df: DataFrame, text_col: str, id_col: str,
@@ -174,7 +174,7 @@ def bm25_multi(df: DataFrame, queries_df: DataFrame, text_col: str,
             T.StructField("n_terms", T.IntegerType()),
             T.StructField("bm25", T.DoubleType()),
         ])
-        return df.sparkSession.createDataFrame([], schema=schema)
+        return local_frame(df.sparkSession, [], schema)
     base = (fan_out(df, id_col)
             .select(id_col, tokens(text_col).alias("_tk"))
             .select(id_col, F.size("_tk").alias("dl"), F.col("_tk")))

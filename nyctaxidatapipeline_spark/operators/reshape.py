@@ -29,6 +29,7 @@ from nyctaxidatapipeline_spark.operators.quantiles import (
     named_percentiles,
     quantiles,
 )
+from nyctaxidatapipeline_spark.plans.util import local_frame
 
 
 def pivot_agg(df: DataFrame, group_col: str, pivot_col: str,
@@ -126,12 +127,12 @@ def heavy_hitters(df: DataFrame, col: str, min_share: float = 0.01,
         row = df.freqItems([col], support=min_share).first()
         vals = row[f"{col}_freqItems"]
         spark = df.sparkSession
-        # Explicit schema from the source column: createDataFrame cannot
-        # infer a type from an empty candidate list, and inference from
+        # Explicit schema from the source column: no type can be
+        # inferred from an empty candidate list, and inference from
         # Python values could drift from the column's real type.
         schema = T.StructType(
             [T.StructField("value", df.schema[col].dataType, True)])
-        return spark.createDataFrame([(v,) for v in vals], schema)
+        return local_frame(spark, [(v,) for v in vals], schema)
     total = df.agg(F.count("*").alias("_total"))
     return (df.groupBy(F.col(col).alias("value"))
               .agg(F.count("*").alias("n"))

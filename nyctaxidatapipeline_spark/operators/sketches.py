@@ -217,7 +217,9 @@ def cms_lookup(spark, counters: DataFrame, keys: list[str],
         minhash_constants,
     )
 
-    kdf = spark.createDataFrame([(k,) for k in keys], "key string")
+    from nyctaxidatapipeline_spark.plans.util import local_frame
+
+    kdf = local_frame(spark, [(k,) for k in keys], "key string")
     h = portable_base_hash(F.col("key"))
     coords = []
     for i in range(d):

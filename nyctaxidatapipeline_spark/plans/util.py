@@ -1,4 +1,5 @@
-"""Plan-level helpers: oracle-comparison normalization and plan inspection."""
+"""Plan-level helpers: oracle-comparison normalization, driver-held
+local frames and plan inspection."""
 
 from __future__ import annotations
 
@@ -32,6 +33,46 @@ def round_doubles(df: DataFrame, ndigits: int = 6) -> DataFrame:
         else:
             cols.append(F.col(f.name))
     return df.select(*cols)
+
+
+def local_frame(spark, rows: list, schema: T.StructType | str) -> DataFrame:
+    """A DataFrame over driver-held ``rows`` (tuples in ``schema``
+    order) that plans as a JVM ``LocalRelation``.
+
+    ``createDataFrame`` over a Python list pickles the rows into a
+    ``parallelize`` RDD: every read of the frame then runs one
+    Python-worker task per core, and the ``LogicalRDD`` it plans as has
+    no size estimate, so joins against it plan as shuffles. Handing
+    ``createDataFrame`` a ``pyarrow.Table`` typed from ``schema``
+    instead ships the rows to the JVM once, as Arrow batches, and the
+    plan carries the relation's exact size (so it can be broadcast).
+    This path needs no Python worker and ignores
+    ``spark.sql.execution.arrow.pyspark.enabled``.
+
+    ``schema`` is a ``StructType`` or a DDL string. Values follow
+    ``createDataFrame``'s conventions: dates and timestamps are
+    converted by the Spark type's own ``toInternal`` (a naive
+    ``datetime`` in a TIMESTAMP column is local time). An empty
+    ``rows`` yields an empty frame with ``schema``.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    width = len(schema.fields)
+    if any(len(r) != width for r in rows):
+        raise ValueError(f"local_frame: every row needs {width} values "
+                         f"({schema.simpleString()})")
+    columns = list(zip(*rows)) if rows else [()] * width
+    arrays = []
+    for field, values in zip(schema.fields, columns):
+        dt = field.dataType
+        if dt.needConversion():
+            values = [dt.toInternal(v) for v in values]
+        arrays.append(pa.array(values, to_arrow_type(dt)))
+    table = pa.Table.from_arrays(arrays, names=schema.names)
+    return spark.createDataFrame(table, schema)
 
 
 def input_scan_bytes(df: DataFrame) -> int | None:

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nyctaxidatapipeline_spark.plans.util import local_frame
 from nyctaxidatapipeline_spark.sources.tables import _nanos_timestamp_cols
 
 import os
@@ -663,7 +664,7 @@ def _admit_commit_cols_fn(corpus_dir: str, cols: list[str], admitter):
                       .parquet(corpus_dir)
                       .select(*cols))
         else:
-            corpus = spark.createDataFrame([], batch.schema)
+            corpus = local_frame(spark, [], batch.schema)
         admitted = admitter(batch, corpus)
         tmp = _stage_path(corpus_dir, epoch_id)
         shutil.rmtree(tmp, ignore_errors=True)
@@ -750,7 +751,7 @@ def near_dup_admit_indexed_fn(corpus_dir: str, index_dir: str,
             corpus = (spark.read.option("basePath", corpus_dir)
                       .parquet(corpus_dir).select(id_col, text_col))
         else:
-            corpus = spark.createDataFrame([], batch.schema)
+            corpus = local_frame(spark, [], batch.schema)
         has_idx = os.path.isdir(index_dir) and any(
             e.startswith("epoch=") for e in os.listdir(index_dir))
         if has_idx:
@@ -993,8 +994,8 @@ def semantic_admit_indexed_fn(corpus_dir: str, index_dir: str,
                     "run_streaming_semantic_admission_indexed "
                     "(index read-back)", col="_id", expect_stamp=True)
             else:
-                routed = spark.createDataFrame(
-                    [], "list_id int, _id long, _vec array<double>")
+                routed = local_frame(
+                    spark, [], "list_id int, _id long, _vec array<double>")
             admitted = incremental_semantic_admission_auto(
                 batch, None, id_col=id_col, vec_col=vec_col,
                 threshold=threshold, nprobe=nprobe, centroids=cents,
@@ -1226,7 +1227,7 @@ def cross_signal_admit_indexed_fn(corpus_dir: str, index_dir: str,
                       .parquet(corpus_dir)
                       .select(id_col, text_col, vec_col))
         else:
-            corpus = spark.createDataFrame([], batch.schema)
+            corpus = local_frame(spark, [], batch.schema)
         # --- lexical gate over the maintained band-bucket index ---
         lex_idx = _read_index(spark, lex_dir,
                               [id_col, "band", "bucket"], bids)
@@ -1274,8 +1275,8 @@ def cross_signal_admit_indexed_fn(corpus_dir: str, index_dir: str,
                                  bids.select(F.col(id_col)
                                              .alias("_id")))
             if routed is None:
-                routed = spark.createDataFrame(
-                    [], "_id long, list_id int, _vec array<double>")
+                routed = local_frame(
+                    spark, [], "_id long, list_id int, _vec array<double>")
             else:
                 check_index_params(
                     routed, _semantic_routing_params(cents),

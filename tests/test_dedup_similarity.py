@@ -769,6 +769,17 @@ def test_connected_components_local_matches_distributed(spark):
                      (10, 10), (11, 10), (12, 10)}
 
 
+def test_connected_components_small_graph_is_local_relation(spark):
+    # The union-find finish hands back a JVM local relation (exact
+    # size known to the optimizer, no Python worker on read), not a
+    # Python-worker RDD of unknown size.
+    comp = connected_components(_edges(spark, [(2, 1), (3, 2), (7, 8)]))
+    plan = comp._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation"), plan
+    assert sorted(comp.collect()) == [(1, 1), (2, 1), (3, 1), (7, 7),
+                                      (8, 7)]
+
+
 def test_dedup_keep_representatives_drops_non_min(spark):
     docs = _docs(spark)
     pairs = jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.2)

@@ -1,10 +1,21 @@
 """Smoke tests for the driver contract (__spark_entry__)."""
 
+import os
+import re
 import sys
+from urllib.parse import unquote, urlparse
 
 sys.path.insert(0, "/root/repo")
 
 import __spark_entry__ as entrymod
+from nyctaxidatapipeline_spark.plans import explain_str
+
+
+def _sf0001(spark) -> str:
+    """The sf0.001 fixture directory, as the flagship ``entry()`` reads
+    it (its one input is that directory's events table)."""
+    (events,) = entrymod.entry(spark).inputFiles()
+    return os.path.dirname(unquote(urlparse(events).path))
 
 
 def test_entry_runs(spark):
@@ -66,3 +77,35 @@ def test_index_cache_rejects_symlinked_base(tmp_path, monkeypatch):
     base.mkdir(mode=0o700)
     assert entrymod._index_dir(
         "/root/testdata/sf0.001", "documents", "t").startswith(str(base))
+
+
+def test_near_dup_production_broadcasts_component_table(spark):
+    """The union-find components are a local relation of known size, so
+    the registered query's membership join broadcasts them instead of
+    shuffling both sides into a sort-merge join."""
+    df = entrymod.queries()["near_dup_production"](spark, _sf0001(spark))
+    plan = explain_str(df, "simple")
+    assert "SortMergeJoin" not in plan, plan
+    assert re.search(r"BroadcastExchange .*\n\s*\+- LocalTableScan "
+                     r"\[id#\d+L, comp#\d+L\]", plan), plan
+
+
+def test_shortest_paths_sources_is_local_relation(spark, monkeypatch):
+    """The registered BFS seeds from a 5-row local relation, not a
+    Python-worker RDD read by one task per core on every round."""
+    from nyctaxidatapipeline_spark.operators import graph
+
+    seen = []
+
+    def spy(edges, sources, **kw):
+        seen.append(sources)
+        return real(edges, sources, **kw)
+
+    real = graph.shortest_paths
+    monkeypatch.setattr(graph, "shortest_paths", spy)
+    entrymod.queries()["shortest_paths"](spark, _sf0001(spark))
+    (sources,) = seen
+    plan = sources._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.startswith("LocalRelation"), plan
+    assert sorted(r.node for r in sources.collect()) == \
+        [f"s{i}" for i in range(1, 6)]

@@ -1,16 +1,26 @@
 """fan_out's scan-width probe: the estimate must be a LOWER bound of the
 actual scan task count (so the >= target skip is safe), and the helper
-must still widen genuinely narrow scans."""
+must still widen genuinely narrow scans. local_frame: driver-held rows
+must plan as a JVM local relation, never a Python-worker RDD."""
 
 from __future__ import annotations
 
+import ast
+import datetime as dt
+import decimal
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from nyctaxidatapipeline_spark.plans.util import (
     _estimated_scan_partitions,
     fan_out,
+    local_frame,
 )
+
+REPO = Path(__file__).resolve().parents[1]
 
 
 def test_estimate_is_lower_bound_many_tiny_files(spark, tmp_path):
@@ -97,3 +107,105 @@ def test_zorder_bits_autoscale_and_reject(spark):
     assert key >= 0  # never lands in the sign bit
     with pytest.raises(ValueError, match="Z-order"):
         zorder_key(df, [f"c{i}" for i in range(64)])
+
+
+def _optimized_plan(df) -> str:
+    return df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def test_local_frame_plans_as_local_relation(spark):
+    df = local_frame(spark, [(1, "a"), (2, "b")], "id long, s string")
+    plan = _optimized_plan(df)
+    assert plan.startswith("LocalRelation"), plan
+    assert "LogicalRDD" not in plan
+    # the optimizer knows the exact size, so a join can broadcast it
+    stats = df._jdf.queryExecution().optimizedPlan().stats()
+    assert stats.sizeInBytes() < 1024
+    # reading it back is a driver-side scan: no Spark job at all
+    sc = spark.sparkContext
+    sc.setJobGroup("local_frame_read", "local_frame read")
+    try:
+        assert sorted(df.collect()) == [(1, "a"), (2, "b")]
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("local_frame_read") == []
+
+
+ROUND_TRIP_SCHEMA = T.StructType([
+    T.StructField("s", T.StringType()),
+    T.StructField("i", T.IntegerType()),
+    T.StructField("l", T.LongType()),
+    T.StructField("d", T.DoubleType()),
+    T.StructField("dec", T.DecimalType(12, 3)),
+    T.StructField("day", T.DateType()),
+    T.StructField("ts", T.TimestampType()),
+    T.StructField("vec", T.ArrayType(T.DoubleType())),
+])
+ROUND_TRIP_ROWS = [
+    ("a", 1, 2 ** 40, 1.5, decimal.Decimal("123.456"), dt.date(2024, 2, 29),
+     dt.datetime(2024, 2, 29, 23, 59, 58, 123456), [0.25, -1.0, None]),
+    (None,) * 8,
+]
+
+
+def test_local_frame_round_trips_types_and_nulls(spark):
+    df = local_frame(spark, ROUND_TRIP_ROWS, ROUND_TRIP_SCHEMA)
+    assert df.schema == ROUND_TRIP_SCHEMA
+    assert [tuple(r) for r in df.collect()] == ROUND_TRIP_ROWS
+    # the same values and types as the Python-worker path it replaces
+    ref = spark.createDataFrame(ROUND_TRIP_ROWS, ROUND_TRIP_SCHEMA)
+    assert df.collect() == ref.collect()
+
+
+def test_local_frame_empty_keeps_schema(spark):
+    df = local_frame(spark, [], "key string, n long, v array<double>")
+    assert df.schema.simpleString() == \
+        "struct<key:string,n:bigint,v:array<double>>"
+    assert df.count() == 0
+    assert "LocalRelation" in _optimized_plan(df)
+
+
+def test_local_frame_rejects_ragged_rows(spark):
+    with pytest.raises(ValueError, match="2 values"):
+        local_frame(spark, [(1, "a"), (2,)], "id long, s string")
+
+
+def test_local_frame_without_arrow_conf(spark):
+    # a vanilla SparkSession leaves the Arrow conf at false
+    vanilla = spark.newSession()
+    vanilla.conf.set("spark.sql.execution.arrow.pyspark.enabled", "false")
+    df = local_frame(vanilla, ROUND_TRIP_ROWS, ROUND_TRIP_SCHEMA)
+    assert _optimized_plan(df).startswith("LocalRelation")
+    assert [tuple(r) for r in df.collect()] == ROUND_TRIP_ROWS
+
+
+def _create_dataframe_calls(path: Path) -> list[str]:
+    """``file:line (function)`` of every ``.createDataFrame(`` call."""
+    found = []
+
+    def visit(node, func):
+        for child in ast.iter_child_nodes(node):
+            inner = (child.name if isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef)) else func)
+            if (isinstance(child, ast.Call)
+                    and isinstance(child.func, ast.Attribute)
+                    and child.func.attr == "createDataFrame"):
+                found.append(f"{path.relative_to(REPO)}:{child.lineno} "
+                             f"({func})")
+            visit(child, inner)
+
+    visit(ast.parse(path.read_text()), None)
+    return found
+
+
+def test_engine_builds_driver_rows_only_through_local_frame():
+    """Every engine frame over driver-held rows must be a local relation:
+    ``createDataFrame`` may only be called inside ``local_frame``.
+    (Tests may still build their inputs with ``createDataFrame``.)"""
+    files = [REPO / "__spark_entry__.py",
+             *sorted((REPO / "nyctaxidatapipeline_spark").rglob("*.py"))]
+    calls = [c for f in files for c in _create_dataframe_calls(f)]
+    allowed = [c for c in calls
+               if c.startswith("nyctaxidatapipeline_spark/plans/util.py:")
+               and c.endswith("(local_frame)")]
+    assert len(allowed) == 1 and calls == allowed, calls

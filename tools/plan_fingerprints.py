@@ -81,10 +81,9 @@ _NORMALIZERS: list[tuple[re.Pattern[str], str]] = [
     # rewiring which same-named attribute feeds an expression — e.g.
     # the two sides of a self-join, distinguished only by exprId —
     # invisible. ADVICE r12.)
-    # RDD ids in ExistingRDD scans (spark.createDataFrame of driver
-    # lists — broadcast literal frames): the integer is a
-    # session-global counter, so it encodes how many jobs ran before
-    # this query in the same JVM.
+    # RDD ids in ExistingRDD scans (localCheckpoint-ed frames): the
+    # integer is a session-global counter, so it encodes how many jobs
+    # ran before this query in the same JVM.
     (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
     # RDD creation-site suffixes ("... at localCheckpoint at
     # NativeMethodAccessorImpl.java:0"): the file token flips to
