@@ -1526,7 +1526,7 @@ def _q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return repetition_stats(docs, "text", "doc_id", n=2)
 
 
-def _q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination: per-document 3-gram overlap between the
     training corpus (doc_id % 20 != 0) and a held-out benchmark slice
     (doc_id % 20 == 0). The benchmark's distinct shingle set broadcasts —
@@ -3479,7 +3479,7 @@ def _q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
                             unit="day")
 
 
-def _q_fuzzy_supplier_names(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_fuzzy_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked fuzzy entity matching: supplier-name pairs one edit
     apart (typo'd-ID linkage). Candidates block on (lower 3-prefix,
     length band); exact Levenshtein verifies within blocks only — one
@@ -4065,581 +4065,48 @@ def _q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("doc_id", "tier"))
 
 
-#: Queries with NO green row in any CORRECTNESS_r01..r04 artifact, in the
-#: order they should hit the round-5 driver window. Everything here passed
-#: the local differential harness (tools/check_correctness.py, sf0.01) and
-#: the round-4 judge's independent run — the rotation exists purely so the
-#: driver's own artifact finally records them. New round-5 queries are
-#: appended here too (they are by definition never-driver-verified).
-#: Round-6 driver window front: the six queries NEW this round (never
-#: driver-verified by definition) plus ``embedding_covariance`` — the
-#: one red row in CORRECTNESS_r05 (intermittent rounding-boundary
-#: flake), now decimal-sum deterministic and needing a fresh green
-#: driver record. Everything else in the 50-entry window re-records
-#: already-green r5 entries.
-#: Round-7 driver window front: queries whose SEMANTICS changed this
-#: round (all locally hash-green, all needing a fresh driver record) —
-#: the signed-zero + scaled-int64 PCA pair, the rounded-routing kNN-IVF
-#: — plus new round-7 queries, plus the three r6-verified-but-rotated
-#: entries the r6 VERDICT asked to re-record.
-#: Round-8 driver window front (the driver records the FIRST 50
-#: ``queries()`` entries): the three NEW queries, the two VERDICT-r7
-#: task-3 re-records (materially touched in r7/r8 but last
-#: driver-checked r<=3), the three ingestion queries whose packing
-#: parallelism changed this round, the two HLL twins (oracle SQL now
-#: emitted by a shared builder), then every query whose hash path runs
-#: through the rewritten ``tokens()`` / PII expressions (codegen
-#: rewrites — semantics unit-pinned identical, re-recorded anyway).
-#: Round-9 driver window front (the driver records the FIRST 50
-#: ``queries()`` entries): the NEW persisted-index admission query; the
-#: dedup registrations whose code was touched by the r9 max_bucket
-#: default flip + symmetric batch-side cap (semantics pinned unchanged
-#: on fixtures, re-recorded anyway); the ingestion queries riding the
-#: r9 sniff/multi-frame zstd routing; then every twin whose hash path
-#: runs through the RE-rewritten ``tokens()`` (array_remove — the r8
-#: regression fix); the remaining slots go to the OLDEST driver records
-#: (the r1-r3 reference-surface cohort, last driver-checked in
-#: CORRECTNESS_r02/_r03 — VERDICT r8 stretch task 8).
-#: Round-11 driver window front (the driver records the FIRST 50
-#: ``queries()`` entries): the two sketch queries whose RESULTS changed
-#: this round (rank key widened to the near-unique triple — ADVICE r10;
-#: the grouped variant also carries the new salted two-phase physical
-#: shape); then TPC-H q2-q22 — the last r4-era records (VERDICT r10
-#: task 3; all 21 independently re-verified green by the r10 judge), so
-#: after r11 the rotation reaches steady state (oldest record ≤ r5);
-#: then the r5/r6-era cohorts (the next-oldest records); the remaining
-#: slots re-record the index-family queries riding this round's
-#: param-stamp/validation code (results unit-pinned unchanged,
-#: re-recorded anyway per the materially-touched convention).
-#: Round-12 driver window front (the driver records the FIRST 50
-#: ``queries()`` entries): steady-state oldest-first rotation
-#: (VERDICT r11 task 5) — the 40 r7-era records (the multimodal/
-#: image/audio/PCA/graph-adjacent cohort, all untouched since r7 and
-#: locally hash-green) plus 9 of the 12 r8-era records; the three
-#: remaining r8 rows (``text_normalize``, ``url_dedup``,
-#: ``hard_negatives``) lead the r13 rotation (VERDICT r12 item 3:
-#: this comment used to say "two", missing ``text_normalize``).
-#: Round-13 driver window front: the NEW registration
-#: (``price_quantile_summary``, never driver-verified); the query
-#: whose PHYSICAL shape changed this round (``fare_anomalies_sketch``
-#: — the salted tree merge; results bit-identical, re-recorded per
-#: the materially-touched convention) plus the three judge-named
-#: guard rows for that change (``grouped_percentiles_sketch`` rides
-#: the raised windowGroupLimitThreshold, ``winsorized_prices_approx``
-#: / ``grouped_percentiles_approx`` are its untouched GK siblings);
-#: the three r8-era records; then the OLDEST records — the full
-#: 42-row r9-era cohort — completing slots to exactly 50.
-#: Round-14 driver window front: the NEW registration (the
-#: equidepth-sketch histogram); the two ungrouped-sketch queries whose
-#: PHYSICAL PLAN changed this round (salt_buckets="auto" resolves to
-#: the naive merge at fixture scale), the grouped sketch whose ORACLE
-#: TEXT changed (NULL-parity FILTER/COUNT(v) — ADVICE r13), and
-#: simhash_pairs (r14 max_bucket storm backstop — plan + twin both
-#: carry the new bucket gate); then steady-state oldest-first rotation
-#: (VERDICT r13 task 3): the complete 44-row r10-era cohort plus the
-#: oldest r11-era record, leaving the oldest driver record r11-era
-#: after r14.
-#: Round-15 driver window front: the FIVE new registrations (the
-#: cap-audit trio — VERDICT r14 task 4 — plus the ANN siblings
-#: ``ivf_occupancy_audit`` and ``rp_lsh_cap_audit``, never
-#: driver-verified); the
-#: query whose PHYSICAL shape changed this round
-#: (``grouped_percentiles_sketch`` — salt_buckets="auto" resolves to
-#: the naive single window at fixture scale, VERDICT r14 task 1;
-#: results bit-identical) and the one whose ORACLE TEXT changed
-#: (``simhash_pairs`` — the max_bucket `is None` falsy-edge fix,
-#: ADVICE r14; rendered SQL identical at 32 except the comment); then
-#: steady-state oldest-first rotation (VERDICT r14 task 3): the r11-era
-#: records in their r11 order (the 50-entry window now reaches 43 of
-#: them, leaving ``incremental_semantic_indexed``,
-#: ``embedding_near_dup``, ``ann_lsh`` and ``ann_lsh_auto`` r11-era
-#: to lead r16).
-#: Round-16 driver window front (VERDICT r15 task 1): lead with the
-#: ELEVEN r15-rewritten query paths that never got a fresh driver-oracle
-#: record after their plans changed (the standing "changed plan ⇒ front
-#: of window" protocol the r15 optimizer missed), then the queries whose
-#: plans change THIS round (r16 optimizations), then steady-state
-#: oldest-first rotation: the four remaining r11-era rows.
-_ROUND16_FRONT = [
-    # r15 plan-changed, never re-verified by the driver after the change
-    "winsorized_prices", "winsorized_prices_approx",
-    "grouped_percentiles", "grouped_percentiles_approx",
-    "image_features_jpeg", "image_features_jpeg_prog",
-    "image_features_gif", "image_dedup_dhash",
+#: The per-round correctness record (CORRECTNESS_r{N}.json) covers only
+#: the first 50 ``queries()`` entries; a new query, or one whose plan
+#: changed, goes to the front.
+_WINDOW_FRONT = [
+    "winsorized_prices", "winsorized_prices_approx", "grouped_percentiles",
+    "grouped_percentiles_approx", "image_features_jpeg",
+    "image_features_jpeg_prog", "image_features_gif", "image_dedup_dhash",
     "profile_lineitem_approx", "embedding_covariance", "pca_project",
-    # r16 touched (this round's optimizations): plan-changed — the
-    # graph family and its consumer, the PQ constant-fold pair, the
-    # audit family's shared-exchange rewrite (audits already in the
-    # window via the r15 block below); build-concurrency-changed
-    # (identical plans, re-verified out of caution) — the threaded
-    # compositions; measured-and-reverted probe sites re-verified too
-    "pagerank", "label_propagation", "shortest_paths",
-    "knn_communities", "ann_pq", "ann_ivfpq",
-    "near_dup_production", "near_dup_stats", "dedup_savings",
-    "cross_signal_dedup", "cross_signal_dedup_indexed",
-    "rrf_fusion", "bm25_scores",
-    # r11-era records (oldest cohort, completing the rotation)
-    "incremental_semantic_indexed", "embedding_near_dup",
-    "ann_lsh", "ann_lsh_auto",
-]
-
-_ROUND15_FRONT = [
-    # new r15 (never driver-verified)
-    "lsh_cap_audit", "simhash_cap_audit", "fuzzy_cap_audit",
-    "ivf_occupancy_audit", "rp_lsh_cap_audit",
-    # physical shape (grouped auto salt crossover) / oracle text
-    # (simhash falsy-edge comment) changed this round
-    "grouped_percentiles_sketch", "simhash_pairs",
-    # r11-era records (oldest cohort, in their r11 order; 46 of 47)
-    *[f"tpch_q{i}_sql" for i in range(2, 23)],
-    "keep_latest", "kmeans_assign", "semantic_dedup",
-    "curriculum_order", "knn_communities", "knn_graph", "mad_outliers",
-    "negative_samples", "pagerank", "rrf_fusion", "temperature_mix",
-    "time_travel_read", "version_pruned_scan",
-    "incremental_minhash", "incremental_minhash_indexed",
-    "minhash_dedup", "near_dup_production", "near_dup_stats",
-    "dedup_savings", "lsh_recall_report", "cross_signal_dedup",
-    "cross_signal_dedup_indexed", "incremental_semantic_indexed",
-    "embedding_near_dup", "ann_lsh",
-]
-
-_ROUND14_FRONT = [
-    # new r14 (never driver-verified)
-    "histogram_prices_equidepth",
-    # physical shape (auto salt crossover / simhash max_bucket gate)
-    # or oracle text changed this round
-    "fare_anomalies_sketch", "price_quantile_summary",
-    "grouped_percentiles_sketch", "simhash_pairs",
-    # r10-era records (oldest cohort, in their r10 order)
-    "payment_analysis", "distance_distribution", "fare_anomalies",
-    "cleaning_dropna", "hourly_window", "tpch_q1_sql",
-    "star_join_revenue", "rollup_revenue", "cube_revenue",
-    "grouping_sets_sql", "pivot_qty", "melt_measures",
-    "sessionize_users", "scd2_versions", "ann_topk",
-    "top_orders_per_customer", "urgent_customers_semi",
-    "customers_no_orders_anti", "purchasers_without_errors",
-    "signup_and_purchase", "asof_last_purchase", "dataset_split",
-    "distinct_parts", "grouped_percentiles", "json_extract_k",
-    "profile_lineitem", "range_join_recent", "stratified_sample",
-    "user_interarrival", "cohort_retention", "corpus_report",
-    "correlations", "data_quality", "dataset_mix", "domain_cap",
-    "frame_sample", "fuzzy_names", "image_features",
-    "incremental_dedup", "incremental_dedup_bloom",
-    "incremental_rollup", "interval_join", "merge_upsert",
-    "quantize_embeddings",
-    # the oldest r11-era record, completing 50
-    "incremental_semantic_auto_indexed",
-]
-
-_ROUND13_FRONT = [
-    # new r13 (never driver-verified)
-    "price_quantile_summary",
-    # physical shape changed this round (+ judge-named guard rows)
-    "fare_anomalies_sketch", "grouped_percentiles_sketch",
-    "winsorized_prices_approx", "grouped_percentiles_approx",
-    # r8-era records (oldest remaining after r12)
-    "text_normalize", "url_dedup", "hard_negatives",
-    # r9-era records (the next-oldest cohort, all 42)
-    "ann_ivf", "ann_ivf_indexed", "blocklist_stats", "bm25_scores",
-    "bpe_token_stats", "chunk_documents", "contamination_check",
-    "corpus_token_budget", "curate_corpus", "curation_flags",
-    "demand_heatmap", "doc_spans", "dsir_weights", "fingerprint_dedup",
-    "incremental_semantic", "incremental_semantic_auto", "jsonl_ingest",
-    "lang_confusion", "line_dedup", "lm_backoff_scores",
-    "lm_perplexity", "near_dup_groups", "ngram_jaccard",
-    "ngram_novelty", "pack_sequences", "perplexity_buckets",
-    "pmi_collocations", "popular_routes", "ppmi_vectors",
-    "pretokenize_export", "quality_classifier", "quality_score",
-    "repetition_stats", "skipgram_counts", "substring_dedup",
-    "tfrecord_ingest", "tip_trends", "token_freq_cms", "token_stats",
-    "trip_performance", "vocab", "winnow_dedup",
-]
-
-_ROUND12_FRONT = [
-    # new r12 (never driver-verified): the bounded-shuffle profile mode
-    "profile_lineitem_approx",
-    # r7-era records (oldest-first)
-    "resample_hourly", "heavy_hitters", "funnel", "histogram_prices",
-    "moving_avg", "snapshot_diff", "daily_top_events",
-    "rank_normalized", "ann_pq", "frame_sample_avi", "audio_features",
-    "importance_resample", "html_strip", "url_features",
-    "label_propagation", "triangle_count", "shortest_paths",
-    "ann_ivfpq", "embedding_covariance", "pca_project",
-    "winsorized_prices", "feature_hash_counts", "length_buckets",
-    "time_range_avg", "semantic_dedup_auto", "knn_graph_ivf",
-    "winsorized_prices_approx", "grouped_percentiles_approx",
-    "image_features_jpeg", "image_features_gif", "image_dedup_dhash",
-    "char_entropy", "audience_overlap_kmv", "image_resize_png",
-    "ewma_daily", "weighted_corpus_sample", "image_features_jpeg_prog",
-    "audio_features_mp3", "frame_sample_h264",
-    "image_features_png_i7",
-    # r8-era records (next-oldest; 9 of 12 fit behind the new
-    # registration — text_normalize joins url_dedup/hard_negatives at
-    # the head of r13)
-    "exact_dedup", "simhash_pairs", "pii_stats", "warc_ingest",
-    "webdataset_ingest", "c4_line_filter", "distinct_users_hll",
-    "distinct_users_hll_wide", "fare_anomalies_approx",
-]
-
-_ROUND11_FRONT = [
-    # new r11 (never driver-verified): the auto-operating-point
-    # persisted-index semantic admission
-    "incremental_semantic_auto_indexed",
-    # results changed this round (new rank key; salted two-phase shape)
-    "fare_anomalies_sketch", "grouped_percentiles_sketch",
-    # the last r4-era records: TPC-H q2-q22
-    *[f"tpch_q{i}_sql" for i in range(2, 23)],
-    # r5-era records
-    "keep_latest", "kmeans_assign", "semantic_dedup",
-    # r6-era records
-    "curriculum_order", "knn_communities", "knn_graph", "mad_outliers",
-    "negative_samples", "pagerank", "rrf_fusion", "temperature_mix",
-    "time_travel_read", "version_pruned_scan",
-    # index-family re-records (param-stamp/validation code touched)
-    "incremental_minhash", "incremental_minhash_indexed",
-    "minhash_dedup", "near_dup_production", "near_dup_stats",
-    "dedup_savings", "lsh_recall_report", "cross_signal_dedup",
-    "cross_signal_dedup_indexed", "incremental_semantic_indexed",
-    "embedding_near_dup", "ann_lsh", "ann_lsh_auto",
-]
-
-_ROUND10_FRONT = [
-    # new r10 (never driver-verified): the two remaining persisted-index
-    # registrations + the hash-sample quantile modes
-    "incremental_semantic_indexed", "cross_signal_dedup_indexed",
-    "fare_anomalies_sketch", "grouped_percentiles_sketch",
-    # the r1-r3-cohort queries whose latest driver record predates r4
-    # (all 31 independently harness-verified green in r9's judge pass;
-    # this completes the archival rotation — VERDICT r9 task 1)
-    "payment_analysis", "distance_distribution", "fare_anomalies",
-    "cleaning_dropna", "hourly_window", "tpch_q1_sql",
-    "star_join_revenue", "rollup_revenue", "cube_revenue",
-    "grouping_sets_sql", "pivot_qty", "melt_measures",
-    "sessionize_users", "scd2_versions", "ann_topk", "ann_lsh",
-    "embedding_near_dup", "top_orders_per_customer",
-    "urgent_customers_semi", "customers_no_orders_anti",
-    "purchasers_without_errors", "signup_and_purchase",
-    "asof_last_purchase", "dataset_split", "distinct_parts",
-    "grouped_percentiles", "json_extract_k", "profile_lineitem",
-    "range_join_recent", "stratified_sample", "user_interarrival",
-    # fill to 50 with the oldest remaining records (r4 cohort)
-    "cohort_retention", "corpus_report", "correlations",
-    "data_quality", "dataset_mix", "domain_cap", "frame_sample",
-    "fuzzy_names", "image_features", "incremental_dedup",
-    "incremental_dedup_bloom", "incremental_rollup", "interval_join",
-    "merge_upsert", "quantize_embeddings",
-]
-
-_ROUND9_FRONT = [
-    # new + API-touched r9
-    "incremental_minhash_indexed", "incremental_minhash",
-    "minhash_dedup", "near_dup_production", "near_dup_stats",
-    "dedup_savings", "lsh_recall_report", "curate_corpus",
-    "ppmi_vectors", "skipgram_counts",
-    "tfrecord_ingest", "jsonl_ingest",
-    "ann_ivf_indexed", "ann_ivf", "incremental_semantic",
-    "incremental_semantic_auto", "cross_signal_dedup",
-    "pretokenize_export",
-    # tokens()-riding twins (array_remove rewrite)
-    "ngram_jaccard", "near_dup_groups", "winnow_dedup",
-    "fingerprint_dedup", "substring_dedup", "vocab", "bpe_token_stats",
-    "token_stats", "quality_score", "curation_flags",
-    "repetition_stats", "contamination_check", "blocklist_stats",
-    "token_freq_cms", "ngram_novelty", "corpus_token_budget",
-    "chunk_documents", "pack_sequences", "doc_spans", "lm_perplexity",
-    "lm_backoff_scores", "perplexity_buckets", "quality_classifier",
-    "dsir_weights", "pmi_collocations", "bm25_scores", "lang_confusion",
-    "line_dedup",
-    # oldest driver records: r1-r3 reference-surface cohort
-    "demand_heatmap", "tip_trends", "trip_performance",
-    "popular_routes",
-]
-
-_ROUND8_FRONT = [
-    "near_dup_production", "distinct_users_hll_wide",
-    "fare_anomalies_approx", "text_normalize", "url_dedup",
-    "ngram_novelty", "lsh_recall_report", "hard_negatives",
-    "near_dup_stats", "corpus_token_budget", "incremental_minhash",
-    "tfrecord_ingest", "dedup_savings",
-    "curate_corpus", "minhash_dedup",
-    "jsonl_ingest", "warc_ingest", "webdataset_ingest",
-    "distinct_users_hll",
-    "curation_flags", "pii_stats", "token_stats", "quality_score",
-    "ngram_jaccard", "simhash_pairs", "near_dup_groups", "exact_dedup",
-    "line_dedup", "winnow_dedup", "vocab", "bpe_token_stats",
-    "lang_confusion", "fingerprint_dedup", "repetition_stats",
-    "contamination_check", "blocklist_stats", "c4_line_filter",
-    "token_freq_cms", "substring_dedup", "chunk_documents",
-    "pack_sequences", "doc_spans", "lm_perplexity", "pmi_collocations",
-    "skipgram_counts", "ppmi_vectors", "lm_backoff_scores",
-    "perplexity_buckets", "quality_classifier", "dsir_weights",
-]
-
-_ROUND7_FRONT = [
-    "warc_ingest", "image_features_gif", "webdataset_ingest",
-    "image_dedup_dhash", "jsonl_ingest", "c4_line_filter",
-    "char_entropy", "distinct_users_hll", "audience_overlap_kmv",
-    "token_freq_cms", "image_resize_png", "ewma_daily",
-    "weighted_corpus_sample",
-    "image_features_jpeg_prog", "audio_features_mp3",
-    "frame_sample_h264", "image_features_png_i7",
-    "embedding_covariance", "pca_project", "knn_graph_ivf",
-    "ann_pq", "frame_sample_avi", "audio_features",
-]
-
-_ROUND6_FRONT = [
-    "ann_lsh_auto", "semantic_dedup_auto",
-    "winsorized_prices_approx", "grouped_percentiles_approx",
-    "image_features_jpeg", "substring_dedup", "blocklist_stats",
-]
-
-_ROUND5_FRONT = [
-    "resample_hourly", "heavy_hitters", "funnel", "histogram_prices",
-    "moving_avg", "snapshot_diff", "daily_top_events", "rank_normalized",
-    "ann_pq", "frame_sample_avi", "audio_features", "importance_resample",
-    "chunk_documents", "html_strip", "url_features", "label_propagation",
-    "triangle_count", "shortest_paths", "ann_ivfpq", "embedding_covariance",
-    "pca_project", "winsorized_prices", "feature_hash_counts",
-    "length_buckets", "time_range_avg", "negative_samples", "knn_graph",
-    "rrf_fusion", "mad_outliers", "skipgram_counts", "perplexity_buckets",
-    "curriculum_order",
-    # round-5 additions — new this round, so never driver-verified
-    "time_travel_read", "version_pruned_scan", "ppmi_vectors",
-    "quality_classifier", "temperature_mix", "knn_communities",
-    "lm_backoff_scores",
+    "pagerank", "label_propagation", "shortest_paths", "knn_communities",
+    "ann_pq", "ann_ivfpq", "near_dup_production", "near_dup_stats",
+    "dedup_savings", "cross_signal_dedup", "cross_signal_dedup_indexed",
+    "rrf_fusion", "bm25_scores", "incremental_semantic_indexed",
+    "embedding_near_dup", "ann_lsh", "ann_lsh_auto", "lsh_cap_audit",
+    "simhash_cap_audit", "fuzzy_cap_audit", "ivf_occupancy_audit",
+    "rp_lsh_cap_audit", "grouped_percentiles_sketch", "simhash_pairs",
+    *[f"tpch_q{i}_sql" for i in range(2, 17)],
 ]
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md §2.
+    """Every registered query: each top-level ``_q_<name>`` builder
+    under ``<name>`` in definition order, plus the shared-text TPC-H
+    twins of ``_TPCH_SQL``.
 
-    ORDERING IS DELIBERATE: the driver's CORRECTNESS artifact records
-    the first 50 entries. Rounds 1-14 drove all 191 queries to a green
-    driver record (cumulative union of windows; oldest records r11-era
-    after r14). The round-16 window (``_ROUND16_FRONT``) leads with the
-    eleven r15-plan-changed queries the r15 session failed to rotate in
-    (VERDICT r15 task 1), then this round's own plan-changed queries
-    (the graph family + consumers), then the four remaining r11-era
-    records; prior fronts follow in order."""
-    full = {
-        # --- driver CORRECTNESS window (first 50): never driver-checked
-        # as of r03 ---
-        "line_dedup": _q_line_dedup,
-        "vocab": _q_vocab,
-        "pagerank": _q_pagerank,
-        "dsir_weights": _q_dsir_weights,
-        "curation_flags": _q_curation_flags,
-        "curate_corpus": _q_curate_corpus,
-        "kmeans_assign": _q_kmeans_assign,
-        "semantic_dedup": _q_semantic_dedup,
-        "bm25_scores": _q_bm25_scores,
-        "lm_perplexity": _q_lm_perplexity,
-        "keep_latest": _q_keep_latest,
-        "incremental_dedup": _q_incremental_dedup,
-        "incremental_dedup_bloom": _q_incremental_dedup_bloom,
-        "interval_join": _q_interval_join,
-        "correlations": _q_correlations,
-        "winnow_dedup": _q_winnow_dedup,
-        "bpe_token_stats": _q_bpe_token_stats,
-        "pmi_collocations": _q_pmi_collocations,
-        "data_quality": _q_data_quality,
-        "incremental_rollup": _q_incremental_rollup,
-        "merge_upsert": _q_merge_upsert,
-        "fuzzy_names": _q_fuzzy_supplier_names,
-        "cohort_retention": _q_cohort_retention,
-        "dataset_mix": _q_dataset_mix,
-        "quantize_embeddings": _q_quantize_embeddings,
-        "domain_cap": _q_domain_cap,
-        "image_features": _q_image_features,
-        "image_features_png_i7": _q_image_features_png_i7,
-        "frame_sample": _q_frame_sample,
-        "corpus_report": _q_corpus_report,
-        **{name: _tpch_sql_query(name) for name in _TPCH_SQL},
-        # --- bumped past the window for the TPC-H completions
-        # (harness-verified; rotate forward next round) ---
-        "resample_hourly": _q_resample_hourly,
-        "heavy_hitters": _q_heavy_hitters,
-        "funnel": _q_funnel,
-        "histogram_prices": _q_histogram_prices,
-        "histogram_prices_equidepth": _q_histogram_prices_equidepth,
-        "moving_avg": _q_moving_avg,
-        "snapshot_diff": _q_snapshot_diff,
-        "daily_top_events": _q_daily_top_events,
-        "rank_normalized": _q_rank_normalized,
-        # --- round-4 additions (harness-verified; rotate forward next) ---
-        "ann_pq": _q_ann_pq,
-        "frame_sample_avi": _q_frame_sample_avi,
-        "frame_sample_h264": _q_frame_sample_h264,
-        "audio_features": _q_audio_features,
-        "audio_features_mp3": _q_audio_features_mp3,
-        # --- previously driver-verified (CORRECTNESS_r02 + _r03) ---
-        "demand_heatmap": _q_demand_heatmap,
-        "tip_trends": _q_tip_trends,
-        "trip_performance": _q_trip_performance,
-        "popular_routes": _q_popular_routes,
-        "payment_analysis": _q_payment_analysis,
-        "distance_distribution": _q_distance_distribution,
-        "fare_anomalies": _q_fare_anomalies,
-        "fare_anomalies_approx": _q_fare_anomalies_approx,
-        # r10: the linear-at-any-scale hash-sample quantile modes
-        "fare_anomalies_sketch": _q_fare_anomalies_sketch,
-        "price_quantile_summary": _q_price_quantile_summary,
-        "grouped_percentiles_sketch": _q_grouped_percentiles_sketch,
-        "cleaning_dropna": _q_cleaning_dropna,
-        "hourly_window": _q_hourly_window,
-        "star_join_revenue": _q_star_join_revenue,
-        "top_orders_per_customer": _q_top_orders_per_customer,
-        "urgent_customers_semi": _q_urgent_customers_semi,
-        "customers_no_orders_anti": _q_customers_no_orders_anti,
-        "purchasers_without_errors": _q_purchasers_without_errors,
-        "signup_and_purchase": _q_signup_and_purchase,
-        "rollup_revenue": _q_rollup_revenue,
-        "json_extract_k": _q_json_extract_k,
-        "exact_dedup": _q_exact_dedup,
-        "ngram_jaccard": _q_ngram_jaccard,
-        "minhash_dedup": _q_minhash_dedup,
-        "near_dup_production": _q_near_dup_production,
-        "lsh_recall_report": _q_lsh_recall_report,
-        "hard_negatives": _q_hard_negatives,
-        "near_dup_stats": _q_near_dup_stats,
-        "corpus_token_budget": _q_corpus_token_budget,
-        "incremental_minhash": _q_incremental_minhash,
-        # r9: the persisted-index deployment shape of the same admission
-        "incremental_minhash_indexed": _q_incremental_minhash_indexed,
-        "tfrecord_ingest": _q_tfrecord_ingest,
-        "dedup_savings": _q_dedup_savings,
-        "simhash_pairs": _q_simhash_pairs,
-        "lsh_cap_audit": _q_lsh_cap_audit,
-        "simhash_cap_audit": _q_simhash_cap_audit,
-        "fuzzy_cap_audit": _q_fuzzy_cap_audit,
-        "ivf_occupancy_audit": _q_ivf_occupancy_audit,
-        "rp_lsh_cap_audit": _q_rp_lsh_cap_audit,
-        "embedding_near_dup": _q_embedding_near_dup,
-        "ann_topk": _q_ann_topk,
-        "ann_lsh": _q_ann_lsh,
-        "ann_ivf": _q_ann_ivf,
-        # r9: the persisted-partitioned-index deployment shape
-        "ann_ivf_indexed": _q_ann_ivf_indexed,
-        # r9: the embedding-side daily-increment admission gate
-        "incremental_semantic": _q_incremental_semantic,
-        "incremental_semantic_auto": _q_incremental_semantic_auto,
-        # r11: the persisted ROUTED-corpus deployment shape at the
-        # auto operating point (the one that holds at sf10)
-        "incremental_semantic_auto_indexed":
-            _q_incremental_semantic_auto_indexed,
-        # r10: the persisted-index deployment shape (third index family)
-        "incremental_semantic_indexed": _q_incremental_semantic_indexed,
-        "cross_signal_dedup": _q_cross_signal_dedup,
-        # r10: both arms' persisted indexes plumbed through
-        "cross_signal_dedup_indexed": _q_cross_signal_dedup_indexed,
-        "near_dup_groups": _q_near_dup_groups,
-        "lang_confusion": _q_lang_confusion,
-        "token_stats": _q_token_stats,
-        "quality_score": _q_quality_score,
-        "fingerprint_dedup": _q_fingerprint_dedup,
-        "pii_stats": _q_pii_stats,
-        "repetition_stats": _q_repetition_stats,
-        "contamination_check": _q_contamination,
-        "stratified_sample": _q_stratified_sample,
-        "importance_resample": _q_importance_resample,
-        "dataset_split": _q_dataset_split,
-        "pivot_qty": _q_pivot_qty,
-        "melt_measures": _q_melt_measures,
-        "cube_revenue": _q_cube_revenue,
-        "grouped_percentiles": _q_grouped_percentiles,
-        "distinct_parts": _q_distinct_parts,
-        "sessionize_users": _q_sessionize_users,
-        "asof_last_purchase": _q_asof_last_purchase,
-        "tpch_q1_sql": _q_tpch_q1_sql,
-        "grouping_sets_sql": _q_grouping_sets_sql,
-        "user_interarrival": _q_user_interarrival,
-        "scd2_versions": _q_scd2_versions,
-        "range_join_recent": _q_range_join_recent,
-        "profile_lineitem": _q_profile_lineitem,
-        "profile_lineitem_approx": _q_profile_lineitem_approx,
-        "pack_sequences": _q_pack_sequences,
-        "pretokenize_export": _q_pretokenize_export,
-        "doc_spans": _q_doc_spans,
-        "chunk_documents": _q_chunk_documents,
-        "html_strip": _q_html_strip,
-        "url_features": _q_url_features,
-        "label_propagation": _q_label_propagation,
-        "triangle_count": _q_triangle_count,
-        "shortest_paths": _q_shortest_paths,
-        "ann_ivfpq": _q_ann_ivfpq,
-        "embedding_covariance": _q_embedding_covariance,
-        "pca_project": _q_pca_project,
-        "winsorized_prices": _q_winsorized_prices,
-        "feature_hash_counts": _q_feature_hash_counts,
-        "length_buckets": _q_length_buckets,
-        "time_range_avg": _q_time_range_avg,
-        "negative_samples": _q_negative_samples,
-        "knn_graph": _q_knn_graph,
-        "rrf_fusion": _q_rrf_fusion,
-        "mad_outliers": _q_mad_outliers,
-        "skipgram_counts": _q_skipgram_counts,
-        "perplexity_buckets": _q_perplexity_buckets,
-        "curriculum_order": _q_curriculum_order,
-        # --- round 5: versioned-table surface + composed PPMI pipeline ---
-        "time_travel_read": _q_time_travel_read,
-        "version_pruned_scan": _q_version_pruned_scan,
-        "ppmi_vectors": _q_ppmi_vectors,
-        "quality_classifier": _q_quality_classifier,
-        "temperature_mix": _q_temperature_mix,
-        "knn_communities": _q_knn_communities,
-        "lm_backoff_scores": _q_lm_backoff_scores,
-        # --- round 6: auto-parameterized scale paths registered as
-        # first-class oracle-gated queries (VERDICT r5 items 2-3) ---
-        "ann_lsh_auto": _q_ann_lsh_auto,
-        "semantic_dedup_auto": _q_semantic_dedup_auto,
-        "knn_graph_ivf": _q_knn_graph_ivf,
-        "winsorized_prices_approx": _q_winsorized_prices_approx,
-        "grouped_percentiles_approx": _q_grouped_percentiles_approx,
-        "image_features_jpeg": _q_image_features_jpeg,
-        "image_features_jpeg_prog": _q_image_features_jpeg_prog,
-        "substring_dedup": _q_substring_dedup,
-        "blocklist_stats": _q_blocklist_stats,
-        # --- round 7: crawl-archive ingestion source + GIF codec ---
-        "warc_ingest": _q_warc_ingest,
-        "image_features_gif": _q_image_features_gif,
-        "webdataset_ingest": _q_webdataset_ingest,
-        "image_dedup_dhash": _q_image_dedup_dhash,
-        "jsonl_ingest": _q_jsonl_ingest,
-        "c4_line_filter": _q_c4_line_filter,
-        "char_entropy": _q_char_entropy,
-        "distinct_users_hll": _q_distinct_users_hll,
-        "distinct_users_hll_wide": _q_distinct_users_hll_wide,
-        "text_normalize": _q_text_normalize,
-        "url_dedup": _q_url_dedup,
-        "ngram_novelty": _q_ngram_novelty,
-        "audience_overlap_kmv": _q_audience_overlap_kmv,
-        "token_freq_cms": _q_token_freq_cms,
-        "image_resize_png": _q_image_resize_png,
-        "ewma_daily": _q_ewma_daily,
-        "weighted_corpus_sample": _q_weighted_corpus_sample,
-    }
-    ordered = {name: full[name] for name in _ROUND16_FRONT}
-    ordered.update({name: full[name] for name in _ROUND15_FRONT})
-    ordered.update({name: full[name] for name in _ROUND14_FRONT})
-    ordered.update({name: full[name] for name in _ROUND13_FRONT})
-    ordered.update({name: full[name] for name in _ROUND12_FRONT})
-    ordered.update({name: full[name] for name in _ROUND11_FRONT})
-    ordered.update({name: full[name] for name in _ROUND10_FRONT})
-    ordered.update({name: full[name] for name in _ROUND9_FRONT})
-    ordered.update({name: full[name] for name in _ROUND8_FRONT})
-    ordered.update({name: full[name] for name in _ROUND7_FRONT})
-    ordered.update({name: full[name] for name in _ROUND6_FRONT})
-    ordered.update({name: full[name] for name in _ROUND5_FRONT})
-    ordered.update(full)
+    Only the first 50 entries are recorded per round, so the
+    ``_WINDOW_FRONT`` names come first and every other name follows
+    in registry order."""
+    registry = {name[3:]: fn for name, fn in globals().items()
+                if name.startswith("_q_")}
+    registry.update({name: _tpch_sql_query(name) for name in _TPCH_SQL})
+    ordered = {name: registry[name] for name in _WINDOW_FRONT}
+    ordered.update(registry)
     return ordered
 
 
 #: Deliberate SCALE-LESSON registrations (VERDICT r11 item 2): rows
 #: kept in the suite as priced counter-examples — each is CORRECT and
 #: has a registered deployment-shape twin that is the headline for its
-#: operator class. Bench tooling (bench.py, tools/merge_sf10.py) uses
-#: this map to report deployment-total vs lesson-total so no reader
-#: has to re-derive which rows are lessons from the artifact notes.
+#: operator class. ``lesson_totals`` (used by bench.py and
+#: tools/merge_sf10.py) reads this map to report deployment-total vs
+#: lesson-total so no reader has to re-derive which rows are lessons
+#: from the artifact notes.
 LESSON_QUERIES: dict[str, str] = {
     "minhash_dedup":
         "uncapped full-corpus LSH self-join lesson (302 s sf10); "
@@ -4682,6 +4149,19 @@ LESSON_QUERIES: dict[str, str] = {
         "is the hash-sample bottom-k threshold pair "
         "(fare_anomalies_sketch's shape applied to both tails)",
 }
+
+
+def lesson_totals(times: dict[str, float]) -> dict:
+    """Split the summed per-query seconds of ``times`` into the
+    deployment total and the ``LESSON_QUERIES`` total."""
+    total = round(sum(times.values()), 3)
+    lesson_total = round(sum(t for n, t in times.items()
+                             if n in LESSON_QUERIES), 3)
+    return {
+        "deployment_total_sec": round(total - lesson_total, 3),
+        "lesson_total_sec": lesson_total,
+        "lesson_queries": sorted(n for n in times if n in LESSON_QUERIES),
+    }
 
 
 def _pca_covariance_ctes(dim: int, decimals: int) -> str:

@@ -169,14 +169,7 @@ def main() -> None:
     # so the headline a reader should track is visible without
     # re-deriving it from the artifact notes. "value" stays the full
     # total for round-over-round continuity.
-    lessons = getattr(entrymod, "LESSON_QUERIES", {})
-    lesson_total = round(sum(t for n, t in times.items()
-                             if n in lessons), 3)
-    totals = {
-        "deployment_total_sec": round(total - lesson_total, 3),
-        "lesson_total_sec": lesson_total,
-        "lesson_queries": sorted(n for n in times if n in lessons),
-    }
+    totals = entrymod.lesson_totals(times)
     # Exact/scale twins: the "exact" member is the brute-force
     # correctness oracle for the same semantics; the "scale" member is
     # the sketch/index path that survives 100 TB. The scale number is the

@@ -148,18 +148,6 @@ def _huff_encode_map(bits: list[int], vals: list[int]) -> dict[int, tuple]:
     return out
 
 
-def _huff_decode_map(bits: list[int], vals: list[int]) -> dict[tuple, int]:
-    """(length, code) -> symbol."""
-    out, code, k = {}, 0, 0
-    for length in range(1, 17):
-        for _ in range(bits[length - 1]):
-            out[(length, code)] = vals[k]
-            code += 1
-            k += 1
-        code <<= 1
-    return out
-
-
 def _huff_decode_lut(bits: tuple, vals: tuple) -> list:
     """16-bit-prefix lookup table: ``lut[next16bits] -> (symbol,
     code_length)`` (None for invalid prefixes). Cached per table —

@@ -54,17 +54,6 @@ def shingles(tokens_col: Column, n: int = 3, sep: str = " ") -> Column:
         lambda i: F.concat_ws(sep, F.slice(tokens_col, i, n))))
 
 
-def char_ngrams(col: str | Column, n: int = 5) -> Column:
-    """Character n-grams of the lowercased text (SimHash features)."""
-    c = F.col(col) if isinstance(col, str) else col
-    low = F.lower(c)
-    return F.when(
-        F.length(low) < n, F.array().cast("array<string>")
-    ).otherwise(F.transform(
-        F.sequence(F.lit(1), F.length(low) - (n - 1)),
-        lambda i: F.substring(low, i, n)))
-
-
 #: BPE-style pre-tokenizer split pattern (the GPT-2 recipe simplified to
 #: branches with DISJOINT start characters, so java.util.regex (Spark)
 #: and RE2 (DuckDB) — leftmost-first vs optional-longest engines — find

@@ -24,8 +24,6 @@ TABLES = (
     "orders", "lineitem", "events", "documents", "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def _nanos_timestamp_cols(path: str) -> list[str]:
     """Column names stored as parquet TIMESTAMP(NANOS) (footer-only read).

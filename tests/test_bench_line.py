@@ -12,6 +12,7 @@ just to the full artifact — fails CI before it degrades a driver round.
 import json
 
 from bench import stdout_line
+from __spark_entry__ import lesson_totals
 
 
 def _fake_full(n_queries: int = 190) -> dict:
@@ -83,3 +84,11 @@ def test_fp_digest_tracks_fingerprints():
     changed["fingerprints"]["query_000_" + "x" * 30] = "e" * 64
     b = stdout_line(changed, "BENCH_FULL.json")
     assert a["fp_digest"] != b["fp_digest"]
+
+
+def test_lesson_totals_splits_lesson_rows():
+    # minhash_dedup is a LESSON_QUERIES row; pagerank is not.
+    totals = lesson_totals({"minhash_dedup": 2.5, "pagerank": 1.25})
+    assert totals == {"deployment_total_sec": 1.25,
+                      "lesson_total_sec": 2.5,
+                      "lesson_queries": ["minhash_dedup"]}

@@ -33,7 +33,29 @@ def test_queries_run_at_sf0001(spark):
 
 def test_oracle_keys_subset_of_queries():
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
-    assert set(oracles).issubset(set(qs))
+    assert set(oracles) == set(qs)
+
+
+def test_window_front_leads_registry():
+    """The first 50 ``queries()`` entries (the per-round correctness
+    record) are exactly ``_WINDOW_FRONT``, every name registered once."""
+    front = entrymod._WINDOW_FRONT
+    assert len(front) == 50 == len(set(front))
+    # equal to the registry's head, so every front name is registered
+    assert list(entrymod.queries())[:50] == front
+
+
+def test_registry_is_the_q_builders():
+    """Every top-level ``_q_<name>`` builder is registered under
+    ``<name>``; the TPC-H twins complete the 196 unique names."""
+    import inspect
+
+    qs = entrymod.queries()
+    builders = {name: fn for name, fn in vars(entrymod).items()
+                if name.startswith("_q_") and inspect.isfunction(fn)}
+    for name, fn in builders.items():
+        assert qs[name[3:]] is fn, name
+    assert len(qs) == 196
 
 
 def test_coverage_doc_query_count_matches_registry():

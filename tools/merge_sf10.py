@@ -37,21 +37,13 @@ def main() -> None:
     # number a reader should track
     sys.path.insert(0, ROOT)
     import __spark_entry__ as entrymod
-    lessons = getattr(entrymod, "LESSON_QUERIES", {})
-    lesson_total = round(sum(t for n, t in full["queries"].items()
-                             if n in lessons), 3)
-    full["totals"] = {
-        "deployment_total_sec": round(full["value"] - lesson_total, 3),
-        "lesson_total_sec": lesson_total,
-        "lesson_queries": sorted(n for n in full["queries"]
-                                 if n in lessons),
-    }
+    full["totals"] = entrymod.lesson_totals(full["queries"])
     with open(path, "w") as f:
         json.dump(full, f, indent=1, sort_keys=True)
     print(f"BENCH_SF10.json: {len(full['queries'])} queries, "
           f"total {full['value']} s "
           f"(deployment {full['totals']['deployment_total_sec']} s + "
-          f"lessons {lesson_total} s)")
+          f"lessons {full['totals']['lesson_total_sec']} s)")
 
 
 if __name__ == "__main__":
