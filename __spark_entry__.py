@@ -3273,9 +3273,9 @@ def _q_jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     are packed 4-per-shard into ``.jsonl`` payloads (one compact JSON
     object per line) and compressed with a codec ROTATING by shard
     (gz / bz2 / xz / framed-snappy / zstd — the three stdlib
-    decompressors AND both pure-Python codecs, ``functions/snappy.py``
-    with CRC32C verification and the RFC 8878 ``functions/zstd.py``
-    with xxh64 content checksums, all sit on the hash path), then
+    decompressors and pyarrow's bundled libsnappy and libzstd, with
+    the framing layer's CRC32C and the zstd frames' xxh64 content
+    checksums verified, all sit on the hash path), then
     ``read_text_shards`` sniffs each shard's magic bytes,
     decompresses, and splits lines; the JSON parse itself happens
     JVM-SIDE (``from_json`` — codegen'd, so the Python stage is only

@@ -1,38 +1,31 @@
-"""Pure-Python Snappy codec — raw block format + framing format.
+"""Framed Snappy — the framing format around pyarrow's bundled snappy.
 
-Completes the compressed-shard codec family next to the stdlib trio
-(zlib/bz2/lzma in ``sources/compressed.py``): Snappy is the Hadoop/
-Kafka-ecosystem interchange codec (SequenceFiles, Kafka message sets,
-many JSONL corpus mirrors), and unlike zstd its format is small enough
-to implement honestly here — LZ77 with byte-oriented tags, no entropy
-coding (format: google/snappy format_description.txt; framing:
-framing_format.txt — both public).
-
-Raw format: varint uncompressed length, then tagged elements — tag low
-2 bits select literal (00, 6-bit length or 1-4 extension bytes), copy
-with 1-byte offset (01, len 4-11, offset < 2048), 2-byte LE offset
-(10, len 1-64) or 4-byte LE offset (11). Copies may overlap forward
-(length > offset) — decode is byte-by-byte from the output buffer.
+The Hadoop/Kafka-ecosystem interchange codec (SequenceFiles, Kafka
+message sets, many JSONL corpus mirrors), one of the five codecs
+``sources/compressed.py`` sniffs. The framing format
+(google/snappy framing_format.txt, public) is walked here; each
+compressed chunk's raw block goes through ``pa.Codec("snappy")``,
+the reference libsnappy that pyarrow already ships.
 
 Framing format: 4-byte chunk headers (type + 24-bit LE length);
 stream identifier chunk (0xff, "sNaPpY"), compressed (0x00) /
 uncompressed (0x01) data chunks each carrying the MASKED CRC32C of
 their uncompressed payload — mask = rotate-right-15 + 0xa282ead8, the
-Castagnoli polynomial (0x82F63B78 reflected), table-driven below.
-Chunks cap at 65536 uncompressed bytes, so a shard decodes in bounded
-memory per chunk and a corrupted chunk is localized by its checksum.
-
-The ENCODER is a greedy reference-style LZ (4-byte hash table, 2-byte
-offset copies, 64-byte match cap) — deterministic, so fixtures are
-replayable; any spec-conformant snappy decoder reads its output.
+Castagnoli polynomial (0x82F63B78 reflected), table-driven below and
+shared with ``functions/tfrecord.py``. Chunks cap at 65536
+uncompressed bytes, so a shard decodes in bounded memory per chunk
+and a corrupted chunk is localized by its checksum. A compressed
+chunk's raw block starts with its uncompressed length as a varint;
+that length comes from the stream, so it is checked against the cap
+before it sizes Arrow's output buffer.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
+
 __all__ = [
     "crc32c",
-    "snappy_compress",
-    "snappy_decompress",
     "frame_compress",
     "frame_decompress",
     "FRAME_MAGIC",
@@ -42,6 +35,7 @@ __all__ = [
 FRAME_MAGIC = b"\xff\x06\x00\x00sNaPpY"
 
 _MAX_CHUNK = 65536  # max uncompressed bytes per framed chunk (spec)
+_CODEC = pa.Codec("snappy")
 
 
 def _crc32c_table() -> list[int]:
@@ -95,109 +89,15 @@ def _read_varint(data: bytes, pos: int) -> tuple[int, int]:
             raise ValueError("snappy varint too long")
 
 
-def _emit_literal(out: bytearray, lit: bytes) -> None:
-    n = len(lit) - 1
-    if n < 60:
-        out.append(n << 2)
-    elif n < (1 << 8):
-        out.append(60 << 2)
-        out.append(n)
-    elif n < (1 << 16):
-        out.append(61 << 2)
-        out += n.to_bytes(2, "little")
-    elif n < (1 << 24):
-        out.append(62 << 2)
-        out += n.to_bytes(3, "little")
-    else:
-        out.append(63 << 2)
-        out += n.to_bytes(4, "little")
-    out += lit
-
-
-def snappy_compress(data: bytes) -> bytes:
-    """Raw-format compress: greedy 4-byte-hash LZ emitting 2-byte-offset
-    copies (len 4-64, offset <= 65535) between literals."""
-    out = bytearray(_varint(len(data)))
-    n = len(data)
-    if n == 0:
-        return bytes(out)
-    table: dict[bytes, int] = {}
-    i = lit_start = 0
-    while i + 4 <= n:
-        key = data[i:i + 4]
-        j = table.get(key, -1)
-        table[key] = i
-        if 0 <= j and 0 < i - j <= 0xFFFF:
-            length = 4
-            while (i + length < n and length < 64
-                   and data[j + length] == data[i + length]):
-                length += 1
-            if lit_start < i:
-                _emit_literal(out, data[lit_start:i])
-            out.append(0x02 | ((length - 1) << 2))
-            out += (i - j).to_bytes(2, "little")
-            i += length
-            lit_start = i
-        else:
-            i += 1
-    if lit_start < n:
-        _emit_literal(out, data[lit_start:n])
-    return bytes(out)
-
-
-def snappy_decompress(data: bytes) -> bytes:
-    """Raw-format decompress, all four tag types, bounds-checked."""
-    expected, pos = _read_varint(data, 0)
-    out = bytearray()
-    n = len(data)
-    while pos < n:
-        tag = data[pos]
-        pos += 1
-        kind = tag & 0x03
-        if kind == 0x00:  # literal
-            ln = tag >> 2
-            if ln >= 60:
-                extra = ln - 59
-                if pos + extra > n:
-                    raise ValueError("truncated literal length")
-                ln = int.from_bytes(data[pos:pos + extra], "little")
-                pos += extra
-            ln += 1
-            if pos + ln > n:
-                raise ValueError("truncated literal body")
-            out += data[pos:pos + ln]
-            pos += ln
-            continue
-        if kind == 0x01:  # copy, 1-byte offset
-            length = 4 + ((tag >> 2) & 0x07)
-            if pos >= n:
-                raise ValueError("truncated copy offset")
-            offset = ((tag >> 5) << 8) | data[pos]
-            pos += 1
-        elif kind == 0x02:  # copy, 2-byte offset
-            length = (tag >> 2) + 1
-            if pos + 2 > n:
-                raise ValueError("truncated copy offset")
-            offset = int.from_bytes(data[pos:pos + 2], "little")
-            pos += 2
-        else:  # copy, 4-byte offset
-            length = (tag >> 2) + 1
-            if pos + 4 > n:
-                raise ValueError("truncated copy offset")
-            offset = int.from_bytes(data[pos:pos + 4], "little")
-            pos += 4
-        if offset == 0 or offset > len(out):
-            raise ValueError("snappy copy offset out of range")
-        start = len(out) - offset
-        if length <= offset:
-            out += out[start:start + length]
-        else:  # overlapping forward copy: byte-by-byte semantics
-            for k in range(length):
-                out.append(out[start + k])
-    if len(out) != expected:
-        raise ValueError(
-            f"snappy length mismatch: got {len(out)}, header {expected}")
-    return bytes(out)
+def _raw_decompress(raw: bytes) -> bytes:
+    """One compressed chunk's raw snappy block, through Arrow."""
+    n, _ = _read_varint(raw, 0)
+    if n > _MAX_CHUNK:
+        raise ValueError("chunk exceeds 65536-byte cap")
+    try:
+        return _CODEC.decompress(raw, decompressed_size=n, asbytes=True)
+    except (OSError, pa.ArrowException) as e:
+        raise ValueError(f"corrupt snappy chunk: {e}") from e
 
 
 def frame_compress(data: bytes) -> bytes:
@@ -209,7 +109,7 @@ def frame_compress(data: bytes) -> bytes:
     for off in range(0, len(data), _MAX_CHUNK) or [0]:
         chunk = data[off:off + _MAX_CHUNK]
         crc = _masked_crc(chunk).to_bytes(4, "little")
-        comp = snappy_compress(chunk)
+        comp = _CODEC.compress(chunk, asbytes=True)
         if len(comp) < len(chunk):
             body, ctype = crc + comp, 0x00
         else:
@@ -243,7 +143,7 @@ def frame_decompress(data: bytes) -> bytes:
             if ln < 4:
                 raise ValueError("chunk too short for checksum")
             want = int.from_bytes(body[:4], "little")
-            payload = (snappy_decompress(body[4:]) if ctype == 0x00
+            payload = (_raw_decompress(body[4:]) if ctype == 0x00
                        else bytes(body[4:]))
             if len(payload) > _MAX_CHUNK:
                 raise ValueError("chunk exceeds 65536-byte cap")

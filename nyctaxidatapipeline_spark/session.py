@@ -6,7 +6,8 @@ parity) and for scale (AQE, skew-join handling, sane shuffle parallelism).
 
 On a real cluster the same builder is used — only ``master`` and the memory /
 shuffle-partition numbers come from the environment. Local defaults target
-the test harness (local[32], 128 GiB host).
+the test harness (local[32]); the driver heap defaults to a quarter of the
+host's physical memory, between 1g and 16g.
 """
 
 from __future__ import annotations
@@ -17,6 +18,15 @@ from pyspark.sql import SparkSession
 
 # One knob for local parallelism; the driver exports SPARK_GRAFT_CPUS.
 _CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+
+def _driver_mem() -> str:
+    """``SPARK_GRAFT_DRIVER_MEM`` if set, else a quarter of physical
+    memory in MiB, at least 1g and at most 16g."""
+    mib = (os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+           // 4 // 2**20)
+    return (os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or f"{max(1024, min(16 * 1024, mib))}m")
 
 
 def get_spark(app_name: str = "nyctaxidatapipeline_spark",
@@ -70,7 +80,7 @@ def get_spark(app_name: str = "nyctaxidatapipeline_spark",
         # (truncated to micros, matching DuckDB's nanos handling).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _driver_mem())
         # Whole-stage codegen emits a unique class per query; a long-lived
         # session running many distinct queries can fill HotSpot's default
         # code cache, silently disabling the JIT (~20x slowdowns late in a

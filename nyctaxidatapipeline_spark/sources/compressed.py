@@ -1,13 +1,14 @@
-"""Compressed text-shard ingestion — .jsonl.{gz,bz2,xz} corpora.
+"""Compressed text-shard ingestion — .jsonl.{gz,bz2,xz,zst,snappy}.
 
 The interchange format LLM corpora actually ship in (Dolma, RedPajama,
 The Pile): newline-delimited JSON, one document per line, whole-file
-compressed, thousands of shards. Five codecs are REAL here — the three
-stdlib ones (zlib / bz2 / lzma), framed Snappy (``functions/snappy.py``,
-the Hadoop/Kafka-ecosystem format), and Zstandard (``functions/zstd.py``,
-a pure-Python RFC 8878 codec — the format Dolma actually ships) —
-sniffed per shard by magic bytes so a mixed-codec corpus reads through
-one call.
+compressed, thousands of shards. Five codecs, sniffed per shard by
+magic bytes so a mixed-codec corpus reads through one call: the three
+stdlib ones (zlib / bz2 / lzma), Zstandard (``functions/zstd.py``, the
+format Dolma ships) and framed Snappy (``functions/snappy.py``, the
+Hadoop/Kafka-ecosystem format). The last two run on the libzstd and
+libsnappy that pyarrow bundles — one implementation per codec. A
+corrupt or truncated shard raises ``ValueError`` whatever its codec.
 
 Scale notes (local[32] -> 1000 executors):
   * Whole-file gzip/bz2/xz is NOT splittable — the shard is the unit
@@ -35,6 +36,15 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from nyctaxidatapipeline_spark.functions.snappy import (
+    frame_compress,
+    frame_decompress,
+)
+from nyctaxidatapipeline_spark.functions.zstd import (
+    zstd_compress,
+    zstd_decompress,
+)
+
 __all__ = ["compress", "decompress_auto", "sniff_codec",
            "jsonl_shards", "write_jsonl_shards",
            "read_text_shards", "TEXT_SHARD_SCHEMA"]
@@ -44,72 +54,10 @@ _MAGICS = (
     (b"BZh", "bz2"),
     (b"\xfd7zXZ\x00", "xz"),
     (b"\x28\xb5\x2f\xfd", "zst"),
-    # framed-snappy stream identifier chunk (the Hadoop/Kafka-ecosystem
-    # codec; decoded by the pure-Python codec in functions/snappy.py)
+    # framed-snappy stream identifier chunk
     (b"\xff\x06\x00\x00sNaPpY", "snappy"),
 )
 
-# --- import-guarded C-backed codec fast paths -------------------------
-# The pure-Python codecs (functions/snappy.py, functions/zstd.py) are
-# the ORACLE surface: always present, fully spec-real, and the hash
-# path the registered ingestion queries verify. At 100 TB their
-# throughput (0.3-6 MiB/s) would be the bottleneck by 2-3 orders of
-# magnitude, so the DECODE path prefers a C-backed library whenever one
-# is importable — decompressed bytes are spec-UNIQUE, so the swap
-# cannot change any result, only the speed. COMPRESSION stays
-# pure-Python by default (``prefer="pure"``): different encoders emit
-# different — equally valid — frames, and the shard writers promise
-# byte-deterministic output ("shard bytes are a pure function of the
-# data"); production callers that don't need that promise pass
-# ``prefer="c"``. Nothing here is required: absent the libraries the
-# pure-Python paths serve both roles.
-try:  # C zstd: the 'zstandard' wheel, else Python 3.14+'s stdlib module
-    import zstandard as _ZSTD_C  # type: ignore[import-not-found]
-except ImportError:
-    try:
-        from compression import zstd as _ZSTD_C  # type: ignore
-    except ImportError:
-        _ZSTD_C = None
-try:  # C framed snappy: the 'python-snappy' wheel
-    import snappy as _SNAPPY_C  # type: ignore[import-not-found]
-except ImportError:
-    _SNAPPY_C = None
-
-
-def _zstd_c_decompress(data: bytes) -> bytes:
-    # Must match the pure-Python zstd_decompress on MULTI-FRAME streams
-    # and skippable frames (pzstd / parallel-compressed .jsonl.zst
-    # corpora concatenate frames; skippable frames carry seek tables).
-    if hasattr(_ZSTD_C, "ZstdDecompressor"):  # zstandard package
-        import io
-
-        # stream_reader crosses frame boundaries and libzstd skips
-        # skippable frames natively; read in chunks until exhausted
-        # (read(-1) support varies across zstandard versions).
-        reader = _ZSTD_C.ZstdDecompressor().stream_reader(
-            io.BytesIO(data), read_across_frames=True)
-        out = []
-        while True:
-            chunk = reader.read(1 << 20)
-            if not chunk:
-                return b"".join(out)
-            out.append(chunk)
-    return _ZSTD_C.decompress(data)  # compression.zstd (stdlib 3.14+)
-    # (stdlib decompress already walks all frames incl. skippable ones)
-
-
-def _zstd_c_compress(data: bytes) -> bytes:
-    if hasattr(_ZSTD_C, "ZstdCompressor"):  # zstandard package
-        return _ZSTD_C.ZstdCompressor(level=3).compress(data)
-    return _ZSTD_C.compress(data, 3)  # compression.zstd (stdlib 3.14+)
-
-
-def _snappy_c_decompress(data: bytes) -> bytes:
-    return _SNAPPY_C.StreamDecompressor().decompress(data)
-
-
-def _snappy_c_compress(data: bytes) -> bytes:
-    return _SNAPPY_C.StreamCompressor().compress(data)
 
 #: Schema of the line frame emitted by :func:`read_text_shards`
 #: (``shard_id`` inherits the input column's type).
@@ -133,20 +81,12 @@ def sniff_codec(data: bytes) -> str:
     return "none"
 
 
-def compress(data: bytes, codec: str, prefer: str = "pure") -> bytes:
+def compress(data: bytes, codec: str) -> bytes:
     """Deterministic compression for fixtures/writers: ``gz`` uses the
     mtime-free zlib gzip container (same as the WARC members), ``bz2``
-    and ``xz`` are stdlib one-shots (no timestamps in either format).
-    ``none`` passes through.
-
-    ``prefer="pure"`` (default) pins the pure-Python snappy/zstd
-    encoders — byte-deterministic across environments, the promise the
-    shard writers make. ``prefer="c"`` routes those two codecs through
-    a C-backed library when one is importable (production speed;
-    output bytes then depend on the library version — every frame is
-    still spec-valid and round-trips through either decoder)."""
-    if prefer not in ("pure", "c"):
-        raise ValueError(f"prefer must be 'pure' or 'c', got {prefer!r}")
+    and ``xz`` are stdlib one-shots (no timestamps in either format),
+    ``snappy`` and ``zst`` go through pyarrow's bundled libraries at a
+    fixed level. ``none`` passes through."""
     if codec == "gz":
         co = zlib.compressobj(6, zlib.DEFLATED, 16 + 15)
         return co.compress(data) + co.flush()
@@ -155,63 +95,42 @@ def compress(data: bytes, codec: str, prefer: str = "pure") -> bytes:
     if codec == "xz":
         return lzma.compress(data)
     if codec == "snappy":
-        if prefer == "c" and _SNAPPY_C is not None:
-            return _snappy_c_compress(data)
-        from nyctaxidatapipeline_spark.functions.snappy import (
-            frame_compress,
-        )
         return frame_compress(data)
     if codec == "zst":
-        if prefer == "c" and _ZSTD_C is not None:
-            return _zstd_c_compress(data)
-        from nyctaxidatapipeline_spark.functions.zstd import zstd_compress
         return zstd_compress(data)
     if codec == "none":
         return data
     raise ValueError(f"unknown codec {codec!r}")
 
 
+def _gunzip(data: bytes) -> bytes:
+    # concatenated gzip members decompress fully (explicit member walk)
+    out = []
+    while data:
+        dob = zlib.decompressobj(16 + 15)
+        out.append(dob.decompress(data))
+        if not dob.eof:
+            raise ValueError("truncated gzip shard")
+        data = dob.unused_data
+    return b"".join(out)
+
+
+_DECODERS = {"gz": _gunzip, "bz2": bz2.decompress, "xz": lzma.decompress,
+             "snappy": frame_decompress, "zst": zstd_decompress}
+
+
 def decompress_auto(data: bytes) -> bytes:
-    """Magic-byte sniff, then the matching stdlib decompressor; bytes
-    with no known magic pass through as plain text. Concatenated gzip
-    members decompress fully (wbits 31 + explicit member walk)."""
+    """Magic-byte sniff, then the matching decoder; bytes with no known
+    magic pass through as plain text. A corrupt or truncated shard
+    raises ``ValueError`` whatever its codec (the codec's own error is
+    chained as the cause)."""
     codec = sniff_codec(data)
-    if codec != "none":
-        if codec == "gz":
-            out = []
-            while data:
-                dob = zlib.decompressobj(16 + 15)
-                out.append(dob.decompress(data))
-                if not dob.eof:
-                    raise ValueError("truncated gzip shard")
-                data = dob.unused_data
-            return b"".join(out)
-        if codec == "bz2":
-            return bz2.decompress(data)
-        if codec == "snappy":
-            if _SNAPPY_C is not None:  # C fast path, same bytes out
-                return _snappy_c_decompress(data)
-            from nyctaxidatapipeline_spark.functions.snappy import (
-                frame_decompress,
-            )
-            return frame_decompress(data)
-        if codec == "zst":
-            # the dominant modern corpus codec (Dolma ships .jsonl.zst):
-            # the C-backed 'zstandard' package (or Python 3.14's
-            # stdlib compression.zstd) is preferred when importable —
-            # ~500 MiB/s vs the pure-Python 0.3-6 MiB/s, identical
-            # output bytes by spec. The pure-Python RFC 8878 codec in
-            # functions/zstd.py (full frame format incl. FSE/Huffman
-            # entropy blocks and checksum verification) is the
-            # always-present fallback and the oracle surface.
-            if _ZSTD_C is not None:
-                return _zstd_c_decompress(data)
-            from nyctaxidatapipeline_spark.functions.zstd import (
-                zstd_decompress,
-            )
-            return zstd_decompress(data)
-        return lzma.decompress(data)
-    return data
+    if codec == "none":
+        return data
+    try:
+        return _DECODERS[codec](data)
+    except (ValueError, OSError, zlib.error, lzma.LZMAError) as e:
+        raise ValueError(f"corrupt {codec} shard: {e}") from e
 
 
 def read_text_shards(shards: DataFrame, content_col: str = "content",
@@ -268,7 +187,8 @@ def jsonl_shards(df: DataFrame, id_col: str,
     from pyspark.sql import functions as F
 
     if docs_per_shard < 1:
-        raise ValueError(f"docs_per_shard must be >= 1")
+        raise ValueError(
+            f"docs_per_shard must be >= 1, got {docs_per_shard!r}")
     compress(b"", codec)  # validate codec name eagerly
     cols = [c for c in df.columns]
     src = (df.select(

@@ -1,14 +1,11 @@
-"""Known-answer vectors for the compressed-shard codecs (VERDICT r8
-task 4): decode-direction parity pins that run WITHOUT the C wheels.
+"""Known-answer vectors for the compressed-shard codecs: decode-
+direction pins against bytes no repo encoder produced.
 
 * zstd — vendored frames in ``tests/data/kat_*.zst`` produced by the
   REAL libzstd encoder (zstd CLI v1.5.7, the reference implementation):
   levels 3 and 19, with and without content checksum, a concatenated
   two-frame stream (the pzstd shape) and a stream wrapped in skippable
-  frames. The pure-Python RFC 8878 decoder must reproduce the exact
-  plaintext — this is the cross-implementation pin the wheel-gated
-  byte-identity test (``test_c_fast_path_byte_identity``) could not
-  provide in wheel-less environments.
+  frames. The decoder must reproduce the exact plaintext.
 * snappy — hand-assembled framing-format streams derived from the
   PUBLIC format descriptions (framing_format.txt + format_description
   .txt): literal and both copy element forms, compressed and
@@ -16,10 +13,6 @@ task 4): decode-direction parity pins that run WITHOUT the C wheels.
 * PNG — a file assembled chunk-by-chunk from the PNG spec with stdlib
   zlib (an independent DEFLATE implementation) compressing the IDAT:
   pins ``decode_png`` against bytes no repo encoder produced.
-
-When a C codec IS importable the same vectors additionally pin the C
-decode path — so the parity claim upgrades automatically in richer
-environments instead of silently narrowing here.
 """
 
 from __future__ import annotations
@@ -67,17 +60,10 @@ def test_zstd_auto_routes_and_decodes_kat():
         sniff_codec,
     )
 
-    from nyctaxidatapipeline_spark.sources import compressed as mod
-
     for name, want in ZSTD_KAT.items():
         data = _kat(name)
         assert sniff_codec(data) == "zst", name
         assert decompress_auto(data) == want, name
-        # richer environments: the same vectors pin the C decode path
-        # (decompress_auto already routed through it above; this makes
-        # the equality explicit rather than implied)
-        if mod._ZSTD_C is not None:
-            assert mod._zstd_c_decompress(data) == want, name
 
 
 # --- snappy: spec-assembled vectors (no encoder involved) ---------------
@@ -99,12 +85,13 @@ def _crc_masked(payload: bytes) -> bytes:
 
 def test_snappy_decodes_spec_assembled_stream():
     """Framed stream hand-built from the spec: an uncompressed chunk, a
-    padding chunk, and a COMPRESSED chunk whose raw-snappy block is
+    padding chunk, and COMPRESSED chunks whose raw-snappy blocks are
     hand-encoded (varint length; literal element tag (n-1)<<2; 2-byte-
     offset copy tag (n-1)<<2|2 with LE offset)."""
-    from nyctaxidatapipeline_spark.functions.snappy import (
-        frame_decompress,
-        snappy_decompress,
+    from nyctaxidatapipeline_spark.functions.snappy import frame_decompress
+    from nyctaxidatapipeline_spark.sources.compressed import (
+        decompress_auto,
+        sniff_codec,
     )
 
     plain1 = b"hello framed snappy"
@@ -113,13 +100,15 @@ def test_snappy_decodes_spec_assembled_stream():
     target = b"abcd" * 4
     raw = bytes([16]) + bytes([(4 - 1) << 2]) + b"abcd" \
         + bytes([((12 - 1) << 2) | 2]) + (4).to_bytes(2, "little")
-    assert snappy_decompress(raw) == target
+    assert frame_decompress(_snappy_frame(
+        [(0x00, _crc_masked(target) + raw)])) == target
     # 1-byte-offset copy form (tag 0x01): len 5, offset 4; len bits
     # (5-4)=1 in bits 2-4, offset high bits 0 in bits 5-7
     target2 = b"wxyz" + b"wxyzw"
     raw2 = bytes([9]) + bytes([(4 - 1) << 2]) + b"wxyz" \
         + bytes([(1 << 2) | 1, 4])
-    assert snappy_decompress(raw2) == target2
+    assert frame_decompress(_snappy_frame(
+        [(0x00, _crc_masked(target2) + raw2)])) == target2
     stream = _snappy_frame([
         (0x01, _crc_masked(plain1) + plain1),      # uncompressed chunk
         (0xFE, b"\x00" * 7),                       # padding: skipped
@@ -127,20 +116,8 @@ def test_snappy_decodes_spec_assembled_stream():
         (0x00, _crc_masked(target2) + raw2),
     ])
     assert frame_decompress(stream) == plain1 + target + target2
-    from nyctaxidatapipeline_spark.sources.compressed import (
-        decompress_auto,
-        sniff_codec,
-    )
-
     assert sniff_codec(stream) == "snappy"
-    from nyctaxidatapipeline_spark.sources import compressed as mod
-
-    if mod._SNAPPY_C is None:
-        assert decompress_auto(stream) == plain1 + target + target2
-    else:
-        # richer environments: the C framed decoder must accept the
-        # same spec-assembled stream (padding chunks included)
-        assert mod._snappy_c_decompress(stream) == plain1 + target + target2
+    assert decompress_auto(stream) == plain1 + target + target2
 
 
 # --- PNG: spec-assembled file, stdlib-zlib IDAT -------------------------

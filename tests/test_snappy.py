@@ -1,15 +1,22 @@
-"""Pure-Python Snappy codec: CRC32C vectors, raw-format tags, framing."""
+"""Framed Snappy: CRC32C vectors, raw-block tags inside framed chunks
+(decoded by pyarrow's libsnappy), framing and checksums."""
 
 import pytest
 
 from nyctaxidatapipeline_spark.functions.snappy import (
     FRAME_MAGIC,
+    _masked_crc,
     crc32c,
     frame_compress,
     frame_decompress,
-    snappy_compress,
-    snappy_decompress,
 )
+
+
+def _one_chunk(raw: bytes, payload: bytes = b"") -> bytes:
+    """A framed stream holding one compressed (type 0x00) chunk: the
+    hand-built raw snappy block ``raw``, checksummed as ``payload``."""
+    body = _masked_crc(payload).to_bytes(4, "little") + raw
+    return FRAME_MAGIC + b"\x00" + len(body).to_bytes(3, "little") + body
 
 
 def test_crc32c_check_vectors():
@@ -22,37 +29,36 @@ def test_raw_roundtrip_shapes():
     cases = [b"", b"a", b"snappy " * 200, bytes(range(256)) * 40,
              b"x" * 100_000, "mixed ünïcode ✓ ".encode() * 500]
     for data in cases:
-        comp = snappy_compress(data)
-        assert snappy_decompress(comp) == data
+        assert frame_decompress(frame_compress(data)) == data
     # repetitive input must actually compress
     rep = b"the quick brown fox " * 500
-    assert len(snappy_compress(rep)) < len(rep) // 5
+    assert len(frame_compress(rep)) < len(rep) // 5
 
 
 def test_raw_overlapping_copy_semantics():
     # offset 1, length 8: decoder must copy byte-by-byte ("aaaa...")
-    stream = bytes([9]) + bytes([0 << 2, ord("a")]) + bytes(
+    raw = bytes([9]) + bytes([0 << 2, ord("a")]) + bytes(
         [0x02 | (7 << 2), 1, 0])
-    assert snappy_decompress(stream) == b"a" * 9
+    assert frame_decompress(_one_chunk(raw, b"a" * 9)) == b"a" * 9
 
 
 def test_raw_one_and_four_byte_offset_tags():
     # literal "abcd", copy len 4 offset 4 via 1-byte-offset tag (01)
     s1 = bytes([8]) + bytes([3 << 2]) + b"abcd" + bytes([0x01, 4])
-    assert snappy_decompress(s1) == b"abcdabcd"
+    assert frame_decompress(_one_chunk(s1, b"abcdabcd")) == b"abcdabcd"
     # same via 4-byte-offset tag (11)
     s4 = (bytes([8]) + bytes([3 << 2]) + b"abcd"
           + bytes([0x03 | (3 << 2)]) + (4).to_bytes(4, "little"))
-    assert snappy_decompress(s4) == b"abcdabcd"
+    assert frame_decompress(_one_chunk(s4, b"abcdabcd")) == b"abcdabcd"
 
 
 def test_raw_rejects_corruption():
-    with pytest.raises(ValueError):
-        snappy_decompress(bytes([4, 0x02 | (3 << 2), 9, 0]))  # offset > out
-    with pytest.raises(ValueError):
-        snappy_decompress(bytes([200]) + bytes([3 << 2]) + b"abcd")  # len
-    with pytest.raises(ValueError):
-        snappy_decompress(b"\xff" * 6)  # unterminated varint
+    for raw in (bytes([4, 0x02 | (3 << 2), 9, 0]),      # offset > out
+                bytes([200]) + bytes([3 << 2]) + b"abcd",  # length
+                b"\xff" * 6,                              # bad varint
+                b"\xff\xff\x7f" + bytes([3 << 2]) + b"abcd"):  # > 64 KiB
+        with pytest.raises(ValueError):
+            frame_decompress(_one_chunk(raw))
 
 
 def test_frame_roundtrip_and_multichunk():

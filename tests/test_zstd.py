@@ -1,27 +1,25 @@
-"""Pure-Python zstd codec: xxh64, frame roundtrips, entropy internals."""
+"""zstd through pyarrow's libzstd: xxh64, frame roundtrips, checksums,
+hand-built frames and corruption handling."""
 
 import random
 
 import pytest
 
 from nyctaxidatapipeline_spark.functions.zstd import (
-    _BackBitsWriter,
-    _ForeBits,
-    _LL_DEFAULT,
-    _ML_DEFAULT,
-    _OF_DEFAULT,
-    _decode_literals,
-    _fse_build_dtable,
-    _fse_encode_intervals,
-    _fse_read_ncount,
-    _fse_state_for,
-    _fse_write_ncount,
-    _huf_build_dtable,
-    _huf_read_weights,
     xxh64,
     zstd_compress,
     zstd_decompress,
 )
+
+
+def _fcs_and_block_offsets(frame: bytes) -> tuple[int, int]:
+    """Offsets of the frame-content-size field and the first block
+    header, read from the frame header descriptor (RFC 8878 3.1.1.1)."""
+    fhd = frame[4]
+    single = bool(fhd & 0x20)
+    fcs_pos = 5 + (0 if single else 1) + (0, 1, 2, 4)[fhd & 3]
+    fcs_len = (1 if single else 0, 2, 4, 8)[fhd >> 6]
+    return fcs_pos, fcs_pos + fcs_len
 
 
 def test_xxh64_known_vector_and_dispersion():
@@ -53,148 +51,27 @@ def test_multiframe_and_skippable():
 
 
 def test_checksum_and_reserved_block_rejected():
-    z = bytearray(zstd_compress(b"payload " * 100))
-    bad = bytearray(z)
-    bad[-1] ^= 0x55  # checksum byte
-    with pytest.raises(ValueError):
-        zstd_decompress(bytes(bad))
-    # reserved block type: craft raw frame and set type bits to 3
+    from nyctaxidatapipeline_spark.sources.compressed import (
+        compress,
+        decompress_auto,
+    )
+
+    data = b"payload " * 100
+    z = compress(data, "zst")
+    assert z[4] & 0x04  # FHD content-checksum flag
+    assert int.from_bytes(z[-4:], "little") == xxh64(data) & 0xFFFFFFFF
+    _, block = _fcs_and_block_offsets(z)
+    for pos in (block + 3, len(z) - 1):  # first payload byte, checksum
+        bad = bytearray(z)
+        bad[pos] ^= 0x55
+        with pytest.raises(ValueError):
+            decompress_auto(bytes(bad))
+    # reserved block type: set the first block header's type bits to 3
     raw = bytearray(zstd_compress(bytes(random.Random(1).randbytes(40))))
-    # block header starts after magic(4)+fhd(1)+fcs(1) for len<256
-    raw[6] |= 0x06
+    _, block = _fcs_and_block_offsets(raw)
+    raw[block] |= 0x06
     with pytest.raises(ValueError):
         zstd_decompress(bytes(raw))
-
-
-def test_ncount_roundtrip_predefined_and_random():
-    for norm, acc in (_LL_DEFAULT, _OF_DEFAULT, _ML_DEFAULT):
-        blob = _fse_write_ncount(norm, acc)
-        back, acc2 = _fse_read_ncount(_ForeBits(blob), 255)
-        assert (back, acc2) == (norm, acc)
-    r = random.Random(3)
-    for _ in range(60):
-        acc = r.randint(5, 9)
-        nsym = r.randint(2, 40)
-        counts = [0] * nsym
-        rem = 1 << acc
-        while rem > 0:
-            s = r.randrange(nsym)
-            c = min(rem, r.randint(1, max(1, rem // 2)))
-            counts[s] += c
-            rem -= c
-        norm = counts[:]
-        ones = [i for i, c in enumerate(norm) if c == 1]
-        for i in ones[:r.randint(0, len(ones))]:
-            norm[i] = -1
-        blob = _fse_write_ncount(norm, acc)
-        back, acc2 = _fse_read_ncount(_ForeBits(blob), nsym)
-        trim = norm[:]
-        while trim and trim[-1] == 0:
-            trim.pop()
-        got = back[:]
-        while got and got[-1] == 0:
-            got.pop()
-        assert got == trim and acc2 == acc
-
-
-def test_fse_intervals_partition_state_space():
-    """The property the inversion-based encoder relies on: per symbol,
-    renorm intervals exactly tile [0, 2^acc)."""
-    for norm, acc in (_LL_DEFAULT, _OF_DEFAULT, _ML_DEFAULT):
-        iv = _fse_encode_intervals(_fse_build_dtable(norm, acc))
-        for s, lst in iv.items():
-            cover = sorted((b, b + (1 << nb)) for b, nb, _ in lst)
-            assert cover[0][0] == 0 and cover[-1][1] == 1 << acc
-            assert all(e1 == s2 for (_, e1), (s2, _)
-                       in zip(cover, cover[1:]))
-
-
-def _build_fse_weights(listed, norm, acc):
-    """FSE-compressed Huffman weight description via decode-table
-    inversion (two interleaved states, overflow termination)."""
-    iv = _fse_encode_intervals(_fse_build_dtable(norm, acc))
-    k = len(listed)
-    assert k % 2 == 0 and k >= 4
-
-    def chain(idxs, final_needs_bits):
-        syms = [listed[i] for i in idxs]
-        states = [None] * len(syms)
-        lst = iv[syms[-1]]
-        if final_needs_bits:
-            cand = [st for b, nb, st in lst if nb > 0]
-            states[-1] = cand[0]
-        else:
-            states[-1] = lst[0][2]
-        bits = []
-        for i in range(len(syms) - 2, -1, -1):
-            st, bv, nb = _fse_state_for(iv, syms[i], states[i + 1])
-            states[i] = st
-            bits.insert(0, (bv, nb))
-        return states, bits
-
-    a_states, a_bits = chain(list(range(0, k, 2)), True)
-    b_states, b_bits = chain(list(range(1, k, 2)), False)
-    w = _BackBitsWriter()
-    w.write(a_states[0], acc)
-    w.write(b_states[0], acc)
-    for i in range(max(len(a_bits), len(b_bits))):
-        if i < len(a_bits):
-            w.write(*a_bits[i])
-        if i < len(b_bits):
-            w.write(*b_bits[i])
-    region = _fse_write_ncount(norm, acc) + w.to_bytes()
-    return bytes([len(region)]) + region
-
-
-def test_fse_compressed_huffman_weights_decode():
-    listed = [3, 3, 3, 2, 2, 2, 1, 1, 2, 2]  # sum 2^(w-1)=24 -> rest 8
-    desc = _build_fse_weights(listed, [0, 6, 16, 10], 5)
-    weights, consumed = _huf_read_weights(desc)
-    assert weights[:-1] == listed and weights[-1] == 4
-    assert consumed == len(desc)
-
-
-def _huf_stream(lits, table, max_bits):
-    first_idx = {}
-    for idx, (sym, ln) in enumerate(table):
-        if sym not in first_idx:
-            first_idx[sym] = (idx, ln)
-    w = _BackBitsWriter()
-    for b in lits:
-        idx, ln = first_idx[b]
-        w.write(idx >> (max_bits - ln), ln)
-    return w.to_bytes()
-
-
-def test_four_stream_and_treeless_literals():
-    weights = [2, 1, 1, 1, 1, 1, 1]  # symbols 0..6, full tree (2^3)
-    table, mb = _huf_build_dtable(weights)
-    lits = bytes([i % 7 for i in range(101)])
-    per = (len(lits) + 3) // 4
-    parts = [lits[i * per:(i + 1) * per] for i in range(3)]
-    parts.append(lits[3 * per:])
-    streams = [_huf_stream(p, table, mb) for p in parts]
-    # direct weight description: listed = all but last
-    listed = weights[:-1]
-    desc = bytearray([127 + len(listed)])
-    for i in range(0, len(listed), 2):
-        desc.append((listed[i] << 4)
-                    | (listed[i + 1] if i + 1 < len(listed) else 0))
-    jump = b"".join(len(s).to_bytes(2, "little") for s in streams[:3])
-    body = bytes(desc) + jump + b"".join(streams)
-    hdr = 2 | (1 << 2) | (len(lits) << 4) | (len(body) << 14)
-    section = hdr.to_bytes(3, "little") + body
-    got, consumed, huf = _decode_literals(section, None)
-    assert got == lits and consumed == len(section)
-    # treeless: same table, new literals, 1 stream
-    lits2 = bytes([6 - (i % 7) for i in range(60)])
-    s2 = _huf_stream(lits2, table, mb)
-    hdr2 = 3 | (0 << 2) | (len(lits2) << 4) | (len(s2) << 14)
-    sec2 = hdr2.to_bytes(3, "little") + s2
-    got2, _, _ = _decode_literals(sec2, huf)
-    assert got2 == lits2
-    with pytest.raises(ValueError):
-        _decode_literals(sec2, None)  # treeless without a prior table
 
 
 def test_rle_literals_block():
@@ -213,7 +90,8 @@ def test_rle_literals_block():
 
 def test_fcs_mismatch_rejected():
     z = bytearray(zstd_compress(b"12345"))
-    z[5] += 1  # FCS byte (magic 4 + fhd 1)
+    fcs, _ = _fcs_and_block_offsets(z)
+    z[fcs] += 1
     with pytest.raises(ValueError):
         zstd_decompress(bytes(z))
 
@@ -223,7 +101,7 @@ def test_dictionary_frames_rejected():
     frame.append(0x20 | 0x01)  # single-segment + 1-byte dict id
     frame.append(7)            # dict id
     frame.append(0)            # fcs
-    with pytest.raises(NotImplementedError):
+    with pytest.raises(ValueError):
         zstd_decompress(bytes(frame))
 
 
@@ -252,9 +130,8 @@ def test_compressed_source_sniffs_and_reads_zst(spark):
 
 def test_fuzz_mutations_never_hang():
     """300 random single-byte mutations of valid frames either decode
-    (to something) or raise ValueError/NotImplementedError — never
-    hang, never crash with an unexpected exception type. Wall-clock
-    bounded per mutation."""
+    (to something) or raise ValueError — never hang, never crash with
+    another exception type. Wall-clock bounded per mutation."""
     import time
 
     r = random.Random(42)
@@ -267,20 +144,6 @@ def test_fuzz_mutations_never_hang():
             buf[r.randrange(len(buf))] = r.randrange(256)
         try:
             zstd_decompress(bytes(buf))
-        except (ValueError, NotImplementedError, IndexError,
-                OverflowError, KeyError, MemoryError):
+        except ValueError:
             pass
     assert time.time() - t0 < 60, "fuzz loop too slow — hang risk"
-
-
-def test_degenerate_weight_table_rejected_not_hung():
-    """Single-symbol FSE weight table: every state has nb_bits == 0, so
-    the interleaved decode never consumes — must raise, not loop."""
-    from nyctaxidatapipeline_spark.functions.zstd import _fse_write_ncount
-
-    nc = _fse_write_ncount([32], 5)  # one symbol, whole table
-    stream = b"\x01"  # sentinel-only backward stream
-    region = nc + stream
-    desc = bytes([len(region)]) + region
-    with pytest.raises(ValueError):
-        _huf_read_weights(desc)
