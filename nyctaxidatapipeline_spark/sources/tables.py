@@ -17,6 +17,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 #: Fixture star schema + extension tables (TESTDATA.md / FIXTURES.md §B).
 TABLES = (
@@ -49,6 +50,26 @@ def _nanos_timestamp_cols(path: str) -> list[str]:
             if pa.types.is_timestamp(f.type) and f.type.unit == "ns"]
 
 
+def _restore_nanos(df: DataFrame, *paths: str) -> DataFrame:
+    """Restore the columns the files at ``paths`` store as parquet
+    TIMESTAMP(NANOS) to ``timestamp_ntz`` (see
+    :func:`_nanos_timestamp_cols`). Only columns the reader actually
+    surfaced as raw int64 nanos convert: INT96 timestamps also show as
+    timestamp[ns] in the pyarrow footer, but Spark reads them as proper
+    timestamps."""
+    ns_cols: set[str] = set()
+    for p in paths:
+        ns_cols.update(_nanos_timestamp_cols(p))
+    for c in ns_cols:
+        if not isinstance(df.schema[c].dataType, T.LongType):
+            continue
+        # int64 nanos -> micros (floor) -> session-TZ-free timestamp.
+        df = df.withColumn(
+            c, F.timestamp_micros(F.expr(f"`{c}` div 1000"))
+                .cast("timestamp_ntz"))
+    return df
+
+
 def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
     """Parquet scan (single path, directory, or glob — Spark unions parts).
 
@@ -57,22 +78,7 @@ def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
     hive-style directory partitioning (``dt=.../``) for partition pruning.
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(*paths)
-    ns_cols: set[str] = set()
-    for p in paths:
-        ns_cols.update(_nanos_timestamp_cols(p))
-    from pyspark.sql import types as T
-    for c in ns_cols:
-        # Only convert columns the reader actually surfaced as raw int64
-        # nanos. (INT96 timestamps also show as timestamp[ns] in the
-        # pyarrow footer but Spark reads them as proper timestamps.)
-        if not isinstance(df.schema[c].dataType, T.LongType):
-            continue
-        # int64 nanos -> micros (floor) -> session-TZ-free timestamp.
-        df = df.withColumn(
-            c, F.timestamp_micros(F.expr(f"`{c}` div 1000"))
-                .cast("timestamp_ntz"))
-    return df
+    return _restore_nanos(spark.read.parquet(*paths), *paths)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -7,17 +7,33 @@ Local tests replay the ``events`` fixture parquet as a stream
 (``maxFilesPerTrigger``) into a memory sink via ``processAllAvailable`` —
 the same plans run unchanged against Kafka/files at scale (swap the source;
 state-store sizing = |open windows| x |keys|, bounded by the watermark).
+
+The ``foreachBatch`` doors are ``*_fn(...)`` factories, each returning
+one ``(batch_df, epoch_id)`` function, and :func:`drain` runs any of
+them over any stream: ``drain(stream, rollup_merge_fn(...),
+checkpoint_dir=...)``. That is one epoch-commit skeleton under every
+door. State doors (rollup, quantile, HLL, CMS) swap a parquet state
+together with its epoch marker (:func:`_sketch_merge_fn`). Append
+doors (admission, ingestion) commit each epoch as an ``epoch=N``
+directory (:func:`_commit_epoch`), and each maintained index commits
+its epoch before the corpus does. A replayed epoch is a no-op in
+both. ``drain`` sets no output mode, so Spark's default (append)
+applies: every door reads a stateless stream, and for those append
+and update deliver the same micro-batches. :func:`stream_files` is
+the one ``binaryFile`` source for the shard, WARC and TFRecord doors.
 """
 
 from __future__ import annotations
+
+import json
+import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nyctaxidatapipeline_spark.plans.util import local_frame
-from nyctaxidatapipeline_spark.sources.tables import _nanos_timestamp_cols
-
-import os
+from nyctaxidatapipeline_spark.sources.tables import _restore_nanos
 
 
 def stream_table(spark: SparkSession, sf_dir: str, name: str,
@@ -35,12 +51,7 @@ def stream_table(spark: SparkSession, sf_dir: str, name: str,
               .option("maxFilesPerTrigger", str(max_files_per_trigger))
               .option("pathGlobFilter", f"{name}.parquet")
               .load(sf_dir))
-    for c in _nanos_timestamp_cols(path):
-        # TIMESTAMP (not NTZ): watermarks only accept event time on
-        # TimestampType; session TZ is pinned UTC so wall times match the
-        # batch reader's NTZ values.
-        stream = stream.withColumn(
-            c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+    stream = _restore_nanos(stream, path)
     for field in stream.schema.fields:
         # Watermarks reject TIMESTAMP_NTZ event time; session TZ is pinned
         # UTC so the NTZ->LTZ cast preserves wall-clock values.
@@ -185,21 +196,50 @@ def purchase_error_correlation(events_a: DataFrame, events_b: DataFrame,
                      AND a_ts + INTERVAL {within}
         """))
 
+def drain(stream: DataFrame, fn, checkpoint_dir: str | None = None):
+    """Run ``fn(batch_df, epoch_id)`` as the ``foreachBatch`` sink of
+    ``stream`` until every available input is processed, and return
+    the (still active) query — the one writeStream skeleton under every
+    door (module docstring)."""
+    w = stream.writeStream.foreachBatch(fn)
+    if checkpoint_dir is not None:
+        w = w.option("checkpointLocation", checkpoint_dir)
+    q = w.start()
+    q.processAllAvailable()
+    return q
 
-def run_foreach_batch_parquet(stream: DataFrame, out_dir: str):
-    """foreachBatch sink: land each micro-batch as parquet (the idempotent
-    exactly-once-per-epoch pattern — a real deployment keys the write on
-    ``epoch_id`` for replay safety)."""
+
+#: binaryFile's fixed source schema — streaming file sources require an
+#: explicit schema; this is the one the batch binaryFile reader infers.
+_BINARY_FILE_SCHEMA = ("path string, modificationTime timestamp, "
+                       "length long, content binary")
+
+
+def stream_files(spark: SparkSession, landing_dir: str,
+                 max_files_per_trigger: int = 1) -> DataFrame:
+    """Stream a landing directory's files as they arrive, one
+    ``binaryFile`` row (path, modificationTime, length, content) per
+    file — the source of the shard, WARC and TFRecord doors. One file
+    per micro-batch by default (each Common-Crawl-sized segment is
+    ~1 GB; at scale raise the trigger or swap the directory for the
+    real queue)."""
+    return (spark.readStream
+            .format("binaryFile")
+            .schema(_BINARY_FILE_SCHEMA)
+            .option("maxFilesPerTrigger", str(max_files_per_trigger))
+            .load(landing_dir))
+
+
+def parquet_append_fn(out_dir: str):
+    """``foreachBatch`` sink: land each micro-batch as parquet with its
+    ``_epoch`` column (the idempotent exactly-once-per-epoch pattern —
+    a real deployment keys the write on ``epoch_id`` for replay
+    safety)."""
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         (batch_df.withColumn("_epoch", F.lit(epoch_id))
                  .write.mode("append").parquet(out_dir))
 
-    q = (stream.writeStream
-         .outputMode("append")
-         .foreachBatch(write_batch)
-         .start())
-    q.processAllAvailable()
-    return q
+    return write_batch
 
 
 def run_to_memory(stream: DataFrame, query_name: str,
@@ -241,8 +281,6 @@ def _swap_state_dir(tmp: str, state_dir: str) -> None:
     run by :func:`applied_epoch` so every merge and read path heals
     first), or the new state committed with at worst a stale bak that
     the next swap clears."""
-    import shutil
-
     sd = state_dir.rstrip("/")
     bak = sd + ".bak"
     shutil.rmtree(bak, ignore_errors=True)
@@ -266,34 +304,31 @@ def applied_epoch(state_dir: str) -> int:
         return -1
 
 
-def rollup_merge_fn(state_dir: str, keys: list[str], value_col: str):
-    """The ``foreachBatch`` function for ``run_incremental_rollup``,
-    exposed so tests can invoke it directly with a replayed
-    ``(batch_df, epoch_id)`` — exactly what Structured Streaming does
-    after a failure between sink commit and offset-log commit."""
-    import shutil
+def _sketch_merge_fn(state_dir: str, reduce, merge):
+    """Every state door's one ``foreachBatch`` body: reduce the
+    micro-batch (``reduce(batch_df)``), merge it with the standing
+    state (``merge(state ∪ reduced)``), then write the merged state
+    with the epoch marker inside the tmp dir and commit both with one
+    :func:`_swap_state_dir`.
 
-    from nyctaxidatapipeline_spark.operators.incremental import (
-        merge_partials,
-        partial_agg,
-    )
-
+    Exactly-once under replays: foreachBatch is at-least-once, so a
+    crash after the state swap but before the streaming offset commit
+    re-delivers the SAME epoch on restart. The epoch id is committed
+    atomically with the state (marker file inside the renamed
+    directory); a replayed epoch is a no-op instead of a double count
+    — the standard batch-id-keyed idempotent sink. For mergeable
+    sketches (bottom-k: bottom_k(A ∪ B) == bottom_k(bottom_k(A) ∪
+    bottom_k(B))) the drained state is EXACTLY the sketch of the whole
+    stream; per-batch cost is one scan of the batch plus a merge
+    bounded by the state, never stream history."""
     def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # Exactly-once under replays: foreachBatch is at-least-once, so
-        # a crash after the state swap but before the streaming offset
-        # commit re-delivers the SAME epoch on restart. The epoch id is
-        # committed atomically with the state (marker file inside the
-        # renamed directory); a replayed epoch is a no-op instead of a
-        # double count — the standard batch-id-keyed idempotent sink.
         if epoch_id <= applied_epoch(state_dir):
-            return
-        spark = batch_df.sparkSession
-        new = partial_agg(batch_df, keys, value_col)
+            return                       # replayed epoch — committed
+        merged = reduce(batch_df)
         if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-            cur = spark.read.parquet(state_dir)
-            merged = merge_partials([cur, new], keys)
-        else:
-            merged = new
+            cur = (batch_df.sparkSession.read.parquet(state_dir)
+                   .select(merged.columns))
+            merged = merge(cur.unionByName(merged))
         tmp = state_dir + ".tmp"
         merged.write.mode("overwrite").parquet(tmp)
         with open(os.path.join(tmp, _EPOCH_MARKER), "w") as f:
@@ -303,107 +338,60 @@ def rollup_merge_fn(state_dir: str, keys: list[str], value_col: str):
     return merge_batch
 
 
-def run_incremental_rollup(stream: DataFrame, state_dir: str,
-                           keys: list[str], value_col: str,
-                           checkpoint_dir: str | None = None):
-    """foreachBatch maintenance of a mergeable partial-state rollup:
-    every micro-batch reduces to its (count/sum/min/max) partial state
-    (``operators.incremental.partial_agg``) and merges into the parquet
-    state table — per-batch cost scales with the batch plus the state's
-    key cardinality, never with stream history, and the merged state is
-    provably equal to the one-shot batch aggregate (the merge-identity
-    gate on ``incremental_rollup``).
+def rollup_merge_fn(state_dir: str, keys: list[str], value_col: str):
+    """``foreachBatch`` maintenance of a mergeable partial-state
+    rollup: every micro-batch reduces to its (count/sum/min/max)
+    partial state (``operators.incremental.partial_agg``) and merges
+    into the parquet state table — per-batch cost scales with the batch
+    plus the state's key cardinality, never with stream history, and
+    the merged state is provably equal to the one-shot batch aggregate
+    (the merge-identity gate on ``incremental_rollup``).
 
-    State swap is write-tmp-then-rename with the epoch id committed in
-    the same rename (single-writer assumption — foreachBatch epochs are
-    serialized per query), and replayed epochs are skipped — see
-    ``rollup_merge_fn``. Pass ``checkpoint_dir`` to make restarts
-    resume from the committed offsets (production always should; tests
-    replaying a finite fixture may omit it).
-    """
-    w = (stream.writeStream
-         .outputMode("update")
-         .foreachBatch(rollup_merge_fn(state_dir, keys, value_col)))
-    if checkpoint_dir is not None:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    q = w.start()
-    q.processAllAvailable()
-    return q
+    The state swap and replay no-op are :func:`_sketch_merge_fn`'s
+    (single-writer assumption — foreachBatch epochs are serialized per
+    query). Tests invoke the function directly with a replayed
+    ``(batch_df, epoch_id)`` — exactly what Structured Streaming does
+    after a failure between sink commit and offset-log commit. Pass
+    :func:`drain` a ``checkpoint_dir`` so restarts resume from the
+    committed offsets (production always should; tests replaying a
+    finite fixture may omit it)."""
+    from nyctaxidatapipeline_spark.operators.incremental import (
+        merge_partials,
+        partial_agg,
+    )
 
-
-def _sketch_merge_fn(state_dir: str, sample, trim):
-    """The quantile doors' shared ``foreachBatch`` body: reduce the
-    micro-batch to its bottom-k sample (``sample(batch_df)``), merge
-    with the standing state and re-truncate (``trim(union)``), then
-    write the merged state with the epoch marker inside the tmp dir and
-    commit both with one :func:`_swap_state_dir` — the epoch-marker
-    swap + replay no-op of ``rollup_merge_fn``. The bottom-k's pinned
-    mergeability — bottom_k(A ∪ B) == bottom_k(bottom_k(A) ∪
-    bottom_k(B)) — makes the drained state EXACTLY the sketch of the
-    whole stream; per-batch cost is one linear scan of the batch plus an
-    O(k)-per-group merge, never stream history."""
-    def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if epoch_id <= applied_epoch(state_dir):
-            return                       # replayed epoch — committed
-        merged = sample(batch_df)
-        if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-            cur = (batch_df.sparkSession.read.parquet(state_dir)
-                   .select(merged.columns))
-            merged = trim(cur.unionByName(merged))
-        tmp = state_dir + ".tmp"
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, _EPOCH_MARKER), "w") as f:
-            f.write(str(epoch_id))
-        _swap_state_dir(tmp, state_dir)
-
-    return merge_batch
+    return _sketch_merge_fn(
+        state_dir,
+        lambda b: partial_agg(b, keys, value_col),
+        lambda u: merge_partials([u], keys))
 
 
 def quantile_sketch_merge_fn(state_dir: str, value_col: str,
                              rank_cols: list[str], k: int = 16384):
-    """``foreachBatch`` for :func:`run_streaming_quantile_sketch` —
-    a LIVE quantile monitor as maintained state (r11, composing the
-    hash-sample bottom-k sketch with the rollup state skeleton): each
-    micro-batch reduces to ITS bottom-k by the fixed md5 row-rank
-    (``sketches.hash_sample_bottom_k``), merges with the standing
-    k-row state, and re-truncates at k (:func:`_sketch_merge_fn`). The
-    rank being deterministic, the drained state is byte-equal to the
-    batch operator on the same rows, so a deployment reads a p99
-    threshold off a k-row parquet at any moment at ±sqrt(q(1-q)/k)
-    rank accuracy."""
+    """``foreachBatch`` maintenance of a LIVE quantile monitor (r11,
+    composing the hash-sample bottom-k sketch with the rollup state
+    skeleton): each micro-batch reduces to ITS bottom-k by the fixed
+    md5 row-rank (``sketches.hash_sample_bottom_k``), merges with the
+    standing k-row state, and re-truncates at k
+    (:func:`_sketch_merge_fn`). k rows of state, O(batch + k) per
+    epoch. The rank being deterministic, the drained state is
+    byte-equal to the batch operator on the same rows, so a deployment
+    reads a p99 threshold off a k-row parquet at any moment
+    (:func:`read_quantile_threshold`) at ±sqrt(q(1-q)/k) rank
+    accuracy."""
     from nyctaxidatapipeline_spark.operators.sketches import (
         hash_sample_bottom_k,
     )
 
     # salt_buckets=None: a micro-batch is one epoch's rows — the naive
     # single-merge TakeOrderedAndProject is the cheap shape here; the
-    # batch operator's tree merge is for unbounded-task-count scans
+    # batch operator's tree merge is for unbounded-task-count scans.
+    # coalesce(1): the k-row state is one parquet file
     return _sketch_merge_fn(
         state_dir,
         lambda b: hash_sample_bottom_k(b, rank_cols, [value_col], k,
-                                       salt_buckets=None),
-        lambda u: u.orderBy("_rk", value_col).limit(int(k)))
-
-
-def run_streaming_quantile_sketch(stream: DataFrame, state_dir: str,
-                                  value_col: str,
-                                  rank_cols: list[str],
-                                  k: int = 16384,
-                                  checkpoint_dir: str | None = None):
-    """foreachBatch maintenance of the deterministic bottom-k quantile
-    sketch (see :func:`quantile_sketch_merge_fn`): k rows of state,
-    O(batch + k) per epoch, drained state == the batch sketch of the
-    whole stream. Read thresholds off the state with
-    :func:`read_quantile_threshold`."""
-    w = (stream.writeStream
-         .outputMode("update")
-         .foreachBatch(quantile_sketch_merge_fn(state_dir, value_col,
-                                                rank_cols, k)))
-    if checkpoint_dir is not None:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    q = w.start()
-    q.processAllAvailable()
-    return q
+                                       salt_buckets=None).coalesce(1),
+        lambda u: u.orderBy("_rk", value_col).limit(int(k)).coalesce(1))
 
 
 def grouped_quantile_sketch_merge_fn(state_dir: str,
@@ -412,51 +400,36 @@ def grouped_quantile_sketch_merge_fn(state_dir: str,
                                      rank_cols: list[str],
                                      k: int = 4096,
                                      salt_buckets: int = 32):
-    """``foreachBatch`` for :func:`run_streaming_grouped_quantile_sketch`
-    — the per-group sibling of :func:`quantile_sketch_merge_fn`: each
-    micro-batch reduces to its per-group bottom-k
-    (``sketches.grouped_hash_sample_bottom_k`` — the salted two-phase
-    shape, so no task ever sorts a whole group even inside one batch),
-    merges with the standing state and re-truncates per group. The
-    merge window's input is bounded at 2·k rows per group regardless
-    of stream history; state is <= k rows per live group."""
+    """``foreachBatch`` maintenance of PER-GROUP bottom-k quantile
+    sketches — the per-group sibling of
+    :func:`quantile_sketch_merge_fn`: each micro-batch reduces to its
+    per-group bottom-k (``sketches.grouped_hash_sample_bottom_k`` —
+    the salted two-phase shape, so no task ever sorts a whole group
+    even inside one batch), merges with the standing state and
+    re-truncates per group. The merge window's input is bounded at 2·k
+    rows per group regardless of stream history; state is <= k rows
+    per live group. Read per-group percentiles off the state with
+    :func:`read_grouped_percentiles`."""
     from nyctaxidatapipeline_spark.operators.sketches import (
         bottom_k_rows,
         grouped_hash_sample_bottom_k,
     )
 
+    # coalesce(1): the state (<= k rows per group) is one parquet file
     return _sketch_merge_fn(
         state_dir,
-        lambda b: grouped_hash_sample_bottom_k(b, group_cols, value_col,
-                                               rank_cols, k, salt_buckets),
-        lambda u: bottom_k_rows(u, group_cols, ["_rk", "_v"], k))
-
-
-def run_streaming_grouped_quantile_sketch(
-        stream: DataFrame, state_dir: str, group_cols: list[str],
-        value_col: str, rank_cols: list[str], k: int = 4096,
-        salt_buckets: int = 32, checkpoint_dir: str | None = None):
-    """foreachBatch maintenance of PER-GROUP bottom-k quantile
-    sketches (see :func:`grouped_quantile_sketch_merge_fn`); read
-    per-group percentiles off the state with
-    :func:`read_grouped_percentiles`."""
-    w = (stream.writeStream
-         .outputMode("update")
-         .foreachBatch(grouped_quantile_sketch_merge_fn(
-             state_dir, group_cols, value_col, rank_cols, k,
-             salt_buckets)))
-    if checkpoint_dir is not None:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    q = w.start()
-    q.processAllAvailable()
-    return q
+        lambda b: grouped_hash_sample_bottom_k(
+            b, group_cols, value_col, rank_cols, k,
+            salt_buckets).coalesce(1),
+        lambda u: bottom_k_rows(u, group_cols, ["_rk", "_v"],
+                                k).coalesce(1))
 
 
 def read_grouped_percentiles(spark: SparkSession, state_dir: str,
                              group_cols: list[str],
                              percentiles=(0.5, 0.95)):
     """Per-group discrete percentiles off a
-    :func:`run_streaming_grouped_quantile_sketch` state — the core's
+    :func:`grouped_quantile_sketch_merge_fn` state — the core's
     sorted-sample readout and ``p50``-style output contract, exactly as
     the batch ``grouped_percentiles(mode='sketch')``, over <= k rows
     per group."""
@@ -475,7 +448,7 @@ def read_grouped_percentiles(spark: SparkSession, state_dir: str,
 def read_quantile_threshold(spark: SparkSession, state_dir: str,
                             value_col: str, q: float = 0.99):
     """The discrete q-quantile of a
-    :func:`run_streaming_quantile_sketch` state — the core's
+    :func:`quantile_sketch_merge_fn` state — the core's
     sorted-sample readout, exactly as the batch
     ``quantile_threshold(mode='sketch')``, off a k-row parquet (a
     monitoring read, not a stream-history scan). Returns a 1-row
@@ -493,10 +466,13 @@ def read_quantile_threshold(spark: SparkSession, state_dir: str,
 
 
 def dedup_admit_fn(corpus_dir: str, text_col: str, id_col: str):
-    """The ``foreachBatch`` function for ``run_incremental_dedup``:
-    admit only batch documents that are not fingerprint-duplicates of
-    the already-admitted corpus (nor of each other — min-id wins), and
-    APPEND the admitted rows as a new epoch partition.
+    """``foreachBatch`` corpus admission: admit only batch documents
+    that are not fingerprint-duplicates of the already-admitted corpus
+    (nor of each other — min-id wins), and APPEND the admitted rows as
+    a new epoch partition (:func:`_admit_commit_cols_fn`). The admitted
+    corpus after draining a finite stream equals the batch
+    ``incremental_fingerprint_dedup`` applied batch-by-batch — gated
+    e2e in ``tests/test_streaming_ext``.
 
     Exactly-once under replays, the append-shaped variant of
     ``rollup_merge_fn``'s swap: each epoch's admissions land in their
@@ -512,22 +488,10 @@ def dedup_admit_fn(corpus_dir: str, text_col: str, id_col: str):
         incremental_fingerprint_dedup_bloom,
     )
 
-    return _admit_commit_fn(
-        corpus_dir, text_col, id_col,
+    return _admit_commit_cols_fn(
+        corpus_dir, [id_col, text_col],
         lambda batch, corpus: incremental_fingerprint_dedup_bloom(
             batch, corpus, text_col, id_col))
-
-
-def _admit_commit_fn(corpus_dir: str, text_col: str, id_col: str,
-                     admitter):
-    """Shared epoch-directory admission commit (the skeleton
-    ``dedup_admit_fn``'s docstring describes): read the admitted
-    corpus, run ``admitter(batch, corpus) -> admitted subset``, land
-    the admissions in ``epoch=N`` via write-tmp-then-rename — the
-    rename IS the exactly-once commit, replayed epochs no-op on the
-    existing directory."""
-    return _admit_commit_cols_fn(corpus_dir, [id_col, text_col],
-                                 admitter)
 
 
 #: epoch-store compaction watermark — epochs ≤ this id were merged
@@ -584,6 +548,31 @@ def _stage_path(store_dir: str, epoch_id: int) -> str:
         f".tmp-{os.path.basename(root)}-epoch-{epoch_id}")
 
 
+def _read_epochs(spark: SparkSession, root: str,
+                 cols: list[str]) -> DataFrame | None:
+    """The epoch-append store at ``root`` (its ``cols``), or ``None``
+    while it holds no ``epoch=`` dir."""
+    if not (os.path.isdir(root) and any(
+            e.startswith("epoch=") for e in os.listdir(root))):
+        return None
+    return (spark.read.option("basePath", root).parquet(root)
+            .select(*cols))
+
+
+def _commit_epoch(df: DataFrame, root: str, epoch_id: int) -> None:
+    """Commit ``df`` as ``<root>/epoch=<epoch_id>`` (one file): write
+    it to the :func:`_stage_path` beside the store, then rename — the
+    rename IS the exactly-once commit. A no-op when the epoch is
+    already committed (:func:`_epoch_committed`)."""
+    if _epoch_committed(root, epoch_id):
+        return
+    tmp = _stage_path(root, epoch_id)
+    shutil.rmtree(tmp, ignore_errors=True)
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    os.makedirs(root, exist_ok=True)
+    os.rename(tmp, os.path.join(root, f"epoch={epoch_id}"))
+
+
 def compact_epoch_store(spark: SparkSession, store_dir: str,
                         n_files: int = 1) -> dict:
     """Small-files maintenance for the epoch-append stores (admission
@@ -607,8 +596,6 @@ def compact_epoch_store(spark: SparkSession, store_dir: str,
     ``_epoch_committed`` check restore the bak before proceeding
     (:func:`_recover_compacted_store`) — no manual window remains.
     Returns before/after file counts."""
-    import shutil
-
     root = store_dir.rstrip("/")
     _recover_compacted_store(root)
     eps = sorted(int(e.split("=", 1)[1]) for e in os.listdir(root)
@@ -645,46 +632,68 @@ def compact_epoch_store(spark: SparkSession, store_dir: str,
 
 
 def _admit_commit_cols_fn(corpus_dir: str, cols: list[str], admitter):
-    """``_admit_commit_fn`` generalized to an arbitrary payload
-    column list (id first) — the cross-signal admitter carries BOTH a
-    text and an embedding column through the same epoch-directory
-    exactly-once commit."""
-    import shutil
-
+    """The admission doors' shared epoch-directory commit: read the
+    admitted corpus's ``cols`` (id first), run ``admitter(batch,
+    corpus) -> admitted subset``, and land the admissions as
+    ``epoch=N`` (:func:`_commit_epoch`) — replayed epochs no-op on the
+    existing directory."""
     def admit_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        edir = os.path.join(corpus_dir, f"epoch={epoch_id}")
         if _epoch_committed(corpus_dir, epoch_id):
             return                       # replayed epoch — committed
         spark = batch_df.sparkSession
         batch = batch_df.select(*cols)
-        if os.path.isdir(corpus_dir) and any(
-                e.startswith("epoch=") for e in os.listdir(corpus_dir)):
-            corpus = (spark.read
-                      .option("basePath", corpus_dir)
-                      .parquet(corpus_dir)
-                      .select(*cols))
-        else:
+        corpus = _read_epochs(spark, corpus_dir, cols)
+        if corpus is None:
             corpus = local_frame(spark, [], batch.schema)
-        admitted = admitter(batch, corpus)
-        tmp = _stage_path(corpus_dir, epoch_id)
-        shutil.rmtree(tmp, ignore_errors=True)
-        admitted.coalesce(1).write.mode("overwrite").parquet(tmp)
-        os.makedirs(corpus_dir, exist_ok=True)
-        os.rename(tmp, edir)
+        _commit_epoch(admitter(batch, corpus), corpus_dir, epoch_id)
 
     return admit_batch
+
+
+def _frozen_centroids(index_dir: str, batch: DataFrame,
+                      n_centroids: int, id_col: str, vec_col: str,
+                      epoch_id: int) -> list:
+    """The IVF centroid matrix frozen in ``<index_dir>/_centroids.json``:
+    read back when present, else seeded from ``batch`` and committed by
+    atomic rename (a concurrent seeder's file may win; the winner is
+    what both read back). ``[]`` while no non-zero vector has arrived,
+    so the next epoch seeds again. The underscore prefix keeps the
+    sidecar out of Spark's file index, so it cannot break the parquet
+    read of the store."""
+    from nyctaxidatapipeline_spark.operators.similarity import (
+        ivf_seed_centroids,
+    )
+
+    path = os.path.join(index_dir, "_centroids.json")
+    if not os.path.exists(path):
+        cents = [list(map(float, c)) for c in
+                 ivf_seed_centroids(batch, n_centroids, id_col, vec_col)]
+        if not cents:
+            return []
+        os.makedirs(index_dir, exist_ok=True)
+        tmp = f"{path}.tmp-{os.getpid()}-{epoch_id}"
+        with open(tmp, "w") as f:
+            json.dump(cents, f)
+        try:
+            os.rename(tmp, path)
+        except OSError:
+            os.unlink(tmp)
+    with open(path) as f:                # read the race winner
+        return json.load(f)
 
 
 def near_dup_admit_fn(corpus_dir: str, text_col: str, id_col: str,
                       threshold: float = 0.5,
                       max_bucket: int | None = 32):
-    """``foreachBatch`` for :func:`run_streaming_near_dup`: the
-    NEAR-dup sibling of ``dedup_admit_fn`` — each micro-batch is gated
-    by ``incremental_minhash_admission`` (banded LSH vs the admitted
+    """``foreachBatch`` corpus admission with NEAR-dup gating — the
+    sibling of ``dedup_admit_fn``: each micro-batch is gated by
+    ``incremental_minhash_admission`` (banded LSH vs the admitted
     corpus + greedy in-batch, exact-Jaccard verified) instead of exact
     fingerprints, landing through the same epoch-directory
-    exactly-once commit. Per-batch cost scales with the batch and its
-    bucket overlap against the corpus, never |corpus|²; the
+    exactly-once commit. Drained result equals applying
+    ``incremental_minhash_admission`` batch-by-batch — gated e2e in
+    ``tests/test_streaming_ext``. Per-batch cost scales with the batch
+    and its bucket overlap against the corpus, never |corpus|²; the
     ``max_bucket`` corpus-bucket cap (on by default here — a streaming
     admitter must survive boilerplate storms unattended) bounds the
     verification fan-out of any hot bucket."""
@@ -692,8 +701,8 @@ def near_dup_admit_fn(corpus_dir: str, text_col: str, id_col: str,
         incremental_minhash_admission,
     )
 
-    return _admit_commit_fn(
-        corpus_dir, text_col, id_col,
+    return _admit_commit_cols_fn(
+        corpus_dir, [id_col, text_col],
         lambda batch, corpus: incremental_minhash_admission(
             batch, corpus, text_col, id_col,
             threshold=threshold, max_bucket=max_bucket))
@@ -705,17 +714,18 @@ def near_dup_admit_indexed_fn(corpus_dir: str, index_dir: str,
                               max_bucket: int | None = 32,
                               n: int = 3, num_hashes: int = 32,
                               bands: int = 8, portable: bool = False):
-    """``foreachBatch`` for :func:`run_streaming_near_dup_indexed` —
-    the MAINTAINED-INDEX streaming shape of lexical near-dup admission
-    (r11, the lexical sibling of :func:`semantic_admit_indexed_fn`):
-    the corpus's LSH band-bucket table lives as epoch-append parquet
-    under ``index_dir``; each epoch probes the read-back index via
-    ``corpus_index=`` (skipping the corpus SIGNATURE pass — 80%+ of a
-    cold admission's wall at sf10, PLANS.md #20) and appends only its
-    own admissions' bucket rows (``build_minhash_index`` of the
-    admitted subset; the pure-union closure ``append_to_minhash_index``
-    unit-pins). Corpus TEXT is still read from ``corpus_dir`` for the
-    exact-Jaccard verification of touched candidates — that read is
+    """``foreachBatch`` near-dup admission over a MAINTAINED persisted
+    LSH index — the streaming deployment shape of
+    ``incremental_minhash_indexed`` (r11, the lexical sibling of
+    :func:`semantic_admit_indexed_fn`): the corpus's LSH band-bucket
+    table lives as epoch-append parquet under ``index_dir``; each
+    epoch probes the read-back index via ``corpus_index=`` (skipping
+    the corpus SIGNATURE pass — 80%+ of a cold admission's wall at
+    sf10, PLANS.md #20) and appends only its own admissions' bucket
+    rows (``build_minhash_index`` of the admitted subset; the
+    pure-union closure ``append_to_minhash_index`` unit-pins). Corpus
+    TEXT is still read from ``corpus_dir`` for the exact-Jaccard
+    verification of touched candidates — that read is
     candidate-filtered, never corpus-wide.
 
     Exactly-once: index epoch commits BEFORE the corpus epoch; a crash
@@ -725,8 +735,6 @@ def near_dup_admit_indexed_fn(corpus_dir: str, index_dir: str,
     contributed can never block it) and the recomputed admission
     matches the committed index epoch. Parameter identity is validated
     against the index's stamp on every probe."""
-    import shutil
-
     from nyctaxidatapipeline_spark.operators.dedup import (
         _minhash_params,
         build_minhash_index,
@@ -737,35 +745,27 @@ def near_dup_admit_indexed_fn(corpus_dir: str, index_dir: str,
     )
 
     def admit_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # heal a crashed index-store compaction before the has_idx
-        # read (corpus_dir heals via _epoch_committed just after)
+        # heal a crashed index-store compaction before the index read
+        # (corpus_dir heals via _epoch_committed just after)
         _recover_compacted_store(index_dir)
-        edir = os.path.join(corpus_dir, f"epoch={epoch_id}")
         if _epoch_committed(corpus_dir, epoch_id):
             return                       # replayed epoch — committed
         spark = batch_df.sparkSession
         batch = (batch_df.select(id_col, text_col)
                  .localCheckpoint())
-        if os.path.isdir(corpus_dir) and any(
-                e.startswith("epoch=") for e in os.listdir(corpus_dir)):
-            corpus = (spark.read.option("basePath", corpus_dir)
-                      .parquet(corpus_dir).select(id_col, text_col))
-        else:
+        corpus = _read_epochs(spark, corpus_dir, [id_col, text_col])
+        if corpus is None:
             corpus = local_frame(spark, [], batch.schema)
-        has_idx = os.path.isdir(index_dir) and any(
-            e.startswith("epoch=") for e in os.listdir(index_dir))
-        if has_idx:
-            idx = (spark.read.option("basePath", index_dir)
-                   .parquet(index_dir)
-                   .select(id_col, "band", "bucket")
-                   # crash-healing: a half-committed replay's own
-                   # bucket rows (batch ids) must never block it
-                   .join(batch.select(id_col), id_col, "left_anti"))
+        idx = _read_epochs(spark, index_dir, [id_col, "band", "bucket"])
+        if idx is not None:
+            # crash-healing: a half-committed replay's own bucket rows
+            # (batch ids) must never block it
+            idx = idx.join(batch.select(id_col), id_col, "left_anti")
             # the framework wrote this index itself — a missing stamp
             # here means validation silently degraded (warn once)
             check_index_params(
                 idx, _minhash_params(n, num_hashes, bands, portable),
-                "run_streaming_near_dup_indexed (index read-back)",
+                "near_dup_admit_indexed_fn (index read-back)",
                 expect_stamp=True)
         else:
             # no standing index yet: build from the (possibly empty)
@@ -777,83 +777,29 @@ def near_dup_admit_indexed_fn(corpus_dir: str, index_dir: str,
             num_hashes=num_hashes, bands=bands, threshold=threshold,
             portable=portable, max_bucket=max_bucket,
             corpus_index=idx).localCheckpoint()
-        idx_edir = os.path.join(index_dir, f"epoch={epoch_id}")
-        if not _epoch_committed(index_dir, epoch_id):
-            tmp = os.path.join(index_dir, f".tmp-epoch-{epoch_id}")
-            shutil.rmtree(tmp, ignore_errors=True)
-            (build_minhash_index(admitted, text_col, id_col, n,
-                                 num_hashes, bands, portable)
-             .coalesce(1).write.mode("overwrite").parquet(tmp))
-            os.makedirs(index_dir, exist_ok=True)
-            os.rename(tmp, idx_edir)
-        tmp = _stage_path(corpus_dir, epoch_id)
-        shutil.rmtree(tmp, ignore_errors=True)
-        admitted.coalesce(1).write.mode("overwrite").parquet(tmp)
-        os.makedirs(corpus_dir, exist_ok=True)
-        os.rename(tmp, edir)
+        _commit_epoch(build_minhash_index(admitted, text_col, id_col, n,
+                                          num_hashes, bands, portable),
+                      index_dir, epoch_id)
+        _commit_epoch(admitted, corpus_dir, epoch_id)
 
     return admit_batch
-
-
-def run_streaming_near_dup_indexed(
-        stream: DataFrame, corpus_dir: str, index_dir: str,
-        text_col: str = "text", id_col: str = "doc_id",
-        threshold: float = 0.5, max_bucket: int | None = 32,
-        portable: bool = False,
-        checkpoint_dir: str | None = None):
-    """foreachBatch streaming near-dup admission over a MAINTAINED
-    persisted LSH index (see :func:`near_dup_admit_indexed_fn`):
-    per-epoch cost never re-signs the corpus — the streaming
-    deployment shape of ``incremental_minhash_indexed``."""
-    w = (stream.writeStream
-         .outputMode("append")
-         .foreachBatch(near_dup_admit_indexed_fn(
-             corpus_dir, index_dir, text_col, id_col, threshold,
-             max_bucket, portable=portable)))
-    if checkpoint_dir is not None:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    q = w.start()
-    q.processAllAvailable()
-    return q
-
-
-def run_streaming_near_dup(stream: DataFrame, corpus_dir: str,
-                           text_col: str = "text",
-                           id_col: str = "doc_id",
-                           threshold: float = 0.5,
-                           max_bucket: int | None = 32,
-                           checkpoint_dir: str | None = None):
-    """foreachBatch streaming corpus admission with NEAR-dup gating:
-    documents arriving on the stream are admitted into ``corpus_dir``
-    only if no LSH≥threshold match exists in the admitted corpus or
-    earlier in their own micro-batch (see ``near_dup_admit_fn``).
-    Drained result equals applying ``incremental_minhash_admission``
-    batch-by-batch — gated e2e in ``tests/test_streaming_ext``."""
-    w = (stream.writeStream
-         .outputMode("append")
-         .foreachBatch(near_dup_admit_fn(corpus_dir, text_col, id_col,
-                                         threshold, max_bucket)))
-    if checkpoint_dir is not None:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    q = w.start()
-    q.processAllAvailable()
-    return q
 
 
 def semantic_admit_fn(corpus_dir: str, vec_col: str = "embedding",
                       id_col: str = "vec_id",
                       threshold: float = 0.85,
                       n_centroids: int = 16, nprobe: int = 4):
-    """``foreachBatch`` for :func:`run_streaming_semantic_admission`:
-    the EMBEDDING-side sibling of ``near_dup_admit_fn`` — each
-    micro-batch is gated by
-    ``similarity.incremental_semantic_admission`` (IVF-probed cosine
-    vs the admitted corpus + greedy in-batch) through the same
-    epoch-directory exactly-once commit. Centroids are seeded from
-    the CURRENT admitted corpus each epoch (deterministic given the
-    corpus; from the batch itself on the first epoch); a batch with
-    no non-zero vectors admits wholesale — there is nothing to
-    compare.
+    """``foreachBatch`` corpus admission with SEMANTIC gating — the
+    EMBEDDING-side sibling of ``near_dup_admit_fn``: vectors are
+    admitted into ``corpus_dir`` only if no IVF-probed
+    cosine≥threshold neighbor exists in the admitted corpus or earlier
+    in their own micro-batch (``similarity.incremental_semantic_
+    admission``), through the same epoch-directory exactly-once commit
+    as the exact-fingerprint (``dedup_admit_fn``) and MinHash
+    (``near_dup_admit_fn``) doors. Centroids are seeded from the
+    CURRENT admitted corpus each epoch (deterministic given the
+    corpus; from the batch itself on the first epoch); a batch with no
+    non-zero vectors admits wholesale — there is nothing to compare.
 
     SCALE: this door re-seeds and RE-ROUTES the admitted corpus every
     epoch — per-epoch cost is corpus-proportional by construction.
@@ -890,7 +836,7 @@ def semantic_admit_fn(corpus_dir: str, vec_col: str = "embedding",
             batch, corpus, id_col=id_col, vec_col=vec_col,
             threshold=threshold, nprobe=nprobe, centroids=cents)
 
-    return _admit_commit_fn(corpus_dir, vec_col, id_col, admitter)
+    return _admit_commit_cols_fn(corpus_dir, [id_col, vec_col], admitter)
 
 
 def semantic_admit_indexed_fn(corpus_dir: str, index_dir: str,
@@ -898,21 +844,20 @@ def semantic_admit_indexed_fn(corpus_dir: str, index_dir: str,
                               id_col: str = "vec_id",
                               threshold: float = 0.85,
                               n_centroids: int = 16, nprobe: int = 4):
-    """``foreachBatch`` for :func:`run_streaming_semantic_admission_indexed`
-    — the MAINTAINED-INDEX streaming shape of semantic admission
-    (r11, composing the batch pieces): instead of re-seeding centroids
-    and re-routing the whole admitted corpus every epoch
-    (``semantic_admit_fn``), the centroid matrix is FROZEN at the
-    first non-degenerate epoch (persisted as ``_centroids.json`` in
-    ``index_dir``, atomic-rename committed) and the ROUTED corpus is
-    maintained as epoch-append parquet under ``index_dir`` — each
-    epoch probes the read-back index via ``corpus_routed=`` and
-    appends only its own admissions' routed rows
-    (``build_semantic_routing_index`` of the admitted subset; the
-    pure-per-row closure ``append_to_semantic_routing_index``
-    unit-pins). Per-epoch cost is batch routing + probed lists'
-    kernels — the corpus is NEVER re-routed, the cost the in-query
-    streaming twin pays every epoch.
+    """``foreachBatch`` semantic admission over a MAINTAINED persisted
+    routed-corpus index — the streaming deployment shape of
+    ``incremental_semantic_auto_indexed`` (r11, composing the batch
+    pieces): instead of re-seeding centroids and re-routing the whole
+    admitted corpus every epoch (``semantic_admit_fn``), the centroid
+    matrix is FROZEN at the first non-degenerate epoch
+    (:func:`_frozen_centroids`) and the ROUTED corpus is maintained as
+    epoch-append parquet under ``index_dir`` — each epoch probes the
+    read-back index via ``corpus_routed=`` and appends only its own
+    admissions' routed rows (``build_semantic_routing_index`` of the
+    admitted subset; the pure-per-row closure
+    ``append_to_semantic_routing_index`` unit-pins). Per-epoch cost is
+    batch routing + probed lists' kernels — the corpus is NEVER
+    re-routed, the cost the in-query streaming twin pays every epoch.
 
     Exactly-once: the INDEX epoch commits before the CORPUS epoch
     (both write-tmp-then-rename). A replayed epoch whose corpus dir
@@ -925,9 +870,6 @@ def semantic_admit_indexed_fn(corpus_dir: str, index_dir: str,
     corpus grows for never re-routing; re-centering is a deployment
     decision (start a new index_dir), and the stamp makes a stale
     probe loud."""
-    import json
-    import shutil
-
     from nyctaxidatapipeline_spark.operators.indexmeta import (
         check_index_params,
     )
@@ -935,7 +877,6 @@ def semantic_admit_indexed_fn(corpus_dir: str, index_dir: str,
         _semantic_routing_params,
         build_semantic_routing_index,
         incremental_semantic_admission_auto,
-        ivf_seed_centroids,
     )
 
     def admit_batch(batch_df: DataFrame, epoch_id: int) -> None:
@@ -944,55 +885,33 @@ def semantic_admit_indexed_fn(corpus_dir: str, index_dir: str,
         # would otherwise resurrect the dir and orphan the bak (the
         # corpus_dir heal rides _epoch_committed just after)
         _recover_compacted_store(index_dir)
-        edir = os.path.join(corpus_dir, f"epoch={epoch_id}")
         if _epoch_committed(corpus_dir, epoch_id):
             return                       # replayed epoch — committed
         spark = batch_df.sparkSession
         batch = (batch_df.select(id_col, vec_col)
                  .localCheckpoint())     # probed + routed + committed
-        # underscore prefix: Spark's file index ignores _-prefixed
-        # files, so the sidecar cannot break the parquet read
-        cents_path = os.path.join(index_dir, "_centroids.json")
-        if os.path.exists(cents_path):
-            with open(cents_path) as f:
-                cents = json.load(f)
-        else:
-            cents = [list(map(float, c)) for c in
-                     ivf_seed_centroids(batch, n_centroids, id_col,
-                                        vec_col)]
-            if cents:
-                os.makedirs(index_dir, exist_ok=True)
-                tmp_c = f"{cents_path}.tmp-{os.getpid()}-{epoch_id}"
-                with open(tmp_c, "w") as f:
-                    json.dump(cents, f)
-                try:
-                    os.rename(tmp_c, cents_path)
-                except OSError:
-                    os.unlink(tmp_c)
-                with open(cents_path) as f:   # read the race winner
-                    cents = json.load(f)
+        cents = _frozen_centroids(index_dir, batch, n_centroids, id_col,
+                                  vec_col, epoch_id)
         if not cents:
             # all-zero/empty first batch: nothing to route or compare —
             # admit wholesale, seed again next epoch (sibling
             # convention: zero-norm vectors never block)
             admitted = batch
         else:
-            has_idx = os.path.isdir(index_dir) and any(
-                e.startswith("epoch=") for e in os.listdir(index_dir))
-            if has_idx:
-                routed = (spark.read.option("basePath", index_dir)
-                          .parquet(index_dir)
-                          .select("list_id", "_id", "_vec")
-                          # crash-healing: a half-committed replay's own
-                          # routed rows (batch ids) must never block it
-                          .join(batch.select(F.col(id_col).alias("_id")),
-                                "_id", "left_anti"))
+            routed = _read_epochs(spark, index_dir,
+                                  ["list_id", "_id", "_vec"])
+            if routed is not None:
+                # crash-healing: a half-committed replay's own routed
+                # rows (batch ids) must never block it
+                routed = routed.join(
+                    batch.select(F.col(id_col).alias("_id")), "_id",
+                    "left_anti")
                 # framework-built index: a missing stamp means the
                 # frozen-centroid guard silently degraded (warn once)
                 check_index_params(
                     routed, _semantic_routing_params(cents),
-                    "run_streaming_semantic_admission_indexed "
-                    "(index read-back)", col="_id", expect_stamp=True)
+                    "semantic_admit_indexed_fn (index read-back)",
+                    col="_id", expect_stamp=True)
             else:
                 routed = local_frame(
                     spark, [], "list_id int, _id long, _vec array<double>")
@@ -1004,71 +923,11 @@ def semantic_admit_indexed_fn(corpus_dir: str, index_dir: str,
         # index epoch FIRST (a missing index epoch would silently
         # under-reject forever; a missing corpus epoch is healed above)
         if cents:
-            idx_edir = os.path.join(index_dir, f"epoch={epoch_id}")
-            if not _epoch_committed(index_dir, epoch_id):
-                tmp = os.path.join(index_dir, f".tmp-epoch-{epoch_id}")
-                shutil.rmtree(tmp, ignore_errors=True)
-                (build_semantic_routing_index(admitted, cents, id_col,
-                                              vec_col)
-                 .coalesce(1).write.mode("overwrite").parquet(tmp))
-                os.rename(tmp, idx_edir)
-        tmp = _stage_path(corpus_dir, epoch_id)
-        shutil.rmtree(tmp, ignore_errors=True)
-        admitted.coalesce(1).write.mode("overwrite").parquet(tmp)
-        os.makedirs(corpus_dir, exist_ok=True)
-        os.rename(tmp, edir)
+            _commit_epoch(build_semantic_routing_index(
+                admitted, cents, id_col, vec_col), index_dir, epoch_id)
+        _commit_epoch(admitted, corpus_dir, epoch_id)
 
     return admit_batch
-
-
-def run_streaming_semantic_admission_indexed(
-        stream: DataFrame, corpus_dir: str, index_dir: str,
-        vec_col: str = "embedding", id_col: str = "vec_id",
-        threshold: float = 0.85, n_centroids: int = 16,
-        nprobe: int = 4, checkpoint_dir: str | None = None):
-    """foreachBatch streaming semantic admission over a MAINTAINED
-    persisted routed-corpus index (see
-    :func:`semantic_admit_indexed_fn`): frozen centroids, epoch-append
-    index, per-epoch cost that never re-routes the corpus — the
-    streaming deployment shape of
-    ``incremental_semantic_auto_indexed``."""
-    w = (stream.writeStream
-         .outputMode("append")
-         .foreachBatch(semantic_admit_indexed_fn(
-             corpus_dir, index_dir, vec_col, id_col, threshold,
-             n_centroids, nprobe)))
-    if checkpoint_dir is not None:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    q = w.start()
-    q.processAllAvailable()
-    return q
-
-
-def run_streaming_semantic_admission(stream: DataFrame, corpus_dir: str,
-                                     vec_col: str = "embedding",
-                                     id_col: str = "vec_id",
-                                     threshold: float = 0.85,
-                                     n_centroids: int = 16,
-                                     nprobe: int = 4,
-                                     checkpoint_dir: str | None = None):
-    """foreachBatch streaming corpus admission with SEMANTIC gating:
-    vectors arriving on the stream are admitted into ``corpus_dir``
-    only if no IVF-probed cosine≥threshold neighbor exists in the
-    admitted corpus or earlier in their own micro-batch (see
-    ``semantic_admit_fn``). Completes the admission-front-door
-    family: exact fingerprints (``run_incremental_dedup``), MinHash
-    near-dup (``run_streaming_near_dup``), and embeddings — one
-    epoch-commit skeleton under all three."""
-    w = (stream.writeStream
-         .outputMode("append")
-         .foreachBatch(semantic_admit_fn(corpus_dir, vec_col, id_col,
-                                         threshold, n_centroids,
-                                         nprobe)))
-    if checkpoint_dir is not None:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    q = w.start()
-    q.processAllAvailable()
-    return q
 
 
 def cross_signal_admit_fn(corpus_dir: str, text_col: str = "text",
@@ -1078,15 +937,15 @@ def cross_signal_admit_fn(corpus_dir: str, text_col: str = "text",
                           cosine_threshold: float = 0.85,
                           max_bucket: int | None = 32,
                           n_centroids: int = 16, nprobe: int = 4):
-    """``foreachBatch`` for :func:`run_streaming_cross_signal_admission`:
-    the streaming twin of ``dedup.cross_signal_dedup`` — each
-    micro-batch row (carrying BOTH its text and its embedding) is
-    admitted only if NEITHER signal links it to the admitted corpus or
-    to a smaller-id row of its own batch: the lexical gate is
-    ``incremental_minhash_admission`` (banded LSH, capped, exact-
-    Jaccard verified), the semantic gate
-    ``incremental_semantic_admission`` (IVF-probed cosine, corpus-
-    seeded centroids like ``semantic_admit_fn``).
+    """``foreachBatch`` corpus admission gated by BOTH signals — the
+    streaming twin of the registered ``dedup.cross_signal_dedup``
+    batch composition: each micro-batch row (carrying BOTH its text
+    and its embedding) is admitted only if NEITHER signal links it to
+    the admitted corpus or to a smaller-id row of its own batch: the
+    lexical gate is ``incremental_minhash_admission`` (banded LSH,
+    capped, exact-Jaccard verified), the semantic gate
+    ``incremental_semantic_admission`` (IVF-probed cosine,
+    corpus-seeded centroids like ``semantic_admit_fn``).
 
     Running the two gates independently and INTERSECTING their
     admitted sets IS the union-graph greedy admission: a row is
@@ -1141,10 +1000,10 @@ def cross_signal_admit_indexed_fn(corpus_dir: str, index_dir: str,
                                   n: int = 3, num_hashes: int = 32,
                                   bands: int = 8,
                                   portable: bool = False):
-    """``foreachBatch`` for
-    :func:`run_streaming_cross_signal_admission_indexed` — the
-    MAINTAINED-INDEX cross-signal door (r11, completing the family):
-    BOTH standing indexes live as epoch-append parquet under
+    """``foreachBatch`` cross-signal admission over MAINTAINED
+    persisted indexes for both signals — the streaming deployment
+    shape of ``cross_signal_dedup_indexed`` (r11, completing the
+    family): BOTH standing indexes live as epoch-append parquet under
     ``index_dir`` — the lexical band-bucket table (``lex/``) and the
     routed corpus (``sem/``, with the centroid matrix frozen at the
     first non-degenerate epoch in a ``_centroids.json`` sidecar) —
@@ -1167,9 +1026,6 @@ def cross_signal_admit_indexed_fn(corpus_dir: str, index_dir: str,
     because each gate anti-joins the batch's own ids out of its
     read-back index (rows only this batch could have contributed can
     never block it), and the recomputed admission is deterministic."""
-    import json
-    import shutil
-
     from nyctaxidatapipeline_spark.operators.dedup import (
         _minhash_params,
         build_minhash_index,
@@ -1182,30 +1038,10 @@ def cross_signal_admit_indexed_fn(corpus_dir: str, index_dir: str,
         _semantic_routing_params,
         build_semantic_routing_index,
         incremental_semantic_admission_auto,
-        ivf_seed_centroids,
     )
 
     lex_dir = os.path.join(index_dir, "lex")
     sem_dir = os.path.join(index_dir, "sem")
-
-    def _epoch_append(build_df, root: str, epoch_id: int) -> None:
-        edir = os.path.join(root, f"epoch={epoch_id}")
-        if _epoch_committed(root, epoch_id):
-            return
-        tmp = os.path.join(root, f".tmp-epoch-{epoch_id}")
-        shutil.rmtree(tmp, ignore_errors=True)
-        build_df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        os.makedirs(root, exist_ok=True)
-        os.rename(tmp, edir)
-
-    def _read_index(spark, root: str, cols, batch_ids):
-        has = os.path.isdir(root) and any(
-            e.startswith("epoch=") for e in os.listdir(root))
-        if not has:
-            return None
-        return (spark.read.option("basePath", root).parquet(root)
-                .select(*cols)
-                .join(batch_ids, cols[0], "left_anti"))
 
     def admit_batch(batch_df: DataFrame, epoch_id: int) -> None:
         # heal crashed index-store compactions BEFORE anything reads
@@ -1214,33 +1050,29 @@ def cross_signal_admit_indexed_fn(corpus_dir: str, index_dir: str,
         # (corpus_dir heals via _epoch_committed just after)
         _recover_compacted_store(lex_dir)
         _recover_compacted_store(sem_dir)
-        edir = os.path.join(corpus_dir, f"epoch={epoch_id}")
         if _epoch_committed(corpus_dir, epoch_id):
             return                       # replayed epoch — committed
         spark = batch_df.sparkSession
         batch = (batch_df.select(id_col, text_col, vec_col)
                  .localCheckpoint())
         bids = batch.select(id_col)
-        if os.path.isdir(corpus_dir) and any(
-                e.startswith("epoch=") for e in os.listdir(corpus_dir)):
-            corpus = (spark.read.option("basePath", corpus_dir)
-                      .parquet(corpus_dir)
-                      .select(id_col, text_col, vec_col))
-        else:
+        corpus = _read_epochs(spark, corpus_dir,
+                              [id_col, text_col, vec_col])
+        if corpus is None:
             corpus = local_frame(spark, [], batch.schema)
         # --- lexical gate over the maintained band-bucket index ---
-        lex_idx = _read_index(spark, lex_dir,
-                              [id_col, "band", "bucket"], bids)
+        lex_idx = _read_epochs(spark, lex_dir, [id_col, "band", "bucket"])
         if lex_idx is None:
             lex_idx = build_minhash_index(
                 corpus.select(id_col, text_col), text_col, id_col,
                 n, num_hashes, bands, portable)
         else:
+            lex_idx = lex_idx.join(bids, id_col, "left_anti")
             check_index_params(
                 lex_idx, _minhash_params(n, num_hashes, bands,
                                          portable),
-                "run_streaming_cross_signal_admission_indexed "
-                "(lex index read-back)", expect_stamp=True)
+                "cross_signal_admit_indexed_fn (lex index read-back)",
+                expect_stamp=True)
         lex = incremental_minhash_admission(
             batch.select(id_col, text_col),
             corpus.select(id_col, text_col), text_col, id_col,
@@ -1248,41 +1080,24 @@ def cross_signal_admit_indexed_fn(corpus_dir: str, index_dir: str,
             threshold=jaccard_threshold, portable=portable,
             max_bucket=max_bucket, corpus_index=lex_idx)
         # --- semantic gate over the maintained routed corpus ---
-        cents_path = os.path.join(sem_dir, "_centroids.json")
-        if os.path.exists(cents_path):
-            with open(cents_path) as f:
-                cents = json.load(f)
-        else:
-            cents = [list(map(float, c)) for c in
-                     ivf_seed_centroids(batch, n_centroids, id_col,
-                                        vec_col)]
-            if cents:
-                os.makedirs(sem_dir, exist_ok=True)
-                tmp_c = f"{cents_path}.tmp-{os.getpid()}-{epoch_id}"
-                with open(tmp_c, "w") as f:
-                    json.dump(cents, f)
-                try:
-                    os.rename(tmp_c, cents_path)
-                except OSError:
-                    os.unlink(tmp_c)
-                with open(cents_path) as f:
-                    cents = json.load(f)
+        cents = _frozen_centroids(sem_dir, batch, n_centroids, id_col,
+                                  vec_col, epoch_id)
         if not cents:
             sem = batch                 # nothing non-degenerate to gate
         else:
-            routed = _read_index(spark, sem_dir,
-                                 ["_id", "list_id", "_vec"],
-                                 bids.select(F.col(id_col)
-                                             .alias("_id")))
+            routed = _read_epochs(spark, sem_dir,
+                                  ["_id", "list_id", "_vec"])
             if routed is None:
                 routed = local_frame(
                     spark, [], "_id long, list_id int, _vec array<double>")
             else:
+                routed = routed.join(
+                    bids.select(F.col(id_col).alias("_id")), "_id",
+                    "left_anti")
                 check_index_params(
                     routed, _semantic_routing_params(cents),
-                    "run_streaming_cross_signal_admission_indexed "
-                    "(sem index read-back)", col="_id",
-                    expect_stamp=True)
+                    "cross_signal_admit_indexed_fn (sem index read-back)",
+                    col="_id", expect_stamp=True)
             sem = incremental_semantic_admission_auto(
                 batch.select(id_col, vec_col), None, id_col=id_col,
                 vec_col=vec_col, threshold=cosine_threshold,
@@ -1292,101 +1107,32 @@ def cross_signal_admit_indexed_fn(corpus_dir: str, index_dir: str,
                          .join(sem.select(id_col), id_col, "left_semi")
                          .localCheckpoint())
         # both index epochs commit BEFORE the corpus epoch
-        _epoch_append(build_minhash_index(
+        _commit_epoch(build_minhash_index(
             admitted.select(id_col, text_col), text_col, id_col,
-            n, num_hashes, bands, portable),
-            lex_dir, epoch_id)
+            n, num_hashes, bands, portable), lex_dir, epoch_id)
         if cents:
-            _epoch_append(build_semantic_routing_index(
+            _commit_epoch(build_semantic_routing_index(
                 admitted.select(id_col, vec_col), cents, id_col,
                 vec_col), sem_dir, epoch_id)
-        tmp = _stage_path(corpus_dir, epoch_id)
-        shutil.rmtree(tmp, ignore_errors=True)
-        admitted.coalesce(1).write.mode("overwrite").parquet(tmp)
-        os.makedirs(corpus_dir, exist_ok=True)
-        os.rename(tmp, edir)
+        _commit_epoch(admitted, corpus_dir, epoch_id)
 
     return admit_batch
 
 
-def run_streaming_cross_signal_admission_indexed(
-        stream: DataFrame, corpus_dir: str, index_dir: str,
-        text_col: str = "text", id_col: str = "doc_id",
-        vec_col: str = "embedding",
-        jaccard_threshold: float = 0.5,
-        cosine_threshold: float = 0.85,
-        max_bucket: int | None = 32,
-        n_centroids: int = 16, nprobe: int = 4,
-        checkpoint_dir: str | None = None):
-    """foreachBatch cross-signal admission over MAINTAINED persisted
-    indexes for both signals (see
-    :func:`cross_signal_admit_indexed_fn`) — the streaming deployment
-    shape of ``cross_signal_dedup_indexed``."""
-    w = (stream.writeStream
-         .outputMode("append")
-         .foreachBatch(cross_signal_admit_indexed_fn(
-             corpus_dir, index_dir, text_col, id_col, vec_col,
-             jaccard_threshold, cosine_threshold, max_bucket,
-             n_centroids, nprobe)))
-    if checkpoint_dir is not None:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    q = w.start()
-    q.processAllAvailable()
-    return q
-
-
-def run_streaming_cross_signal_admission(
-        stream: DataFrame, corpus_dir: str,
-        text_col: str = "text", id_col: str = "doc_id",
-        vec_col: str = "embedding",
-        jaccard_threshold: float = 0.5,
-        cosine_threshold: float = 0.85,
-        max_bucket: int | None = 32,
-        n_centroids: int = 16, nprobe: int = 4,
-        checkpoint_dir: str | None = None):
-    """foreachBatch streaming corpus admission gated by BOTH signals:
-    a row enters ``corpus_dir`` only if it has no lexical near-dup AND
-    no semantic near-dup among the admitted corpus or earlier rows of
-    its own micro-batch (see ``cross_signal_admit_fn``) — the
-    streaming twin of the registered ``cross_signal_dedup`` batch
-    composition, on the same epoch-commit skeleton as the exact /
-    MinHash / semantic front doors."""
-    w = (stream.writeStream
-         .outputMode("append")
-         .foreachBatch(cross_signal_admit_fn(
-             corpus_dir, text_col, id_col, vec_col, jaccard_threshold,
-             cosine_threshold, max_bucket, n_centroids, nprobe)))
-    if checkpoint_dir is not None:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    q = w.start()
-    q.processAllAvailable()
-    return q
-
-
-def run_incremental_dedup(stream: DataFrame, corpus_dir: str,
-                          text_col: str = "text",
-                          id_col: str = "doc_id",
-                          checkpoint_dir: str | None = None):
-    """foreachBatch streaming corpus admission: documents arriving on
-    the stream are admitted into ``corpus_dir`` only if new (see
-    ``dedup_admit_fn``). The admitted corpus after draining a finite
-    stream equals the batch ``incremental_fingerprint_dedup`` result
-    applied batch-by-batch — gated e2e in ``tests/test_streaming_ext``.
-    """
-    w = (stream.writeStream
-         .outputMode("append")
-         .foreachBatch(dedup_admit_fn(corpus_dir, text_col, id_col)))
-    if checkpoint_dir is not None:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    q = w.start()
-    q.processAllAvailable()
-    return q
-
-
 def versioned_append_fn(table_path: str):
-    """The ``foreachBatch`` function for ``run_versioned_append`` —
-    exposed as a factory (like ``dedup_admit_fn``/``rollup_merge_fn``)
+    """``foreachBatch`` sink committing each micro-batch as a VERSION
+    of a ``versioned`` table — streaming ingestion with snapshot
+    isolation: readers time-travel to any committed epoch, and a
+    replayed epoch (restart after crash, before checkpoint advance) is
+    a NO-OP instead of a duplicate append, because the epoch id is
+    stored in the manifest at commit time and checked before writing.
+    Exposed as a factory (like ``dedup_admit_fn``/``rollup_merge_fn``)
     so the CAS-loss retry contract is directly unit-testable.
+
+    Composition note: the epoch id travels INSIDE the manifest
+    (``write_version(extra={"epoch": ...})``), so it commits in the
+    same hard-link CAS as the file list — a crash can never leave a
+    committed version without its epoch.
 
     Losing the manifest CAS does NOT mean this epoch was committed (the
     winner may be an unrelated ``write_version`` caller, or a driver on
@@ -1434,56 +1180,18 @@ def versioned_append_fn(table_path: str):
     return commit_batch
 
 
-def run_versioned_append(stream: DataFrame, table_path: str):
-    """foreachBatch sink committing each micro-batch as a VERSION of a
-    ``versioned`` table — streaming ingestion with snapshot isolation:
-    readers time-travel to any committed epoch, and a replayed epoch
-    (restart after crash, before checkpoint advance) is a NO-OP instead
-    of a duplicate append, because the epoch id is stored in the
-    manifest at commit time and checked before writing.
-
-    Composition note: the epoch id travels INSIDE the manifest
-    (``write_version(extra={"epoch": ...})``), so it commits in the
-    same hard-link CAS as the file list — a crash can never leave a
-    committed version without its epoch. CAS-loss handling and the
-    epoch cache live in ``versioned_append_fn``.
-    """
-    q = (stream.writeStream
-         .outputMode("append")
-         .foreachBatch(versioned_append_fn(table_path))
-         .start())
-    q.processAllAvailable()
-    return q
-
-
-#: binaryFile's fixed source schema — streaming file sources require an
-#: explicit schema; this is the one the batch binaryFile reader infers.
-_BINARY_FILE_SCHEMA = ("path string, modificationTime timestamp, "
-                       "length long, content binary")
-
-
-def stream_warc_dir(spark: SparkSession, warc_dir: str,
-                    max_files_per_trigger: int = 1) -> DataFrame:
-    """Stream a landing directory of ``.warc``/``.warc.gz`` segments as
-    they arrive — the continuous-crawl front door. One file per
-    micro-batch by default (each Common-Crawl-sized segment is ~1 GB;
-    at scale raise the trigger or swap the directory for the real
-    queue)."""
-    return (spark.readStream
-            .format("binaryFile")
-            .schema(_BINARY_FILE_SCHEMA)
-            .option("maxFilesPerTrigger", str(max_files_per_trigger))
-            .load(warc_dir))
-
-
 def shard_admit_fn(corpus_dir: str):
-    """``foreachBatch`` for :func:`run_shard_ingestion`: decompress +
-    line-split each micro-batch's JSONL shards (``read_text_shards`` —
-    the same codec-sniffing parser the batch path uses: gz/bz2/xz/
-    snappy/zstd), parse the JSON JVM-side, and hand the documents to
-    the EXISTING admission commit (``dedup_admit_fn``). Composition
-    over new machinery, exactly like the WARC front door — the only
-    shard-specific lines are the decompress + ``from_json``."""
+    """``foreachBatch`` compressed-corpus ingestion (the Dolma layout)
+    over :func:`stream_files`: JSONL shards landing in the directory —
+    any mix of the five codecs — are decompressed and line-split
+    (``read_text_shards`` — the same codec-sniffing parser the batch
+    path uses: gz/bz2/xz/snappy/zstd), parsed JVM-side, and handed to
+    the EXISTING admission commit (``dedup_admit_fn``): on-arrival
+    dedup, exactly-once per epoch, replays are no-ops. Drained result
+    equals the batch parse + batch incremental dedup shard-by-shard —
+    gated e2e. Composition over new machinery, exactly like the WARC
+    front door — the only shard-specific lines are the decompress +
+    ``from_json``."""
     admit = dedup_admit_fn(corpus_dir, "text", "doc_id")
 
     def fn(batch_df: DataFrame, epoch_id: int) -> None:
@@ -1504,39 +1212,17 @@ def shard_admit_fn(corpus_dir: str):
     return fn
 
 
-def run_shard_ingestion(spark: SparkSession, shard_dir: str,
-                        corpus_dir: str,
-                        checkpoint_dir: str | None = None,
-                        max_files_per_trigger: int = 1):
-    """Streaming compressed-corpus ingestion (the Dolma layout): JSONL
-    shards landing in ``shard_dir`` — any mix of the five codecs — are
-    decompressed, parsed, and admitted into ``corpus_dir`` with
-    on-arrival dedup (exactly-once per epoch; replays are no-ops).
-    Drained result equals the batch parse + batch incremental dedup
-    shard-by-shard — gated e2e."""
-    stream = (spark.readStream
-              .format("binaryFile")
-              .schema(_BINARY_FILE_SCHEMA)
-              .option("maxFilesPerTrigger", str(max_files_per_trigger))
-              .load(shard_dir))
-    w = (stream.writeStream
-         .outputMode("append")
-         .foreachBatch(shard_admit_fn(corpus_dir)))
-    if checkpoint_dir is not None:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    q = w.start()
-    q.processAllAvailable()
-    return q
-
-
 def warc_admit_fn(corpus_dir: str):
-    """``foreachBatch`` for :func:`run_warc_ingestion`: untar each
-    micro-batch's WARC segments into documents (``read_warc`` — the
-    same Arrow-batched parser the batch path uses), then hand them to
-    the EXISTING admission commit (``dedup_admit_fn``): Bloom-pre-passed
-    fingerprint dedup against the admitted corpus, epoch-directory
-    rename as the exactly-once commit. Composition over new machinery —
-    the only WARC-specific lines are the parse + column mapping."""
+    """``foreachBatch`` crawl ingestion over :func:`stream_files`:
+    untar each micro-batch's WARC segments into documents
+    (``read_warc`` — the same Arrow-batched parser the batch path
+    uses), then hand them to the EXISTING admission commit
+    (``dedup_admit_fn``): Bloom-pre-passed fingerprint dedup against
+    the admitted corpus, epoch-directory rename as the exactly-once
+    commit (replays are no-ops). The drained result equals running the
+    batch WARC parse + the batch incremental dedup segment-by-segment
+    — gated e2e. Composition over new machinery — the only
+    WARC-specific lines are the parse + column mapping."""
     admit = dedup_admit_fn(corpus_dir, "text", "doc_id")
 
     def fn(batch_df: DataFrame, epoch_id: int) -> None:
@@ -1553,34 +1239,16 @@ def warc_admit_fn(corpus_dir: str):
     return fn
 
 
-def run_warc_ingestion(spark: SparkSession, warc_dir: str,
-                       corpus_dir: str,
-                       checkpoint_dir: str | None = None,
-                       max_files_per_trigger: int = 1):
-    """Streaming crawl ingestion: WARC segments landing in ``warc_dir``
-    are parsed and their documents admitted into ``corpus_dir`` with
-    on-arrival dedup (exactly-once per epoch; replays are no-ops).
-    The drained result equals running the batch WARC parse + the batch
-    incremental dedup segment-by-segment — gated e2e."""
-    stream = stream_warc_dir(spark, warc_dir, max_files_per_trigger)
-    w = (stream.writeStream
-         .outputMode("append")
-         .foreachBatch(warc_admit_fn(corpus_dir)))
-    if checkpoint_dir is not None:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    q = w.start()
-    q.processAllAvailable()
-    return q
-
-
 def tfrecord_admit_fn(corpus_dir: str):
-    """``foreachBatch`` for :func:`run_tfrecord_ingestion`: unframe +
-    proto-decode each micro-batch's TFRecord shards (the
+    """``foreachBatch`` TFRecord ingestion over :func:`stream_files`:
+    unframe + proto-decode each micro-batch's ``.tfrecord`` shards (the
     ``sources/tfrecord.py`` readers — per-frame CRC verification, typed
     decode), then hand the documents to the EXISTING admission commit
-    (``dedup_admit_fn``). Composition over new machinery, exactly like
-    the WARC / compressed-JSONL front doors — the only TFRecord-
-    specific lines are the unframe + decode."""
+    (``dedup_admit_fn``): on-arrival dedup, exactly-once per epoch,
+    replays are no-ops. The third streaming front door next to WARC
+    and compressed JSONL; drained result equals the batch decode +
+    batch incremental dedup shard-by-shard — gated e2e. The only
+    TFRecord-specific lines are the unframe + decode."""
     admit = dedup_admit_fn(corpus_dir, "text", "doc_id")
 
     def fn(batch_df: DataFrame, epoch_id: int) -> None:
@@ -1600,133 +1268,48 @@ def tfrecord_admit_fn(corpus_dir: str):
     return fn
 
 
-def run_tfrecord_ingestion(spark: SparkSession, shard_dir: str,
-                           corpus_dir: str,
-                           checkpoint_dir: str | None = None,
-                           max_files_per_trigger: int = 1):
-    """Streaming TFRecord ingestion: ``.tfrecord`` shards landing in
-    ``shard_dir`` are unframed (checksums verified), proto-decoded, and
-    admitted into ``corpus_dir`` with on-arrival dedup (exactly-once
-    per epoch; replays are no-ops) — the third streaming front door
-    next to WARC and compressed JSONL. Drained result equals the batch
-    decode + batch incremental dedup shard-by-shard — gated e2e."""
-    stream = (spark.readStream
-              .format("binaryFile")
-              .schema(_BINARY_FILE_SCHEMA)
-              .option("maxFilesPerTrigger", str(max_files_per_trigger))
-              .load(shard_dir))
-    w = (stream.writeStream
-         .outputMode("append")
-         .foreachBatch(tfrecord_admit_fn(corpus_dir)))
-    if checkpoint_dir is not None:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    q = w.start()
-    q.processAllAvailable()
-    return q
-
-
 def hll_merge_fn(state_dir: str, group_col: str, key_col: str,
                  b: int = 6):
-    """``foreachBatch`` function for :func:`run_streaming_hll` — the
-    sketch twin of ``rollup_merge_fn``: each micro-batch reduces to its
-    HLL register frame (``sketches.hll_registers``) and max-merges into
-    the parquet state. Register max-merge is idempotent AND exact — the
-    drained state is bit-identical to the one-shot batch sketch over
-    the union (the merge-identity gate HLL gets for free that a
-    sum-rollup has to earn), and per-batch cost is the batch plus
-    O(groups x 2^b) state, never stream history. Same atomic
-    tmp-rename + epoch-marker exactly-once discipline; replayed epochs
-    are no-ops (and would be harmless anyway — max is idempotent)."""
-    import shutil
-
+    """``foreachBatch`` distinct-count sketch — the sketch twin of
+    ``rollup_merge_fn``: maintain per-group HyperLogLog registers over
+    an unbounded stream in O(groups x 2^b) state, the live "distinct
+    users so far" dashboard that an exact streaming distinct would
+    need unbounded state for. Each micro-batch reduces to its HLL
+    register frame (``sketches.hll_registers``) and max-merges into
+    the parquet state; read the estimate at any time with
+    ``sketches.hll_finish`` over the state parquet. Register max-merge
+    is idempotent AND exact — the drained state is bit-identical to
+    the one-shot batch sketch over the union (the merge-identity gate
+    HLL gets for free that a sum-rollup has to earn), and per-batch
+    cost is the batch plus O(groups x 2^b) state, never stream
+    history. Same atomic tmp-rename + epoch-marker exactly-once
+    discipline (:func:`_sketch_merge_fn`); replayed epochs are no-ops
+    (and would be harmless anyway — max is idempotent)."""
     from nyctaxidatapipeline_spark.operators.sketches import hll_registers
 
-    def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if epoch_id <= applied_epoch(state_dir):
-            return
-        spark = batch_df.sparkSession
-        new = hll_registers(batch_df, F.col(key_col), [group_col], b)
-        if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-            cur = spark.read.parquet(state_dir)
-            merged = (cur.unionByName(new)
-                         .groupBy(group_col, "bucket")
-                         .agg(F.max("M").alias("M")))
-        else:
-            merged = new
-        tmp = state_dir + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, _EPOCH_MARKER), "w") as f:
-            f.write(str(epoch_id))
-        _swap_state_dir(tmp, state_dir)
-
-    return merge_batch
+    return _sketch_merge_fn(
+        state_dir,
+        lambda batch: hll_registers(batch, F.col(key_col), [group_col],
+                                    b),
+        lambda u: (u.groupBy(group_col, "bucket")
+                    .agg(F.max("M").alias("M"))))
 
 
 def cms_merge_fn(state_dir: str, key_col: str, w: int = 1024,
                  d: int = 4):
-    """``foreachBatch`` for :func:`run_streaming_cms`: each micro-batch
-    reduces to its Count-Min counter frame (``sketches.cms_counters``)
+    """``foreachBatch`` frequency sketch: maintain a Count-Min counter
+    table over an unbounded stream in O(w x d) state; point-query it
+    any time with ``sketches.cms_lookup`` over the state parquet. Each
+    micro-batch reduces to its counter frame (``sketches.cms_counters``)
     and SUM-merges into the parquet state — the frequency twin of
-    ``hll_merge_fn`` (registers max-merge, counters sum-merge). Unlike
-    max, sum is NOT idempotent, so the epoch-marker replay guard is
-    load-bearing here, exactly as in ``rollup_merge_fn``. State stays
-    O(w x d) forever."""
-    import shutil
-
+    ``hll_merge_fn`` (registers max-merge, counters sum-merge). Drained
+    state equals the one-shot batch sketch exactly (counter sums
+    distribute over any batch split) — gated e2e. Unlike max, sum is
+    NOT idempotent, so the epoch-marker replay guard is load-bearing
+    here, exactly as in ``rollup_merge_fn``."""
     from nyctaxidatapipeline_spark.operators.sketches import cms_counters
 
-    def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        if epoch_id <= applied_epoch(state_dir):
-            return
-        spark = batch_df.sparkSession
-        new = cms_counters(batch_df, F.col(key_col), w, d)
-        if os.path.exists(os.path.join(state_dir, "_SUCCESS")):
-            cur = spark.read.parquet(state_dir)
-            merged = (cur.unionByName(new)
-                         .groupBy("r", "c")
-                         .agg(F.sum("cnt").alias("cnt")))
-        else:
-            merged = new
-        tmp = state_dir + ".tmp"
-        merged.write.mode("overwrite").parquet(tmp)
-        with open(os.path.join(tmp, _EPOCH_MARKER), "w") as f:
-            f.write(str(epoch_id))
-        _swap_state_dir(tmp, state_dir)
-
-    return merge_batch
-
-
-def run_streaming_cms(stream: DataFrame, state_dir: str, key_col: str,
-                      w: int = 1024, d: int = 4,
-                      checkpoint_dir: str | None = None):
-    """Streaming frequency sketch: maintain a Count-Min counter table
-    over an unbounded stream in O(w x d) state; point-query it any time
-    with ``sketches.cms_lookup`` over the state parquet. Drained state
-    equals the one-shot batch sketch exactly (counter sums distribute
-    over any batch split) — gated e2e."""
-    q = (stream.writeStream
-         .outputMode("update")
-         .foreachBatch(cms_merge_fn(state_dir, key_col, w, d)))
-    if checkpoint_dir is not None:
-        q = q.option("checkpointLocation", checkpoint_dir)
-    q = q.start()
-    q.processAllAvailable()
-    return q
-
-
-def run_streaming_hll(stream: DataFrame, state_dir: str,
-                      group_col: str, key_col: str, b: int = 6,
-                      checkpoint_dir: str | None = None):
-    """Streaming distinct-count sketch: maintain per-group HyperLogLog
-    registers over an unbounded stream in O(groups x 2^b) state — the
-    live "distinct users so far" dashboard that an exact streaming
-    distinct would need unbounded state for. Read the estimate at any
-    time with ``sketches.hll_finish`` over the state parquet."""
-    w = (stream.writeStream
-         .outputMode("update")
-         .foreachBatch(hll_merge_fn(state_dir, group_col, key_col, b)))
-    if checkpoint_dir is not None:
-        w = w.option("checkpointLocation", checkpoint_dir)
-    q = w.start()
-    q.processAllAvailable()
-    return q
+    return _sketch_merge_fn(
+        state_dir,
+        lambda batch: cms_counters(batch, F.col(key_col), w, d),
+        lambda u: u.groupBy("r", "c").agg(F.sum("cnt").alias("cnt")))

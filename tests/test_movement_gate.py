@@ -36,7 +36,7 @@ PLAN_METRICS_SF1 bytes (label_propagation 30.5 MB, lsh_recall_report
 24.1 MB), probing where a movement regression costs most rather than
 only one-per-class.
 One streaming epoch IS probed since r15 (VERDICT r14 task 8): a
-single ``run_incremental_rollup`` micro-batch over the sf0.1 events
+single ``rollup_merge_fn`` micro-batch over the sf0.1 events
 fixture (single-file table → exactly one epoch, ~2 s), movement
 captured as an AppStatusStore stage DELTA (``stage_movement_totals``,
 the bench_streaming instrument — one foreachBatch epoch executes
@@ -93,22 +93,23 @@ NEW_SHUFFLE_CAP = 1 << 20
 
 
 def _streaming_epoch_movement(spark, tmp_path):
-    """One ``run_incremental_rollup`` epoch over the sf0.1 events
+    """One ``rollup_merge_fn`` epoch over the sf0.1 events
     fixture; returns the AppStatusStore stage-delta movement. The
     events table is a single parquet file, so the default
     maxFilesPerTrigger=1 file stream drains in exactly one epoch."""
     from plan_metrics import stage_movement_totals
 
     from nyctaxidatapipeline_spark.streaming.jobs import (
-        run_incremental_rollup,
+        drain,
+        rollup_merge_fn,
         stream_table,
     )
 
     before = stage_movement_totals(spark)
     ev = stream_table(spark, SF_DIR, "events")
-    q = run_incremental_rollup(ev, str(tmp_path / "rollup_state"),
-                               ["event_type"], "value",
-                               checkpoint_dir=str(tmp_path / "ckpt"))
+    q = drain(ev, rollup_merge_fn(str(tmp_path / "rollup_state"),
+                                  ["event_type"], "value"),
+              checkpoint_dir=str(tmp_path / "ckpt"))
     q.stop()
     after = stage_movement_totals(spark)
     delta = {k: after[k] - before[k]

@@ -49,3 +49,58 @@ def test_dedup_within_watermark(spark):
         assert n_stream == n_batch
     finally:
         q.stop()
+
+
+def test_stream_table_reads_int96_timestamps(spark, tmp_path):
+    """INT96 timestamps show as timestamp[ns] in the pyarrow footer but
+    Spark reads them as timestamps, not raw int64 nanos: the stream
+    must not apply the nanos restore to them (it raised
+    DATATYPE_MISMATCH on ``ts div 1000``) and must replay the rows the
+    batch reader returns."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nyctaxidatapipeline_spark.sources.tables import read_parquet
+
+    ts = [dt.datetime(2024, 1, 1, 8, 30), dt.datetime(2024, 1, 2, 23, 59)]
+    pq.write_table(pa.table({"id": [1, 2],
+                             "ts": pa.array(ts, pa.timestamp("ns"))}),
+                   str(tmp_path / "legacy.parquet"),
+                   use_deprecated_int96_timestamps=True)
+    q = run_to_memory(stream_table(spark, str(tmp_path), "legacy"),
+                      "int96_test")
+    try:
+        got = sorted(tuple(r) for r in
+                     spark.sql("SELECT * FROM int96_test").collect())
+        want = sorted(tuple(r) for r in read_parquet(
+            spark, str(tmp_path / "legacy.parquet")).collect())
+        assert got == want and len(got) == 2
+    finally:
+        q.stop()
+
+
+def test_jobs_has_one_drain_and_one_file_source():
+    """One writeStream skeleton (``drain``; ``run_to_memory`` is the
+    memory sink), one readStream per source kind (``stream_table``,
+    ``stream_files``), and no ``run_*`` door wrapper left: each door is
+    its ``*_fn`` factory run through ``drain``."""
+    import ast
+    import inspect
+
+    from nyctaxidatapipeline_spark.streaming import jobs
+
+    tree = ast.parse(inspect.getsource(jobs))
+    sites = {"writeStream": set(), "readStream": set()}
+    for top in tree.body:
+        name = getattr(top, "name", "<module>")
+        for node in ast.walk(top):
+            if isinstance(node, ast.Attribute) and node.attr in sites:
+                sites[node.attr].add(name)
+    assert sites == {"writeStream": {"drain", "run_to_memory"},
+                     "readStream": {"stream_table", "stream_files"}}
+    runs = {top.name for top in tree.body
+            if isinstance(top, ast.FunctionDef)
+            and top.name.startswith("run_")}
+    assert runs == {"run_to_memory"}

@@ -5,11 +5,13 @@ from pyspark.sql import functions as F
 
 from nyctaxidatapipeline_spark.sources import load_table
 from nyctaxidatapipeline_spark.streaming.jobs import (
-    run_foreach_batch_parquet,
+    drain,
+    parquet_append_fn,
     run_to_memory,
     session_window_counts,
     sliding_event_counts,
     stateful_running_totals,
+    stream_files,
     stream_table,
 )
 
@@ -71,8 +73,8 @@ def test_stateful_running_totals(spark):
 def test_foreach_batch_parquet_sink(spark, tmp_path):
     out = str(tmp_path / "stream_out")
     stream = stream_table(spark, SF, "events")
-    q = run_foreach_batch_parquet(
-        stream.filter(F.col("event_type") == "purchase"), out)
+    q = drain(stream.filter(F.col("event_type") == "purchase"),
+              parquet_append_fn(out))
     try:
         landed = spark.read.parquet(out)
         n_batch = (load_table(spark, SF, "events")
@@ -143,15 +145,15 @@ def test_incremental_rollup_stream_equals_batch(spark, tmp_path):
     )
     from nyctaxidatapipeline_spark.sources import load_table
     from nyctaxidatapipeline_spark.streaming.jobs import (
-        run_incremental_rollup,
+        rollup_merge_fn,
         stream_table,
     )
 
     sf = "/root/testdata/sf0.001"
     state = str(tmp_path / "state")
     ev = stream_table(spark, sf, "events")
-    q = run_incremental_rollup(ev, state, ["event_type"], "value",
-                               checkpoint_dir=str(tmp_path / "ckpt"))
+    q = drain(ev, rollup_merge_fn(state, ["event_type"], "value"),
+              checkpoint_dir=str(tmp_path / "ckpt"))
     q.stop()
     got = {tuple(r) for r in
            finalize(spark.read.parquet(state)).collect()}
@@ -171,15 +173,14 @@ def test_incremental_rollup_replay_is_exactly_once(spark, tmp_path):
     from nyctaxidatapipeline_spark.streaming.jobs import (
         applied_epoch,
         rollup_merge_fn,
-        run_incremental_rollup,
         stream_table,
     )
 
     sf = "/root/testdata/sf0.001"
     state = str(tmp_path / "state")
     ev = stream_table(spark, sf, "events")
-    q = run_incremental_rollup(ev, state, ["event_type"], "value",
-                               checkpoint_dir=str(tmp_path / "ckpt"))
+    q = drain(ev, rollup_merge_fn(state, ["event_type"], "value"),
+              checkpoint_dir=str(tmp_path / "ckpt"))
     q.stop()
     committed = {tuple(r) for r in
                  finalize(spark.read.parquet(state)).collect()}
@@ -216,15 +217,15 @@ def test_streaming_dedup_admission_equals_batch(spark, tmp_path):
     )
     from nyctaxidatapipeline_spark.sources import load_table
     from nyctaxidatapipeline_spark.streaming.jobs import (
-        run_incremental_dedup,
+        dedup_admit_fn,
         stream_table,
     )
 
     sf = "/root/testdata/sf0.001"
     corpus = str(tmp_path / "corpus")
     docs = stream_table(spark, sf, "documents")
-    q = run_incremental_dedup(docs, corpus,
-                              checkpoint_dir=str(tmp_path / "ckpt"))
+    q = drain(docs, dedup_admit_fn(corpus, "text", "doc_id"),
+              checkpoint_dir=str(tmp_path / "ckpt"))
     q.stop()
     got = {tuple(r) for r in (spark.read
                               .option("basePath", corpus)
@@ -248,15 +249,15 @@ def test_streaming_near_dup_admission_equals_batch(spark, tmp_path):
     )
     from nyctaxidatapipeline_spark.sources import load_table
     from nyctaxidatapipeline_spark.streaming.jobs import (
-        run_streaming_near_dup,
+        near_dup_admit_fn,
         stream_table,
     )
 
     sf = "/root/testdata/sf0.001"
     corpus = str(tmp_path / "corpus")
     docs = stream_table(spark, sf, "documents")
-    q = run_streaming_near_dup(docs, corpus,
-                               checkpoint_dir=str(tmp_path / "ckpt"))
+    q = drain(docs, near_dup_admit_fn(corpus, "text", "doc_id"),
+              checkpoint_dir=str(tmp_path / "ckpt"))
     q.stop()
     got = {r.doc_id for r in (spark.read
                               .option("basePath", corpus)
@@ -330,7 +331,7 @@ def test_streaming_dedup_replay_and_increment(spark, tmp_path):
 
 def test_versioned_append_stream_epochs_and_replay(spark, tmp_path):
     from nyctaxidatapipeline_spark.streaming.jobs import (
-        run_versioned_append,
+        versioned_append_fn,
     )
     from nyctaxidatapipeline_spark.versioned import (
         _load_manifest,
@@ -340,9 +341,9 @@ def test_versioned_append_stream_epochs_and_replay(spark, tmp_path):
 
     t = str(tmp_path / "vtable")
     stream = stream_table(spark, SF, "events")
-    q = run_versioned_append(
-        stream.filter(F.col("event_type") == "purchase")
-              .select("user_id", "event_type", "value"), t)
+    q = drain(stream.filter(F.col("event_type") == "purchase")
+              .select("user_id", "event_type", "value"),
+              versioned_append_fn(t))
     try:
         vs = table_versions(t)
         assert vs, "no versions committed"
@@ -361,10 +362,10 @@ def test_versioned_append_stream_epochs_and_replay(spark, tmp_path):
         # manifest epoch check must skip them all — no duplicates, no
         # new versions
         n_versions = len(table_versions(t))
-        q2 = run_versioned_append(
-            stream_table(spark, SF, "events")
-            .filter(F.col("event_type") == "purchase")
-            .select("user_id", "event_type", "value"), t)
+        q2 = drain(stream_table(spark, SF, "events")
+                   .filter(F.col("event_type") == "purchase")
+                   .select("user_id", "event_type", "value"),
+                   versioned_append_fn(t))
         q2.stop()
         assert len(table_versions(t)) == n_versions
         assert read_version(spark, t).count() == want
@@ -430,7 +431,7 @@ def test_streaming_warc_ingestion_e2e(spark, tmp_path):
         warc_date_for,
     )
     from nyctaxidatapipeline_spark.streaming.jobs import (
-        run_warc_ingestion,
+        warc_admit_fn,
     )
 
     def rec(i, text):
@@ -454,8 +455,8 @@ def test_streaming_warc_ingestion_e2e(spark, tmp_path):
     os.utime(land / "seg-1.warc.gz", (2000, 2000))
 
     corpus = str(tmp_path / "corpus")
-    q = run_warc_ingestion(spark, str(land), corpus,
-                           checkpoint_dir=str(tmp_path / "ckpt"))
+    q = drain(stream_files(spark, str(land)), warc_admit_fn(corpus),
+              checkpoint_dir=str(tmp_path / "ckpt"))
     q.stop()
     read = lambda: {(r.doc_id, r.text) for r in
                     spark.read.option("basePath", corpus)
@@ -465,8 +466,8 @@ def test_streaming_warc_ingestion_e2e(spark, tmp_path):
                    (3, "epsilon zeta"), (4, "eta theta")}  # 5 deduped
 
     # restart with the same checkpoint: nothing new -> nothing admitted
-    q2 = run_warc_ingestion(spark, str(land), corpus,
-                            checkpoint_dir=str(tmp_path / "ckpt"))
+    q2 = drain(stream_files(spark, str(land)), warc_admit_fn(corpus),
+               checkpoint_dir=str(tmp_path / "ckpt"))
     q2.stop()
     assert read() == got
 
@@ -482,16 +483,16 @@ def test_streaming_hll_equals_batch_sketch(spark, tmp_path):
     )
     from nyctaxidatapipeline_spark.sources import load_table
     from nyctaxidatapipeline_spark.streaming.jobs import (
-        run_streaming_hll,
+        hll_merge_fn,
         stream_table,
     )
     from pyspark.sql import functions as F
 
     sf = "/root/testdata/sf0.001"
     state = str(tmp_path / "hll_state")
-    q = run_streaming_hll(stream_table(spark, sf, "events"), state,
-                          "event_type", "user_id", b=6,
-                          checkpoint_dir=str(tmp_path / "ckpt"))
+    q = drain(stream_table(spark, sf, "events"),
+              hll_merge_fn(state, "event_type", "user_id", b=6),
+              checkpoint_dir=str(tmp_path / "ckpt"))
     q.stop()
     batch_ev = load_table(spark, sf, "events")
     got_regs = {(r.event_type, r.bucket, r.M) for r in
@@ -550,16 +551,16 @@ def test_streaming_cms_equals_batch_sketch(spark, tmp_path):
     )
     from nyctaxidatapipeline_spark.sources import load_table
     from nyctaxidatapipeline_spark.streaming.jobs import (
-        run_streaming_cms,
+        cms_merge_fn,
         stream_table,
     )
     from pyspark.sql import functions as F
 
     sf = "/root/testdata/sf0.001"
     state = str(tmp_path / "cms_state")
-    q = run_streaming_cms(stream_table(spark, sf, "events"), state,
-                          "event_type", w=256, d=3,
-                          checkpoint_dir=str(tmp_path / "ckpt"))
+    q = drain(stream_table(spark, sf, "events"),
+              cms_merge_fn(state, "event_type", w=256, d=3),
+              checkpoint_dir=str(tmp_path / "ckpt"))
     q.stop()
     batch_ev = load_table(spark, sf, "events")
     got = {(r.r, r.c): r.cnt for r in
@@ -613,7 +614,7 @@ def test_streaming_tfrecord_ingestion_e2e(spark, tmp_path):
         frame_records,
     )
     from nyctaxidatapipeline_spark.streaming.jobs import (
-        run_tfrecord_ingestion,
+        tfrecord_admit_fn,
     )
 
     def shard(docs):
@@ -630,15 +631,15 @@ def test_streaming_tfrecord_ingestion_e2e(spark, tmp_path):
         os.utime(f, (1000 + i, 1000 + i))
 
     corpus = str(tmp_path / "corpus")
-    q = run_tfrecord_ingestion(spark, str(land), corpus,
-                               checkpoint_dir=str(tmp_path / "ckpt"))
+    q = drain(stream_files(spark, str(land)), tfrecord_admit_fn(corpus),
+              checkpoint_dir=str(tmp_path / "ckpt"))
     q.stop()
     got = {(r.doc_id, r.text) for r in
            spark.read.option("basePath", corpus).parquet(corpus).collect()}
     assert got == {(1, "alpha beta"), (2, "gamma delta"),
                    (3, "epsilon zeta")}
-    q2 = run_tfrecord_ingestion(spark, str(land), corpus,
-                                checkpoint_dir=str(tmp_path / "ckpt"))
+    q2 = drain(stream_files(spark, str(land)), tfrecord_admit_fn(corpus),
+               checkpoint_dir=str(tmp_path / "ckpt"))
     q2.stop()
     assert {(r.doc_id, r.text) for r in
             spark.read.option("basePath", corpus)
@@ -655,7 +656,7 @@ def test_streaming_shard_ingestion_e2e(spark, tmp_path):
 
     from nyctaxidatapipeline_spark.sources.compressed import compress
     from nyctaxidatapipeline_spark.streaming.jobs import (
-        run_shard_ingestion,
+        shard_admit_fn,
     )
 
     def shard(docs, codec):
@@ -676,8 +677,8 @@ def test_streaming_shard_ingestion_e2e(spark, tmp_path):
         os.utime(f, (1000 + i, 1000 + i))
 
     corpus = str(tmp_path / "corpus")
-    q = run_shard_ingestion(spark, str(land), corpus,
-                            checkpoint_dir=str(tmp_path / "ckpt"))
+    q = drain(stream_files(spark, str(land)), shard_admit_fn(corpus),
+              checkpoint_dir=str(tmp_path / "ckpt"))
     q.stop()
     got = {(r.doc_id, r.text) for r in
            spark.read.option("basePath", corpus).parquet(corpus).collect()}
@@ -685,8 +686,8 @@ def test_streaming_shard_ingestion_e2e(spark, tmp_path):
     assert got == {(1, "alpha beta"), (2, "gamma delta"),
                    (3, "epsilon zeta"), (5, "eta theta")}
     # restart with the same checkpoint: no new work, nothing re-admitted
-    q2 = run_shard_ingestion(spark, str(land), corpus,
-                             checkpoint_dir=str(tmp_path / "ckpt"))
+    q2 = drain(stream_files(spark, str(land)), shard_admit_fn(corpus),
+               checkpoint_dir=str(tmp_path / "ckpt"))
     q2.stop()
     assert {(r.doc_id, r.text) for r in
             spark.read.option("basePath", corpus)
@@ -810,7 +811,7 @@ def test_streaming_cross_signal_drained_equals_batch(spark, tmp_path):
     )
     from nyctaxidatapipeline_spark.sources import load_table
     from nyctaxidatapipeline_spark.streaming.jobs import (
-        run_streaming_cross_signal_admission,
+        cross_signal_admit_fn,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -824,8 +825,8 @@ def test_streaming_cross_signal_drained_equals_batch(spark, tmp_path):
               .schema(spark.read.parquet(src).schema)
               .option("maxFilesPerTrigger", "8").load(src))
     corpus = str(tmp_path / "corpus")
-    q = run_streaming_cross_signal_admission(
-        stream, corpus, cosine_threshold=0.4, n_centroids=4, nprobe=4,
+    q = drain(stream, cross_signal_admit_fn(
+        corpus, cosine_threshold=0.4, n_centroids=4, nprobe=4),
         checkpoint_dir=str(tmp_path / "ckpt"))
     q.stop()
     got = {r.doc_id for r in spark.read.option("basePath", corpus)
@@ -936,7 +937,7 @@ def test_streaming_semantic_indexed_drained_equals_batch(spark,
     )
     from nyctaxidatapipeline_spark.sources import load_table
     from nyctaxidatapipeline_spark.streaming.jobs import (
-        run_streaming_semantic_admission_indexed,
+        semantic_admit_indexed_fn,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -949,8 +950,8 @@ def test_streaming_semantic_indexed_drained_equals_batch(spark,
               .option("maxFilesPerTrigger", "8").load(src))
     corpus = str(tmp_path / "corpus")
     index = str(tmp_path / "index")
-    q = run_streaming_semantic_admission_indexed(
-        stream, corpus, index, threshold=0.4, n_centroids=4, nprobe=4,
+    q = drain(stream, semantic_admit_indexed_fn(
+        corpus, index, threshold=0.4, n_centroids=4, nprobe=4),
         checkpoint_dir=str(tmp_path / "ckpt"))
     q.stop()
     got = {r.vec_id for r in spark.read.option("basePath", corpus)
@@ -982,7 +983,6 @@ def test_streaming_quantile_sketch_equals_batch_and_replays(
     from nyctaxidatapipeline_spark.streaming.jobs import (
         quantile_sketch_merge_fn,
         read_quantile_threshold,
-        run_streaming_quantile_sketch,
         stream_table,
     )
 
@@ -991,9 +991,9 @@ def test_streaming_quantile_sketch_equals_batch_and_replays(
     k = 256
     li_stream = stream_table(spark, sf, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_partkey", "l_extendedprice")
-    q = run_streaming_quantile_sketch(
-        li_stream, state, "l_extendedprice",
-        ["l_orderkey", "l_linenumber", "l_partkey"], k=k,
+    q = drain(li_stream, quantile_sketch_merge_fn(
+        state, "l_extendedprice",
+        ["l_orderkey", "l_linenumber", "l_partkey"], k=k),
         checkpoint_dir=str(tmp_path / "ckpt"))
     q.stop()
     li = load_table(spark, sf, "lineitem")
@@ -1039,7 +1039,6 @@ def test_streaming_grouped_quantile_sketch_equals_batch(spark,
     from nyctaxidatapipeline_spark.streaming.jobs import (
         grouped_quantile_sketch_merge_fn,
         read_grouped_percentiles,
-        run_streaming_grouped_quantile_sketch,
         stream_table,
     )
 
@@ -1049,9 +1048,9 @@ def test_streaming_grouped_quantile_sketch_equals_batch(spark,
     cols = ["l_orderkey", "l_linenumber", "l_partkey"]
     li_stream = stream_table(spark, sf, "lineitem").select(
         "l_returnflag", *cols, "l_extendedprice")
-    q = run_streaming_grouped_quantile_sketch(
-        li_stream, state, ["l_returnflag"], "l_extendedprice", cols,
-        k=k, checkpoint_dir=str(tmp_path / "ckpt"))
+    q = drain(li_stream, grouped_quantile_sketch_merge_fn(
+        state, ["l_returnflag"], "l_extendedprice", cols, k=k),
+        checkpoint_dir=str(tmp_path / "ckpt"))
     q.stop()
     li = load_table(spark, sf, "lineitem")
     want = {(r.l_returnflag, r._rk, r._v)
@@ -1155,21 +1154,21 @@ def test_streaming_near_dup_indexed_drained_equals_plain_door(
     """Same stream through the indexed and the re-signing doors →
     identical admitted corpora (the index is a pure physical skip)."""
     from nyctaxidatapipeline_spark.streaming.jobs import (
-        run_streaming_near_dup,
-        run_streaming_near_dup_indexed,
+        near_dup_admit_fn,
+        near_dup_admit_indexed_fn,
         stream_table,
     )
 
     sf = "/root/testdata/sf0.001"
     docs = stream_table(spark, sf, "documents")
     plain = str(tmp_path / "plain")
-    q = run_streaming_near_dup(docs, plain,
-                               checkpoint_dir=str(tmp_path / "c1"))
+    q = drain(docs, near_dup_admit_fn(plain, "text", "doc_id"),
+              checkpoint_dir=str(tmp_path / "c1"))
     q.stop()
     docs2 = stream_table(spark, sf, "documents")
     idxd = str(tmp_path / "idxd")
-    q = run_streaming_near_dup_indexed(
-        docs2, idxd, str(tmp_path / "idx"),
+    q = drain(docs2, near_dup_admit_indexed_fn(
+        idxd, str(tmp_path / "idx"), "text", "doc_id"),
         checkpoint_dir=str(tmp_path / "c2"))
     q.stop()
     a = {r.doc_id for r in spark.read.option("basePath", plain)

@@ -3,7 +3,7 @@
 VERDICT r10 task 7: the front doors (exact fingerprint, MinHash
 near-dup, IVF semantic, cross-signal) are e2e-gated for correctness
 (drained == batch, replay no-op) but had no throughput datum. This
-times the exact per-batch code path the streaming jobs run — the
+times the exact per-batch code path ``streaming.jobs.drain`` runs — the
 ``*_admit_fn`` foreachBatch functions, invoked per epoch the way
 ``foreachBatch`` invokes them — over K successive increments of the
 fixture's documents(+embeddings) table, so the datum shows BOTH
