@@ -38,6 +38,8 @@ pure-JVM production defaults.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -99,26 +101,12 @@ def jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
     # doing repeated near-dup sweeps can persist the input themselves.
     sh = doc_shingles(df, text_col, id_col, n)
     sizes = sh.groupBy(id_col).agg(F.count("*").alias("set_size"))
-    # Posting-list pair expansion instead of a shingle self-join: group ids
-    # per shingle (the df cap bounds list size AND replaces a separate
-    # hot-shingle anti-join), then expand sorted-id pairs in-place. One
-    # hash-partitioned shuffle on shingle — no broadcast of a full side,
-    # so the same plan holds when the corpus is 100 TB.
-    lists = (sh.groupBy("shingle")
-               .agg(F.sort_array(F.collect_set(id_col)).alias("ids"))
-               .filter(F.size("ids") >= 2))
-    if max_df is not None:
-        lists = lists.filter(F.size("ids") <= max_df)
-    ids = F.col("ids")
-    pair_structs = F.flatten(F.transform(
-        ids,
-        lambda x, i: F.transform(
-            F.slice(ids, i + F.lit(2), F.size(ids)),
-            lambda y: F.struct(x.alias("id_a"), y.alias("id_b")))))
-    shared = (lists.select(F.explode(pair_structs).alias("p"))
-                   .select("p.id_a", "p.id_b")
-                   .groupBy("id_a", "id_b")
-                   .agg(F.count("*").alias("n_shared")))
+    # Posting lists per shingle instead of a shingle self-join; the df
+    # cap bounds list size AND replaces a separate hot-shingle anti-join.
+    shared = (_posting_pairs(sh, ["shingle"], id_col, max_df)
+              .select("p.id_a", "p.id_b")
+              .groupBy("id_a", "id_b")
+              .agg(F.count("*").alias("n_shared")))
     sa = sizes.select(F.col(id_col).alias("id_a"),
                       F.col("set_size").alias("size_a"))
     sb = sizes.select(F.col(id_col).alias("id_b"),
@@ -223,18 +211,76 @@ def _band_buckets(sig: DataFrame, id_col: str, bands: int, r: int,
     tuple (DuckDB-reproducible); default packs it through xxhash64.
     Shared by the self-join (``minhash_lsh_pairs``) and the
     batch-vs-corpus (``incremental_minhash_admission``) paths."""
+    rows = [[F.col(f"h{bi * r + j}") for j in range(r)]
+            for bi in range(bands)]
     if portable:
-        bucket_of = lambda bi: F.concat_ws(  # noqa: E731
-            ":", *[F.col(f"h{bi * r + j}").cast("string")
-                   for j in range(r)])
+        buckets = [F.concat_ws(":", *[h.cast("string") for h in hs])
+                   for hs in rows]
     else:
-        bucket_of = lambda bi: F.xxhash64(  # noqa: E731
-            *[F.col(f"h{bi * r + j}") for j in range(r)])
-    band_cols = [
-        F.struct(F.lit(bi).alias("band"), bucket_of(bi).alias("bucket"))
-        for bi in range(bands)]
-    return (sig.select(id_col, F.explode(F.array(*band_cols)).alias("bb"))
-               .select(id_col, "bb.band", "bb.bucket"))
+        buckets = [F.xxhash64(*hs) for hs in rows]
+    return _band_table(sig, id_col, buckets)
+
+
+def _band_table(sig: DataFrame, id_col: str, buckets: list[Column],
+                keep: tuple[str, ...] = ()) -> DataFrame:
+    """(id, *keep, band, bucket) — one row per band of every signature
+    row: ``buckets[bi]`` is band ``bi``'s bucket key over ``sig``'s
+    columns, exploded from one array of (band, bucket) structs. The
+    banding step of every LSH family here (MinHash, SimHash, RP-LSH);
+    ``keep`` carries signature columns a caller needs past the
+    banding (SimHash's words, for the Hamming check)."""
+    band_cols = [F.struct(F.lit(bi).alias("band"), b.alias("bucket"))
+                 for bi, b in enumerate(buckets)]
+    return (sig.select(id_col, *keep,
+                       F.explode(F.array(*band_cols)).alias("bb"))
+               .select(id_col, *keep, "bb.band", "bb.bucket"))
+
+
+def _posting_pairs(src: DataFrame, keys: list[str], entry: str | Column,
+                   max_size: int | None = None,
+                   pair: Callable[[Column, Column], Column] | None = None
+                   ) -> DataFrame:
+    """The posting-list pair expansion under every near-dup candidate
+    generator: group ``src`` by ``keys``, collect each key's sorted
+    distinct ``entry`` values, keep lists of 2 up to ``max_size``
+    entries, and explode ``pair(x, y)`` for every x listed before y —
+    one struct column ``p``. ``pair`` defaults to (id_a, id_b); sorted
+    lists of unique ids emit each pair once, smaller id first.
+
+    A groupBy and in-array combinations rather than a key self-join:
+    one shuffle keyed on ``keys``, no broadcast side, so the plan holds
+    at any corpus size. ``max_size`` is the overfull-list guard —
+    expansion is quadratic in list size."""
+    if pair is None:
+        pair = lambda x, y: F.struct(  # noqa: E731
+            x.alias("id_a"), y.alias("id_b"))
+    lists = (src.groupBy(*keys)
+                .agg(F.sort_array(F.collect_set(entry)).alias("ids"))
+                .filter(F.size("ids") >= 2))
+    if max_size is not None:
+        lists = lists.filter(F.size("ids") <= max_size)
+    ids = F.col("ids")
+    pairs = F.flatten(F.transform(
+        ids,
+        lambda x, i: F.transform(F.slice(ids, i + F.lit(2), F.size(ids)),
+                                 lambda y: pair(x, y))))
+    return lists.select(F.explode(pairs).alias("p"))
+
+
+def _simhash_buckets(bands: int) -> list[Column]:
+    """SimHash's pigeonhole band keys over (sh_lo, sh_hi): band ``bi``
+    is bits [bi·w, (bi+1)·w) of the 64-bit signature, w = 64/bands.
+    Slices must not straddle the two 32-bit words, so ``bands`` must be
+    one of 2/4/8/16/32."""
+    width = 64 // bands
+    if width > 32 or 32 % width:
+        raise ValueError(
+            f"bands ({bands}) must be one of 2/4/8/16/32 so band slices "
+            "align with the 32-bit signature words")
+    return [F.shiftright(F.col("sh_lo") if bi * width < 32
+                         else F.col("sh_hi"), (bi * width) % 32)
+             .bitwiseAND(F.lit((1 << width) - 1))
+            for bi in range(bands)]
 
 
 def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
@@ -314,22 +360,8 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
         sig = minhash_signatures(df, text_col, id_col, n, num_hashes,
                                  portable, shingles_df=sh_all)
         buckets = _band_buckets(sig, id_col, bands, r, portable)
-    # Pair expansion per bucket (groupBy + in-array combinations) rather
-    # than a bucket self-join — one shuffle keyed on (band, bucket), no
-    # broadcast side, scale-stable.
-    blists = (buckets.groupBy("band", "bucket")
-                     .agg(F.sort_array(F.collect_set(id_col)).alias("ids"))
-                     .filter(F.size("ids") >= 2))
-    if max_bucket is not None:
-        blists = blists.filter(F.size("ids") <= max_bucket)
-    ids = F.col("ids")
-    pair_structs = F.flatten(F.transform(
-        ids,
-        lambda x, i: F.transform(
-            F.slice(ids, i + F.lit(2), F.size(ids)),
-            lambda y: F.struct(x.alias("id_a"), y.alias("id_b")))))
-    cand = (blists.select(F.explode(pair_structs).alias("p"))
-                  .select("p.id_a", "p.id_b").distinct())
+    cand = (_posting_pairs(buckets, ["band", "bucket"], id_col, max_bucket)
+            .select("p.id_a", "p.id_b").distinct())
     # Verify ONLY the candidates (never the full O(pairs) join — that would
     # defeat LSH): join each side's distinct-shingle set and compute
     # J = |A∩B| / |A∪B| per pair. Same integers as the brute-force
@@ -725,21 +757,12 @@ def incremental_minhash_admission(new: DataFrame, corpus: DataFrame,
                    .select("_b", "_p").distinct())
     # batch × batch candidates: posting-list expansion within the
     # batch's own buckets; only the larger id of a pair is at risk.
-    ids = F.col("ids")
-    pair_structs = F.flatten(F.transform(
-        ids,
-        lambda x, i: F.transform(
-            F.slice(ids, i + F.lit(2), F.size(ids)),
-            lambda y: F.struct(y.alias("_b"), x.alias("_p")))))
-    blists_b = (bk_b.groupBy("band", "bucket")
-                    .agg(F.sort_array(F.collect_set(id_col)).alias("ids"))
-                    .filter(F.size("ids") >= 2))
-    if max_bucket is not None:
-        # symmetric storm backstop: a hot class INSIDE the batch is
-        # capped exactly like a hot corpus bucket
-        blists_b = blists_b.filter(F.size("ids") <= max_bucket)
-    cand_bb = (blists_b.select(F.explode(pair_structs).alias("p"))
-                       .select("p._b", "p._p").distinct())
+    # max_bucket is the symmetric storm backstop: a hot class INSIDE
+    # the batch is capped exactly like a hot corpus bucket.
+    cand_bb = (_posting_pairs(bk_b, ["band", "bucket"], id_col, max_bucket,
+                              lambda x, y: F.struct(y.alias("_b"),
+                                                    x.alias("_p")))
+               .select("p._b", "p._p").distinct())
     cand = cand_cb.union(cand_bb).distinct()
     # Verify only the touched docs' shingle sets (semi-join BEFORE the
     # collect_set aggregate keeps the corpus-side aggregate bounded by
@@ -1036,49 +1059,26 @@ def simhash_near_pairs(df: DataFrame, feature_col: Column, id_col: str,
     for the dropped hot buckets); ``max_bucket=None`` opts into the
     exhaustive semantics for correctness oracles and recall studies.
     """
-    width = 64 // bands
-    if width > 32 or 32 % width:
-        raise ValueError(
-            f"bands ({bands}) must be one of 2/4/8/16/32 so band slices "
-            "align with the 32-bit signature words")
-    sig = simhash_words(df, feature_col, id_col, portable)
+    buckets = _band_table(simhash_words(df, feature_col, id_col, portable),
+                          id_col, _simhash_buckets(bands),
+                          keep=("sh_lo", "sh_hi"))
+    # Same posting-list expansion as MinHash LSH over (id, lo, hi)
+    # entries: structs sort by id (unique), so pairs come out
+    # id_a < id_b and carry both signatures for the Hamming distance.
+    entry = F.struct(F.col(id_col).alias("id"), F.col("sh_lo").alias("lo"),
+                     F.col("sh_hi").alias("hi"))
 
-    def bucket_of(bi: int) -> Column:
-        word = F.col("sh_lo") if bi * width < 32 else F.col("sh_hi")
-        off = (bi * width) % 32
-        return (F.shiftright(word, off)
-                 .bitwiseAND(F.lit((1 << width) - 1)))
+    def hamming_pair(x: Column, y: Column) -> Column:
+        return F.struct(x["id"].alias("id_a"), y["id"].alias("id_b"),
+                        (F.bit_count(x["lo"].bitwiseXOR(y["lo"]))
+                         + F.bit_count(x["hi"].bitwiseXOR(y["hi"])))
+                        .alias("hamming"))
 
-    band_cols = [
-        F.struct(F.lit(bi).alias("band"), bucket_of(bi).alias("bucket"))
-        for bi in range(bands)]
-    buckets = (sig.select(id_col, "sh_lo", "sh_hi",
-                          F.explode(F.array(*band_cols)).alias("bb"))
-                  .select(id_col, "sh_lo", "sh_hi", "bb.band", "bb.bucket"))
-    # Same posting-list expansion as MinHash LSH: structs sort by id
-    # (unique), so pairs come out id_a < id_b without a join.
-    entries = F.sort_array(F.collect_set(
-        F.struct(F.col(id_col).alias("id"), F.col("sh_lo").alias("lo"),
-                 F.col("sh_hi").alias("hi"))))
-    blists = (buckets.groupBy("band", "bucket")
-                     .agg(entries.alias("es"))
-                     .filter(F.size("es") >= 2))
-    if max_bucket is not None:
-        blists = blists.filter(F.size("es") <= int(max_bucket))
-    es = F.col("es")
-    pair_structs = F.flatten(F.transform(
-        es,
-        lambda x, i: F.transform(
-            F.slice(es, i + F.lit(2), F.size(es)),
-            lambda y: F.struct(
-                x["id"].alias("id_a"), y["id"].alias("id_b"),
-                (F.bit_count(x["lo"].bitwiseXOR(y["lo"]))
-                 + F.bit_count(x["hi"].bitwiseXOR(y["hi"])))
-                 .alias("hamming")))))
-    return (blists.select(F.explode(pair_structs).alias("p"))
-                  .select("p.id_a", "p.id_b", "p.hamming")
-                  .distinct()
-                  .filter(F.col("hamming") <= max_hamming))
+    return (_posting_pairs(buckets, ["band", "bucket"], entry, max_bucket,
+                           hamming_pair)
+            .select("p.id_a", "p.id_b", "p.hamming")
+            .distinct()
+            .filter(F.col("hamming") <= max_hamming))
 
 
 def bucket_cap_audit(buckets: DataFrame, id_col: str,
@@ -1113,10 +1113,10 @@ def bucket_cap_audit(buckets: DataFrame, id_col: str,
     established runtime-scalar pattern; no collect, no all-pairs.
     A zero-row ``buckets`` input yields the all-zeros row.
 
-    r16 (guide §1.2/§2.4): both doc-distinct counts now derive from
-    the GROUPED bucket table (one explode + one two-distinct
-    aggregate) instead of ``docs_banded`` re-aggregating the raw
-    banding table — that aggregate shared no exchange with the
+    r16 (guide §1.2/§2.4): both doc counts derive from the GROUPED
+    bucket table (one explode, then each doc's largest bucket by one
+    ``groupBy(_id)``) instead of ``docs_banded`` re-aggregating the
+    raw banding table — that aggregate shared no exchange with the
     grouped subtree, so the whole upstream signature pass executed a
     second time (a full corpus tokenize+hash at 100 TB). The union of
     bucket member sets IS the banded doc set, so the values are
@@ -1136,11 +1136,16 @@ def bucket_cap_audit(buckets: DataFrame, id_col: str,
         F.coalesce(F.sum(F.when(c > mb, c * (c - 1) / 2)
                           .otherwise(0)).cast("long"),
                    F.lit(0)).alias("cand_pairs_dropped"))
+    # Per doc, its hottest bucket: a doc is dropped iff that bucket is
+    # over the cap. Two count_distincts over different children would
+    # plan as an Expand whose projection order follows session-wide
+    # exprIds, so the plan would depend on earlier queries.
     doc_stats = (sized.select(c.alias("_c"), F.explode("ids").alias("_id"))
-                      .agg(F.count_distinct("_id").alias("docs_banded"),
-                           F.count_distinct(
-                               F.when(F.col("_c") > mb, F.col("_id")))
-                            .alias("docs_dropped")))
+                      .groupBy("_id").agg(F.max("_c").alias("_mc"))
+                      .agg(F.count("*").alias("docs_banded"),
+                           F.coalesce(
+                               F.sum((F.col("_mc") > mb).cast("long")),
+                               F.lit(0)).alias("docs_dropped")))
     return (stats.join(doc_stats)
                  .select("multi_buckets", "dropped_buckets",
                          "max_bucket_size", "cand_pairs_dropped",
@@ -1186,25 +1191,8 @@ def simhash_cap_audit(df: DataFrame, feature_col: Column, id_col: str,
     arithmetic (64/bands-bit words, band slices never straddle the
     two 32-bit signature words), so the audited buckets are exactly
     the ones the capped operator reads."""
-    width = 64 // bands
-    if width > 32 or 32 % width:
-        raise ValueError(
-            f"bands ({bands}) must be one of 2/4/8/16/32 so band slices "
-            "align with the 32-bit signature words")
-    sig = simhash_words(df, feature_col, id_col, portable)
-
-    def bucket_of(bi: int) -> Column:
-        word = F.col("sh_lo") if bi * width < 32 else F.col("sh_hi")
-        off = (bi * width) % 32
-        return (F.shiftright(word, off)
-                 .bitwiseAND(F.lit((1 << width) - 1)))
-
-    band_cols = [
-        F.struct(F.lit(bi).alias("band"), bucket_of(bi).alias("bucket"))
-        for bi in range(bands)]
-    buckets = (sig.select(id_col, F.explode(F.array(*band_cols))
-                          .alias("bb"))
-                  .select(id_col, "bb.band", "bb.bucket"))
+    buckets = _band_table(simhash_words(df, feature_col, id_col, portable),
+                          id_col, _simhash_buckets(bands))
     return bucket_cap_audit(buckets, id_col, max_bucket)
 
 

@@ -1,25 +1,34 @@
 """Similarity search over embedding columns (``array<float>``).
 
-North-star operator (BASELINE.json): approximate-nearest-neighbor over the
-``embeddings`` fixture. Two paths:
+North-star operator (BASELINE.json): nearest-neighbor search and
+near-duplicate detection over the ``embeddings`` fixture. Entry points:
 
-  * **brute_force_topk** — exact cosine top-k: broadcast the query set,
-    cross-join the corpus, fold the dot product with ``F.aggregate`` /
-    ``F.zip_with`` (JVM-side lambda expressions — no Python, no UDF), rank
-    with a per-query window. The arithmetic is sequential-fold double math,
-    bitwise-identical to DuckDB's ``list_dot_product`` on DOUBLE[] — which
-    makes it oracle-testable.
-  * **rp_lsh_topk** — the scale path: random-hyperplane LSH. P pseudo-random
-    planes (components derived from ``xxhash64`` — deterministic, no RNG
-    state to ship), P-bit signature per vector, candidates = signature
-    bucket collisions (multi-probe within Hamming ≤ 1), exact rerank of
-    candidates only. Shuffle volume O(n·probes), never O(n²).
+  * **brute_force_topk / hard_negatives** — exact cosine top-k:
+    broadcast the query set, cross-join the corpus, fold the dot product
+    with ``F.aggregate`` / ``F.zip_with`` (JVM-side lambda expressions —
+    no Python, no UDF), rank with a per-query window. The arithmetic is
+    sequential-fold double math, bitwise-identical to DuckDB's
+    ``list_dot_product`` on DOUBLE[] — which makes it oracle-testable.
+  * **embedding_near_dup / embedding_near_dup_blocked** — exact
+    all-pairs cosine ≥ threshold: the Catalyst fold (oracle-testable),
+    and the block-pair BLAS kernel, which ships every vector to the
+    block pairs it belongs to and collects nothing on the driver.
+  * **rp_lsh_near_dup / rp_lsh_near_dup_auto** — the scale path for
+    near-dups: random-hyperplane LSH. Pseudo-random planes (md5-derived
+    literals, or per-row xxhash64 components when the dimension is
+    unknown), per-band signature buckets, candidates = bucket
+    collisions, exact rerank of candidates only. Shuffle volume
+    O(n·bands), never O(n²). ``_auto`` derives (planes, bands) from the
+    corpus count; ``build_rp_lsh_index`` persists its buckets.
+  * **ivf_topk / knn_graph_ivf** — IVF (k-means coarse quantizer):
+    probe the ``nprobe`` nearest lists, score probed lists only.
+  * **knn_graph** — the exact kNN graph over the block-pair layout.
+  * **incremental_semantic_admission(_auto)** — the daily-increment
+    semantic near-dup gate against a standing corpus.
 
-Scale notes (100 TB / billions of vectors): brute force is O(n·q) — fine
-for q≈10³ queries against any corpus (one scan), wrong for all-pairs;
-near-dup uses LSH buckets. Norms are precomputed once per side. For a real
-deployment an IVF index (k-means coarse quantizer) slots in where the
-signature bucketing sits — same join shape.
+The banding and posting-list pair expansion are
+``dedup._band_table`` / ``dedup._posting_pairs``, shared with the
+MinHash and SimHash operators. Norms are precomputed once per side.
 """
 
 from __future__ import annotations
@@ -27,6 +36,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from nyctaxidatapipeline_spark.operators.dedup import (
+    _band_table,
+    _posting_pairs,
+    bucket_cap_audit,
+)
 from nyctaxidatapipeline_spark.operators.indexmeta import (
     check_index_params,
     stamp_index_params,
@@ -211,83 +225,6 @@ def _round6_half_away(sims, tmp):
     np.copysign(tmp, sims, out=sims)
 
 
-def embedding_near_dup_numpy(df: DataFrame, threshold: float = 0.95,
-                             id_col: str = "vec_id",
-                             vec_col: str = "embedding",
-                             max_broadcast_rows: int = 1_000_000,
-                             n_blocks: int = 8) -> DataFrame:
-    """All-pairs cosine near-dup via Arrow-batched NumPy matmul.
-
-    Same output contract as ``embedding_near_dup`` but each partition
-    computes a (batch x corpus) BLAS matmul against a broadcast normalized
-    corpus matrix — dense linear algebra is the one place Catalyst
-    expressions lose to a vectorized Pandas path by >10x.
-
-    Scale guard: the corpus collect + broadcast only happens when the
-    corpus has ≤ ``max_broadcast_rows`` vectors (counted first — one cheap
-    column scan); beyond that this DELEGATES to
-    ``embedding_near_dup_blocked``, the fully distributed block-pair
-    kernel with no driver-side collect. The broadcast path wins below the
-    threshold because it ships each vector once instead of ~n_blocks
-    times; the blocked path is the one that survives past executor memory.
-
-    Values can differ from the fold path in the last ulp (BLAS reorders
-    the sum); both sides round half-away-from-zero to 6 dp (SQL ROUND).
-
-    The kernel tiles the similarity matrix through small PREALLOCATED
-    buffers (``out=``) instead of materializing batch x corpus at once:
-    first-touch page faults dominate fresh large allocations on
-    sandboxed/virtualized kernels (observed ~220 MB/s page-in — a one-shot
-    2000x2000 float64 sims matrix cost seconds), and buffer reuse also
-    keeps per-task memory flat at scale.
-    """
-    import numpy as np
-
-    if df.select(id_col).limit(max_broadcast_rows + 1).count() \
-            > max_broadcast_rows:
-        return embedding_near_dup_blocked(df, threshold, id_col, vec_col,
-                                          n_blocks=n_blocks)
-
-    pdf = df.select(id_col, vec_col).toPandas()
-    ids = pdf[id_col].to_numpy()
-    mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-    mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-    spark = df.sparkSession
-    bc = spark.sparkContext.broadcast((ids, mat))
-
-    def block(batches):
-        import pandas as pd
-        c_ids, c_mat = bc.value
-        ct = np.ascontiguousarray(c_mat.T)
-        n, tile = len(c_ids), 256
-        sim_buf = np.empty((tile, n))
-        tmp_buf = np.empty((tile, n))
-        ge_buf = np.empty((tile, n), dtype=bool)
-        lt_buf = np.empty((tile, n), dtype=bool)
-        for b in batches:
-            if not len(b):
-                continue
-            b_ids = b[id_col].to_numpy()
-            b_mat = np.stack(b[vec_col].to_numpy()).astype(np.float64)
-            b_mat /= np.linalg.norm(b_mat, axis=1, keepdims=True)
-            for s in range(0, len(b_ids), tile):
-                t_ids = b_ids[s:s + tile]
-                m = len(t_ids)
-                sims = sim_buf[:m]
-                np.dot(b_mat[s:s + tile], ct, out=sims)
-                _round6_half_away(sims, tmp_buf[:m])
-                ge, lt = ge_buf[:m], lt_buf[:m]
-                np.greater_equal(sims, threshold, out=ge)
-                np.less.outer(t_ids, c_ids, out=lt)
-                ge &= lt
-                ai, bi = np.nonzero(ge)
-                yield pd.DataFrame({"id_a": t_ids[ai], "id_b": c_ids[bi],
-                                    "cosine": sims[ai, bi]})
-
-    return df.select(id_col, vec_col).mapInPandas(
-        block, schema="id_a long, id_b long, cosine double")
-
-
 def embedding_near_dup_blocked(df: DataFrame, threshold: float = 0.95,
                                id_col: str = "vec_id",
                                vec_col: str = "embedding",
@@ -296,37 +233,23 @@ def embedding_near_dup_blocked(df: DataFrame, threshold: float = 0.95,
 
     Same output contract as ``embedding_near_dup`` — (id_a, id_b, cosine)
     with id_a < id_b, cosine ≥ threshold, rounded 6 dp half-away — with
-    **no driver-side collect anywhere**: every vector is tagged with a
-    deterministic block id (pmod(xxhash64(id), n_blocks)), replicated to
-    exactly the block PAIRS it participates in (side a covers pairs
-    (blk, blk..n_blocks-1); side b covers (0..blk-1, blk) — the diagonal
-    pair ships one copy, the kernel reuses it for both operands), and each
-    of the n_blocks·(n_blocks+1)/2 groups computes one |A|x|B| BLAS
-    matmul inside ``applyInPandas``.
+    **no driver-side collect anywhere**: every vector is replicated to
+    exactly the block PAIRS it participates in (``_block_pairs``), and
+    each of the n_blocks·(n_blocks+1)/2 groups computes one |A|x|B| BLAS
+    matmul inside ``applyInPandas``. Values can differ from the fold
+    path in the last ulp (BLAS reorders the sum); both round
+    half-away-from-zero to 6 dp (SQL ROUND). A zero vector divides to
+    NaN here and never pairs.
 
     Scale: shuffle volume is O(n·(n_blocks+1)) vector copies; per-task
     memory is two blocks (~2n/n_blocks vectors), so ``n_blocks`` is the
     knob that keeps tasks inside executor memory at any corpus size. The
     O(n²d) flops are inherent to the exact contract and spread over
-    independent tasks. Below ~1M vectors the broadcast path
-    (``embedding_near_dup_numpy``) wins — it ships each vector once.
+    independent tasks. The kernel tiles the similarity matrix through
+    small PREALLOCATED buffers (``out=``): first-touch page faults
+    dominate fresh large allocations on virtualized kernels, and reuse
+    keeps per-task memory flat.
     """
-    blk = F.pmod(F.xxhash64(F.col(id_col).cast("string")),
-                 F.lit(n_blocks)).cast("int")
-    base = df.select(F.col(id_col).alias("_id"),
-                     F.col(vec_col).alias("_vec"), blk.alias("_blk"))
-    side_a = (base.withColumn("_pb",
-                              F.explode(F.sequence(F.col("_blk"),
-                                                   F.lit(n_blocks - 1))))
-                  .select(F.col("_blk").alias("_pa"), "_pb",
-                          F.lit("a").alias("_side"), "_id", "_vec"))
-    side_b = (base.filter(F.col("_blk") > 0)
-                  .withColumn("_pa", F.explode(F.sequence(F.lit(0),
-                                                          F.col("_blk") - 1)))
-                  .select("_pa", F.col("_blk").alias("_pb"),
-                          F.lit("b").alias("_side"), "_id", "_vec"))
-    tagged = side_a.unionByName(side_b)
-
     def kernel(pdf):
         import numpy as np
         import pandas as pd
@@ -381,8 +304,76 @@ def embedding_near_dup_blocked(df: DataFrame, threshold: float = 0.95,
                              "id_b": np.concatenate(out_b),
                              "cosine": np.concatenate(out_c)})
 
-    return tagged.groupBy("_pa", "_pb").applyInPandas(
-        kernel, schema="id_a long, id_b long, cosine double")
+    return (_block_pairs(df, id_col, vec_col, n_blocks)
+            .groupBy("_pa", "_pb").applyInPandas(
+                kernel, schema="id_a long, id_b long, cosine double"))
+
+
+def _block_pairs(df: DataFrame, id_col: str, vec_col: str,
+                 n_blocks: int) -> DataFrame:
+    """(_pa, _pb, _side, _id, _vec) — the block-pair layout of the exact
+    all-pairs kernels: each vector gets block pmod(xxhash64(id),
+    n_blocks) and is copied to every block PAIR it belongs to, as side
+    'a' of pairs (blk, blk..n_blocks-1) and side 'b' of pairs
+    (0..blk-1, blk). A diagonal pair (blk, blk) holds one copy; its
+    kernel uses it as both operands. Grouping by (_pa, _pb) gives
+    n_blocks·(n_blocks+1)/2 groups that together cover every pair once."""
+    blk = F.pmod(F.xxhash64(F.col(id_col).cast("string")),
+                 F.lit(n_blocks)).cast("int")
+    base = df.select(F.col(id_col).alias("_id"),
+                     F.col(vec_col).alias("_vec"), blk.alias("_blk"))
+    side_a = (base.withColumn("_pb",
+                              F.explode(F.sequence(F.col("_blk"),
+                                                   F.lit(n_blocks - 1))))
+                  .select(F.col("_blk").alias("_pa"), "_pb",
+                          F.lit("a").alias("_side"), "_id", "_vec"))
+    side_b = (base.filter(F.col("_blk") > 0)
+                  .withColumn("_pa", F.explode(F.sequence(F.lit(0),
+                                                          F.col("_blk") - 1)))
+                  .select("_pa", F.col("_blk").alias("_pb"),
+                          F.lit("b").alias("_side"), "_id", "_vec"))
+    return side_a.unionByName(side_b)
+
+
+def _unit_rows(part, *cols):
+    """(ids, unit-row matrix, *cols) of a kernel group, sorted by id:
+    float64 rows scaled to unit norm. Ascending ids make a stable
+    argsort over the similarity columns break ties to the lowest id.
+    The norm is clamped at 1e-12, so an all-zero vector scores cosine
+    0.0 against everything instead of NaN (a NaN row would drop out of
+    the `> -inf` filters and its anchor vanish from the output, where
+    the oracle still ranks it)."""
+    import numpy as np
+
+    ids = part["_id"].to_numpy()
+    order = np.argsort(ids)
+    mat = np.stack(part["_vec"].to_numpy())[order].astype(np.float64)
+    mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+    return (ids[order], mat, *(part[c].to_numpy()[order] for c in cols))
+
+
+def _topk_rows(anchor_ids, anchor_mat, cand_ids, cand_mat, k: int,
+               exclude_self: bool):
+    """(anchor ids, candidate ids, cosines) of each anchor's top-``k``
+    candidates by cosine, the per-group partial top-k of the kNN
+    kernels. Cosines are rounded 6 dp half-away first: they are OUTPUT
+    (hash-compared), so np.round's half-even would break parity at a
+    midpoint. Candidate columns must be id-ascending (``_unit_rows``),
+    so the stable argsort resolves equal cosines to the lowest id.
+    ``exclude_self`` drops anchor == candidate."""
+    import numpy as np
+
+    sims = anchor_mat @ cand_mat.T
+    _round6_half_away(sims, np.empty_like(sims))
+    if exclude_self:
+        sims[np.equal.outer(anchor_ids, cand_ids)] = -np.inf
+    kk = min(k, sims.shape[1])
+    idx = np.argsort(-sims, axis=1, kind="stable")[:, :kk]
+    rows = np.repeat(anchor_ids, kk)
+    cols = cand_ids[idx.ravel()]
+    vals = np.take_along_axis(sims, idx, axis=1).ravel()
+    keep = vals > -np.inf
+    return rows[keep], cols[keep], vals[keep]
 
 
 def _plane_component(plane: int, i: Column) -> Column:
@@ -801,77 +792,26 @@ def knn_graph_ivf(df: DataFrame, k: int = 5,
     # cosine against a zero vector is undefined — the SemDeDup paths
     # set the same convention).
     cm_list = [list(map(float, c)) for c in cents]
-    npr = min(nprobe, len(cents))
-
-    def route(batches):
-        import numpy as np
-        import pandas as pd
-
-        cm = np.array(cm_list, dtype=np.float64)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            vm = np.stack(pdf["_vec"].to_numpy()).astype(np.float64)
-            ids = pdf["_id"].to_numpy()
-            nz = np.einsum("ij,ij->i", vm, vm) > 0.0
-            vm, ids = vm[nz], ids[nz]
-            if not len(ids):
-                continue
-            dots = vm @ cm.T
-            _round6_half_away(dots, np.empty_like(dots))
-            best = np.argmax(dots, axis=1)      # first max = lowest cid
-            order = np.argsort(-dots, axis=1, kind="stable")[:, :npr]
-            out_ids = np.concatenate([ids, np.repeat(ids, npr)])
-            out_lists = np.concatenate([best, order.ravel()])
-            out_side = np.concatenate([np.full(len(ids), "c"),
-                                       np.full(len(ids) * npr, "q")])
-            vecs = [list(v) for v in vm]
-            out_vecs = vecs + [v for v in vecs for _ in range(npr)]
-            yield pd.DataFrame({
-                "list_id": out_lists.astype("int32"),
-                "_side": out_side, "_id": out_ids, "_vec": out_vecs})
-
-    base = df.select(F.col(id_col).alias("_id"),
-                     as_double(F.col(vec_col)).alias("_vec"))
-    tagged = base.mapInPandas(
-        route,
-        schema="list_id int, _side string, _id long, _vec array<double>")
+    tagged = (df.select(F.col(id_col).alias("_id"),
+                        as_double(F.col(vec_col)).alias("_vec"))
+                .mapInPandas(_ivf_router(cm_list, min(nprobe, len(cents)),
+                                         True, "c"),
+                             schema=_IVF_ROUTED_SCHEMA))
 
     def kernel(pdf):
-        import numpy as np
         import pandas as pd
 
-        empty = pd.DataFrame({"query_id": pd.array([], dtype="int64"),
-                              "vec_id": pd.array([], dtype="int64"),
-                              "cosine": pd.array([], dtype="float64")})
         cand = pdf[pdf["_side"] == "c"]
         qs = pdf[pdf["_side"] == "q"]
         if not len(cand) or not len(qs):
-            return empty
-
-        def prep(part):
-            ids = part["_id"].to_numpy()
-            order = np.argsort(ids)
-            ids = ids[order]
-            mat = np.stack(part["_vec"].to_numpy())[order].astype(
-                np.float64)
-            mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True),
-                              1e-12)
-            return ids, mat
-
-        c_ids, c_mat = prep(cand)
-        q_ids, q_mat = prep(qs)
-        sims = q_mat @ c_mat.T
-        _round6_half_away(sims, np.empty_like(sims))
-        sims[np.equal.outer(q_ids, c_ids)] = -np.inf  # self excluded
-        kk = min(k, sims.shape[1])
-        idx = np.argsort(-sims, axis=1, kind="stable")[:, :kk]
-        rows = np.repeat(q_ids, kk)
-        cols = c_ids[idx.ravel()]
-        vals = np.take_along_axis(sims, idx, axis=1).ravel()
-        keep = vals > -np.inf
-        return pd.DataFrame({"query_id": rows[keep], "vec_id": cols[keep],
-                             "cosine": vals[keep]})
+            return pd.DataFrame({"query_id": pd.array([], dtype="int64"),
+                                 "vec_id": pd.array([], dtype="int64"),
+                                 "cosine": pd.array([], dtype="float64")})
+        c_ids, c_mat = _unit_rows(cand)
+        q_ids, q_mat = _unit_rows(qs)
+        rows, cols, vals = _topk_rows(q_ids, q_mat, c_ids, c_mat, k, True)
+        return pd.DataFrame({"query_id": rows, "vec_id": cols,
+                             "cosine": vals})
 
     partial = tagged.groupBy("list_id").applyInPandas(
         kernel, schema="query_id long, vec_id long, cosine double")
@@ -986,14 +926,10 @@ def rp_lsh_near_dup(df: DataFrame, threshold: float = 0.95,
     # from the scan (a dim-sized fold, ~planes x cheaper). Before this
     # split the rerank sides replayed the full signature per reference:
     # 3x the fold cost for bits they never read.
-    sig = base.select(id_col, sig_expr.alias("sig"))
-    band_cols = [
-        F.struct(F.lit(bi).alias("band"),
-                 F.shiftright(F.col("sig"), bi * width)
-                  .bitwiseAND(F.lit((1 << width) - 1)).alias("bucket"))
-        for bi in range(bands)]
-    buckets = (sig.select(id_col, F.explode(F.array(*band_cols)).alias("bb"))
-                  .select(id_col, "bb.band", "bb.bucket"))
+    buckets = _band_table(
+        base.select(id_col, sig_expr.alias("sig")), id_col,
+        [F.shiftright(F.col("sig"), bi * width)
+          .bitwiseAND(F.lit((1 << width) - 1)) for bi in range(bands)])
     return _posting_list_rerank(base, buckets, threshold, id_col)
 
 
@@ -1005,17 +941,8 @@ def _posting_list_rerank(base: DataFrame, buckets: DataFrame,
     Candidates are id-only (posting-list pair expansion per bucket), so
     vectors shuffle once per rerank side — not once per band through a
     bucket self-join."""
-    blists = (buckets.groupBy("band", "bucket")
-                     .agg(F.sort_array(F.collect_set(id_col)).alias("ids"))
-                     .filter(F.size("ids") >= 2))
-    ids = F.col("ids")
-    pair_structs = F.flatten(F.transform(
-        ids,
-        lambda x, i: F.transform(
-            F.slice(ids, i + F.lit(2), F.size(ids)),
-            lambda y: F.struct(x.alias("id_a"), y.alias("id_b")))))
-    cand = (blists.select(F.explode(pair_structs).alias("p"))
-                  .select("p.id_a", "p.id_b").distinct())
+    cand = (_posting_pairs(buckets, ["band", "bucket"], id_col)
+            .select("p.id_a", "p.id_b").distinct())
     va = base.select(F.col(id_col).alias("id_a"),
                      F.col("vec").alias("vec_a"),
                      F.col("norm").alias("norm_a"))
@@ -1093,12 +1020,9 @@ def build_rp_lsh_index(df: DataFrame, threshold: float = 0.95,
     base = (fan_out(df, id_col)
               .filter(F.size(F.col(vec_col)) > 0)
               .select(F.col(id_col), vec_d.alias("vec")))
-    band_exprs = rp_band_buckets_static("vec", comps, bands)
-    band_cols = [F.struct(F.lit(bi).alias("band"), e.alias("bucket"))
-                 for bi, e in enumerate(band_exprs)]
     return stamp_index_params(
-        base.select(id_col, F.explode(F.array(*band_cols)).alias("bb"))
-            .select(id_col, "bb.band", "bb.bucket"),
+        _band_table(base, id_col,
+                    rp_band_buckets_static("vec", comps, bands)),
         _rp_lsh_index_params(threshold, target_recall, max_bands, n,
                              dim, planes, bands))
 
@@ -1139,10 +1063,6 @@ def rp_lsh_cap_audit(df: DataFrame, threshold: float = 0.95,
     posting-list rerank is about to pay, doc share in over-
     ``max_bucket`` buckets). Costs the signature pass plus one
     bucket-keyed shuffle; never expands a pair."""
-    from nyctaxidatapipeline_spark.operators.dedup import (
-        bucket_cap_audit,
-    )
-
     buckets = build_rp_lsh_index(df, threshold, target_recall,
                                  max_bands, id_col, vec_col, dim, n)
     return bucket_cap_audit(buckets, id_col, max_bucket)
@@ -1207,12 +1127,8 @@ def rp_lsh_near_dup_auto(df: DataFrame, threshold: float = 0.95,
         planes, bands = rp_lsh_params(n, threshold, target_recall,
                                       max_bands)
         comps = rp_plane_components_portable(dim, planes)
-        band_exprs = rp_band_buckets_static("vec", comps, bands)
-        band_cols = [F.struct(F.lit(bi).alias("band"), e.alias("bucket"))
-                     for bi, e in enumerate(band_exprs)]
-        buckets = (base.select(id_col,
-                               F.explode(F.array(*band_cols)).alias("bb"))
-                       .select(id_col, "bb.band", "bb.bucket"))
+        buckets = _band_table(base, id_col,
+                              rp_band_buckets_static("vec", comps, bands))
     return _posting_list_rerank(base, buckets, threshold, id_col)
 
 
@@ -1243,88 +1159,33 @@ def knn_graph(df: DataFrame, k: int = 5, id_col: str = "vec_id",
 
     Output: (query_id, vec_id, cosine, rank), rank 1..k per anchor.
     """
-    blk = F.pmod(F.xxhash64(F.col(id_col).cast("string")),
-                 F.lit(n_blocks)).cast("int")
-    base = df.select(F.col(id_col).alias("_id"),
-                     F.col(vec_col).alias("_vec"), blk.alias("_blk"))
-    side_a = (base.withColumn("_pb",
-                              F.explode(F.sequence(F.col("_blk"),
-                                                   F.lit(n_blocks - 1))))
-                  .select(F.col("_blk").alias("_pa"), "_pb",
-                          F.lit("a").alias("_side"), "_id", "_vec"))
-    side_b = (base.filter(F.col("_blk") > 0)
-                  .withColumn("_pa", F.explode(F.sequence(F.lit(0),
-                                                          F.col("_blk") - 1)))
-                  .select("_pa", F.col("_blk").alias("_pb"),
-                          F.lit("b").alias("_side"), "_id", "_vec"))
-    tagged = side_a.unionByName(side_b)
-
     def kernel(pdf):
         import numpy as np
         import pandas as pd
 
-        empty = pd.DataFrame({"query_id": pd.array([], dtype="int64"),
-                              "vec_id": pd.array([], dtype="int64"),
-                              "cosine": pd.array([], dtype="float64")})
         diagonal = pdf["_pa"].iat[0] == pdf["_pb"].iat[0]
         a_pdf = pdf[pdf["_side"] == "a"]
         b_pdf = a_pdf if diagonal else pdf[pdf["_side"] == "b"]
         if not len(a_pdf) or not len(b_pdf):
-            return empty
-
-        def prep(part):
-            ids = part["_id"].to_numpy()
-            order = np.argsort(ids)          # ascending-id columns make
-            ids = ids[order]                 # stable argsort break ties
-            mat = np.stack(part["_vec"].to_numpy())[order].astype(
-                np.float64)
-            # Zero-norm clamp: an all-zero vector would divide to NaN
-            # sims that the `> -inf` filter silently drops, making that
-            # anchor vanish from the output (parity break vs the
-            # oracle, which still ranks it). With the clamp it scores
-            # cosine 0.0 against everything — ranked, deterministic.
-            mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True),
-                              1e-12)
-            return ids, mat
-
-        a_ids, a_mat = prep(a_pdf)
-        b_ids, b_mat = (a_ids, a_mat) if diagonal else prep(b_pdf)
-
-        def topk_rows(anchor_ids, anchor_mat, cand_ids, cand_mat,
-                      exclude_self):
-            sims = anchor_mat @ cand_mat.T
-            # SQL half-away rounding, not np.round's half-even: the
-            # rounded value is OUTPUT (hash-compared), not just an
-            # ordering key, so a midpoint flip would break parity.
-            _round6_half_away(sims, np.empty_like(sims))
-            if exclude_self:
-                sims[np.equal.outer(anchor_ids, cand_ids)] = -np.inf
-            kk = min(k, sims.shape[1])
-            # stable argsort over descending sims; candidate columns are
-            # id-ascending, so equal values resolve to the lowest id.
-            idx = np.argsort(-sims, axis=1, kind="stable")[:, :kk]
-            rows = np.repeat(anchor_ids, kk)
-            cols = cand_ids[idx.ravel()]
-            vals = np.take_along_axis(sims, idx, axis=1).ravel()
-            keep = vals > -np.inf
-            return rows[keep], cols[keep], vals[keep]
-
-        ra, ca, va = topk_rows(a_ids, a_mat, b_ids, b_mat, diagonal)
-        if diagonal:
-            rows = np.concatenate([ra])
-            cols, vals = ca, va
-        else:
-            rb, cb, vb = topk_rows(b_ids, b_mat, a_ids, a_mat, False)
-            rows = np.concatenate([ra, rb])
-            cols = np.concatenate([ca, cb])
-            vals = np.concatenate([va, vb])
+            return pd.DataFrame({"query_id": pd.array([], dtype="int64"),
+                                 "vec_id": pd.array([], dtype="int64"),
+                                 "cosine": pd.array([], dtype="float64")})
+        a_ids, a_mat = _unit_rows(a_pdf)
+        b_ids, b_mat = (a_ids, a_mat) if diagonal else _unit_rows(b_pdf)
+        rows, cols, vals = _topk_rows(a_ids, a_mat, b_ids, b_mat, k,
+                                      diagonal)
+        if not diagonal:
+            # a cross-block pair is scored once: read it both ways
+            rb, cb, vb = _topk_rows(b_ids, b_mat, a_ids, a_mat, k, False)
+            rows = np.concatenate([rows, rb])
+            cols = np.concatenate([cols, cb])
+            vals = np.concatenate([vals, vb])
         return pd.DataFrame({"query_id": rows, "vec_id": cols,
                              "cosine": vals})
 
-    import numpy as np  # noqa: F401  (kernel import is per-executor)
-
-    partial = tagged.groupBy("_pa", "_pb").applyInPandas(
-        kernel, schema="query_id long, vec_id long, cosine double")
+    partial = (_block_pairs(df, id_col, vec_col, n_blocks)
+               .groupBy("_pa", "_pb").applyInPandas(
+                   kernel, schema="query_id long, vec_id long, cosine double"))
     return top_k_per_group(
         partial, ["query_id"],
         [F.col("cosine").desc(), F.col("vec_id").asc()],
@@ -1646,18 +1507,8 @@ def incremental_semantic_admission_auto(new: DataFrame,
         if not len(cand) or not len(qs):
             return empty
 
-        def prep(part):
-            ids = part["_id"].to_numpy()
-            order = np.argsort(ids)
-            ids = ids[order]
-            mat = np.stack(part["_vec"].to_numpy())[order].astype(
-                np.float64)
-            mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True),
-                              1e-12)
-            return ids, mat, part["_side"].to_numpy()[order]
-
-        c_ids, c_mat, c_side = prep(cand)
-        q_ids, q_mat, _ = prep(qs)
+        c_ids, c_mat, c_side = _unit_rows(cand, "_side")
+        q_ids, q_mat = _unit_rows(qs)
         sims = q_mat @ c_mat.T
         _round6_half_away(sims, np.empty_like(sims))
         blockable = ((c_side == "c")[None, :]

@@ -23,6 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from nyctaxidatapipeline_spark.functions.text import token_count, tokens
+from nyctaxidatapipeline_spark.operators.dedup import _posting_pairs
 from nyctaxidatapipeline_spark.plans.util import fan_out
 
 #: Marker stopwords per language (tiny, deliberately disjoint-ish sets).
@@ -576,19 +577,10 @@ def winnow_dedup_pairs(df: DataFrame, text_col: str, id_col: str,
     Output: (id_a, id_b, n_shared) with id_a < id_b.
     """
     fps = winnow_fingerprints(df, text_col, id_col, k, window, portable)
-    plists = (fps.groupBy("fp")
-                 .agg(F.sort_array(F.collect_set(id_col)).alias("ids"))
-                 .filter((F.size("ids") >= 2) & (F.size("ids") <= max_df)))
-    ids = F.col("ids")
-    pair_structs = F.flatten(F.transform(
-        ids,
-        lambda x, i: F.transform(
-            F.slice(ids, i + F.lit(2), F.size(ids)),
-            lambda y: F.struct(x.alias("id_a"), y.alias("id_b")))))
-    return (plists.select(F.explode(pair_structs).alias("p"))
-                  .groupBy("p.id_a", "p.id_b")
-                  .agg(F.count("*").alias("n_shared"))
-                  .filter(F.col("n_shared") >= min_shared))
+    return (_posting_pairs(fps, ["fp"], id_col, max_df)
+            .groupBy("p.id_a", "p.id_b")
+            .agg(F.count("*").alias("n_shared"))
+            .filter(F.col("n_shared") >= min_shared))
 
 
 def char_entropy(df: DataFrame, text_col: str, id_col: str) -> DataFrame:

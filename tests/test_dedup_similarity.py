@@ -20,7 +20,6 @@ from nyctaxidatapipeline_spark.operators.similarity import (
     brute_force_topk,
     embedding_near_dup,
     embedding_near_dup_blocked,
-    embedding_near_dup_numpy,
     ivf_topk,
     rp_lsh_near_dup,
 )
@@ -485,6 +484,11 @@ def test_embedding_near_dup_threshold(spark):
            for r in embedding_near_dup(_vecs(spark), 0.95).collect()}
     assert list(out) == [(0, 1)]
     assert abs(out[(0, 1)] - 0.99995) < 1e-4
+    # the block-pair BLAS kernel returns the fold path's pair and cosine
+    blocked = {(r.id_a, r.id_b): r.cosine
+               for r in embedding_near_dup_blocked(_vecs(spark), 0.95,
+                                                   n_blocks=2).collect()}
+    assert blocked == out
 
 
 def test_blocked_kernel_matches_exact_path(spark):
@@ -509,17 +513,6 @@ def test_blocked_kernel_matches_exact_path(spark):
                                                    n_blocks=3).collect()}
     assert blocked == exact
     assert (2, 13) in blocked and blocked[(2, 13)] == 1.0
-
-
-def test_numpy_path_delegates_beyond_broadcast_guard(spark):
-    # With max_broadcast_rows below the corpus size the broadcast path
-    # must fall back to the blocked kernel — and still agree with it.
-    df = _vecs(spark)
-    out = {(r.id_a, r.id_b): r.cosine
-           for r in embedding_near_dup_numpy(df, 0.95,
-                                             max_broadcast_rows=2,
-                                             n_blocks=2).collect()}
-    assert list(out) == [(0, 1)]
 
 
 def test_rp_lsh_guards(spark):
@@ -1393,8 +1386,13 @@ def test_bucket_cap_audit_empty_and_index_paths(spark, tmp_path):
          for i in range(5)]
         + [Row(doc_id=9, text="one genuinely unique document about "
                               "completely other material")])
-    direct = minhash_cap_audit(docs, "text", "doc_id", portable=True,
-                               max_bucket=3).collect()[0]
+    audit = minhash_cap_audit(docs, "text", "doc_id", portable=True,
+                              max_bucket=3)
+    # no two-distinct-aggregate Expand: its projection order follows
+    # session-wide exprIds, so the plan would depend on earlier queries
+    assert "Expand" not in \
+        audit._jdf.queryExecution().optimizedPlan().toString()
+    direct = audit.collect()[0]
     idx = build_minhash_index(docs, "text", "doc_id", portable=True)
     path = str(tmp_path / "audit_idx")
     idx.write.parquet(path)
@@ -1404,6 +1402,49 @@ def test_bucket_cap_audit_empty_and_index_paths(spark, tmp_path):
                             ).collect()[0]
     assert tuple(direct) == tuple(via)
     assert direct.dropped_buckets == 8 and direct.docs_dropped == 5
+
+
+def test_candidate_shapes_have_one_copy():
+    """One copy of each near-dup candidate shape under ``operators/``:
+    the posting-list pair expansion (``slice(ids, i + 2, size(ids))``)
+    is ``dedup._posting_pairs``, the band-table explode (``"bb.band"``)
+    is ``dedup._band_table``, the block-pair layout (``sequence`` from
+    ``_blk``) is ``similarity._block_pairs``, and similarity.py has one
+    IVF ``route`` kernel."""
+    import ast
+    import pathlib
+
+    from nyctaxidatapipeline_spark import operators
+
+    sites = {"posting": set(), "band": set(), "block": set()}
+    routes = 0
+    for path in sorted(pathlib.Path(operators.__file__).parent
+                       .glob("*.py")):
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            where = f"{path.stem}.{getattr(top, 'name', '<module>')}"
+            for node in ast.walk(top):
+                if isinstance(node, ast.Call) \
+                        and isinstance(node.func, ast.Attribute):
+                    args = [ast.unparse(a) for a in node.args]
+                    if (node.func.attr == "slice" and len(args) == 3
+                            and args[1] == "i + F.lit(2)"
+                            and args[2] == f"F.size({args[0]})"):
+                        sites["posting"].add(where)
+                    if (node.func.attr == "sequence"
+                            and args[:1] == ["F.col('_blk')"]):
+                        sites["block"].add(where)
+                elif isinstance(node, ast.Constant) \
+                        and node.value == "bb.band":
+                    sites["band"].add(where)
+                elif isinstance(node, ast.FunctionDef) \
+                        and node.name == "route" \
+                        and path.stem == "similarity":
+                    routes += 1
+    assert sites == {"posting": {"dedup._posting_pairs"},
+                     "band": {"dedup._band_table"},
+                     "block": {"similarity._block_pairs"}}
+    assert routes == 1
 
 
 def test_ivf_occupancy_audit_planted_routing(spark):

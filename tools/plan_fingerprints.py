@@ -54,7 +54,13 @@ Determinism notes (why the hash is stable run-to-run):
     list counts) are functions of the immutable testdata files at the
     chosen sf_dir;
   * everything else volatile (exprId allocation order, temp index dirs,
-    InMemoryFileIndex locations, statistics) is normalized away.
+    InMemoryFileIndex locations, statistics) is normalized away;
+  * one shape is NOT normalizable, so a registered query must not use
+    it: two distinct aggregates over different children (say
+    ``count_distinct(x)`` beside ``count_distinct(when(c, x))``) plan
+    as an ``Expand`` whose projection order follows a hash over
+    exprIds — ids drawn from a session-wide counter, so the order (and
+    the hash) depends on how many expressions earlier queries created.
 """
 
 from __future__ import annotations
