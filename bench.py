@@ -17,7 +17,8 @@ PLAN_FINGERPRINTS.json BENCH_FULL.json`` adjudicates every wall move in
 one command — plus a single ``fp_digest`` in the stdout line (equal
 digests between two bench lines ⇒ no plan changed between them). The
 ``queries`` map stays name→seconds floats: the driver contract and
-merge_sf10 sum its values.
+merge_sf10 sum its values. ``codegen_compiles`` maps each query to the
+generated classes compiled during its timed runs.
 """
 
 from __future__ import annotations
@@ -115,6 +116,12 @@ def main() -> None:
     times: dict[str, float] = {}
     all_runs: dict[str, list[float]] = {}
     fingerprints: dict[str, str] = {}
+    # Generated classes Janino compiled during each query's timed runs
+    # (CodegenMetrics is JVM-wide): a query that keeps compiling after
+    # its first run is paying codegen, not query work.
+    compiles = (spark._jvm.org.apache.spark.metrics.source  # noqa: SLF001
+                .CodegenMetrics.METRIC_COMPILATION_TIME())
+    codegen_compiles: dict[str, int] = {}
     n_done = 0
     for name, fn in qset.items():
         if recycle_n and n_done and n_done % recycle_n == 0:
@@ -141,6 +148,7 @@ def main() -> None:
         except Exception:  # noqa: BLE001 — never fail the bench
             fingerprints[name] = "error"
         runs = []
+        c0 = compiles.getCount()
         for i in range(n_runs):
             t = time.perf_counter()
             _force(fn(spark, SF_DIR))
@@ -159,6 +167,7 @@ def main() -> None:
             if i == n_runs - 1 or runs[-1] > 1.0:
                 spark.catalog.clearCache()
                 spark._jvm.System.gc()  # noqa: SLF001
+        codegen_compiles[name] = compiles.getCount() - c0
         times[name] = sorted(runs)[len(runs) // 2]
         all_runs[name] = runs
 
@@ -215,6 +224,7 @@ def main() -> None:
                    **({"recycle_every": recycle_n} if recycle_n else {})},
         "runs": all_runs,
         "queries": times,
+        "codegen_compiles": codegen_compiles,
         "paths": paths,
         "path_totals": path_totals,
         "totals": totals,
@@ -323,9 +333,9 @@ def stdout_line(full: dict, out_name: str) -> dict:
     (tests/test_bench_line.py asserts < 1,800 chars on a 190-query
     map): headline totals + provenance + the fp digest on stdout;
     everything per-query (the full map, runs, fingerprints, paths,
-    experiments, scale summaries, the top-15) lives only in
-    ``BENCH_FULL.json``. ``queries`` stays present — the driver
-    contract names it — but carries only the 5 slowest entries.
+    experiments, codegen compile counts, scale summaries, the top-15)
+    lives only in ``BENCH_FULL.json``. ``queries`` stays present — the
+    driver contract names it — but carries only the 5 slowest entries.
     """
     fingerprints = full.get("fingerprints", {})
     times = full.get("queries", {})

@@ -322,7 +322,9 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str, id_col: str,
     opt out explicitly — see CHANGELOG.md.
 
     ``reuse_shingles`` materializes the (id, shingle) frame once
-    (lazy ``localCheckpoint``) and shares it between the signature and
+    (``localCheckpoint(eager=False)``, which under AQE runs the
+    shingle ``distinct``'s shuffle at the call and leaves only the final
+    stage to the first action) and shares it between the signature and
     verification paths, which otherwise each re-run the tokenize +
     shingle explode + distinct from source. Identical results either
     way (pure physical). The checkpoint is O(corpus shingles) of
@@ -523,6 +525,10 @@ def connected_components(edges: DataFrame, id_a: str = "id_a",
     component; equality unit-tested on the same graphs).
     """
     # Orient every edge high→low (u > v), the invariant both stars keep.
+    # Not a lazy pin: under AQE the call runs every shuffle stage below
+    # it, which for near_dup_production is the whole LSH pair pipeline
+    # (7 jobs, 0.9-1.2 s per warm pass at sf0.005 on 4 cores); only the
+    # final stage waits for the first action.
     e = (edges.select(F.col(id_a).alias("a"), F.col(id_b).alias("b"))
               .filter(F.col("a") != F.col("b"))
               .select(F.greatest("a", "b").alias("u"),
@@ -573,8 +579,11 @@ def connected_components(edges: DataFrame, id_a: str = "id_a",
                 .filter(F.col("v") != F.col("m"))
                 .select(F.col("v").alias("u"), F.col("m").alias("v"))
                 .union(smins.select("u", F.col("m").alias("v")))
-                # lazy checkpoint: the fingerprint action right below is
-                # what materializes it — one job per round, not two
+                # The call runs this round's shuffle stages (under AQE
+                # localCheckpoint plans the subtree to its final stage);
+                # the fingerprint action right below runs the final
+                # stage that writes the pinned blocks, then its own
+                # aggregate over them.
                 .distinct().localCheckpoint(False))
         # Fixpoint ⇔ the edge set is unchanged (both sides are distinct
         # sets). Probe with the one-job fingerprint; only a match pays the
@@ -890,10 +899,12 @@ def near_dup_production(df: DataFrame, text_col: str, id_col: str,
                # (membership join, LSH signature path, LSH verify path);
                # without a pipeline breaker each branch re-runs the
                # scan+collapse from source. localCheckpoint materializes
-               # it once to executor-local blocks — lazy, so the first
-               # action pays it; this is the natural stage boundary a
-               # production run persists anyway (it IS the exact-dedup
-               # output).
+               # it once to executor-local blocks. It is not lazy: under
+               # AQE the call runs the scan and the groupBy's shuffle at
+               # build time, and only the final aggregate stage waits
+               # for the first action. This is the natural stage
+               # boundary a production run persists anyway (it IS the
+               # exact-dedup output).
                .localCheckpoint(eager=False))
     members = (with_fp.select(id_col, "_fp")
                .join(rep_map.select("_fp", "_rep"), "_fp")

@@ -25,12 +25,13 @@ Python's ``round`` (half-to-even).
 Scale shape (100 TB edge lists): the out-degree-annotated edge table is
 built once, hash-partitioned by src, and pinned (localCheckpoint) — the
 Pregel-on-dataframes equivalent of persisting the partitioned edge
-table. Each iteration is then exactly ONE shuffle (the contribution
-aggregate by dst): the edges⋈ranks join reuses the pinned src
-partitioning and only moves the ranks side, and the nodes⋈sums join
-reuses the node-set partitioning. ``checkpoint_every`` truncates the
-ranks lineage every ~2 rounds so deep iteration counts don't grow the
-plan superlinearly.
+table. Under AQE a pin runs its subtree's shuffle stages when it is
+called, during plan construction, not at the first action. Each
+iteration is then exactly ONE shuffle (the contribution aggregate by
+dst): the edges⋈ranks join reuses the pinned src partitioning and only
+moves the ranks side, and the nodes⋈sums join reuses the node-set
+partitioning. ``checkpoint_every`` truncates the ranks lineage every
+~2 rounds so deep iteration counts don't grow the plan superlinearly.
 """
 
 from __future__ import annotations
@@ -86,6 +87,19 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     # localCheckpoint does not preserve outputPartitioning, so the plan
     # still shows the pinned edge table's src exchange per round, but
     # it is computed once and AQE-reused across rounds).
+    #
+    # The pins are not lazy. Under AQE, localCheckpoint(eager=False)
+    # runs every shuffle stage of the pinned subtree at the call (the
+    # plan is adapted down to its final stage); only the final stage
+    # waits for the first action. Per warm pass at sf0.005 (4 cores)
+    # the edge pin fires 2 jobs at build time and the mid-loop sums
+    # pin 5.
+    # NOTE (measured, do NOT retry): dropping the pins does not pay.
+    # One A/B ran each arm for 4 warm passes, in 2 rounds, on the
+    # sf0.005 tables at 4 cores: identical outputs, and pagerank took
+    # 1.70-2.17 s without pins against 1.35-1.86 s with them
+    # (shortest_paths: 1.73-1.76 s against 0.99-1.20 s). Dropping only
+    # the mid-loop sums pin was neutral.
     w_deg = Window.partitionBy("src")
     ew = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
                .withColumn("_deg", F.count("*").over(w_deg))
@@ -268,6 +282,9 @@ def shortest_paths(edges: DataFrame, sources: DataFrame,
     early rounds are as small as the frontier — the Pregel BFS cost
     profile, not |V| per round.
     """
+    # Pins as in ``pagerank``, and just as eager under AQE: the edge pin
+    # fires 2 jobs and the mid-loop distance pin 6 per warm pass at
+    # sf0.005. Dropping them measured slower (see the NOTE there).
     e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
               .repartition(F.col("src"))
               .localCheckpoint(eager=False))

@@ -6,7 +6,8 @@ winsorize bounds, anomaly thresholds, grouped percentiles, a sampled
 summary, equidepth edges, the MAD location/scale, perplexity tertiles,
 and the streaming sketch readers. Every one of them is a call to
 :func:`quantiles` (or, for a state that already IS a sample,
-:func:`sample_quantiles`), which is built from three low-level
+:func:`sample_quantiles`; inside a wider aggregate, its buffer
+:func:`percentile_buffer`), which is built from three low-level
 operators and nothing else:
 
   * **one percentile buffer** (``exact`` / ``approx``): ONE aggregate
@@ -35,7 +36,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 #: The array column :func:`quantiles` returns — dunder-named so it never
@@ -113,14 +114,22 @@ def quantiles(df: DataFrame, value: str, qs: Sequence[float],
             return sample_quantiles(s, "_v", qs, by)
         s = hash_sample_bottom_k(df, rank_cols, [value], k, salt_buckets)
         return sample_quantiles(s, value, qs)
-    pct = F.array(*[F.lit(q) for q in qs])
+    return df.groupBy(*by).agg(
+        percentile_buffer(value, qs, mode, accuracy).alias(QUANTILES))
+
+
+def percentile_buffer(value: str, qs: Sequence[float], mode: str = "exact",
+                      accuracy: int = 100) -> Column:
+    """The one percentile buffer as an aggregate expression: the ``qs``
+    quantiles of ``value`` as one array, for callers that compute them
+    inside a wider aggregate (``mode`` ``exact`` or ``approx``, as in
+    :func:`quantiles`)."""
+    pct = F.array(*[F.lit(float(q)) for q in qs])
     if mode == "exact":
-        agg = F.percentile(value, pct)
-    elif mode == "approx":
-        agg = F.percentile_approx(value, pct, F.lit(accuracy))
-    else:
-        raise ValueError(f"mode must be exact|approx|sketch, got {mode!r}")
-    return df.groupBy(*by).agg(agg.alias(QUANTILES))
+        return F.percentile(value, pct)
+    if mode == "approx":
+        return F.percentile_approx(value, pct, F.lit(accuracy))
+    raise ValueError(f"mode must be exact|approx|sketch, got {mode!r}")
 
 
 def named_percentiles(qdf: DataFrame, by: Sequence[str],

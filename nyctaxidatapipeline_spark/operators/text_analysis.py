@@ -24,6 +24,10 @@ from pyspark.sql import functions as F
 
 from nyctaxidatapipeline_spark.functions.text import token_count, tokens
 from nyctaxidatapipeline_spark.operators.dedup import _posting_pairs
+from nyctaxidatapipeline_spark.operators.quantiles import (
+    QUANTILES,
+    percentile_buffer,
+)
 from nyctaxidatapipeline_spark.plans.util import fan_out
 
 #: Marker stopwords per language (tiny, deliberately disjoint-ish sets).
@@ -491,6 +495,7 @@ def corpus_report(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     and surface composition (ASCII ratio, mean stopword density).
 
     One tokenize pass, one global aggregate (partial+final); no joins.
+    Both percentiles read one percentile buffer.
     Output: (n_docs, n_tokens, avg_tokens, p50_tokens, p95_tokens,
     ascii_ratio, avg_stopword_ratio).
     """
@@ -509,11 +514,14 @@ def corpus_report(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
             .agg(F.count("*").alias("n_docs"),
                  F.sum("_n").alias("n_tokens"),
                  F.round(F.avg("_n"), 6).alias("avg_tokens"),
-                 F.expr("percentile(_n, 0.5)").alias("p50_tokens"),
-                 F.expr("percentile(_n, 0.95)").alias("p95_tokens"),
+                 percentile_buffer("_n", (0.5, 0.95)).alias(QUANTILES),
                  F.round(F.sum("_ac") / F.sum("_c"), 6)
                   .alias("ascii_ratio"),
-                 F.round(F.avg("_sr"), 6).alias("avg_stopword_ratio")))
+                 F.round(F.avg("_sr"), 6).alias("avg_stopword_ratio"))
+            .select("n_docs", "n_tokens", "avg_tokens",
+                    F.col(QUANTILES)[0].alias("p50_tokens"),
+                    F.col(QUANTILES)[1].alias("p95_tokens"),
+                    "ascii_ratio", "avg_stopword_ratio"))
 
 
 def winnow_fingerprints(df: DataFrame, text_col: str, id_col: str,

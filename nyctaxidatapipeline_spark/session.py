@@ -7,7 +7,9 @@ parity) and for scale (AQE, skew-join handling, sane shuffle parallelism).
 On a real cluster the same builder is used — only ``master`` and the memory /
 shuffle-partition numbers come from the environment. Local defaults target
 the test harness (local[32]); the driver heap defaults to a quarter of the
-host's physical memory, between 1g and 16g.
+host's physical memory, between 1g and 16g. The codegen class cache holds
+1024 compiled classes (Spark's default is 100), so a session that runs the
+same queries again stops recompiling their generated code.
 """
 
 from __future__ import annotations
@@ -91,6 +93,20 @@ def get_spark(app_name: str = "nyctaxidatapipeline_spark",
         # queries run interpreted (observed 12x on the final query).
         .config("spark.driver.extraJavaOptions",
                 "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing")
+        # Spark's side of the same cost: CodeGenerator keeps compiled
+        # classes in an LRU of this many entries (default 100, a static
+        # conf). perfbench's plan_heavy pass (near_dup_production,
+        # pagerank, shortest_paths at sf0.005) needs 173-176 classes
+        # (71-74 + 48 + 54), so at 100 each query evicted the others'
+        # classes and every warm pass recompiled 172 of them (~12 ms
+        # each, ~2 s a pass); at 1024 a warm pass compiles 0, or 8 when
+        # AQE picks a new variant of one shortest_paths stage.
+        # taxi_etl needs 71. The largest one-query set in a
+        # check_correctness.py pass is 64 classes; the whole pass
+        # compiles ~3,350 at 100, ~2,470 at 1024 and ~2,400 at 4096,
+        # with peak metaspace 188, 196 and 209 MB. 1024 is ~6x the
+        # largest repeated set measured (4-core host).
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -42,6 +42,7 @@ def _fake_full(n_queries: int = 190) -> dict:
                     "runs_per_query": 3, "stat": "median"},
         # Fields that must NOT leak onto the line (they did in r13):
         "runs": {n: [1.0, 2.0, 3.0] for n in times},
+        "codegen_compiles": {n: 123 for n in times},
         "paths": {"p": {"exact": "a", "scale": "b"}},
         "path_totals": {"exact_total_sec": 1.0, "scale_total_sec": 2.0},
         "experiments": {"skew_plain_sec": 1.0},
@@ -65,8 +66,9 @@ def test_line_fits_driver_capture():
 def test_line_is_whitelisted():
     line = stdout_line(_fake_full(), "BENCH_FULL.json")
     # The r13 overflow fields stay OFF the line.
-    for banned in ("runs", "paths", "path_totals", "experiments",
-                   "sf1", "sf10", "fingerprints", "slowest15"):
+    for banned in ("runs", "codegen_compiles", "paths", "path_totals",
+                   "experiments", "sf1", "sf10", "fingerprints",
+                   "slowest15"):
         assert banned not in line
     # The driver contract's keys stay ON it.
     for required in ("metric", "value", "unit", "queries", "sf",

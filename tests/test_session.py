@@ -1,4 +1,5 @@
-"""Session bootstrap: the driver heap default fits the host."""
+"""Session bootstrap: the driver heap default fits the host, and the
+codegen class cache holds a repeated working set."""
 
 import os
 
@@ -23,3 +24,31 @@ def test_driver_mem_is_a_quarter_of_the_host(monkeypatch):
     assert session._driver_mem() == "1024m"   # floor 1g
     monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "48g")
     assert session._driver_mem() == "48g"
+
+
+def test_codegen_cache_holds_a_repeated_working_set(spark):
+    """A second round of 120 plans (240 generated classes) compiles
+    nothing: the session's codegen class cache holds the whole working
+    set. At Spark's default of 100 entries each round evicts the classes
+    the next one needs, and every round compiles all of them again."""
+    from pyspark.sql import functions as F
+
+    compiles = (spark._jvm.org.apache.spark.metrics.source  # noqa: SLF001
+                .CodegenMetrics.METRIC_COMPILATION_TIME())
+
+    def one_round():
+        # Plans that differ only in an inlined literal: one distinct
+        # generated class (at least) per plan.
+        for i in range(120):
+            (spark.range(4)
+             .select(((F.col("id") * 7919 + F.lit(i)) % 104729)
+                     .alias("x"))
+             .write.format("noop").mode("overwrite").save())
+
+    before = compiles.getCount()
+    one_round()
+    first = compiles.getCount() - before
+    assert first >= 120
+    before = compiles.getCount()
+    one_round()
+    assert compiles.getCount() - before == 0

@@ -5,6 +5,7 @@ from pyspark.sql import Row
 from nyctaxidatapipeline_spark.operators.text_analysis import (
     char_entropy,
     compression_ratio,
+    corpus_report,
     fingerprint,
     fingerprint_dedup,
     language_id,
@@ -505,3 +506,21 @@ def test_compression_ratio_orders_redundancy(spark):
     assert got[0].raw_bytes == 400 and got[0].zlib_bytes < 30
     assert got[0].ratio < got[1].ratio < 1.0
     assert got[2].ratio is None and got[2].raw_bytes == 0
+
+
+def test_corpus_report_percentiles_read_one_buffer(spark):
+    """p50 and p95 come off ONE percentile aggregate, with the exact
+    interpolated values two scalar percentiles gave."""
+    import re
+
+    df = spark.createDataFrame([Row(doc_id=i, text=" ".join(["word"] * i))
+                                for i in range(1, 21)])
+    out = corpus_report(df, "text", "doc_id")
+    plan = out._jdf.queryExecution().optimizedPlan().toString()
+    assert len(re.findall(r"\bpercentile\(", plan)) == 1, plan
+    assert out.columns == ["n_docs", "n_tokens", "avg_tokens",
+                           "p50_tokens", "p95_tokens", "ascii_ratio",
+                           "avg_stopword_ratio"]
+    r = out.first()
+    assert (r.n_docs, r.n_tokens, r.avg_tokens) == (20, 210, 10.5)
+    assert (r.p50_tokens, r.p95_tokens) == (10.5, 19.05)

@@ -18,13 +18,16 @@ Usage: python tools/check_correctness.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# This checkout first, so a second copy (a parent for an A/B) tests itself.
+sys.path.insert(0, os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from nyctaxidatapipeline_spark import get_spark  # noqa: E402
