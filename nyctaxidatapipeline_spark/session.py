@@ -9,7 +9,9 @@ shuffle-partition numbers come from the environment. Local defaults target
 the test harness (local[32]); the driver heap defaults to a quarter of the
 host's physical memory, between 1g and 16g. The codegen class cache holds
 1024 compiled classes (Spark's default is 100), so a session that runs the
-same queries again stops recompiling their generated code.
+same queries again stops recompiling their generated code. Python workers
+get this engine's checkout root first on their PYTHONPATH, so they import
+the engine whatever the working directory.
 """
 
 from __future__ import annotations
@@ -20,6 +22,9 @@ from pyspark.sql import SparkSession
 
 # One knob for local parallelism; the driver exports SPARK_GRAFT_CPUS.
 _CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+
+# The directory that holds this engine's package: its checkout root.
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _driver_mem() -> str:
@@ -55,6 +60,13 @@ def get_spark(app_name: str = "nyctaxidatapipeline_spark",
     for var in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS",
                 "MKL_NUM_THREADS"):
         os.environ.setdefault(var, "1")
+    # Python workers inherit the JVM's PYTHONPATH. Without this root on
+    # it they find the engine only through the working directory, and a
+    # run started elsewhere fails every Python UDF with
+    # ModuleNotFoundError. Set it before the JVM launches.
+    paths = os.environ.get("PYTHONPATH", "").split(os.pathsep)
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        [_ROOT] + [p for p in paths if p and p != _ROOT])
     builder = (
         SparkSession.builder
         .master(master or f"local[{_CPUS}]")

@@ -15,12 +15,15 @@ checkpoint_dir=...)``. That is one epoch-commit skeleton under every
 door. State doors (rollup, quantile, HLL, CMS) swap a parquet state
 together with its epoch marker (:func:`_sketch_merge_fn`). Append
 doors (admission, ingestion) commit each epoch as an ``epoch=N``
-directory (:func:`_commit_epoch`), and each maintained index commits
-its epoch before the corpus does. A replayed epoch is a no-op in
-both. ``drain`` sets no output mode, so Spark's default (append)
-applies: every door reads a stateless stream, and for those append
-and update deliver the same micro-batches. :func:`stream_files` is
-the one ``binaryFile`` source for the shard, WARC and TFRecord doors.
+directory (:func:`_commit_epoch`). :func:`_indexed_door` is the one
+maintained-index admission skeleton: the ``*_admit_indexed_fn`` doors
+run it over a lexical gate (:func:`_minhash_gate`), a semantic gate
+(:func:`_routed_gate`) or both, and it commits each gate's index epoch
+before the corpus epoch. A replayed epoch is a no-op in both. ``drain``
+sets no output mode, so Spark's default (append) applies: every door
+reads a stateless stream, and for those append and update deliver the
+same micro-batches. :func:`stream_files` is the one ``binaryFile``
+source for the shard, WARC and TFRecord doors.
 """
 
 from __future__ import annotations
@@ -474,13 +477,9 @@ def dedup_admit_fn(corpus_dir: str, text_col: str, id_col: str):
     ``incremental_fingerprint_dedup`` applied batch-by-batch — gated
     e2e in ``tests/test_streaming_ext``.
 
-    Exactly-once under replays, the append-shaped variant of
-    ``rollup_merge_fn``'s swap: each epoch's admissions land in their
-    own ``epoch=N`` directory via write-tmp-then-rename, so the rename
-    IS the commit — a crash between sink commit and offset commit
-    re-delivers the same epoch, which is a no-op because its directory
-    already exists. Unlike the rollup (whole-state swap), nothing ever
-    rewrites: per-batch cost is the batch anti-join against the corpus
+    Exactly-once under replays (:func:`_commit_epoch`: a re-delivered
+    epoch no-ops on its existing directory), and nothing ever rewrites:
+    per-batch cost is the batch anti-join against the corpus
     fingerprint set (via the Bloom pre-pass, so only filter-positive
     rows shuffle), plus the admitted rows' write.
     """
@@ -513,11 +512,9 @@ def _compacted_through(root: str) -> int:
 def _epoch_committed(root: str, epoch_id: int) -> bool:
     """True when this epoch's output is already in the store — either
     its own ``epoch=`` dir exists, or compaction folded it away (the
-    watermark is the proof of commit). Also heals a
-    :func:`compact_epoch_store` swap interrupted between its two
-    renames (root absent, ``._compact_bak`` intact) — every door
-    checks this before touching the store, so the manual-restore
-    window the r11 docstring acknowledged is now self-healing."""
+    watermark is the proof of commit). Every door checks this before
+    touching the store, so it first heals a :func:`compact_epoch_store`
+    swap interrupted between its two renames."""
     _recover_compacted_store(root)
     return (epoch_id <= _compacted_through(root)
             or os.path.exists(os.path.join(root, f"epoch={epoch_id}")))
@@ -682,6 +679,171 @@ def _frozen_centroids(index_dir: str, batch: DataFrame,
         return json.load(f)
 
 
+def _intersect(batch: DataFrame, admitted: list[DataFrame],
+               id_col: str) -> DataFrame:
+    """The ``batch`` rows every gate admitted (a lone gate's own
+    frame). This IS the union-graph greedy admission: a row is rejected
+    iff some gate links it to an eligible partner, and all gates share
+    one convention for those (the corpus, or a smaller batch id)."""
+    if len(admitted) == 1:
+        return admitted[0]
+    for a in admitted:
+        batch = batch.join(a.select(id_col), id_col, "left_semi")
+    return batch
+
+
+def _indexed_door(corpus_dir: str, cols: list[str], id_col: str, gates):
+    """The one maintained-index admission skeleton, under every
+    ``*_admit_indexed_fn``. A gate (:func:`_minhash_gate`,
+    :func:`_routed_gate`) is an ``(index_dir, run)`` pair;
+    ``run(batch, read_corpus, epoch_id)`` returns the gate's admitted
+    frame and the map from the epoch's admitted rows to its index rows
+    (``None``: nothing to index). Only gates that call ``read_corpus()``
+    read the corpus store.
+
+    Per epoch: heal every index store's crashed compaction BEFORE
+    anything reads or recreates it (a centroid-sidecar write would
+    resurrect the dir and orphan its bak; the corpus heals in
+    ``_epoch_committed``), no-op on a committed epoch, pin the batch,
+    run the gates, pin their intersection, commit each index epoch,
+    then the corpus epoch. Index epochs go first: a missing one would
+    under-reject forever, while a crash before the corpus commit
+    re-delivers the epoch. That replay finds its own rows in an index,
+    so each gate anti-joins the batch's ids out of its read-back index
+    (rows only this batch could have contributed never block it) and
+    the deterministic admission matches the committed index epoch."""
+    def admit_batch(batch_df: DataFrame, epoch_id: int) -> None:
+        for index_dir, _ in gates:
+            _recover_compacted_store(index_dir)
+        if _epoch_committed(corpus_dir, epoch_id):
+            return                       # replayed epoch — committed
+        spark = batch_df.sparkSession
+        batch = batch_df.select(*cols).localCheckpoint()
+
+        def read_corpus() -> DataFrame:
+            c = _read_epochs(spark, corpus_dir, cols)
+            return c if c is not None else local_frame(spark, [],
+                                                       batch.schema)
+
+        runs = [run(batch, read_corpus, epoch_id) for _, run in gates]
+        admitted = _intersect(batch, [a for a, _ in runs],
+                              id_col).localCheckpoint()
+        for (index_dir, _), (_, index_of) in zip(gates, runs):
+            if index_of is not None:
+                _commit_epoch(index_of(admitted), index_dir, epoch_id)
+        _commit_epoch(admitted, corpus_dir, epoch_id)
+
+    return admit_batch
+
+
+def _read_index(batch: DataFrame, id_col: str, index_dir: str,
+                cols: list[str], stamp_col: str, params: dict):
+    """A gate's index read-back: the epochs under ``index_dir`` (its
+    ``cols``, id first) without ``batch``'s own ids, so a half-committed
+    replay's own rows never block it (``None`` while no epoch exists).
+    A stamp missing from ``stamp_col`` of this framework-built index
+    means validation degraded: ``check_index_params`` warns once."""
+    from nyctaxidatapipeline_spark.operators.indexmeta import (
+        check_index_params,
+    )
+
+    idx = _read_epochs(batch.sparkSession, index_dir, cols)
+    if idx is None:
+        return None
+    idx = idx.join(batch.select(F.col(id_col).alias(cols[0])), cols[0],
+                   "left_anti")
+    check_index_params(idx, params, f"admission index {index_dir}",
+                       col=stamp_col, expect_stamp=True)
+    return idx
+
+
+def _minhash_gate(index_dir: str, text_col: str, id_col: str,
+                  threshold: float, max_bucket: int | None, n: int,
+                  num_hashes: int, bands: int, portable: bool):
+    """The lexical gate of :func:`_indexed_door`: the batch probes the
+    LSH band-bucket table kept under ``index_dir`` (no corpus SIGNATURE
+    pass, 80%+ of a cold admission's wall at sf10, PLANS.md #20),
+    touched candidates are verified by exact Jaccard against the corpus
+    TEXT (a candidate-filtered read), and the epoch appends its
+    admissions' bucket rows (``append_to_minhash_index``'s pure-union
+    closure unit-pins this). The first epoch builds the index from the
+    (possibly empty) corpus."""
+    from nyctaxidatapipeline_spark.operators.dedup import (
+        _minhash_params,
+        build_minhash_index,
+        incremental_minhash_admission,
+    )
+
+    def index_of(rows: DataFrame) -> DataFrame:
+        return build_minhash_index(rows.select(id_col, text_col),
+                                   text_col, id_col, n, num_hashes,
+                                   bands, portable)
+
+    def run(batch: DataFrame, read_corpus, epoch_id: int):
+        corpus = read_corpus().select(id_col, text_col)
+        idx = _read_index(batch, id_col, index_dir,
+                          [id_col, "band", "bucket"], "band",
+                          _minhash_params(n, num_hashes, bands, portable))
+        if idx is None:
+            idx = index_of(corpus)
+        admitted = incremental_minhash_admission(
+            batch.select(id_col, text_col), corpus, text_col, id_col,
+            n=n, num_hashes=num_hashes, bands=bands, threshold=threshold,
+            portable=portable, max_bucket=max_bucket, corpus_index=idx)
+        return admitted, index_of
+
+    return index_dir, run
+
+
+def _routed_gate(index_dir: str, vec_col: str, id_col: str,
+                 threshold: float, n_centroids: int, nprobe: int):
+    """The semantic gate of :func:`_indexed_door`: the batch probes the
+    ROUTED corpus kept under ``index_dir`` against centroids frozen at
+    the first non-degenerate epoch (:func:`_frozen_centroids`), so the
+    corpus is never re-routed or read, and the epoch appends its
+    admissions' routed rows (``append_to_semantic_routing_index``'s
+    per-row closure unit-pins this). Until a non-zero vector arrives
+    the whole batch is admitted and nothing is indexed."""
+    from nyctaxidatapipeline_spark.operators.similarity import (
+        _semantic_routing_params,
+        build_semantic_routing_index,
+        incremental_semantic_admission_auto,
+    )
+
+    def run(batch: DataFrame, read_corpus, epoch_id: int):
+        cents = _frozen_centroids(index_dir, batch, n_centroids, id_col,
+                                  vec_col, epoch_id)
+        if not cents:
+            return batch, None
+        routed = _read_index(batch, id_col, index_dir,
+                             ["_id", "list_id", "_vec"], "_id",
+                             _semantic_routing_params(cents))
+        if routed is None:
+            routed = local_frame(batch.sparkSession, [],
+                                 "_id long, list_id int, _vec array<double>")
+        admitted = incremental_semantic_admission_auto(
+            batch.select(id_col, vec_col), None, id_col=id_col,
+            vec_col=vec_col, threshold=threshold, nprobe=nprobe,
+            centroids=cents, corpus_routed=routed)
+        return admitted, lambda rows: build_semantic_routing_index(
+            rows.select(id_col, vec_col), cents, id_col, vec_col)
+
+    return index_dir, run
+
+
+def _minhash_admitter(text_col: str, id_col: str, threshold: float,
+                      max_bucket: int | None):
+    """The plain doors' lexical gate ``(batch, corpus) -> admitted``:
+    ``incremental_minhash_admission`` at default signature parameters."""
+    from nyctaxidatapipeline_spark.operators.dedup import (
+        incremental_minhash_admission,
+    )
+
+    return lambda batch, corpus: incremental_minhash_admission(
+        batch.select(id_col, text_col), corpus.select(id_col, text_col),
+        text_col, id_col, threshold=threshold, max_bucket=max_bucket)
+
+
 def near_dup_admit_fn(corpus_dir: str, text_col: str, id_col: str,
                       threshold: float = 0.5,
                       max_bucket: int | None = 32):
@@ -697,15 +859,9 @@ def near_dup_admit_fn(corpus_dir: str, text_col: str, id_col: str,
     ``max_bucket`` corpus-bucket cap (on by default here — a streaming
     admitter must survive boilerplate storms unattended) bounds the
     verification fan-out of any hot bucket."""
-    from nyctaxidatapipeline_spark.operators.dedup import (
-        incremental_minhash_admission,
-    )
-
     return _admit_commit_cols_fn(
         corpus_dir, [id_col, text_col],
-        lambda batch, corpus: incremental_minhash_admission(
-            batch, corpus, text_col, id_col,
-            threshold=threshold, max_bucket=max_bucket))
+        _minhash_admitter(text_col, id_col, threshold, max_bucket))
 
 
 def near_dup_admit_indexed_fn(corpus_dir: str, index_dir: str,
@@ -716,73 +872,12 @@ def near_dup_admit_indexed_fn(corpus_dir: str, index_dir: str,
                               bands: int = 8, portable: bool = False):
     """``foreachBatch`` near-dup admission over a MAINTAINED persisted
     LSH index — the streaming deployment shape of
-    ``incremental_minhash_indexed`` (r11, the lexical sibling of
-    :func:`semantic_admit_indexed_fn`): the corpus's LSH band-bucket
-    table lives as epoch-append parquet under ``index_dir``; each
-    epoch probes the read-back index via ``corpus_index=`` (skipping
-    the corpus SIGNATURE pass — 80%+ of a cold admission's wall at
-    sf10, PLANS.md #20) and appends only its own admissions' bucket
-    rows (``build_minhash_index`` of the admitted subset; the
-    pure-union closure ``append_to_minhash_index`` unit-pins). Corpus
-    TEXT is still read from ``corpus_dir`` for the exact-Jaccard
-    verification of touched candidates — that read is
-    candidate-filtered, never corpus-wide.
-
-    Exactly-once: index epoch commits BEFORE the corpus epoch; a crash
-    between the two re-delivers the epoch with its own bucket rows
-    already indexed, so the probe anti-joins the batch's ids out of
-    the read-back index first (rows only the batch itself could have
-    contributed can never block it) and the recomputed admission
-    matches the committed index epoch. Parameter identity is validated
-    against the index's stamp on every probe."""
-    from nyctaxidatapipeline_spark.operators.dedup import (
-        _minhash_params,
-        build_minhash_index,
-        incremental_minhash_admission,
-    )
-    from nyctaxidatapipeline_spark.operators.indexmeta import (
-        check_index_params,
-    )
-
-    def admit_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # heal a crashed index-store compaction before the index read
-        # (corpus_dir heals via _epoch_committed just after)
-        _recover_compacted_store(index_dir)
-        if _epoch_committed(corpus_dir, epoch_id):
-            return                       # replayed epoch — committed
-        spark = batch_df.sparkSession
-        batch = (batch_df.select(id_col, text_col)
-                 .localCheckpoint())
-        corpus = _read_epochs(spark, corpus_dir, [id_col, text_col])
-        if corpus is None:
-            corpus = local_frame(spark, [], batch.schema)
-        idx = _read_epochs(spark, index_dir, [id_col, "band", "bucket"])
-        if idx is not None:
-            # crash-healing: a half-committed replay's own bucket rows
-            # (batch ids) must never block it
-            idx = idx.join(batch.select(id_col), id_col, "left_anti")
-            # the framework wrote this index itself — a missing stamp
-            # here means validation silently degraded (warn once)
-            check_index_params(
-                idx, _minhash_params(n, num_hashes, bands, portable),
-                "near_dup_admit_indexed_fn (index read-back)",
-                expect_stamp=True)
-        else:
-            # no standing index yet: build from the (possibly empty)
-            # corpus once — from epoch 1 on, the probe never re-signs
-            idx = build_minhash_index(corpus, text_col, id_col, n,
-                                      num_hashes, bands, portable)
-        admitted = incremental_minhash_admission(
-            batch, corpus, text_col, id_col, n=n,
-            num_hashes=num_hashes, bands=bands, threshold=threshold,
-            portable=portable, max_bucket=max_bucket,
-            corpus_index=idx).localCheckpoint()
-        _commit_epoch(build_minhash_index(admitted, text_col, id_col, n,
-                                          num_hashes, bands, portable),
-                      index_dir, epoch_id)
-        _commit_epoch(admitted, corpus_dir, epoch_id)
-
-    return admit_batch
+    ``incremental_minhash_indexed`` (r11): :func:`_indexed_door` over
+    one :func:`_minhash_gate`, whose band-bucket table lives as
+    epoch-append parquet under ``index_dir``."""
+    return _indexed_door(corpus_dir, [id_col, text_col], id_col, [
+        _minhash_gate(index_dir, text_col, id_col, threshold, max_bucket,
+                      n, num_hashes, bands, portable)])
 
 
 def semantic_admit_fn(corpus_dir: str, vec_col: str = "embedding",
@@ -815,12 +910,16 @@ def semantic_admit_fn(corpus_dir: str, vec_col: str = "embedding",
     epoch-append + healing overhead) and pays off in the
     large-corpus regime the batch-side sf10 pricing shows.
 
-    r12 (VERDICT r11 task 4): the gate runs the Arrow/BLAS kernel path
+    r12: the gate runs the Arrow/BLAS kernel path
     (``incremental_semantic_admission_auto`` with this door's per-epoch
-    seeded centroids — verdict-identical to the expression path, both
-    round cosines/routing dots 6 dp before compare), so the
-    indexed-vs-re-route comparison is KERNEL-CONTROLLED: the doors
-    differ only in route maintenance, not compute path."""
+    seeded centroids), as the indexed door does, so the two doors
+    differ only in route maintenance. The expression path
+    (``incremental_semantic_admission``, which ``cross_signal_admit_fn``
+    runs) is not verdict-identical: both round cosines 6 dp before the
+    threshold compare, but only the kernel rounds routing dots (6 dp
+    half-away, before argmax/top-nprobe); ``_centroid_dots`` /
+    ``ivf_assign`` route on unrounded dots, so a near-tied list
+    assignment, and with it a verdict at the recall margin, can differ."""
     from nyctaxidatapipeline_spark.operators.similarity import (
         incremental_semantic_admission_auto,
         ivf_seed_centroids,
@@ -846,88 +945,16 @@ def semantic_admit_indexed_fn(corpus_dir: str, index_dir: str,
                               n_centroids: int = 16, nprobe: int = 4):
     """``foreachBatch`` semantic admission over a MAINTAINED persisted
     routed-corpus index — the streaming deployment shape of
-    ``incremental_semantic_auto_indexed`` (r11, composing the batch
-    pieces): instead of re-seeding centroids and re-routing the whole
-    admitted corpus every epoch (``semantic_admit_fn``), the centroid
-    matrix is FROZEN at the first non-degenerate epoch
-    (:func:`_frozen_centroids`) and the ROUTED corpus is maintained as
-    epoch-append parquet under ``index_dir`` — each epoch probes the
-    read-back index via ``corpus_routed=`` and appends only its own
-    admissions' routed rows (``build_semantic_routing_index`` of the
-    admitted subset; the pure-per-row closure
-    ``append_to_semantic_routing_index`` unit-pins). Per-epoch cost is
-    batch routing + probed lists' kernels — the corpus is NEVER
-    re-routed, the cost the in-query streaming twin pays every epoch.
-
-    Exactly-once: the INDEX epoch commits before the CORPUS epoch
-    (both write-tmp-then-rename). A replayed epoch whose corpus dir
-    exists no-ops; a crash between the two commits re-delivers the
-    epoch with its own routed rows already in the index, so the probe
-    anti-joins the read-back index on the batch's ids first — rows a
-    batch could only have contributed itself can never block it, and
-    the recomputed admission (deterministic) matches the committed
-    index epoch. The frozen matrix trades per-list balance as the
-    corpus grows for never re-routing; re-centering is a deployment
-    decision (start a new index_dir), and the stamp makes a stale
-    probe loud."""
-    from nyctaxidatapipeline_spark.operators.indexmeta import (
-        check_index_params,
-    )
-    from nyctaxidatapipeline_spark.operators.similarity import (
-        _semantic_routing_params,
-        build_semantic_routing_index,
-        incremental_semantic_admission_auto,
-    )
-
-    def admit_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # heal a crashed index-store compaction BEFORE anything reads
-        # or recreates index_dir — the centroid-sidecar write below
-        # would otherwise resurrect the dir and orphan the bak (the
-        # corpus_dir heal rides _epoch_committed just after)
-        _recover_compacted_store(index_dir)
-        if _epoch_committed(corpus_dir, epoch_id):
-            return                       # replayed epoch — committed
-        spark = batch_df.sparkSession
-        batch = (batch_df.select(id_col, vec_col)
-                 .localCheckpoint())     # probed + routed + committed
-        cents = _frozen_centroids(index_dir, batch, n_centroids, id_col,
-                                  vec_col, epoch_id)
-        if not cents:
-            # all-zero/empty first batch: nothing to route or compare —
-            # admit wholesale, seed again next epoch (sibling
-            # convention: zero-norm vectors never block)
-            admitted = batch
-        else:
-            routed = _read_epochs(spark, index_dir,
-                                  ["list_id", "_id", "_vec"])
-            if routed is not None:
-                # crash-healing: a half-committed replay's own routed
-                # rows (batch ids) must never block it
-                routed = routed.join(
-                    batch.select(F.col(id_col).alias("_id")), "_id",
-                    "left_anti")
-                # framework-built index: a missing stamp means the
-                # frozen-centroid guard silently degraded (warn once)
-                check_index_params(
-                    routed, _semantic_routing_params(cents),
-                    "semantic_admit_indexed_fn (index read-back)",
-                    col="_id", expect_stamp=True)
-            else:
-                routed = local_frame(
-                    spark, [], "list_id int, _id long, _vec array<double>")
-            admitted = incremental_semantic_admission_auto(
-                batch, None, id_col=id_col, vec_col=vec_col,
-                threshold=threshold, nprobe=nprobe, centroids=cents,
-                corpus_routed=routed)
-        admitted = admitted.localCheckpoint()
-        # index epoch FIRST (a missing index epoch would silently
-        # under-reject forever; a missing corpus epoch is healed above)
-        if cents:
-            _commit_epoch(build_semantic_routing_index(
-                admitted, cents, id_col, vec_col), index_dir, epoch_id)
-        _commit_epoch(admitted, corpus_dir, epoch_id)
-
-    return admit_batch
+    ``incremental_semantic_auto_indexed`` (r11): :func:`_indexed_door`
+    over one :func:`_routed_gate` under ``index_dir``. Where
+    ``semantic_admit_fn`` re-seeds and re-routes the corpus every
+    epoch, this pays batch routing + the probed lists' kernels. The
+    frozen matrix trades per-list balance as the corpus grows for never
+    re-routing; re-centering is a deployment decision (start a new
+    index_dir), and the stamp makes a stale probe loud."""
+    return _indexed_door(corpus_dir, [id_col, vec_col], id_col, [
+        _routed_gate(index_dir, vec_col, id_col, threshold, n_centroids,
+                     nprobe)])
 
 
 def cross_signal_admit_fn(corpus_dir: str, text_col: str = "text",
@@ -942,34 +969,25 @@ def cross_signal_admit_fn(corpus_dir: str, text_col: str = "text",
     batch composition: each micro-batch row (carrying BOTH its text
     and its embedding) is admitted only if NEITHER signal links it to
     the admitted corpus or to a smaller-id row of its own batch: the
-    lexical gate is ``incremental_minhash_admission`` (banded LSH,
-    capped, exact-Jaccard verified), the semantic gate
+    lexical gate is ``near_dup_admit_fn``'s (banded LSH, capped,
+    exact-Jaccard verified), the semantic gate
     ``incremental_semantic_admission`` (IVF-probed cosine,
-    corpus-seeded centroids like ``semantic_admit_fn``).
-
-    Running the two gates independently and INTERSECTING their
-    admitted sets IS the union-graph greedy admission: a row is
-    rejected by the union graph iff some eligible partner sits within
-    the lexical OR the cosine threshold, i.e. iff at least one gate
-    rejects it — exactly the complement of the intersection (both
-    gates use the same eligible-partner convention: corpus, or
-    smaller id in the same batch). Same epoch-directory exactly-once
-    commit as the single-signal front doors; per-batch cost is the
-    sum of the two gates' batch-proportional costs, never
-    |corpus|²."""
-    from nyctaxidatapipeline_spark.operators.dedup import (
-        incremental_minhash_admission,
-    )
+    corpus-seeded centroids like ``semantic_admit_fn``). The two
+    gates run independently and their admitted sets intersect
+    (:func:`_intersect`, the union-graph greedy admission). Same
+    epoch-directory exactly-once commit as the single-signal front
+    doors; per-batch cost is the sum of the two gates'
+    batch-proportional costs, never |corpus|²."""
     from nyctaxidatapipeline_spark.operators.similarity import (
         incremental_semantic_admission,
         ivf_seed_centroids,
     )
 
+    lexical = _minhash_admitter(text_col, id_col, jaccard_threshold,
+                                max_bucket)
+
     def admitter(batch: DataFrame, corpus: DataFrame) -> DataFrame:
-        lex = incremental_minhash_admission(
-            batch.select(id_col, text_col),
-            corpus.select(id_col, text_col), text_col, id_col,
-            threshold=jaccard_threshold, max_bucket=max_bucket)
+        lex = lexical(batch, corpus)
         seed_src = corpus if not corpus.isEmpty() else batch
         cents = ivf_seed_centroids(seed_src, n_centroids, id_col,
                                    vec_col)
@@ -981,8 +999,7 @@ def cross_signal_admit_fn(corpus_dir: str, text_col: str = "text",
                 nprobe=nprobe, centroids=cents)
         else:   # no non-degenerate vectors anywhere: nothing to gate
             sem = batch
-        return (batch.join(lex.select(id_col), id_col, "left_semi")
-                     .join(sem.select(id_col), id_col, "left_semi"))
+        return _intersect(batch, [lex, sem], id_col)
 
     return _admit_commit_cols_fn(corpus_dir, [id_col, text_col, vec_col],
                                  admitter)
@@ -1002,121 +1019,24 @@ def cross_signal_admit_indexed_fn(corpus_dir: str, index_dir: str,
                                   portable: bool = False):
     """``foreachBatch`` cross-signal admission over MAINTAINED
     persisted indexes for both signals — the streaming deployment
-    shape of ``cross_signal_dedup_indexed`` (r11, completing the
-    family): BOTH standing indexes live as epoch-append parquet under
-    ``index_dir`` — the lexical band-bucket table (``lex/``) and the
-    routed corpus (``sem/``, with the centroid matrix frozen at the
-    first non-degenerate epoch in a ``_centroids.json`` sidecar) —
-    and each epoch's row is admitted iff NEITHER gate links it to the
-    corpus or a smaller-id batch row, with both gates probing their
-    read-back index (no corpus re-sign, no corpus re-route; the
-    intersection-equals-union-graph argument of
-    ``cross_signal_admit_fn`` is unchanged — only the physical probe
-    source moved).
+    shape of ``cross_signal_dedup_indexed`` (r11): :func:`_indexed_door`
+    over a :func:`_minhash_gate` under ``index_dir/lex`` and a
+    :func:`_routed_gate` under ``index_dir/sem``, intersected as in
+    ``cross_signal_admit_fn`` (no corpus re-sign, no corpus re-route).
 
-    NOTE the semantic gate here runs at the FROZEN-centroid auto
-    operating point (the indexable shape), where the plain door
-    re-seeds per epoch at fixed 16 lists: admissions can differ from
-    the plain door at the IVF recall margin, exactly as the batch
-    indexed twins document — the gate-level contract (reject iff an
-    eligible partner is probed at ≥ threshold) is identical.
-
-    Exactly-once across THREE stores: both index epochs commit before
-    the corpus epoch; replays with any half-committed prefix heal
-    because each gate anti-joins the batch's own ids out of its
-    read-back index (rows only this batch could have contributed can
-    never block it), and the recomputed admission is deterministic."""
-    from nyctaxidatapipeline_spark.operators.dedup import (
-        _minhash_params,
-        build_minhash_index,
-        incremental_minhash_admission,
-    )
-    from nyctaxidatapipeline_spark.operators.indexmeta import (
-        check_index_params,
-    )
-    from nyctaxidatapipeline_spark.operators.similarity import (
-        _semantic_routing_params,
-        build_semantic_routing_index,
-        incremental_semantic_admission_auto,
-    )
-
-    lex_dir = os.path.join(index_dir, "lex")
-    sem_dir = os.path.join(index_dir, "sem")
-
-    def admit_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        # heal crashed index-store compactions BEFORE anything reads
-        # or recreates them — the sem centroid-sidecar write below
-        # would otherwise resurrect sem_dir and orphan its bak
-        # (corpus_dir heals via _epoch_committed just after)
-        _recover_compacted_store(lex_dir)
-        _recover_compacted_store(sem_dir)
-        if _epoch_committed(corpus_dir, epoch_id):
-            return                       # replayed epoch — committed
-        spark = batch_df.sparkSession
-        batch = (batch_df.select(id_col, text_col, vec_col)
-                 .localCheckpoint())
-        bids = batch.select(id_col)
-        corpus = _read_epochs(spark, corpus_dir,
-                              [id_col, text_col, vec_col])
-        if corpus is None:
-            corpus = local_frame(spark, [], batch.schema)
-        # --- lexical gate over the maintained band-bucket index ---
-        lex_idx = _read_epochs(spark, lex_dir, [id_col, "band", "bucket"])
-        if lex_idx is None:
-            lex_idx = build_minhash_index(
-                corpus.select(id_col, text_col), text_col, id_col,
-                n, num_hashes, bands, portable)
-        else:
-            lex_idx = lex_idx.join(bids, id_col, "left_anti")
-            check_index_params(
-                lex_idx, _minhash_params(n, num_hashes, bands,
-                                         portable),
-                "cross_signal_admit_indexed_fn (lex index read-back)",
-                expect_stamp=True)
-        lex = incremental_minhash_admission(
-            batch.select(id_col, text_col),
-            corpus.select(id_col, text_col), text_col, id_col,
-            n=n, num_hashes=num_hashes, bands=bands,
-            threshold=jaccard_threshold, portable=portable,
-            max_bucket=max_bucket, corpus_index=lex_idx)
-        # --- semantic gate over the maintained routed corpus ---
-        cents = _frozen_centroids(sem_dir, batch, n_centroids, id_col,
-                                  vec_col, epoch_id)
-        if not cents:
-            sem = batch                 # nothing non-degenerate to gate
-        else:
-            routed = _read_epochs(spark, sem_dir,
-                                  ["_id", "list_id", "_vec"])
-            if routed is None:
-                routed = local_frame(
-                    spark, [], "_id long, list_id int, _vec array<double>")
-            else:
-                routed = routed.join(
-                    bids.select(F.col(id_col).alias("_id")), "_id",
-                    "left_anti")
-                check_index_params(
-                    routed, _semantic_routing_params(cents),
-                    "cross_signal_admit_indexed_fn (sem index read-back)",
-                    col="_id", expect_stamp=True)
-            sem = incremental_semantic_admission_auto(
-                batch.select(id_col, vec_col), None, id_col=id_col,
-                vec_col=vec_col, threshold=cosine_threshold,
-                nprobe=nprobe, centroids=cents,
-                corpus_routed=routed.select("list_id", "_id", "_vec"))
-        admitted = (batch.join(lex.select(id_col), id_col, "left_semi")
-                         .join(sem.select(id_col), id_col, "left_semi")
-                         .localCheckpoint())
-        # both index epochs commit BEFORE the corpus epoch
-        _commit_epoch(build_minhash_index(
-            admitted.select(id_col, text_col), text_col, id_col,
-            n, num_hashes, bands, portable), lex_dir, epoch_id)
-        if cents:
-            _commit_epoch(build_semantic_routing_index(
-                admitted.select(id_col, vec_col), cents, id_col,
-                vec_col), sem_dir, epoch_id)
-        _commit_epoch(admitted, corpus_dir, epoch_id)
-
-    return admit_batch
+    NOTE admissions can differ from the plain door's at the IVF recall
+    margin, as the batch indexed twins document: this semantic gate
+    routes against frozen centroids on the kernel path, which rounds
+    routing dots 6 dp; the plain door re-seeds centroids every epoch
+    and its expression path routes on unrounded dots (see
+    ``semantic_admit_fn``). The gate-level contract (reject iff an
+    eligible partner is probed at ≥ threshold) is identical."""
+    return _indexed_door(corpus_dir, [id_col, text_col, vec_col], id_col, [
+        _minhash_gate(os.path.join(index_dir, "lex"), text_col, id_col,
+                      jaccard_threshold, max_bucket, n, num_hashes, bands,
+                      portable),
+        _routed_gate(os.path.join(index_dir, "sem"), vec_col, id_col,
+                     cosine_threshold, n_centroids, nprobe)])
 
 
 def versioned_append_fn(table_path: str):

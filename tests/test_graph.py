@@ -1,7 +1,11 @@
-"""PageRank — hand-checked micro-graphs (fixture-scale values are
-pinned by the `pagerank` differential oracle)."""
+"""Graph operators — hand-checked micro-graphs and pure-Python
+reference twins (fixture-scale values are pinned by the `pagerank`
+differential oracle)."""
 
 from __future__ import annotations
+
+import random
+from decimal import ROUND_HALF_UP, Decimal
 
 import pytest
 from pyspark.sql import Row
@@ -222,3 +226,115 @@ def test_pagerank_one_edge_sized_shuffle_per_round(spark):
     # + the AQE-reused edge-table src exchange + 1 node-sized (sums
     # into the src join). r15 shape was 4 (the per-round nodes join).
     assert t2 - t1 == t3 - t2 == 3, (t1, t2, t3)
+
+
+def _r6(x: float) -> float:
+    # Decimal(repr(x)), not Decimal(x): Spark's ROUND goes through
+    # BigDecimal.valueOf(double) = Double.toString's SHORTEST repr,
+    # which is what Python's repr produces too — full binary expansion
+    # (Decimal(x)) rounds 0.0411714999... cases the other way.
+    return float(Decimal(repr(x)).quantize(Decimal("0.000001"),
+                                           rounding=ROUND_HALF_UP))
+
+
+def test_pagerank_sums_loop_matches_reference_with_dangling(spark):
+    from nyctaxidatapipeline_spark.operators.graph import pagerank
+
+    rng = random.Random(160)
+    n = 40
+    pairs = sorted({(f"n{rng.randrange(n)}", f"n{rng.randrange(n)}")
+                    for _ in range(90)})
+    pairs = [(a, b) for a, b in pairs if a != b]
+    # force both dangling shapes: a pure sink (no out-edges) and a pure
+    # source (no in-edges)
+    pairs += [("n0", "sink_only"), ("source_only", "n1")]
+    e = spark.createDataFrame([Row(src=a, dst=b) for a, b in pairs])
+
+    nodes = sorted({a for a, _ in pairs} | {b for _, b in pairs})
+    outdeg: dict[str, int] = {}
+    for a, _ in pairs:
+        outdeg[a] = outdeg.get(a, 0) + 1
+    for iters in (1, 3, 4):
+        out = {r["node"]: r["rank"]
+               for r in pagerank(e, iters=iters).collect()}
+        ranks = {v: _r6(1.0 / len(nodes)) for v in nodes}
+        for _ in range(iters):
+            sums = {v: 0.0 for v in nodes}
+            for a, b in pairs:
+                sums[b] += ranks[a] / outdeg[a]
+            ranks = {v: _r6(0.15 / len(nodes) + 0.85 * _r6(sums[v]))
+                     for v in nodes}
+        assert set(out) == set(nodes)
+        # 4e-6, not ulp-exact: the twin sums in-neighbor contributions
+        # in edge order while Spark sums in partition order, so a sum
+        # landing ON a 0.5e-6 rounding boundary can step 1e-6 per
+        # rounded stage (sum + rank = 2 stages/round). Exactness of the
+        # ENGINE's own value is pinned by the differential oracle at
+        # fixture scale; this gate pins the algorithm.
+        for v in nodes:
+            assert abs(out[v] - ranks[v]) <= 4e-6, (iters, v)
+        # the no-in-edge node must sit at exactly (1-d)/N after round 1+
+        assert abs(out["source_only"] - _r6(0.15 / len(nodes))) <= 1e-9
+
+
+def test_lpa_identity_round_matches_reference(spark):
+    from nyctaxidatapipeline_spark.operators.graph import (
+        label_propagation,
+    )
+
+    rng = random.Random(161)
+    n = 25
+    pairs = sorted({(f"n{rng.randrange(n):02d}", f"n{rng.randrange(n):02d}")
+                    for _ in range(70)})
+    pairs = [(a, b) for a, b in pairs if a != b]
+    e = spark.createDataFrame([Row(src=a, dst=b) for a, b in pairs])
+
+    nodes = sorted({a for a, _ in pairs} | {b for _, b in pairs})
+    for iters in (1, 2, 3):
+        out = {r["node"]: r["label"]
+               for r in label_propagation(e, iters=iters).collect()}
+        labels = {v: v for v in nodes}
+        for _ in range(iters):
+            cnt: dict[str, dict[str, int]] = {}
+            for a, b in pairs:
+                cnt.setdefault(b, {}).setdefault(labels[a], 0)
+                cnt[b][labels[a]] += 1
+            nxt = dict(labels)
+            for v, c in cnt.items():
+                # most frequent, ties to LARGEST label
+                nxt[v] = max(c, key=lambda lb: (c[lb], lb))
+            labels = nxt
+        assert out == labels, iters
+
+
+def test_bfs_frontier_relaxation_matches_reference(spark):
+    """The r16 frontier-only relaxation (only nodes first reached last
+    round join the edge table) must reproduce whole-table relaxation
+    exactly — pinned against a pure-Python multi-source BFS on a random
+    graph with cycles, unreachable nodes, and back-edges into sources."""
+    from nyctaxidatapipeline_spark.operators.graph import shortest_paths
+
+    rng = random.Random(163)
+    n = 35
+    pairs = sorted({(f"n{rng.randrange(n)}", f"n{rng.randrange(n)}")
+                    for _ in range(70)})
+    pairs = [(a, b) for a, b in pairs if a != b]
+    e = spark.createDataFrame([Row(src=a, dst=b) for a, b in pairs])
+    srcs = ["n1", "n2"]
+    sdf = spark.createDataFrame([(s,) for s in srcs], "node string")
+
+    adj: dict[str, list[str]] = {}
+    for a, b in pairs:
+        adj.setdefault(a, []).append(b)
+    for iters in (1, 2, 4, 7):
+        out = {r["node"]: r["dist"]
+               for r in shortest_paths(e, sdf, iters=iters).collect()}
+        dist = {s: 0 for s in srcs}
+        frontier = set(srcs)
+        for step in range(1, iters + 1):
+            nxt = {v for u in frontier for v in adj.get(u, ())
+                   if v not in dist}
+            for v in nxt:
+                dist[v] = step
+            frontier = nxt
+        assert out == dist, iters

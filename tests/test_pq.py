@@ -5,6 +5,8 @@ gated where its assumptions hold, on clustered corpora)."""
 
 from __future__ import annotations
 
+import random
+
 import numpy as np
 import pytest
 from pyspark.sql import Row
@@ -181,3 +183,20 @@ def test_ivfpq_residual_recall_not_worse_than_raw(spark):
         rec[res] = len(got & exact) / len(exact)
     assert rec[True] >= rec[False], rec
     assert rec[True] >= 0.9, rec
+
+
+def test_pq_self_dot_bitexact_vs_runtime_fold(spark):
+    from nyctaxidatapipeline_spark.operators.pq import (
+        _fold_dot,
+        _lit_arr,
+        _self_dot,
+    )
+
+    rng = random.Random(162)
+    for trial in range(6):
+        c = [rng.uniform(-3, 3) * (10 ** rng.randint(-8, 6))
+             for _ in range(rng.randint(1, 48))]
+        arr = _lit_arr(c)
+        runtime = spark.range(1).select(
+            F.expr(_fold_dot(arr, arr)).alias("v")).first()["v"]
+        assert _self_dot(c) == runtime, (trial, c)

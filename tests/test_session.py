@@ -52,3 +52,33 @@ def test_codegen_cache_holds_a_repeated_working_set(spark):
     before = compiles.getCount()
     one_round()
     assert compiles.getCount() - before == 0
+
+
+def test_workers_import_the_engine_outside_the_checkout(tmp_path):
+    """One ``mapInPandas`` query whose worker imports the engine, run by
+    a fresh interpreter (the JVM reads its environment once) whose
+    working directory is outside the checkout and whose PYTHONPATH is
+    unset: ``get_spark`` must hand the workers the engine's root."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = f"""import sys
+sys.path.insert(0, {root!r})
+from nyctaxidatapipeline_spark import get_spark
+
+def probe(batches):
+    import nyctaxidatapipeline_spark  # noqa: F401
+    yield from batches
+
+spark = get_spark("workers_import_probe", master="local[1]",
+                  shuffle_partitions=1)
+print("rows", spark.range(3).mapInPandas(probe, "id long").count())
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run([sys.executable, "-c", code], cwd=tmp_path,
+                         env=env, capture_output=True, text=True,
+                         timeout=600)
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert "rows 3" in out.stdout.splitlines()

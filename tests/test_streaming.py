@@ -104,3 +104,18 @@ def test_jobs_has_one_drain_and_one_file_source():
             if isinstance(top, ast.FunctionDef)
             and top.name.startswith("run_")}
     assert runs == {"run_to_memory"}
+    # one maintained-index admission door: each index read-back, build
+    # and centroid freeze has one home (the read-back and the two gates
+    # under ``_indexed_door``), not one copy per door
+    callers = {f: set() for f in ("check_index_params",
+                                  "build_minhash_index",
+                                  "build_semantic_routing_index",
+                                  "_frozen_centroids")}
+    for top in tree.body:
+        for node in ast.walk(top):
+            if (isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Name)
+                    and node.func.id in callers):
+                callers[node.func.id].add(top.name)
+    assert {f: len(c) for f, c in callers.items()} == dict.fromkeys(
+        callers, 1), callers
